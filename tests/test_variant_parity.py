@@ -461,3 +461,121 @@ def test_unique_items_array_of_scalar_elements(spark):
             assert not r["marked"] and r["ok"] == exp == wv, (d, r)
         else:
             assert r["marked"], (d, "expected walker residual")
+
+
+# -- gate soundness and plan shape -------------------------------------------
+
+def _assert_gate_sound(spark, docs, ruleset, version=None,
+                       residual_marker=False) -> bool:
+    """The gated violations equal the ungated tree element for element
+    (order included), and every row whose gate holds has an empty tree.
+    Returns whether the ruleset has a gate to compare (ok not None)."""
+    from valico_spark.compiler.pyvalidator import DRAFT7
+    from valico_spark.compiler.variantcolumns import (
+        compile_variant_ruleset, gated, parse_documents,
+    )
+
+    viol, ok, _ = compile_variant_ruleset(
+        ruleset, F.col("doc"), version=version or DRAFT7,
+        residual_marker=residual_marker)
+    if ok is None:
+        return False
+    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
+                               "i long, j string")
+    rows = (df.withColumn("doc", parse_documents(F.col("j")))
+            .select("i", viol.alias("full"), ok.alias("ok"),
+                    gated(viol, ok).alias("gated")).collect())
+    for r in rows:
+        assert r["gated"] == r["full"], (docs[r["i"]], r["full"])
+        if r["ok"]:
+            assert r["full"] == [], (docs[r["i"]], r["full"])
+    # the gate is not vacuous: some rows take it
+    assert any(r["ok"] for r in rows), ruleset
+    return True
+
+
+def _fuzz_corpus(seeds) -> list:
+    docs = []
+    for seed in seeds:
+        rnd = random.Random(seed)
+        docs += [_rand_doc(rnd) for _ in range(300)]
+    return docs
+
+
+def test_gate_sound_fuzz(spark):
+    assert _assert_gate_sound(spark, _fuzz_corpus([1, 2, 3]),
+                              FUZZ_RULESET)
+
+
+def test_gate_sound_unique_items(spark):
+    # as on the auto path: uniqueItems compiles with the walker marker
+    assert _assert_gate_sound(spark, _fuzz_corpus([11, 12, 13]),
+                              FUZZ_UNIQUE_RULESET, residual_marker=True)
+
+
+@pytest.mark.parametrize("seed", [5, 19])
+def test_gate_sound_unevaluated_fuzz(spark, seed):
+    """A root ``unevaluatedProperties`` has no boolean form, so the
+    generated rulesets take the full tree; each is also checked with the
+    root keyword removed, which compares the gates built under
+    allOf / anyOf / dependentSchemas (and nested unevaluated*)."""
+    from test_unevaluated_static import FIELDS, gen_root
+
+    from valico_spark.compiler.pyvalidator import DRAFT2019
+
+    rnd = random.Random(seed)
+
+    def gen_doc():
+        doc = {}
+        for k in FIELDS:
+            if rnd.random() < 0.6:
+                doc[k] = rnd.choice([0, 1, 5, "a", "ab", 1.5, True, None])
+        if rnd.random() < 0.2:
+            doc["zz"] = rnd.choice([1, "z"])
+        return json.dumps(doc)
+
+    compared = 0
+    for _ in range(25):
+        rs = gen_root(rnd)
+        stripped = {k: v for k, v in rs.items()
+                    if k != "unevaluatedProperties"}
+        docs = [gen_doc() for _ in range(60)]
+        try:
+            for schema in (rs, stripped):
+                compared += _assert_gate_sound(spark, docs, schema,
+                                               version=DRAFT2019)
+        except UnsupportedRule:
+            continue
+    assert compared >= 12, compared
+
+
+def test_docs_ruleset_plan_counts(spark, tmp_path):
+    """The VARIANT lane parses each row once, in the verdict plan and in
+    the violation-row plan alike, and reads ``schema_of_variant`` only
+    at the scalar nodes (one site per scalar node and tree)."""
+    import re
+
+    from valico_spark.operators.validate import violation_rows
+    from valico_spark.rulesets import DOCS_RULESET
+
+    docs = [{"doc_id": "p01-0000000001",
+             "spans": [{"kind": "text", "offset": 0, "text": "hi"}]},
+            {"doc_id": "bad", "spans": []},
+            {"doc_id": "p02-0000000002",
+             "spans": [{"kind": "image", "offset": -1,
+                        "media_ref": "m00000001"}]}]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame([(d["doc_id"], json.dumps(d)) for d in docs],
+                          "doc_id string, json string"
+                          ).write.parquet(path)
+    validated = validate_json_column(spark.read.parquet(path), "json",
+                                     DOCS_RULESET)
+    rows = violation_rows(validated, ["doc_id"])
+    for df in (validated, rows):
+        plan = df.select("*")._jdf.queryExecution().executedPlan() \
+            .toString()
+        assert len(re.findall(r"\.parseJson\(", plan)) == 1, plan
+        assert len(re.findall(r"\.schemaOfVariant\(", plan)) <= 10, plan
+    assert [r["valid"] for r in validated.orderBy("doc_id").collect()] \
+        == [False, True, False]
+    assert rows.count() == 4

@@ -1,8 +1,10 @@
 """Generate PLANS.md: a per-driver-query physical-plan audit.
 
 For every ``queries()`` entry: shuffle count, join strategies, whether
-any Python eval node is in the plan, whole-stage-codegen coverage, and
-scan column pruning — the scale-shape facts a plan review checks. Run:
+any Python eval node is in the plan, whole-stage-codegen coverage, scan
+column pruning, and the ``parse_json`` / ``schema_of_variant`` call
+sites of the VARIANT lane — the scale-shape facts a plan review checks.
+Run:
 
     python tools/plan_report.py        # writes PLANS.md at repo root
 """
@@ -58,6 +60,9 @@ def main() -> None:
             "hint": "yes" if "ResolvedHint" in ana else "no",
             "scan_cols": scan_cols,
             "pushed": pushed,
+            # call sites in per-row projections = evaluations per row
+            "parse": len(re.findall(r"\.parseJson\(", phys)),
+            "sov": len(re.findall(r"\.schemaOfVariant\(", phys)),
         })
     out = [
         "# PLANS — driver-query physical-plan audit",
@@ -74,17 +79,20 @@ def main() -> None:
         "surfaces here — 'no' means the query is entirely JVM-side); "
         "hint = unconditional user join hint (scale smell — should be "
         "'no' everywhere); scan_cols = widest parquet ReadSchema "
-        "(column pruning check).",
+        "(column pruning check); parse / sov = `parse_json` / "
+        "`schema_of_variant` call sites (per-row evaluations on the "
+        "VARIANT lane).",
         "",
         "| query | shuffles | joins | codegen | python | hint | "
-        "scan_cols | pushed |",
-        "|---|---|---|---|---|---|---|---|",
+        "scan_cols | pushed | parse | sov |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for r in rows:
         out.append(
             f"| {r['query']} | {r['exchanges']} | {r['joins']} | "
             f"{r['codegen']} | {r['python']} | {r['hint']} | "
-            f"{r['scan_cols']} | {r['pushed']} |")
+            f"{r['scan_cols']} | {r['pushed']} | {r['parse']} | "
+            f"{r['sov']} |")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")

@@ -11,6 +11,36 @@ vs VOID vs OBJECT vs ARRAY) inside JVM expressions, so the reference's
 runtime type dispatch (validators/type_.rs) compiles to Column predicates
 with zero Python in the row loop.
 
+Evaluation shape — parse once, bind once per node, gate:
+
+* **Parse once.** ``validate_json_column`` stages
+  ``coalesce(try_parse_json(doc), parse_json('null'))`` as one projected
+  column and compiles against it (``compile_variant_ruleset``), so the
+  plan parses each row once; ``compile_json_ruleset`` binds the parse
+  with a one-element ``transform`` for the same effect in one Column.
+* **Bind once per node.** Each schema node is compiled once against a
+  lambda variable (``_Bound``) holding the node's variant and what its
+  keywords derive from it: the ``map<string,variant>`` and
+  ``array<variant>`` casts on nodes with object/array keywords, the type
+  tag on nodes that only check scalars. Evaluating the node at a value
+  is a one-element ``transform`` (or ``forall``) — a let-binding — so a
+  cast is computed once however many keywords read it. Object and array
+  are told by which cast succeeded; ``schema_of_variant`` only ever runs
+  on scalars, where it is O(1), never on a whole subtree.
+* **Gate.** Every emitter returns its violations together with ``ok``,
+  built from the same condition column (``bad IS NOT TRUE``).
+  Properties gate through direct ``element_at`` lookups, items through
+  ``forall``. ``when(ok, empty).otherwise(violations)`` keeps valid rows
+  off the allocating tree; the verdict stays ``size(violations) == 0``,
+  O(1) on the rows that pass the gate. Keywords without an exact boolean
+  form (``not``, ``oneOf``, ``if``, ``unevaluated*``, recursion cut
+  points; ``uniqueItems`` on arrays) make their node's ``ok`` false, so
+  those rows take the full tree: the violations are byte-identical with
+  or without the gate. Gates are built lazily: only the root's gate is
+  read, so a gate under ``if`` / ``not`` / ``oneOf``, or beside a keyword
+  without a boolean form, costs no compile time (combinators read their
+  branches' validity from ``size(violations) == 0``).
+
 Semantics contract: identical verdicts and ``(code, title, path, detail)``
 rows to ``pyvalidator`` (the reference-parity walker) for the supported
 subset — fuzz-tested in ``tests/test_variant_parity.py``. Key mappings:
@@ -36,20 +66,38 @@ uniqueItems elements carry a runtime NEEDS_WALKER residual).
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable, Optional, Tuple
 
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from valico_spark.compiler.columns import (
     ColumnCompiler, UnsupportedRule, empty_violations, inline_id_with_refs,
-    make_violation, _concat, _maybe, _states_json, unicode_pattern,
+    make_violation, _maybe, _states_json, unicode_pattern,
 )
 from valico_spark.compiler.pyvalidator import (
     DRAFT2019, DRAFT7, EPSILON, PRIMITIVE_TYPES, is_number,
+    keyword_dispatch_order,
 )
+
+_MAP = "map<string,variant>"
+_ARRAY = "array<variant>"
+
+#: a gate, built on first call: only the root's ``when(ok, empty)``
+#: reads gates, so one beside a keyword without a boolean form, or under
+#: ``if`` / ``not`` / ``oneOf``, is never built
+Gate = Callable[[], Column]
+#: a compiled node or keyword: (violations, ok). Violations None = the
+#: part can never emit; ok None = no exact boolean form (gate false).
+Checked = Tuple[Optional[Column], Optional[Gate]]
+
+
+def _gate(build: Callable[[], Column]) -> Gate:
+    return functools.cache(build)
 
 
 @dataclass
@@ -58,68 +106,80 @@ class VTarget:
 
     ``col`` SQL NULL ⇔ the value does not exist (missing key / element);
     a JSON ``null`` is a present VOID variant. ``path`` is the
-    JSON-pointer string column for error rows.
+    JSON-pointer string column for error rows. ``obj`` / ``arr`` / ``tag``
+    are the node's bound map cast, array cast and type tag (fields of a
+    ``_Bound`` lambda variable); any left unbound is derived from ``col``
+    where it is read.
     """
     col: Column
     path: Column
-
-    def child(self, col: Column, path: Column) -> "VTarget":
-        return VTarget(col=col, path=path)
-
-
-def _vtype(v: Column) -> Column:
-    return F.schema_of_variant(v)
+    obj: Optional[Column] = None
+    arr: Optional[Column] = None
+    tag: Optional[Column] = None
 
 
-def _is_num(v: Column) -> Column:
-    st = _vtype(v)
-    return st.isin("BIGINT", "DOUBLE") | st.startswith("DECIMAL")
+def _obj(t: VTarget) -> Column:
+    return t.obj if t.obj is not None else t.col.try_cast(_MAP)
 
 
-def _is_int(v: Column) -> Column:
-    st = _vtype(v)
-    d = _num(v)
-    return (st == "BIGINT") | (_is_num(v) & (d == F.floor(d)))
+def _arr(t: VTarget) -> Column:
+    return t.arr if t.arr is not None else t.col.try_cast(_ARRAY)
 
 
-def _is_str(v: Column) -> Column:
-    return _vtype(v) == "STRING"
+def _tag(t: VTarget) -> Column:
+    """JSON type tag: OBJECT / ARRAY from whichever cast succeeded, else
+    the scalar's ``schema_of_variant`` (BIGINT, DECIMAL(p,s), DOUBLE,
+    STRING, BOOLEAN, VOID) — never evaluated on a container."""
+    if t.tag is not None:
+        return t.tag
+    return (F.when(_obj(t).isNotNull(), F.lit("OBJECT"))
+             .when(_arr(t).isNotNull(), F.lit("ARRAY"))
+             .otherwise(F.schema_of_variant(t.col)))
 
 
-def _is_bool(v: Column) -> Column:
-    return _vtype(v) == "BOOLEAN"
+def _is_obj(t: VTarget) -> Column:
+    if t.obj is None and t.tag is not None:
+        return t.tag == "OBJECT"
+    return _obj(t).isNotNull()
 
 
-def _is_null(v: Column) -> Column:
-    return F.is_variant_null(v)
+def _is_arr(t: VTarget) -> Column:
+    if t.arr is None and t.tag is not None:
+        return t.tag == "ARRAY"
+    return _arr(t).isNotNull()
 
 
-def _is_obj(v: Column) -> Column:
-    return _vtype(v).startswith("OBJECT")
+def _is_num(t: VTarget) -> Column:
+    return _tag(t).rlike("^(BIGINT|DOUBLE|DECIMAL)")
 
 
-def _is_arr(v: Column) -> Column:
-    return _vtype(v).startswith("ARRAY")
+def _is_int(t: VTarget) -> Column:
+    d = _num(t)
+    return (_tag(t) == "BIGINT") | (_is_num(t) & (d == F.floor(d)))
 
 
-def _num(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "double")
+def _is_str(t: VTarget) -> Column:
+    return _tag(t) == "STRING"
 
 
-def _str(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "string")
+def _is_bool(t: VTarget) -> Column:
+    return _tag(t) == "BOOLEAN"
 
 
-def _bool(v: Column) -> Column:
-    return F.try_variant_get(v, "$", "boolean")
+def _is_null(t: VTarget) -> Column:
+    return F.is_variant_null(t.col)
 
 
-def _obj(v: Column) -> Column:
-    return v.try_cast("map<string, variant>")
+def _num(t: VTarget) -> Column:
+    return F.try_variant_get(t.col, "$", "double")
 
 
-def _arr(v: Column) -> Column:
-    return v.try_cast("array<variant>")
+def _str(t: VTarget) -> Column:
+    return F.try_variant_get(t.col, "$", "string")
+
+
+def _bool(t: VTarget) -> Column:
+    return F.try_variant_get(t.col, "$", "boolean")
 
 
 def _join(path: Column, key: str) -> Column:
@@ -137,14 +197,209 @@ _TYPE_PRED = {
 }
 
 
+# -- violations / ok composition ----------------------------------------------
+
+def _v(viol: Optional[Column]) -> Column:
+    return viol if viol is not None else empty_violations()
+
+
+def _cat(viols: list) -> Optional[Column]:
+    viols = [v for v in viols if v is not None]
+    if not viols:
+        return None
+    return viols[0] if len(viols) == 1 else F.concat(*viols)
+
+
+def _and(oks: list) -> Optional[Column]:
+    """Conjunction of gate columns; None (no exact form) absorbs."""
+    out = None
+    for ok in oks:
+        if ok is None:
+            return None
+        out = ok if out is None else (out & ok)
+    return out if out is not None else F.lit(True)
+
+
+def _all(oks: list) -> Optional[Gate]:
+    """Conjunction of gates; None (no exact form) absorbs."""
+    if any(ok is None for ok in oks):
+        return None
+    return _gate(lambda: _and([ok() for ok in oks]))
+
+
+def _merge(parts: list) -> Checked:
+    """Concatenated violations and conjoined gates of ``parts``."""
+    parts = [p for p in parts if p[0] is not None]
+    return _cat([v for v, _ in parts]), _all([ok for _, ok in parts])
+
+
+def _check(bad: Column, violation: Column) -> Checked:
+    """One violation when ``bad`` is TRUE, and its exact gate."""
+    return _maybe(bad, violation), _gate(
+        lambda: ~F.coalesce(bad, F.lit(False)))
+
+
+def _guarded(cond: Column, viol: Optional[Column]) -> Optional[Column]:
+    if viol is None:
+        return None
+    return F.when(cond, viol).otherwise(empty_violations())
+
+
+def _unless(cond: Column, ok: Optional[Gate]) -> Gate:
+    """Gate of a part that only applies where ``cond`` holds."""
+    return _gate(lambda: ~cond if ok is None else (~cond | ok()))
+
+
+def _valid(viol: Optional[Column]) -> Column:
+    if viol is None:
+        return F.lit(True)
+    return F.size(viol) == 0
+
+
+def gated(violations: Column, ok: Optional[Column]) -> Column:
+    """The violations array with the gate as its fast path: rows whose
+    ``ok`` holds never build the tree."""
+    if ok is None:
+        return violations
+    return F.when(ok, empty_violations()).otherwise(violations)
+
+
+# -- let-binding --------------------------------------------------------------
+
+def _lambda_var(name: str) -> Column:
+    from pyspark.sql.functions.builtin import (
+        _unresolved_named_lambda_variable,
+    )
+
+    return _unresolved_named_lambda_variable(name)
+
+
+def _hof(name: str, array: Column, var: Column, body: Column) -> Column:
+    """``name(array, var -> body)`` for a body built beforehand, so one
+    compiled body can serve both a ``transform`` and a ``forall``."""
+    from pyspark.sql.classic.column import Column as ClassicColumn, _to_seq
+
+    sc = SparkContext._active_spark_context
+    utils = sc._jvm.PythonSQLUtils
+    fn = utils.lambdaFunction(body._jc, _to_seq(sc, [var._jc]))
+    return ClassicColumn(utils.fn(name, _to_seq(sc, [array._jc, fn])))
+
+
+def _binding(value: Column, path: Column, fields: tuple) -> Column:
+    """One-element array of the struct a let-bound node reads: the value
+    ``v``, its path ``p`` and the derived ``fields`` (``m`` map cast,
+    ``a`` array cast, ``t`` type tag)."""
+    cols = [value.alias("v"), path.alias("p")]
+    if "m" in fields:
+        cols.append(value.try_cast(_MAP).alias("m"))
+    if "a" in fields:
+        cols.append(value.try_cast(_ARRAY).alias("a"))
+    if "t" in fields:
+        cols.append(_tag(VTarget(value, path)).alias("t"))
+    return F.array(F.struct(*cols))
+
+
+def _bound_target(var: Column, fields: tuple) -> VTarget:
+    return VTarget(col=var["v"], path=var["p"],
+                   obj=var["m"] if "m" in fields else None,
+                   arr=var["a"] if "a" in fields else None,
+                   tag=var["t"] if "t" in fields else None)
+
+
+def _let_at(value: Column, fn) -> Column:
+    """``fn`` of ``value`` with the value's map and array casts bound
+    once: a one-element ``transform`` whose single result is returned."""
+    var = _lambda_var("el")
+    body = fn(_bound_target(var, ("m", "a")))
+    return _hof("transform", _binding(value, F.lit(""), ("m", "a")), var,
+                body).getItem(0)
+
+
+_OBJECT_KW = frozenset({
+    "required", "properties", "patternProperties", "additionalProperties",
+    "propertyNames", "minProperties", "maxProperties", "dependencies",
+    "dependentRequired", "dependentSchemas", "unevaluatedProperties"})
+_ARRAY_KW = frozenset({
+    "items", "additionalItems", "minItems", "maxItems", "uniqueItems",
+    "contains", "unevaluatedItems"})
+_SCALAR_KW = frozenset({
+    "enum", "const", "minimum", "maximum", "exclusiveMinimum",
+    "exclusiveMaximum", "multipleOf", "minLength", "maxLength", "pattern",
+    "format", "contentMediaType", "contentEncoding"})
+_SCALAR_TYPES = frozenset({"string", "number", "integer", "boolean"})
+
+
+def _bind_fields(schema: Any) -> tuple:
+    """What a node binds besides its value: the map and array casts when
+    it has object/array keywords, else the type tag when it checks
+    scalars. Only a cost choice — anything unbound is derived where it
+    is read."""
+    if not isinstance(schema, dict):
+        return ("m", "a")
+    keys = set(schema)
+    ty = schema.get("type")
+    types = {ty} if isinstance(ty, str) else set(ty) \
+        if isinstance(ty, list) else set()
+    literals = list(schema["enum"]) if isinstance(schema.get("enum"),
+                                                   list) else []
+    if "const" in schema:
+        literals.append(schema["const"])
+    container = bool(keys & (_OBJECT_KW | _ARRAY_KW)) or any(
+        isinstance(x, (list, dict)) for x in literals)
+    scalar = bool(keys & _SCALAR_KW) or bool(types & _SCALAR_TYPES)
+    return ("t",) if scalar and not container else ("m", "a")
+
+
+@dataclass
+class _Bound:
+    """A schema node compiled once against the lambda variable ``var``:
+    a struct of the value ``v``, its error path ``p`` and the derived
+    values in ``fields`` (``m`` map cast, ``a`` array cast, ``t`` type
+    tag). ``violations`` / ``ok_at`` / ``at`` evaluate it at a concrete
+    value."""
+    var: Column
+    fields: tuple
+    viol: Optional[Column]
+    ok: Optional[Gate]
+
+    def violations(self, value: Column, path: Column) -> Optional[Column]:
+        if self.viol is None:
+            return None
+        binding = _binding(value, path, self.fields)
+        return F.flatten(_hof("transform", binding, self.var, self.viol))
+
+    def ok_at(self, value: Column, absent_ok: bool = False
+              ) -> Optional[Column]:
+        """The node's gate at ``value``; with ``absent_ok`` an absent
+        value passes (a parent emits nothing for a missing key)."""
+        if self.viol is None:
+            return F.lit(True)
+        if self.ok is None:
+            return value.isNull() if absent_ok else None
+        body = (self.var["v"].isNull() | self.ok()) if absent_ok \
+            else self.ok()
+        binding = _binding(value, F.lit(""), self.fields)
+        return _hof("forall", binding, self.var, body)
+
+    def at(self, value: Column, path: Column) -> Checked:
+        """(violations, ok) at ``value``, both over one binding."""
+        if self.viol is None:
+            return None, None
+        binding = _binding(value, path, self.fields)
+        viol = F.flatten(_hof("transform", binding, self.var, self.viol))
+        if self.ok is None:
+            return viol, None
+        return viol, _gate(
+            lambda: _hof("forall", binding, self.var, self.ok()))
+
+    def valid_at(self, value: Column) -> Column:
+        return _valid(self.violations(value, F.lit("")))
+
+
 #: violation code marking "this document reaches past the compiled
 #: recursion unroll — re-validate it on the walker". Never user-visible:
 #: validate_json_column splits marked rows out before returning.
 NEEDS_WALKER = "__needs_walker__"
-
-
-def _raise_unsupported(msg: str):
-    raise UnsupportedRule(msg)
 
 
 def _marker_violation(path: Column) -> Column:
@@ -163,8 +418,7 @@ class VariantCompiler:
 
     Same compile-once/evaluate-vectorized split as ``ColumnCompiler``;
     the emitted expression tree is pure built-in functions (variant
-    extractors, higher-order array/map functions), whole-stage-codegen
-    eligible, no shuffle.
+    extractors, higher-order array/map functions), no shuffle.
 
     Recursive ``$ref`` story (SURVEY §7 hard-part 2): with
     ``residual_marker=True`` (the ``validate_json_column`` default),
@@ -201,15 +455,15 @@ class VariantCompiler:
         #: (ref_budget fan-out, inline-$id) don't respond to depth.
         self.recursion_cut = False
 
-    def _cut(self, t: VTarget, why: str) -> Column:
+    def _cut(self, t: VTarget, why: str) -> Checked:
         """Recursion/budget cutoff: marker when allowed, else refuse."""
         if not self.residual_marker:
             raise UnsupportedRule(why)
         self.used_marker = True
         self._marker_sites += 1
-        return _maybe(t.col.isNotNull(), _marker_violation(t.path))
+        return _maybe(t.col.isNotNull(), _marker_violation(t.path)), None
 
-    def _lift_marker(self, sub_viols: list[Column], result: Column,
+    def _lift_marker(self, sub_viols: list, result: Column,
                      t: VTarget) -> Column:
         """Marker propagation invariant: combinators whose verdict logic
         INVERTS or COUNTS sub-validity (not / oneOf / anyOf / if) would
@@ -221,6 +475,8 @@ class VariantCompiler:
         the operator's walker-rerouting predicate checks."""
         any_m = None
         for sv in sub_viols:
+            if sv is None:
+                continue
             e = has_walker_marker(sv)
             any_m = e if any_m is None else (any_m | e)
         return F.when(any_m, F.array(_marker_violation(t.path))) \
@@ -230,16 +486,30 @@ class VariantCompiler:
     # compiler (compile-time inlining, SURVEY.md §2.4)
     _resolve_ref = ColumnCompiler._resolve_ref
 
-    def compile(self, schema: Any, target: VTarget) -> Column:
+    def compile_checked(self, schema: Any, target: VTarget
+                        ) -> Tuple[Column, Optional[Column]]:
+        """(ungated violations, ok) of ``schema`` at ``target``; ok is
+        None when no row can take the gate."""
         if inline_id_with_refs(self.root_schema
                                if self.root_schema is not None else schema):
             # pointer inlining can't mirror the reference's $id-rebased
             # URL resolution (incl. its missing-keyword quirk) — route
             # every doc to the walker, which has the exact semantics
-            return self._cut(target, "inline $id together with $ref")
-        return self._node(schema, target, depth=0)
+            viol, ok = self._cut(target, "inline $id together with $ref")
+        else:
+            viol, ok = self._bind(schema, 0).at(target.col, target.path)
+        return _v(viol), (ok() if ok is not None else None)
 
-    def _node(self, schema: Any, t: VTarget, depth: int) -> Column:
+    def compile(self, schema: Any, target: VTarget) -> Column:
+        return gated(*self.compile_checked(schema, target))
+
+    def _bind(self, schema: Any, depth: int) -> _Bound:
+        fields = _bind_fields(schema)
+        var = _lambda_var("node")
+        viol, ok = self._node(schema, _bound_target(var, fields), depth)
+        return _Bound(var, fields, viol, ok)
+
+    def _node(self, schema: Any, t: VTarget, depth: int) -> Checked:
         if depth > self.unroll_depth:
             self.recursion_cut = True
             return self._cut(t, "recursive $ref beyond inlining depth")
@@ -267,48 +537,38 @@ class VariantCompiler:
 
         def h_not():
             m0 = self._marker_sites
-            sub_viol = self._node(s["not"], t, d + 1)
-            res = _maybe(F.size(sub_viol) == 0,
-                         make_violation("not", t.path))
+            sub = self._node(s["not"], t, d + 1)
+            res = _maybe(_valid(sub[0]), make_violation("not", t.path))
             if self._marker_sites > m0:
-                res = self._lift_marker([sub_viol], res, t)
-            return res
+                res = self._lift_marker([sub[0]], res, t)
+            return res, None
 
         def h_if():
             if "if" not in s:
                 return None
             m0 = self._marker_sites
-            if_v = self._node(s["if"], t, d + 1)
-            then_v = (self._node(s["then"], t, d + 1)
-                      if "then" in s else empty_violations())
-            else_v = (self._node(s["else"], t, d + 1)
-                      if "else" in s else empty_violations())
-            res = F.when(F.size(if_v) == 0, then_v).otherwise(else_v)
+            if_v = self._node(s["if"], t, d + 1)[0]
+            then_v = self._node(s["then"], t, d + 1)[0] \
+                if "then" in s else None
+            else_v = self._node(s["else"], t, d + 1)[0] \
+                if "else" in s else None
+            res = F.when(_valid(if_v), _v(then_v)) \
+                   .otherwise(_v(else_v))
             if self._marker_sites > m0:
                 res = self._lift_marker([if_v, then_v, else_v], res, t)
-            return res
+            return res, None
 
-        def h_uneval_props():
+        def h_uneval(fn):
             if self.version < DRAFT2019:
                 return None
             m0 = self._marker_sites
-            res = self._unevaluated_properties_v(s, t, d)
+            res = fn(s, t, d)
             if self._marker_sites > m0:
                 # an evaluated-set computed from a truncated (recursion-
                 # cut) plan is untrustworthy — whole doc to the walker
                 raise UnsupportedRule(
                     "unevaluated* with recursive $ref on dynamic JSON")
-            return res
-
-        def h_uneval_items():
-            if self.version < DRAFT2019:
-                return None
-            m0 = self._marker_sites
-            res = self._unevaluated_items_v(s, t, d)
-            if self._marker_sites > m0:
-                raise UnsupportedRule(
-                    "unevaluated* with recursive $ref on dynamic JSON")
-            return res
+            return res, None
 
         # emit parts in the walker's validator linearization so nested
         # states payloads (any_of/one_of) are byte-equal
@@ -344,19 +604,19 @@ class VariantCompiler:
                                     if s["uniqueItems"] is True else None),
             "contains": lambda: (self._contains(s, t, d)
                                  if "contains" in s else None),
-            "allOf": lambda: _concat([self._node(sub, t, d + 1)
-                                      for sub in s["allOf"]]),
+            "allOf": lambda: self._all_of(s["allOf"], t, d),
             "anyOf": lambda: self._any_of(s["anyOf"], t, d),
             "oneOf": lambda: self._one_of(s["oneOf"], t, d),
             "not": h_not,
             "if": h_if,
-            "unevaluatedProperties": h_uneval_props,
-            "unevaluatedItems": h_uneval_items,
+            "unevaluatedProperties": lambda: h_uneval(
+                self._unevaluated_properties_v),
+            "unevaluatedItems": lambda: h_uneval(
+                self._unevaluated_items_v),
             "contentMediaType": lambda: self._content_media(s, t),
         }
-        from valico_spark.compiler.pyvalidator import keyword_dispatch_order
 
-        parts: list[Column] = []
+        parts = []
         for canon in keyword_dispatch_order(s, self.version):
             h = handlers.get(canon)
             if h is None:
@@ -364,10 +624,10 @@ class VariantCompiler:
             part = h()
             if part is not None:
                 parts.append(part)
-        return _concat(parts)
+        return _merge(parts)
 
     # -- keyword emitters --------------------------------------------------
-    def _type(self, ty: Any, t: VTarget) -> Column:
+    def _type(self, ty: Any, t: VTarget) -> Checked:
         types = [ty] if isinstance(ty, str) else list(ty)
         for x in types:
             if x not in PRIMITIVE_TYPES:
@@ -378,12 +638,12 @@ class VariantCompiler:
             detail = F.lit("The value must be any of: " + ", ".join(types))
         ok = None
         for x in types:
-            p = _TYPE_PRED[x](t.col)
+            p = _TYPE_PRED[x](t)
             ok = p if ok is None else (ok | p)
-        return _maybe(t.col.isNotNull() & ~ok,
+        return _check(t.col.isNotNull() & ~ok,
                       make_violation("wrong_type", t.path, detail))
 
-    def _scalar_match(self, value: Any, v: Column,
+    def _scalar_match(self, value: Any, t: VTarget,
                       top_level: bool = True) -> Column:
         """is_matching (helpers.rs:137-145): TOP-LEVEL numbers compare
         through f64 (1 == 1.0); NESTED numbers are strict serde equality
@@ -391,70 +651,74 @@ class VariantCompiler:
         DECIMAL/DOUBLE here). Composites recurse: objects must have the
         exact key set, arrays the exact length."""
         if value is None:
-            return _is_null(v)
+            return _is_null(t)
         if isinstance(value, bool):
-            return _is_bool(v) & (_bool(v) == F.lit(value))
+            return _is_bool(t) & (_bool(t) == F.lit(value))
         if is_number(value):
             if top_level:
-                return _is_num(v) & (_num(v) == F.lit(float(value)))
+                return _is_num(t) & (_num(t) == F.lit(float(value)))
             if isinstance(value, float):
-                tcls = _is_num(v) & (_vtype(v) != "BIGINT")
+                tcls = _is_num(t) & (_tag(t) != "BIGINT")
             else:
-                tcls = _vtype(v) == "BIGINT"
-            return tcls & (_num(v) == F.lit(float(value)))
+                tcls = _tag(t) == "BIGINT"
+            return tcls & (_num(t) == F.lit(float(value)))
         if isinstance(value, str):
-            return _is_str(v) & (_str(v) == F.lit(value))
+            return _is_str(t) & (_str(t) == F.lit(value))
         if isinstance(value, list):
-            arr = _arr(v)
-            out = _is_arr(v) & (F.size(arr) == len(value))
+            arr = _arr(t)
+            out = _is_arr(t) & (F.size(arr) == len(value))
             for i, elem in enumerate(value):
-                m = self._scalar_match(elem, F.try_element_at(arr, F.lit(i + 1)),
-                                       top_level=False)
+                el = VTarget(F.try_element_at(arr, F.lit(i + 1)), F.lit(""))
+                m = self._scalar_match(elem, el, top_level=False)
                 out = out & F.coalesce(m, F.lit(False))
             return out
         if isinstance(value, dict):
-            m = _obj(v)
-            out = _is_obj(v) & (F.size(F.map_keys(m)) == len(value))
+            m = _obj(t)
+            out = _is_obj(t) & (F.size(F.map_keys(m)) == len(value))
             for k, sub in value.items():
                 val = F.element_at(m, F.lit(k))
                 out = out & val.isNotNull() \
-                    & F.coalesce(self._scalar_match(sub, val,
-                                                    top_level=False),
-                                 F.lit(False))
+                    & F.coalesce(self._scalar_match(
+                        sub, VTarget(val, F.lit("")), top_level=False),
+                        F.lit(False))
             return out
         raise UnsupportedRule(
             f"unsupported enum/const value on dynamic JSON: {value!r}")
 
-    def _enum(self, values: list, t: VTarget) -> Column:
+    def _enum(self, values: list, t: VTarget) -> Checked:
         if not isinstance(values, list) or not values:
             raise UnsupportedRule("enum must be a non-empty array")
-        ok = None
+        strs = [x for x in values if isinstance(x, str)]
+        # string members share one type test and one extraction
+        ok = _is_str(t) & _str(t).isin(strs) if strs else None
         for val in values:
-            m = self._scalar_match(val, t.col)
+            if isinstance(val, str):
+                continue
+            m = self._scalar_match(val, t)
             ok = m if ok is None else (ok | m)
-        return _maybe(t.col.isNotNull() & ~ok,
+        return _check(t.col.isNotNull() & ~ok,
                       make_violation("enum", t.path))
 
-    def _const(self, value: Any, t: VTarget) -> Column:
-        m = self._scalar_match(value, t.col)
-        return _maybe(t.col.isNotNull() & ~m,
+    def _const(self, value: Any, t: VTarget) -> Checked:
+        m = self._scalar_match(value, t)
+        return _check(t.col.isNotNull() & ~m,
                       make_violation("const", t.path))
 
-    def _bound(self, m: Any, op: str, t: VTarget) -> Column:
+    def _bound(self, m: Any, op: str, t: VTarget) -> Checked:
         if not is_number(m):
             raise UnsupportedRule("bound must be a number")
-        c = _num(t.col)
+        c = _num(t)
         ok = {"min": c >= F.lit(float(m)), "emin": c > F.lit(float(m)),
               "max": c <= F.lit(float(m)), "emax": c < F.lit(float(m))}[op]
         code = "maximum" if op in ("max", "emax") else "minimum"
-        bad = t.col.isNotNull() & _is_num(t.col) & ~ok
-        return _maybe(bad, make_violation(code, t.path))
+        bad = t.col.isNotNull() & _is_num(t) & ~ok
+        return _check(bad, make_violation(code, t.path))
 
-    def _multiple_of(self, k: Any, t: VTarget) -> Column:
+    def _multiple_of(self, k: Any, t: VTarget) -> Checked:
         if not is_number(k) or float(k) <= 0:
             raise UnsupportedRule("multipleOf must be > 0")
         k = float(k)
-        c = _num(t.col)
+        c = _num(t)
         if k == math.floor(k):
             whole = c == F.floor(c)
             rem = (c / F.lit(k)) % F.lit(1.0)
@@ -465,192 +729,226 @@ class VariantCompiler:
             rem = (c / F.lit(k)) % F.lit(1.0)
             ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
                   & (rem < F.lit(1.0 - EPSILON)))
-        bad = t.col.isNotNull() & _is_num(t.col) & ~ok
-        return _maybe(bad, make_violation("multiple_of", t.path))
+        bad = t.col.isNotNull() & _is_num(t) & ~ok
+        return _check(bad, make_violation("multiple_of", t.path))
 
-    def _length(self, n: Any, is_max: bool, t: VTarget) -> Column:
-        ln = F.length(_str(t.col))
+    def _length(self, n: Any, is_max: bool, t: VTarget) -> Checked:
+        ln = F.length(_str(t))
         ok = ln <= F.lit(int(n)) if is_max else ln >= F.lit(int(n))
-        bad = t.col.isNotNull() & _is_str(t.col) & ~ok
-        return _maybe(bad, make_violation(
+        bad = t.col.isNotNull() & _is_str(t) & ~ok
+        return _check(bad, make_violation(
             "max_length" if is_max else "min_length", t.path))
 
-    def _pattern(self, p: Any, t: VTarget) -> Column:
+    def _pattern(self, p: Any, t: VTarget) -> Checked:
         if not isinstance(p, str):
             raise UnsupportedRule("pattern must be a string")
-        bad = t.col.isNotNull() & _is_str(t.col) \
-            & ~_str(t.col).rlike(unicode_pattern(p))
-        return _maybe(bad, make_violation("pattern", t.path))
+        bad = t.col.isNotNull() & _is_str(t) \
+            & ~_str(t).rlike(unicode_pattern(p))
+        return _check(bad, make_violation("pattern", t.path))
 
-    def _format(self, name: Any, t: VTarget) -> Column:
+    def _format(self, name: Any, t: VTarget) -> Optional[Checked]:
         if not isinstance(name, str):
             raise UnsupportedRule("format must be a string")
-        ok = ColumnCompiler.format_ok_expr(name, _str(t.col))
+        ok = ColumnCompiler.format_ok_expr(name, _str(t))
         if ok is None:
-            return empty_violations()
-        bad = t.col.isNotNull() & _is_str(t.col) & ~ok
-        return _maybe(bad, make_violation(
+            return None
+        bad = t.col.isNotNull() & _is_str(t) & ~ok
+        return _check(bad, make_violation(
             "format", t.path,
             F.lit(ColumnCompiler._FORMAT_DETAILS[name])))
 
-    def _required(self, keys: Any, t: VTarget) -> Column:
+    def _required(self, keys: Any, t: VTarget) -> Checked:
         if not isinstance(keys, list):
             raise UnsupportedRule("required must be an array")
-        m = _obj(t.col)
+        m = _obj(t)
         parts = []
         for k in keys:
             # key presence, not value non-nullness: a JSON null passes
             # required (required.rs checks object containment)
             present = F.map_contains_key(m, F.lit(k))
-            bad = t.col.isNotNull() & _is_obj(t.col) & ~present
-            parts.append(_maybe(bad, make_violation("required",
+            bad = t.col.isNotNull() & _is_obj(t) & ~present
+            parts.append(_check(bad, make_violation("required",
                                                     _join(t.path, k))))
-        return _concat(parts)
+        return _merge(parts)
 
-    def _properties(self, s: dict, t: VTarget, depth: int) -> Column:
-        """properties/patternProperties/additionalProperties — ONE pass
-        over ``map_entries`` so violations come out in DOCUMENT key order
-        (properties.rs:47 iterates the object's keys), with the walker's
-        per-key sub-order: property match, then each matching pattern,
-        then additional."""
+    def _properties(self, s: dict, t: VTarget, depth: int) -> Checked:
+        """properties/patternProperties/additionalProperties. Violations:
+        ONE pass over ``map_entries`` so they come out in DOCUMENT key
+        order (properties.rs:47 iterates the object's keys), with the
+        walker's per-key sub-order: property match, then each matching
+        pattern, then additional. Gate: each declared property through a
+        direct ``element_at`` lookup; patterns and additional through
+        one ``forall`` over the entries."""
         props = s.get("properties", {})
         additional = s.get("additionalProperties")
-        patterns = s.get("patternProperties", {})
-        m = _obj(t.col)
-        is_obj = t.col.isNotNull() & _is_obj(t.col)
+        m = _obj(t)
+        is_obj = t.col.isNotNull() & _is_obj(t)
+        prop_b = {k: self._bind(sub, depth + 1) for k, sub in props.items()}
+        pat_b = [(unicode_pattern(p), self._bind(sub, depth + 1))
+                 for p, sub in s.get("patternProperties", {}).items()]
+        add_b = (self._bind(additional, depth + 1)
+                 if isinstance(additional, dict) else None)
+        # keys whose sub-schema can emit anything
+        prop_b = {k: b for k, b in prop_b.items() if b.viol is not None}
+        pat_b = [(p, b) for p, b in pat_b if b.viol is not None]
+        if add_b is not None and add_b.viol is None:
+            add_b = None
 
-        def entry_viols(e: Column) -> Column:
-            key, val = e["key"], e["value"]
-            child = VTarget(val, F.concat(t.path, F.lit("/"), key))
-            parts = []
-            prop_case = None
-            for k, sub in props.items():
-                v = self._node(sub, child, depth + 1)
-                prop_case = (F.when(key == F.lit(k), v) if prop_case is None
-                             else prop_case.when(key == F.lit(k), v))
-            if prop_case is not None:
-                parts.append(prop_case.otherwise(empty_violations()))
-            for pat, sub in patterns.items():
-                parts.append(F.when(key.rlike(unicode_pattern(pat)),
-                                    self._node(sub, child, depth + 1)
-                                    ).otherwise(empty_violations()))
-            if additional is not None:
-                is_known = F.lit(False)
-                if props:
-                    is_known = is_known | key.isin(list(props))
-                for p in patterns:
-                    is_known = is_known | key.rlike(unicode_pattern(p))
-                if additional is False:
-                    parts.append(F.when(~is_known, F.array(make_violation(
-                        "properties", t.path,
-                        F.concat(F.lit("Additional property '"), key,
-                                 F.lit("' is not allowed"))))
-                    ).otherwise(empty_violations()))
-                elif isinstance(additional, dict):
-                    parts.append(F.when(
-                        ~is_known,
-                        self._node(additional, child, depth + 1)
-                    ).otherwise(empty_violations()))
-            return _concat(parts)
+        if not (prop_b or pat_b or add_b is not None or additional is False):
+            return None
+        # one entry variable for the violations pass and the gate's pass,
+        # so the key tests are built once
+        e = _lambda_var("entry")
+        key, val = e["key"], e["value"]
+        path = F.concat(t.path, F.lit("/"), key)
+        is_known = F.lit(False)
+        if props:
+            is_known = is_known | key.isin(list(props))
+        for p in s.get("patternProperties", {}):
+            is_known = is_known | key.rlike(unicode_pattern(p))
 
-        return F.when(
+        parts = []
+        prop_case = None
+        for k, b in prop_b.items():
+            v = b.violations(val, path)
+            prop_case = (F.when(key == F.lit(k), v) if prop_case is None
+                         else prop_case.when(key == F.lit(k), v))
+        if prop_case is not None:
+            parts.append(prop_case.otherwise(empty_violations()))
+        for p, b in pat_b:
+            parts.append(_guarded(key.rlike(p), b.violations(val, path)))
+        if additional is False:
+            parts.append(F.when(~is_known, F.array(make_violation(
+                "properties", t.path,
+                F.concat(F.lit("Additional property '"), key,
+                         F.lit("' is not allowed"))))
+            ).otherwise(empty_violations()))
+        elif add_b is not None:
+            parts.append(_guarded(~is_known, add_b.violations(val, path)))
+        viol = F.when(
             is_obj,
-            F.flatten(F.transform(F.map_entries(m),
-                                  lambda e: entry_viols(e)))
+            F.flatten(_hof("transform", F.map_entries(m), e, _cat(parts)))
         ).otherwise(empty_violations())
 
-    def _property_names(self, sub: Any, t: VTarget, depth: int) -> Column:
+        def entry_ok() -> Optional[Column]:
+            conds = [~key.rlike(p) | b.ok_at(val) if b.ok is not None
+                     else ~key.rlike(p) for p, b in pat_b]
+            if additional is False:
+                conds.append(is_known)
+            elif add_b is not None:
+                conds.append(is_known | add_b.ok_at(val)
+                             if add_b.ok is not None else is_known)
+            return _and(conds)
+
+        def ok() -> Optional[Column]:
+            oks = [b.ok_at(F.element_at(m, F.lit(k)), absent_ok=True)
+                   for k, b in prop_b.items()]
+            if pat_b or add_b is not None or additional is False:
+                oks.append(_hof("forall", F.map_entries(m), e, entry_ok()))
+            return _and(oks)
+
+        return viol, _unless(is_obj, _gate(ok))
+
+    def _property_names(self, sub: Any, t: VTarget, depth: int
+                        ) -> Optional[Checked]:
         """Every key validates ``sub`` as a string value; error paths are
-        ``{path}/[{key}]`` (property_names.rs:25). Keys are lifted to
-        variants (to_json/parse_json round-trip of a 1-element array) so
-        the FULL keyword surface applies to them."""
-        m = _obj(t.col)
-        is_obj = t.col.isNotNull() & _is_obj(t.col)
+        ``{path}/[{key}]`` (property_names.rs:25). Keys are cast to
+        string variants so the FULL keyword surface applies to them."""
+        m = _obj(t)
+        is_obj = t.col.isNotNull() & _is_obj(t)
+        b = self._bind(sub, depth + 1)
+        if b.viol is None:
+            return None
+        viol = F.when(is_obj, F.flatten(F.transform(
+            F.map_keys(m),
+            lambda k: b.violations(k.cast("variant"), F.concat(
+                t.path, F.lit("/["), k, F.lit("]"))))
+        )).otherwise(empty_violations())
+        ok = None if b.ok is None else _gate(lambda: F.forall(
+            F.map_keys(m), lambda k: b.ok_at(k.cast("variant"))))
+        return viol, _unless(is_obj, ok)
 
-        def emit(k: Column) -> Column:
-            kv = F.try_variant_get(F.parse_json(F.to_json(F.array(k))),
-                                   "$[0]", "variant")
-            child = VTarget(kv, F.concat(t.path, F.lit("/["), k,
-                                         F.lit("]")))
-            return self._node(sub, child, depth + 1)
-
-        return F.when(
-            is_obj,
-            F.flatten(F.transform(F.map_keys(m), lambda k: emit(k)))
-        ).otherwise(empty_violations())
-
-    def _props_count(self, n: Any, is_max: bool, t: VTarget) -> Column:
-        cnt = F.size(F.map_keys(_obj(t.col)))
+    def _props_count(self, n: Any, is_max: bool, t: VTarget) -> Checked:
+        cnt = F.size(F.map_keys(_obj(t)))
         ok = cnt <= F.lit(int(n)) if is_max else cnt >= F.lit(int(n))
-        bad = t.col.isNotNull() & _is_obj(t.col) & ~ok
-        return _maybe(bad, make_violation(
+        bad = t.col.isNotNull() & _is_obj(t) & ~ok
+        return _check(bad, make_violation(
             "max_properties" if is_max else "min_properties", t.path))
 
-    def _dependencies(self, s: dict, t: VTarget, depth: int) -> Column:
+    def _dependencies(self, s: dict, t: VTarget, depth: int) -> Checked:
         deps: dict[str, Any] = {}
         deps.update(s.get("dependencies", {}))
         deps.update(s.get("dependentRequired", {}))
         deps.update(s.get("dependentSchemas", {}))
-        m = _obj(t.col)
-        is_obj = t.col.isNotNull() & _is_obj(t.col)
+        m = _obj(t)
+        is_obj = t.col.isNotNull() & _is_obj(t)
         parts = []
         for key, dep in deps.items():
             trig = is_obj & F.map_contains_key(m, F.lit(key))
             if isinstance(dep, list):
                 for req in dep:
                     bad = trig & ~F.map_contains_key(m, F.lit(req))
-                    parts.append(_maybe(bad, make_violation(
+                    parts.append(_check(bad, make_violation(
                         "required", _join(t.path, req))))
             else:
-                sub_viol = self._node(dep, t, depth + 1)
-                parts.append(F.when(trig, sub_viol)
-                              .otherwise(empty_violations()))
-        return _concat(parts)
+                sub_v, sub_ok = self._node(dep, t, depth + 1)
+                if sub_v is not None:
+                    parts.append((_guarded(trig, sub_v),
+                                  _unless(trig, sub_ok)))
+        return _merge(parts)
 
-    def _items(self, s: dict, t: VTarget, depth: int) -> Column:
+    def _items(self, s: dict, t: VTarget, depth: int) -> Checked:
         items = s.get("items")
         additional = s.get("additionalItems")
-        arr = _arr(t.col)
-        is_arr = t.col.isNotNull() & _is_arr(t.col)
+        arr = _arr(t)
+        is_arr = t.col.isNotNull() & _is_arr(t)
+
+        def elem_path(i: Column) -> Column:
+            return F.concat(t.path, F.lit("/"), i.cast("string"))
+
         parts = []
         if isinstance(items, (dict, bool)):
-            def per_elem(x, i):
-                child = VTarget(x, F.concat(t.path, F.lit("/"),
-                                            i.cast("string")))
-                return self._node(items, child, depth + 1)
-            parts.append(F.when(
-                is_arr, F.flatten(F.transform(arr, per_elem))
-            ).otherwise(empty_violations()))
+            b = self._bind(items, depth + 1)
+            if b.viol is not None:
+                viol = F.when(is_arr, F.flatten(F.transform(
+                    arr, lambda x, i: b.violations(x, elem_path(i)))
+                )).otherwise(empty_violations())
+                ok = None if b.ok is None else _gate(
+                    lambda: F.forall(arr, lambda x: b.ok_at(x)))
+                parts.append((viol, _unless(is_arr, ok)))
         elif isinstance(items, list):
             for i, sub in enumerate(items):
-                val = F.try_element_at(arr, F.lit(i + 1))
-                child = t.child(val, _join(t.path, str(i)))
-                parts.append(F.when(
-                    is_arr & (F.size(arr) > i),
-                    self._node(sub, child, depth + 1)
-                ).otherwise(empty_violations()))
+                v, ok = self._bind(sub, depth + 1).at(
+                    F.try_element_at(arr, F.lit(i + 1)),
+                    _join(t.path, str(i)))
+                if v is not None:
+                    has = is_arr & (F.size(arr) > i)
+                    parts.append((_guarded(has, v), _unless(has, ok)))
             n = len(items)
             if additional is False:
-                parts.append(_maybe(
+                parts.append(_check(
                     is_arr & (F.size(arr) > n),
                     make_violation("items", t.path,
                                    F.lit("Additional items are not "
                                          "allowed"))))
             elif isinstance(additional, dict):
-                def per_extra(x, i, sub=additional):
-                    child = VTarget(x, F.concat(t.path, F.lit("/"),
-                                                i.cast("string")))
-                    return F.when(i >= n,
-                                  self._node(sub, child, depth + 1)
-                                  ).otherwise(empty_violations())
-                parts.append(F.when(
-                    is_arr, F.flatten(F.transform(arr, per_extra))
-                ).otherwise(empty_violations()))
+                b = self._bind(additional, depth + 1)
+                if b.viol is not None:
+                    viol = F.when(is_arr, F.flatten(F.transform(
+                        arr, lambda x, i: F.when(
+                            i >= n, b.violations(x, elem_path(i))
+                        ).otherwise(empty_violations())))
+                    ).otherwise(empty_violations())
+                    ok = None if b.ok is None else _gate(
+                        lambda: F.forall(
+                            F.filter(arr, lambda x, i: i >= n),
+                            lambda x: b.ok_at(x)))
+                    parts.append((viol, _unless(is_arr, ok)))
         elif items is not None:
             raise UnsupportedRule("items must be schema or array")
-        return _concat(parts)
+        return _merge(parts)
 
-    def _unique_items(self, t: VTarget) -> Column:
+    def _unique_items(self, t: VTarget) -> Checked:
         """serde-strict uniqueItems over dynamic arrays (scalars AND
         composites up to ``_UNIQUE_DEPTH`` nesting levels compiled;
         deeper trees → walker residual).
@@ -679,33 +977,31 @@ class VariantCompiler:
                 "uniqueItems on dynamic JSON needs the walker residual")
         self.used_marker = True
         self._marker_sites += 1
-        arr = _arr(t.col)
-        is_arr = t.col.isNotNull() & _is_arr(t.col)
+        arr = _arr(t)
+        is_arr = t.col.isNotNull() & _is_arr(t)
 
-        def scalar_key(e: Column) -> Column:
-            st = _vtype(e)
-            return (F.when(F.is_variant_null(e), F.lit("z"))
+        def scalar_key(n: VTarget) -> Column:
+            st = _tag(n)
+            return (F.when(_is_null(n), F.lit("z"))
                      .when(st == "BOOLEAN",
-                           F.concat(F.lit("b:"), _bool(e).cast("string")))
-                     .when(st == "STRING", F.concat(F.lit("s:"), _str(e)))
+                           F.concat(F.lit("b:"), _bool(n).cast("string")))
+                     .when(st == "STRING", F.concat(F.lit("s:"), _str(n)))
                      .when(st == "BIGINT",
                            F.concat(F.lit("i:"),
-                                    F.try_variant_get(e, "$", "long")
+                                    F.try_variant_get(n.col, "$", "long")
                                      .cast("string")))
                      # +0.0 canonicalizes IEEE negative zero (-0.0 + 0.0
                      # = +0.0), matching Rust f64 == where -0.0 == 0.0
                      .otherwise(F.concat(F.lit("f:"),
-                                         (_num(e) + F.lit(0.0))
+                                         (_num(n) + F.lit(0.0))
                                          .cast("string"))))
 
         def framed(k: Column) -> Column:
             # length-prefix framing keeps member-key concatenation
-            # collision-free (["a,b"] vs ["a","b"])
-            return F.concat(F.length(k).cast("string"), F.lit("#"), k)
-
-        def obj_entries(e: Column) -> Column:
-            return F.map_entries(
-                F.try_variant_get(e, "$", "map<string,variant>"))
+            # collision-free (["a,b"] vs ["a","b"]); ``k`` is let-bound so
+            # the nested key tree is not built twice per level
+            return F.transform(F.array(k), lambda x: F.concat(
+                F.length(x).cast("string"), F.lit("#"), x)).getItem(0)
 
         # composite canonicalization to a FIXED depth (expressions can't
         # recurse): arrays order-sensitively (serde Vec ==), objects by
@@ -715,35 +1011,39 @@ class VariantCompiler:
         # walker's _hash_key SEMANTICS, not its byte format: int/float
         # tags stay distinct, doubles compare via Spark's injective
         # double->string round-trip. Elements nested deeper than
-        # _UNIQUE_DEPTH levels remain walker residual.
+        # _UNIQUE_DEPTH levels remain walker residual. Each element is
+        # let-bound with its casts (``_let_at``) once per level.
         def key_level(e: Column, depth: int) -> Column:
-            if depth == 0:
-                return scalar_key(e)
-            return (F.when(
-                _is_arr(e),
-                F.concat(F.lit("a:"), F.concat_ws("", F.transform(
-                    _arr(e), lambda x: framed(key_level(x, depth - 1))))))
-                .when(
-                    _is_obj(e),
-                    F.concat(F.lit("o:"), F.concat_ws("", F.array_sort(
-                        F.transform(obj_entries(e), lambda en: F.concat(
-                            framed(en["key"]),
-                            framed(key_level(en["value"], depth - 1))))))))
-                .otherwise(scalar_key(e)))
-
-        def dec_residual(e: Column) -> Column:
-            return (_vtype(e).rlike(r"^DECIMAL\(\d+,0\)$")
-                    & (F.abs(_num(e)) > F.lit(9.2e18)))
+            def key(n: VTarget) -> Column:
+                if depth == 0:
+                    return scalar_key(n)
+                return (F.when(
+                    _is_arr(n),
+                    F.concat(F.lit("a:"), F.concat_ws("", F.transform(
+                        n.arr, lambda x: framed(key_level(x, depth - 1))))))
+                    .when(
+                        _is_obj(n),
+                        F.concat(F.lit("o:"), F.concat_ws("", F.array_sort(
+                            F.transform(F.map_entries(n.obj),
+                                        lambda en: F.concat(
+                                framed(en["key"]),
+                                framed(key_level(en["value"],
+                                                 depth - 1))))))))
+                    .otherwise(scalar_key(n)))
+            return _let_at(e, key)
 
         def residual_level(e: Column, depth: int) -> Column:
-            if depth == 0:
-                return _is_obj(e) | _is_arr(e) | dec_residual(e)
-            deeper = (lambda x: residual_level(x, depth - 1))
-            return (dec_residual(e)
-                    | (_is_arr(e) & F.exists(_arr(e), deeper))
-                    | (_is_obj(e) & F.exists(
-                        F.transform(obj_entries(e), lambda en: en["value"]),
-                        deeper)))
+            def residual(n: VTarget) -> Column:
+                dec = (_tag(n).rlike(r"^DECIMAL\(\d+,0\)$")
+                       & (F.abs(_num(n)) > F.lit(9.2e18)))
+                if depth == 0:
+                    return _is_obj(n) | _is_arr(n) | dec
+                deeper = (lambda x: residual_level(x, depth - 1))
+                return (dec
+                        | (_is_arr(n) & F.exists(n.arr, deeper))
+                        | (_is_obj(n) & F.exists(F.map_values(n.obj),
+                                                 deeper)))
+            return _let_at(e, residual)
 
         residual = F.exists(
             arr, lambda e: residual_level(e, self._UNIQUE_DEPTH))
@@ -753,60 +1053,55 @@ class VariantCompiler:
         marker = _maybe(is_arr & residual, _marker_violation(t.path))
         viol = _maybe(is_arr & ~residual & dup,
                       make_violation("unique_items", t.path))
-        return _concat([marker, viol])
+        # the keys cost as much in a gate as in the tree: arrays take
+        # the full tree, everything else passes
+        return _cat([marker, viol]), _unless(is_arr, None)
 
-    def _items_count(self, n: Any, is_max: bool, t: VTarget) -> Column:
-        cnt = F.size(_arr(t.col))
+    def _items_count(self, n: Any, is_max: bool, t: VTarget) -> Checked:
+        cnt = F.size(_arr(t))
         ok = cnt <= F.lit(int(n)) if is_max else cnt >= F.lit(int(n))
-        bad = t.col.isNotNull() & _is_arr(t.col) & ~ok
-        return _maybe(bad, make_violation(
+        bad = t.col.isNotNull() & _is_arr(t) & ~ok
+        return _check(bad, make_violation(
             "max_items" if is_max else "min_items", t.path))
 
-    def _contains(self, s: dict, t: VTarget, depth: int) -> Column:
+    def _contains(self, s: dict, t: VTarget, depth: int) -> Checked:
         sub = s["contains"]
         min_c = s.get("minContains")
         max_c = s.get("maxContains")
         if self.version < DRAFT2019:
             min_c = max_c = None
-        arr = _arr(t.col)
-        is_arr = t.col.isNotNull() & _is_arr(t.col)
-
-        def ok_elem(x: Column) -> Column:
-            child = VTarget(x, F.lit(""))
-            return F.size(self._node(sub, child, depth + 1)) == 0
+        arr = _arr(t)
+        is_arr = t.col.isNotNull() & _is_arr(t)
 
         m0 = self._marker_sites
+        b = self._bind(sub, depth + 1)
         parts = []
         if min_c is None and max_c is None:
-            parts.append(_maybe(is_arr & ~F.exists(arr, ok_elem),
+            parts.append(_check(is_arr & ~F.exists(arr, b.valid_at),
                                 make_violation("contains", t.path)))
         else:
-            matched = F.size(F.filter(arr, ok_elem))
+            matched = F.size(F.filter(arr, b.valid_at))
             if min_c != 0:
-                parts.append(_maybe(is_arr & (matched == 0),
+                parts.append(_check(is_arr & (matched == 0),
                                     make_violation("contains", t.path)))
             if max_c is not None:
-                parts.append(_maybe(
+                parts.append(_check(
                     is_arr & (matched > F.lit(int(max_c))),
                     make_violation("min_contains/max_contains", t.path)))
             if min_c is not None:
-                parts.append(_maybe(
+                parts.append(_check(
                     is_arr & (matched < F.lit(int(min_c))),
                     make_violation("min_contains/max_contains", t.path)))
-        res = _concat(parts)
+        res = _cat([v for v, _ in parts])
         if self._marker_sites > m0:
-            # per-element markers invert ok_elem — lift when any element
-            # plan hit a cut point. The marker-existence probe recompiles
-            # the sub-schema; snapshot the ref budget and marker counter
-            # so the recompile is not double-charged (it is the same
-            # schema walk, not new inlining work).
-            refs0, sites0 = self._refs_inlined, self._marker_sites
+            # per-element markers invert valid_at — lift when any element
+            # plan hit a cut point
             elem_marker = F.exists(arr, lambda x: has_walker_marker(
-                self._node(sub, VTarget(x, F.lit("")), depth + 1)))
-            self._refs_inlined, self._marker_sites = refs0, sites0
-            res = F.when(is_arr & elem_marker,
-                         F.array(_marker_violation(t.path))).otherwise(res)
-        return res
+                b.violations(x, F.lit(""))))
+            return F.when(is_arr & elem_marker,
+                          F.array(_marker_violation(t.path))
+                          ).otherwise(_v(res)), None
+        return res, _all([ok for _, ok in parts])
 
     # -- unevaluated* (2019-09) on dynamic JSON ---------------------------
     # mirrors the typed compiler's static evaluated-set analysis
@@ -814,14 +1109,16 @@ class VariantCompiler:
     # runtime type guards: success-conditioned marking, combinator merge
     # rules, contains does NOT mark evaluated.
 
+    def _branch_valid(self, sub: Any, t: VTarget, depth: int) -> Column:
+        return _valid(self._node(sub, t, depth + 1)[0])
+
     def _entry_evaluated_v(self, s: Any, t: VTarget, depth: int,
                            key: Column, val: Column) -> Column:
         if not isinstance(s, dict):
             s = {} if s is True else {"not": {}}
 
         def sub_ok(sub) -> Column:
-            child = VTarget(val, F.lit(""))
-            return F.size(self._node(sub, child, depth + 1)) == 0
+            return self._bind(sub, depth + 1).valid_at(val)
 
         if "unevaluatedProperties" in s:
             # a sub-schema's own unevaluatedProperties ANNOTATES: its
@@ -841,9 +1138,9 @@ class VariantCompiler:
             return base | sub_ok(uev)
 
         def branch_valid(sub) -> Column:
-            return F.size(self._node(sub, t, depth + 1)) == 0
+            return self._branch_valid(sub, t, depth)
 
-        m = _obj(t.col)
+        m = _obj(t)
         conds: list[Column] = []
         if "$ref" in s:
             conds.append(self._entry_evaluated_v(
@@ -906,14 +1203,15 @@ class VariantCompiler:
         return out
 
     def _unevaluated_properties_v(self, s: dict, t: VTarget,
-                                  depth: int) -> Column:
+                                  depth: int) -> Optional[Column]:
         spec = s["unevaluatedProperties"]
         if spec is True:
-            return empty_violations()
+            return None
         rest = {k: v for k, v in s.items()
                 if k != "unevaluatedProperties"}
-        m = _obj(t.col)
-        is_obj = t.col.isNotNull() & _is_obj(t.col)
+        m = _obj(t)
+        is_obj = t.col.isNotNull() & _is_obj(t)
+        b = self._bind(spec, depth + 1) if spec is not False else None
 
         def emit(e: Column) -> Column:
             ev = self._entry_evaluated_v(rest, t, depth,
@@ -924,13 +1222,12 @@ class VariantCompiler:
                     "unevaluated", path,
                     F.lit("Unevaluated properties are not allowed")))
                 ).otherwise(empty_violations())
-            child = VTarget(e["value"], path)
-            return F.when(~ev, self._node(spec, child, depth + 1)) \
+            return F.when(~ev, _v(b.violations(e["value"], path))) \
                     .otherwise(empty_violations())
 
         return F.when(
             is_obj,
-            F.flatten(F.transform(F.map_entries(m), lambda e: emit(e)))
+            F.flatten(F.transform(F.map_entries(m), emit))
         ).otherwise(empty_violations())
 
     def _evaluated_items_v(self, s: Any, t: VTarget,
@@ -938,7 +1235,7 @@ class VariantCompiler:
         """array<boolean> aligned with the (variant-cast) array."""
         if not isinstance(s, dict):
             s = {} if s is True else {"not": {}}
-        arr = _arr(t.col)
+        arr = _arr(t)
         false_arr = F.transform(arr, lambda x: F.lit(False))
 
         def merge(a: Column, b: Column) -> Column:
@@ -948,8 +1245,7 @@ class VariantCompiler:
             return F.transform(a, lambda x: cond & x)
 
         def elem_ok(sub, x: Column) -> Column:
-            return F.size(self._node(sub, VTarget(x, F.lit("")),
-                                     depth + 1)) == 0
+            return self._bind(sub, depth + 1).valid_at(x)
 
         if "unevaluatedItems" in s:
             # same annotation rule as unevaluatedProperties: per-item
@@ -984,7 +1280,7 @@ class VariantCompiler:
             ev = merge(ev, F.transform(arr, positional))
 
         def branch_valid(sub) -> Column:
-            return F.size(self._node(sub, t, depth + 1)) == 0
+            return self._branch_valid(sub, t, depth)
 
         for sub in s.get("allOf", []):
             ev = merge(ev, self._evaluated_items_v(sub, t, depth + 1))
@@ -1019,32 +1315,33 @@ class VariantCompiler:
         return ev
 
     def _unevaluated_items_v(self, s: dict, t: VTarget,
-                             depth: int) -> Column:
+                             depth: int) -> Optional[Column]:
         spec = s["unevaluatedItems"]
         if spec is True:
-            return empty_violations()
+            return None
         rest = {k: v for k, v in s.items() if k != "unevaluatedItems"}
-        arr = _arr(t.col)
-        is_arr = t.col.isNotNull() & _is_arr(t.col)
+        arr = _arr(t)
+        is_arr = t.col.isNotNull() & _is_arr(t)
         ev = self._evaluated_items_v(rest, t, depth)
         idx_ev = F.zip_with(arr, ev,
                             lambda x, e: F.struct(x.alias("x"),
                                                   e.alias("e")))
 
+        def elem_path(i: Column) -> Column:
+            return F.concat(t.path, F.lit("/"), i.cast("string"))
+
         if spec is False:
             def emit(pair: Column, i: Column) -> Column:
                 return F.when(~pair["e"], F.array(make_violation(
-                    "unevaluated",
-                    F.concat(t.path, F.lit("/"), i.cast("string")),
+                    "unevaluated", elem_path(i),
                     F.lit("Unevaluated items are not allowed")))
                 ).otherwise(empty_violations())
         else:
+            b = self._bind(spec, depth + 1)
+
             def emit(pair: Column, i: Column) -> Column:
-                child = VTarget(pair["x"],
-                                F.concat(t.path, F.lit("/"),
-                                         i.cast("string")))
                 return F.when(~pair["e"],
-                              self._node(spec, child, depth + 1)
+                              _v(b.violations(pair["x"], elem_path(i)))
                               ).otherwise(empty_violations())
         return F.when(is_arr,
                       F.flatten(F.transform(idx_ev, emit))
@@ -1053,58 +1350,97 @@ class VariantCompiler:
     _B64_RE = (r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}=="
                r"|[A-Za-z0-9+/]{3}=)?$")
 
-    def _content_media(self, s: dict, t: VTarget) -> Column:
+    def _content_media(self, s: dict, t: VTarget) -> Checked:
         """contentEncoding base64 / contentMediaType application/json
         (content_media.rs:14-61), gated on a string-typed value."""
         enc = s.get("contentEncoding")
         mt = s.get("contentMediaType")
-        sv = _str(t.col)
-        is_str = t.col.isNotNull() & _is_str(t.col)
+        sv = _str(t)
+        is_str = t.col.isNotNull() & _is_str(t)
         parts = []
         val = sv
         decodable = F.lit(True)
         if enc == "base64":
             b64_ok = sv.rlike(self._B64_RE)
             utf8_ok = F.is_valid_utf8(F.unbase64(sv))
-            parts.append(_maybe(is_str & ~b64_ok,
+            parts.append(_check(is_str & ~b64_ok,
                                 make_violation("format", t.path,
                                                F.lit("Invalid byte"))))
-            parts.append(_maybe(is_str & b64_ok & ~utf8_ok,
+            parts.append(_check(is_str & b64_ok & ~utf8_ok,
                                 make_violation("format", t.path,
                                                F.lit("Invalid UTF-8"))))
             decodable = b64_ok & utf8_ok
             val = F.when(decodable, F.decode(F.unbase64(sv), "UTF-8"))
         if mt == "application/json":
             bad = is_str & decodable & F.try_parse_json(val).isNull()
-            parts.append(_maybe(bad, make_violation("format", t.path,
+            parts.append(_check(bad, make_violation("format", t.path,
                                                     F.lit(""))))
-        return _concat(parts)
+        return _merge(parts)
 
-    def _any_of(self, subs: list, t: VTarget, depth: int) -> Column:
+    def _all_of(self, subs: list, t: VTarget, depth: int) -> Checked:
+        return _merge([self._node(sub, t, depth + 1) for sub in subs])
+
+    def _any_of(self, subs: list, t: VTarget, depth: int) -> Checked:
         m0 = self._marker_sites
-        sub_viols = [self._node(sub, t, depth + 1) for sub in subs]
+        parts = [self._node(sub, t, depth + 1) for sub in subs]
         any_ok = None
-        for sv in sub_viols:
-            ok = F.size(sv) == 0
+        for p in parts:
+            ok = _valid(p[0])
             any_ok = ok if any_ok is None else (any_ok | ok)
         res = _maybe(~any_ok, make_violation(
-            "any_of", t.path, states=_states_json(sub_viols)))
+            "any_of", t.path, states=_states_json([_v(v) for v, _ in parts])))
         if self._marker_sites > m0:
-            res = self._lift_marker(sub_viols, res, t)
-        return res
+            return self._lift_marker([v for v, _ in parts], res, t), None
+        # one branch passing its gate passes the anyOf
+        if any(v is None for v, _ in parts):
+            return res, _gate(lambda: F.lit(True))
+        gates = [ok for _, ok in parts if ok is not None]
+        if not gates:
+            return res, None
+        return res, _gate(lambda: functools.reduce(
+            lambda a, b: a | b, [ok() for ok in gates]))
 
-    def _one_of(self, subs: list, t: VTarget, depth: int) -> Column:
+    def _one_of(self, subs: list, t: VTarget, depth: int) -> Checked:
         m0 = self._marker_sites
-        sub_viols = [self._node(sub, t, depth + 1) for sub in subs]
+        parts = [self._node(sub, t, depth + 1) for sub in subs]
         count = None
-        for sv in sub_viols:
-            ok_int = F.when(F.size(sv) == 0, 1).otherwise(0)
+        for p in parts:
+            ok_int = F.when(_valid(p[0]), 1).otherwise(0)
             count = ok_int if count is None else (count + ok_int)
         res = _maybe(count != 1, make_violation(
-            "one_of", t.path, states=_states_json(sub_viols)))
+            "one_of", t.path, states=_states_json([_v(v) for v, _ in parts])))
         if self._marker_sites > m0:
-            res = self._lift_marker(sub_viols, res, t)
-        return res
+            res = self._lift_marker([v for v, _ in parts], res, t)
+        return res, None
+
+
+def parse_documents(json_col: Column) -> Column:
+    """Each JSON document string as a variant. A SQL-NULL document
+    validates as JSON ``null`` (the walker's contract: never silently
+    valid); malformed JSON also parses to null here — callers needing a
+    parse-error distinction should pre-filter with ``try_parse_json``."""
+    return F.coalesce(F.try_parse_json(json_col),
+                      F.parse_json(F.lit("null")))
+
+
+def compile_variant_ruleset(schema: Any, doc: Column,
+                            version: int = DRAFT7,
+                            residual_marker: bool = False,
+                            unroll_depth: int = 16):
+    """Compile ``schema`` against a variant column of parsed documents.
+
+    Returns (ungated violations, ok, compiler). ``ok`` is None when no
+    row can take the gate; either way ``gated(violations, ok)`` is the
+    violations array. The compiler's ``used_marker`` tells the caller
+    whether any row may carry a ``NEEDS_WALKER`` marker needing
+    rerouting.
+    """
+    compiler = VariantCompiler(version=version, root_schema=schema,
+                               residual_marker=residual_marker,
+                               unroll_depth=unroll_depth)
+    viol, ok = compiler.compile_checked(schema,
+                                        VTarget(col=doc, path=F.lit("")))
+    return viol, ok, compiler
 
 
 def compile_json_ruleset(schema: Any, json_col: Column,
@@ -1116,16 +1452,15 @@ def compile_json_ruleset(schema: Any, json_col: Column,
 
     Returns (violations-array Column, the compiler — whose
     ``used_marker`` tells the caller whether any row may carry a
-    ``NEEDS_WALKER`` marker needing rerouting). A SQL-NULL document
-    string validates as JSON ``null`` (the walker's contract: never
-    silently valid). Malformed JSON also parses to null here — callers
-    needing a parse-error distinction should pre-filter with
-    ``try_parse_json``.
+    ``NEEDS_WALKER`` marker needing rerouting). Documents parse as in
+    ``parse_documents``, once per row: the parse is let-bound and the
+    gated plan evaluated over it.
     """
-    v = F.coalesce(F.try_parse_json(json_col),
-                   F.parse_json(F.lit("null")))
-    target = VTarget(col=v, path=F.lit(""))
-    compiler = VariantCompiler(version=version, root_schema=schema,
-                               residual_marker=residual_marker,
-                               unroll_depth=unroll_depth)
-    return compiler.compile(schema, target), compiler
+    doc = _lambda_var("doc")
+    viol, ok, compiler = compile_variant_ruleset(
+        schema, doc, version=version, residual_marker=residual_marker,
+        unroll_depth=unroll_depth)
+    checked = F.flatten(_hof("transform",
+                             F.array(parse_documents(json_col)), doc,
+                             gated(viol, ok)))
+    return checked, compiler

@@ -30,6 +30,9 @@ from valico_spark.compiler.columns import (
 )
 from valico_spark.compiler.pyvalidator import DRAFT7
 
+# staged column of the VARIANT lane: the parsed document
+_DOC = "__variant_doc"
+
 
 def validate_dataframe(df: DataFrame, ruleset: Any, version: int = DRAFT7,
                        mode: str = "auto") -> DataFrame:
@@ -83,36 +86,42 @@ def validate_json_column(df: DataFrame, json_col: str, ruleset: Any,
     """
     if mode in ("auto", "variant"):
         from valico_spark.compiler.variantcolumns import (
-            compile_json_ruleset, has_walker_marker,
+            compile_variant_ruleset, gated, has_walker_marker,
+            parse_documents,
         )
 
         try:
+            # parse once: every keyword reads the staged variant column
+            staged = df.withColumn(_DOC, parse_documents(F.col(json_col)))
+
+            def compile_at(depth: int):
+                return compile_variant_ruleset(
+                    ruleset, F.col(_DOC), version=version,
+                    residual_marker=(mode == "auto"), unroll_depth=depth)
+
             depth = unroll_depth if isinstance(unroll_depth, int) else 16
-            viol, compiler = compile_json_ruleset(
-                ruleset, F.col(json_col), version=version,
-                residual_marker=(mode == "auto"), unroll_depth=depth)
+            viol, ok, compiler = compile_at(depth)
             if unroll_depth == "auto" and compiler.recursion_cut:
                 from valico_spark.operators.infer import (
                     suggest_unroll_depth,
                 )
 
-                depth = suggest_unroll_depth(df, json_col)
-                viol, compiler = compile_json_ruleset(
-                    ruleset, F.col(json_col), version=version,
-                    residual_marker=(mode == "auto"), unroll_depth=depth)
-            out = df.withColumn("violations", viol)
+                viol, ok, compiler = compile_at(
+                    suggest_unroll_depth(df, json_col))
+            # gate: rows whose ok holds never build the violations tree
+            out = (staged.withColumn("violations", gated(viol, ok))
+                   .withColumn("valid", F.size("violations") == 0)
+                   .drop(_DOC))
             if not compiler.used_marker:
-                return out.withColumn("valid", F.size("violations") == 0)
+                return out
             # recursion unrolled to a finite depth: documents that reach
             # past the cut carry a NEEDS_WALKER marker — reroute ONLY
             # those to the Arrow walker; shallow documents (the common
             # case) stay on the column plan
             marked = has_walker_marker(F.col("violations"))
-            fast = (out.where(~marked)
-                       .withColumn("valid", F.size("violations") == 0))
-            deep = out.where(marked).drop("violations")
+            deep = out.where(marked).drop("violations", "valid")
             slow = _validate_json_arrow(deep, json_col, ruleset, version)
-            return fast.unionByName(slow)
+            return out.where(~marked).unionByName(slow)
         except UnsupportedRule:
             if mode == "variant":
                 raise
@@ -178,9 +187,11 @@ def validation_counts(df: DataFrame, ruleset: Any,
 
 def violation_rows(validated: DataFrame, id_cols: list[str]) -> DataFrame:
     """Explode per-document violations into the audit-table shape:
-    one row per violation with the document identifier columns."""
+    one row per violation with the document identifier columns. Valid
+    documents explode their empty arrays to no rows, so no ``valid``
+    filter is needed (one would be pushed below the projection and
+    evaluate the violations tree a second time)."""
     return (validated
-            .where(~F.col("valid"))
             .select(*id_cols, F.explode("violations").alias("v"))
             .select(*id_cols,
                     F.col("v.code").alias("code"),

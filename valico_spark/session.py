@@ -45,6 +45,11 @@ _DEFAULT_CONFS = {
     # streaming driver queries); delete them even when a query fails —
     # a 67-query bench x2 runs would otherwise accrete orphan dirs
     "spark.sql.streaming.forceDeleteTempCheckpointLocation": "true",
+    # the rule compilers build thousands of Columns per ruleset; with
+    # DataFrame debugging on, every Column call also records its Python
+    # call site in the JVM (about ten extra py4j round trips each), which
+    # more than doubles compile time
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
