@@ -2,11 +2,12 @@
 
 Mirrors the reference's pre-suite ritual (tests/schema/mod.rs:39-50):
 compile the draft core meta-schema with ban_unknown, then
-schema-validates-schema. Also exercises the variant compiler's bounded
-recursion story: linear self-recursive schemas unroll on the column
-plan; documents deeper than the unroll carry a NEEDS_WALKER marker and
-are rerouted to the Arrow walker — verdict parity must hold across the
-cut on a mixed-depth table."""
+schema-validates-schema. Also exercises both recursion stories of
+``validate_json_column``: a recursive ruleset the walker's gate covers
+runs exactly on the gated walker stage (no unroll), and one outside the
+gate unrolls on the VARIANT plan, where documents deeper than the unroll
+carry a NEEDS_WALKER marker and are rerouted to the walker stage —
+verdict parity must hold either way on a mixed-depth table."""
 
 import json
 
@@ -51,9 +52,9 @@ class TestMetaSchemaWalker:
         assert scope.validate(sid, schema).is_valid() == valid
 
     def test_spark_auto_path_agrees(self, spark):
-        """validate_json_column on schemas-as-documents: the meta-schema
-        exhausts the variant compiler's ref budget, so rows route through
-        the marker/walker residual — verdicts must equal the walker's."""
+        """validate_json_column on schemas-as-documents: the walker's gate
+        covers the meta-schema, so ``auto`` serves it from the gated
+        walker stage — verdicts must equal the walker's."""
         docs = [json.dumps(s) for s, _ in [
             ({"type": "integer"}, 1), ({"type": 1}, 0),
             ({"minLength": -1}, 0), ({"items": [{"type": "string"}]}, 1),
@@ -124,6 +125,46 @@ class TestLinearRecursionUnroll:
         assert comp.used_marker
         rows = df.select(viol.alias("v")).collect()
         assert rows[0]["v"] == []
+
+
+#: LINKED_LIST outside the walker's gate: contentMediaType has no exact
+#: boolean form (and only constrains strings, so no object node changes),
+#: so ``auto`` takes the VARIANT plan with its unroll and walker residual
+UNGATED_LINKED_LIST = dict(LINKED_LIST, contentMediaType="application/json")
+
+
+class TestVariantRecursionResidual:
+    """``auto`` on a recursive ruleset outside the gate: the VARIANT plan
+    unrolls the recursion, and documents deeper than the cut reroute to
+    the walker stage."""
+
+    @staticmethod
+    def _walker(docs):
+        scope = Scope(version=DRAFT7)
+        sid = scope.compile(UNGATED_LINKED_LIST)
+        assert not scope.gate(sid)[1]
+        out = {}
+        for i, d in enumerate(docs):
+            st = scope.validate(sid, json.loads(d))
+            out[i] = (st.is_valid(), sorted((e.code, e.path)
+                                            for e in st.errors))
+        return out
+
+    @pytest.mark.parametrize("unroll_depth", [16, "auto"])
+    def test_mixed_depth_parity(self, spark, unroll_depth):
+        docs = [_chain(3), _chain(3, bad_at=2), _chain(12), _chain(19),
+                _chain(22, bad_at=21), _chain(30), _chain(30, bad_at=25),
+                _chain(1), '{"v": "x"}', '{}']
+        df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
+                                   "i long, j string")
+        v = validate_json_column(df, "j", UNGATED_LINKED_LIST,
+                                 unroll_depth=unroll_depth)
+        assert "parseJson" in \
+            v._jdf.queryExecution().executedPlan().toString()
+        got = {r["i"]: (r["valid"], sorted((e["code"], e["path"])
+                                           for e in r["violations"]))
+               for r in v.collect()}
+        assert got == self._walker(docs)
 
 
 class TestAutoUnrollBudget:

@@ -9,7 +9,7 @@ No Spark needed — this is the pure-Python semantics oracle.
 import pytest
 
 from valico_spark.compiler.pyvalidator import (
-    DRAFT2019, DRAFT7, SchemaError, validate_json,
+    DRAFT2019, DRAFT7, SchemaError, Scope, load_document, validate_json,
 )
 
 
@@ -398,6 +398,88 @@ class TestDefaults:
         st = validate_json(sch, {}, supply_defaults=True)
         assert st.is_valid()
         assert st.replacement == {"y": 42}
+
+
+class TestGate:
+    """``Scope.gate``: passes ⇒ no error; ``covers`` ⇒ also the converse."""
+
+    @staticmethod
+    def gate(schema, version=DRAFT7, supply_defaults=False):
+        scope = Scope(version=version, supply_defaults=supply_defaults)
+        sid = scope.compile(schema)
+        passes, covers = scope.gate(sid)
+        return scope, sid, passes, covers
+
+    @pytest.mark.parametrize("schema,version,covers", [
+        ({"type": "integer", "minimum": 0}, DRAFT7, True),
+        ({"not": {"type": "integer"}}, DRAFT7, True),
+        ({"oneOf": [{"type": "integer"}, {"minimum": 2}]}, DRAFT7, True),
+        ({"if": {"type": "string"}, "then": {"minLength": 2}}, DRAFT7, True),
+        ({"properties": {"n": {"$ref": "#"}}, "required": ["v"]}, DRAFT7,
+         True),
+        ({"contains": {"type": "integer"}, "maxContains": 1}, DRAFT2019,
+         True),
+        ({"contentEncoding": "base64"}, DRAFT7, False),
+        ({"unevaluatedProperties": False}, DRAFT2019, False),
+        # an inexact branch makes every schema reading it inexact
+        ({"not": {"contentMediaType": "application/json"}}, DRAFT7, False),
+        ({"properties": {"a": {"$ref": "#/definitions/c"}},
+          "definitions": {"c": {"contentEncoding": "base64"}}}, DRAFT7,
+         False),
+    ])
+    def test_coverage(self, schema, version, covers):
+        assert self.gate(schema, version)[3] is covers
+
+    @pytest.mark.parametrize("schema,docs", [
+        ({"not": {"contentMediaType": "application/json"}},
+         ["{", '{"a": 1}', 5]),
+        ({"oneOf": [{"contentEncoding": "base64"}, {"type": "string"}]},
+         ["aGk=", "*", 3]),
+        ({"anyOf": [{"type": "integer"}, {"contentEncoding": "base64"}]},
+         [1, "aGk=", "*", 2.5]),
+        ({"contains": {"contentEncoding": "base64"}, "maxContains": 1},
+         [["*"], ["aGk=", "aGk="], [1]]),
+    ])
+    def test_inexact_gate_is_sound(self, schema, docs):
+        scope, sid, passes, covers = self.gate(schema, DRAFT2019)
+        assert not covers
+        for doc in docs:
+            if passes(doc):
+                assert scope.validate(sid, doc).is_valid(), doc
+
+    def test_exact_gate_on_recursion(self):
+        schema = {"type": "object", "required": ["v"],
+                  "properties": {"v": {"type": "integer", "minimum": 0},
+                                 "next": {"$ref": "#"}}}
+        scope, sid, passes, covers = self.gate(schema)
+        assert covers
+        doc = {"v": 0}
+        for i in range(1, 100):  # deeper than the VARIANT unroll budget
+            doc = {"v": i, "next": doc}
+        for d in (doc, {"v": 1, "next": {"v": -1}}, {"next": {}}, []):
+            assert passes(d) is scope.validate(sid, d).is_valid(), d
+
+    def test_supply_defaults_passes_nothing(self):
+        schema = {"properties": {"a": {"default": 42}}, "required": ["a"]}
+        scope, sid, passes, covers = self.gate(schema, supply_defaults=True)
+        assert not covers and not passes({})
+        assert scope.validate(sid, {}).is_valid()
+
+    def test_a_new_schema_rebinds(self):
+        scope = Scope()
+        sid = scope.compile({"$ref": "http://x.y/s#"})
+        assert scope.gate(sid)[0](5)  # a missing $ref is no error
+        scope.compile({"$id": "http://x.y/s", "type": "string"})
+        assert not scope.gate(sid)[0](5)
+        assert not scope.validate(sid, 5).is_valid()
+
+
+def test_load_document_null_contract():
+    for doc in (None, "", "{", '{"a": 1', "NaN", "[Infinity]",
+                '{"a": -Infinity}', "1 2"):
+        assert load_document(doc) is None, doc
+    assert load_document('{"a": 1, "a": 2}') == {"a": 2}  # last wins
+    assert load_document("1e400") == float("inf")
 
 
 class TestStateShape:

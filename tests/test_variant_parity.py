@@ -242,12 +242,28 @@ FUZZ_UNIQUE_RULESET = {
 @pytest.mark.parametrize("seed", [11, 12, 13])
 def test_fuzz_unique_items_variant_vs_walker(spark, seed):
     """Random docs (scalar AND composite array elements) through the
-    auto path: scalar arrays stay compiled, composite ones reroute via
-    the runtime marker — violation rows byte-equal to the walker either
-    way."""
+    auto path, which is the gated walker stage for this ruleset:
+    violation rows byte-equal to the walker. The VARIANT plan's marker
+    reroute runs on the same corpus in
+    ``test_fuzz_unique_items_variant_residual``."""
     rnd = random.Random(seed)
     docs = [_rand_doc(rnd) for _ in range(300)]
     _check(spark, docs, FUZZ_UNIQUE_RULESET, force=False)
+
+
+def test_fuzz_unique_items_variant_residual(spark):
+    """The same corpus outside the walker's gate (contentMediaType has no
+    exact boolean form), so ``auto`` takes the VARIANT plan: scalar
+    arrays stay compiled, composite ones reroute via the runtime
+    marker."""
+    rs = dict(FUZZ_UNIQUE_RULESET, contentMediaType="application/json")
+    scope = Scope()
+    assert not scope.gate(scope.compile(rs))[1]
+    df = spark.createDataFrame([("[]",)], "j string")
+    plan = validate_json_column(df, "j", rs)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "parseJson" in plan, plan
+    _check(spark, _fuzz_corpus([11, 12, 13]), rs, force=False)
 
 
 class TestCompositeAndNames:
@@ -358,6 +374,8 @@ def test_fuzz_unevaluated_variant_vs_walker(spark, seed):
 
 class TestUniqueItemsVariant:
     RS = {"properties": {"xs": {"uniqueItems": True}}}
+    # outside the walker's gate, so auto takes the VARIANT plan
+    UNGATED = dict(RS, contentMediaType="application/json")
 
     def test_scalar_arrays_compile_serde_strict(self, spark):
         docs = [
@@ -378,9 +396,11 @@ class TestUniqueItemsVariant:
             '{"xs": [1e2, 100]}',         # float vs int distinct
             '{"xs": []}', '{"xs": 7}', '{}',
         ]
-        # auto mode: all-scalar arrays stay on the column plan; verdicts
-        # and violation rows must equal the walker byte-for-byte
-        _check(spark, docs, self.RS, force=False)
+        # auto mode on both lanes (gated walker stage; VARIANT, where
+        # all-scalar arrays stay on the column plan): verdicts and
+        # violation rows must equal the walker byte-for-byte
+        for rs in (self.RS, self.UNGATED):
+            _check(spark, docs, rs, force=False)
 
     def test_composites_reroute_and_match_walker(self, spark):
         docs = [
@@ -391,7 +411,8 @@ class TestUniqueItemsVariant:
             '{"xs": [{}, [1], true, null, 1]}',
             '{"xs": [18446744073709551615, 18446744073709551615]}',
         ]
-        _check(spark, docs, self.RS, force=False)
+        for rs in (self.RS, self.UNGATED):
+            _check(spark, docs, rs, force=False)
 
     def test_marker_fires_only_beyond_depth_budget(self, spark):
         """Scalar AND shallow-composite arrays must NOT reroute: the
@@ -552,7 +573,9 @@ def test_gate_sound_unevaluated_fuzz(spark, seed):
 def test_docs_ruleset_plan_counts(spark, tmp_path):
     """The VARIANT lane parses each row once, in the verdict plan and in
     the violation-row plan alike, and reads ``schema_of_variant`` only
-    at the scalar nodes (one site per scalar node and tree)."""
+    at the scalar nodes (one site per scalar node and tree). ``auto``
+    serves the ruleset (the walker's gate covers it) from one Python
+    Arrow stage with no VARIANT expression at all."""
     import re
 
     from valico_spark.operators.validate import violation_rows
@@ -568,14 +591,132 @@ def test_docs_ruleset_plan_counts(spark, tmp_path):
     spark.createDataFrame([(d["doc_id"], json.dumps(d)) for d in docs],
                           "doc_id string, json string"
                           ).write.parquet(path)
+    def plan(df) -> str:
+        return df.select("*")._jdf.queryExecution().executedPlan() \
+            .toString()
+
     validated = validate_json_column(spark.read.parquet(path), "json",
-                                     DOCS_RULESET)
+                                     DOCS_RULESET, mode="variant")
     rows = violation_rows(validated, ["doc_id"])
     for df in (validated, rows):
-        plan = df.select("*")._jdf.queryExecution().executedPlan() \
-            .toString()
-        assert len(re.findall(r"\.parseJson\(", plan)) == 1, plan
-        assert len(re.findall(r"\.schemaOfVariant\(", plan)) <= 10, plan
+        assert len(re.findall(r"\.parseJson\(", plan(df))) == 1, plan(df)
+        assert len(re.findall(r"\.schemaOfVariant\(", plan(df))) <= 10, \
+            plan(df)
     assert [r["valid"] for r in validated.orderBy("doc_id").collect()] \
         == [False, True, False]
     assert rows.count() == 4
+
+    auto = validate_json_column(spark.read.parquet(path), "json",
+                                DOCS_RULESET)
+    auto_rows = violation_rows(auto, ["doc_id"])
+    for df in (auto, auto_rows):
+        assert len(re.findall(r"\bMapInArrow\b", plan(df))) == 1, plan(df)
+        assert not re.search(r"\.(parseJson|schemaOfVariant)\(",
+                             plan(df)), plan(df)
+    assert sorted(auto.collect()) == sorted(validated.collect())
+    assert sorted(auto_rows.collect()) == sorted(rows.collect())
+
+
+# -- the gated walker lane ----------------------------------------------------
+
+def _walker_rows(docs, ruleset):
+    """The walker on the null contract (``load_document``): per document,
+    (valid, the violation rows in the walker's order)."""
+    from valico_spark.compiler.pyvalidator import load_document
+
+    scope = Scope()
+    sid = scope.compile(ruleset)
+    out = []
+    for doc in docs:
+        errors = scope.validate(sid, load_document(doc)).errors
+        out.append((not errors, [(e.code, e.title, e.path, e.detail,
+                                  e.states) for e in errors]))
+    return out
+
+
+def _lane_rows(spark, docs, ruleset, mode):
+    df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
+                               "i long, j string")
+    v = validate_json_column(df, "j", ruleset, mode=mode)
+    return [(r["valid"], [tuple(e) for e in r["violations"]])
+            for r in v.orderBy("i").collect()], v
+
+
+PARSE_CONTRACT_DOCS = [
+    None, "", "   ", '{"doc_id": "x"', '{"doc_id": NaN}', "NaN",
+    "Infinity", "-Infinity", '[1, -Infinity]', '{"a": 1} {"b": 2}',
+    '{"doc_id": "p01-0000000001", "spans": [{"kind": "text", '
+    '"offset": 0}]}',
+    # duplicate keys keep the last value (serde_json's rule)
+    '{"doc_id": "p01-0000000001", "doc_id": "bad", '
+    '"spans": [{"kind": "text", "offset": 0}]}',
+    '{"doc_id": "bad", "doc_id": "p01-0000000001", '
+    '"spans": [{"kind": "text", "offset": 0}]}',
+]
+
+
+def test_arrow_lane_parse_contract(spark):
+    """A malformed document, or one using NaN / Infinity, validates as
+    JSON null on the walker lanes instead of failing the job; ``auto``
+    (the gated stage for this ruleset) equals ``arrow``."""
+    from valico_spark.rulesets import DOCS_RULESET
+
+    exp = _walker_rows(PARSE_CONTRACT_DOCS, DOCS_RULESET)
+    arrow, _ = _lane_rows(spark, PARSE_CONTRACT_DOCS, DOCS_RULESET,
+                          "arrow")
+    auto, _ = _lane_rows(spark, PARSE_CONTRACT_DOCS, DOCS_RULESET, "auto")
+    assert arrow == exp
+    assert auto == arrow
+    null = exp[0]
+    assert not null[0] and [r[0] for r in null[1]] == ["wrong_type"]
+    assert exp[1:10] == [null] * 9
+    assert [v for v, _ in exp[10:]] == [True, False, True]
+
+
+def _linked_list_docs():
+    from test_metaschema_recursion import _chain
+
+    return [_chain(3), _chain(3, bad_at=2), _chain(12), _chain(30),
+            _chain(30, bad_at=25), _chain(60), _chain(1), '{"v": "x"}',
+            '{}', '{"v": 1, "next": []}', None]
+
+
+def _gate_corpora():
+    from test_metaschema_recursion import LINKED_LIST
+
+    return {
+        "mixed": (MIXED_DOCS, TestEventsShape.RULESET),
+        "fuzz": (_fuzz_corpus([1, 2, 3]), FUZZ_RULESET),
+        "fuzz_unique": (_fuzz_corpus([11, 12, 13]), FUZZ_UNIQUE_RULESET),
+        # recursion runs exactly on the walker: no unroll, no residual
+        "linked_list": (_linked_list_docs(), LINKED_LIST),
+    }
+
+
+@pytest.mark.parametrize("corpus", ["mixed", "fuzz", "fuzz_unique",
+                                    "linked_list"])
+def test_gated_walker_lane(spark, corpus):
+    """The walker's gate covers each ruleset and is exact on each corpus
+    (a document passes iff the walker finds it valid), some documents
+    take it, and ``auto`` serves the ruleset from the gated stage with
+    output equal to the walker's, element for element."""
+    from valico_spark.compiler.pyvalidator import load_document
+
+    docs, ruleset = _gate_corpora()[corpus]
+    scope = Scope()
+    sid = scope.compile(ruleset)
+    passes, covers = scope.gate(sid)
+    assert covers
+    taken = 0
+    for doc in docs:
+        value = load_document(doc)
+        ok = passes(value)
+        assert ok == scope.validate(sid, value).is_valid(), doc
+        taken += ok
+    assert 0 < taken < len(docs), (taken, len(docs))
+
+    got, validated = _lane_rows(spark, docs, ruleset, "auto")
+    plan = validated._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "parseJson" not in plan, plan
+    assert got == _walker_rows(docs, ruleset)
+    _check(spark, docs, ruleset, force=False)

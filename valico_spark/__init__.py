@@ -10,10 +10,13 @@ Grape-style coercion DSL), re-expressed Spark-first:
   codegen; no per-row Python in the hot path).
 * A **reference-semantics core** (`valico_spark.compiler.pyvalidator`)
   reproduces valico's exact verdicts and ``{code, title, path, detail}``
-  violation rows for arbitrary dynamic JSON documents; it runs distributed
-  as an Arrow-batched ``mapInPandas`` stage (the fallback path for
-  constructs no static column plan can express: dynamic objects,
-  ``unevaluated*`` with branch-dependent evaluated sets, recursive ``$ref``).
+  violation rows for arbitrary dynamic JSON documents. Its boolean gate
+  (``Scope.gate``) makes it the serving path for dynamic JSON: one
+  Arrow-batched ``mapInArrow`` stage passes the documents that clear the
+  gate and walks only the failures. The VARIANT column plan
+  (``compiler.variantcolumns``) serves rulesets outside the gate and an
+  explicit ``mode="variant"``; the ungated stage is the fallback for
+  constructs no compiled plan can express.
 * **Table-scale checks** (`valico_spark.operators`): single-pass column
   stats (null rate / HLL distinct / quantile sketches), uniqueness,
   cross-table referential integrity, KS & chi-square distribution drift —

@@ -7,12 +7,15 @@ validator closures, walk a document, produce a ``ValidationState`` with
 value (defaults/content decoding) and the ``evaluated``-path set that powers
 ``unevaluatedItems/Properties``.
 
-Role in the engine: this is NOT the hot path. It is
-(a) the semantics oracle for golden fixtures and tests, and
-(b) the Arrow-batched distributed fallback (``operators.validate`` wraps it
-    in ``mapInPandas``) for constructs the static column compiler cannot
-    express: dynamic/heterogeneous JSON, ``unevaluated*`` with
-    branch-dependent evaluated sets, recursive ``$ref``.
+Role in the engine:
+(a) the semantics oracle for golden fixtures and tests;
+(b) the serving path for dynamic JSON: ``Scope.gate`` is the walk's
+    boolean fast path (``Keyword.passes``, no state allocated), and
+    ``operators.validate`` runs it in one Arrow-batched ``mapInArrow``
+    stage that walks only the documents failing the gate, when the gate
+    covers the ruleset;
+(c) without the gate, the distributed fallback for constructs no compiled
+    plan expresses (``unevaluated*`` with recursion, exotic formats).
 
 Behavioral contract mirrored from the reference (citations are
 ``/root/reference/<file>:<line>``):
@@ -33,6 +36,7 @@ from __future__ import annotations
 
 import json
 import math
+import operator
 import re
 from typing import Any, Callable
 
@@ -117,31 +121,26 @@ def fract_is_zero(v: float) -> bool:
     return float(v).is_integer()
 
 
-def check_type(v: Any, ty: str) -> bool:
-    # validators/type_.rs:19-33
-    if ty == "array":
-        return isinstance(v, list)
-    if ty == "boolean":
-        return isinstance(v, bool)
-    if ty == "integer":
-        if isinstance(v, bool):
-            return False
-        if isinstance(v, int):
-            return True
-        return isinstance(v, float) and math.isfinite(v) and v.is_integer()
-    if ty == "number":
-        return is_number(v)
-    if ty == "null":
-        return v is None
-    if ty == "object":
-        return isinstance(v, dict)
-    if ty == "string":
-        return isinstance(v, str)
-    raise SchemaError("UnknownType", detail=ty)
+def _is_integer(v: Any) -> bool:
+    if isinstance(v, bool):
+        return False
+    if isinstance(v, int):
+        return True
+    return isinstance(v, float) and math.isfinite(v) and v.is_integer()
 
 
-PRIMITIVE_TYPES = {"array", "boolean", "integer", "number", "null", "object",
-                   "string"}
+# validators/type_.rs:19-33
+_TYPE_TESTS: dict[str, Callable[[Any], bool]] = {
+    "array": lambda v: isinstance(v, list),
+    "boolean": lambda v: isinstance(v, bool),
+    "integer": _is_integer,
+    "number": is_number,
+    "null": lambda v: v is None,
+    "object": lambda v: isinstance(v, dict),
+    "string": lambda v: isinstance(v, str),
+}
+
+PRIMITIVE_TYPES = set(_TYPE_TESTS)
 
 
 def deep_eq_strict(a: Any, b: Any) -> bool:
@@ -211,14 +210,43 @@ def _skip() -> ValidationState:
     return ValidationState()
 
 
-class TypeV:
+class Keyword:
+    """A compiled keyword, called as (value, path, scope, prev) -> state.
+
+    ``passes(value)`` is its boolean form: True only when the call would
+    append no error. An ``exact`` keyword's ``passes`` is also True
+    whenever the call appends none, provided the sub-schemas it reads
+    are exact; a keyword without an exact boolean form passes nothing.
+    ``bind(scope)`` resolves the sub-schemas ``passes`` reads and
+    returns them (``Scope.gate`` binds every schema before use).
+    """
+
+    exact = True
+
+    def bind(self, scope: "Scope") -> list["Schema"]:
+        return []
+
+    def passes(self, val) -> bool:
+        return False
+
+
+class TypeV(Keyword):
     def __init__(self, types: list[str], single: bool):
         self.types = types
         self.single = single
+        self._tests = tuple(_TYPE_TESTS[t] for t in types)
+        if len(types) == 1:
+            self.passes = self._tests[0]  # the gate's hottest call: no loop
+
+    def passes(self, val):
+        for test in self._tests:
+            if test(val):
+                return True
+        return False
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
-        if any(check_type(val, t) for t in self.types):
+        if self.passes(val):
             state.evaluated.add(path)
         elif self.single:
             state.errors.append(schema_violation(
@@ -230,150 +258,189 @@ class TypeV:
         return state
 
 
-class EnumV:
+class EnumV(Keyword):
     def __init__(self, items: list):
         self.items = items
+        # all-string enums: a set lookup is is_matching exactly
+        self._strings = (frozenset(items)
+                         if all(isinstance(i, str) for i in items) else None)
+
+    def passes(self, val):
+        if self._strings is not None:
+            return isinstance(val, str) and val in self._strings
+        return any(is_matching(val, item) for item in self.items)
 
     def __call__(self, val, path, scope, prev):
-        state = ValidationState()
-        if not any(is_matching(val, item) for item in self.items):
-            state.errors.append(schema_violation("enum", path))
-        return state
+        if self.passes(val):
+            return _skip()
+        return err_state(schema_violation("enum", path))
 
 
-class ConstV:
+class ConstV(Keyword):
     def __init__(self, item):
         self.item = item
 
+    def passes(self, val):
+        return is_matching(self.item, val)
+
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
-        if not is_matching(self.item, val):
+        if not self.passes(val):
             state.errors.append(schema_violation("const", path))
         else:
             state.evaluated.add(path)
         return state
 
 
-class BoundV:
+class BoundV(Keyword):
     """maximum/minimum/exclusive* — validators/maxmin.rs. exclusive variants
     report the plain maximum/minimum code (maxmin.rs:49-52,99-102)."""
 
     def __init__(self, number: float, op: str):
         self.number = number
         self.op = op  # 'max' | 'emax' | 'min' | 'emin'
+        self._holds = {"max": operator.le, "emax": operator.lt,
+                       "min": operator.ge, "emin": operator.gt}[op]
+
+    def passes(self, val):
+        if isinstance(val, float):
+            return self._holds(val, self.number)
+        # ints compare through f64 too (a Python int-float compare is exact)
+        return (not isinstance(val, int) or isinstance(val, bool)
+                or self._holds(as_f64(val), self.number))
 
     def __call__(self, val, path, scope, prev):
-        n = as_f64(val)
-        if n is None:
-            return _skip()
-        ok = {"max": n <= self.number, "emax": n < self.number,
-              "min": n >= self.number, "emin": n > self.number}[self.op]
-        if ok:
+        if self.passes(val):
             return _skip()
         code = "maximum" if self.op in ("max", "emax") else "minimum"
         return err_state(schema_violation(code, path))
 
 
-class MultipleOfV:
+class MultipleOfV(Keyword):
     def __init__(self, number: float):
         self.number = number
 
-    def __call__(self, val, path, scope, prev):
+    def passes(self, val):
         n = as_f64(val)
         if n is None:
-            return _skip()
+            return True
         k = self.number
         if (math.isfinite(n) and fract_is_zero(n)) and fract_is_zero(k):
-            valid = math.fmod(n, k) == 0.0 if k != 0 else math.isnan(math.fmod(n, k))
-        else:
-            try:
-                # Rust `inf % 1.0` / `nan % x` yield NaN; Python fmod
-                # raises ValueError on an infinite dividend instead.
-                remainder = math.fmod(n / k, 1.0)
-            except (ZeroDivisionError, ValueError):
-                remainder = math.nan
-            less_eps = math.isnan(remainder) or remainder < EPSILON
-            less_one = remainder < (1.0 - EPSILON)
-            valid = less_eps and less_one
-        if valid:
+            return (math.fmod(n, k) == 0.0 if k != 0
+                    else math.isnan(math.fmod(n, k)))
+        try:
+            # Rust `inf % 1.0` / `nan % x` yield NaN; Python fmod
+            # raises ValueError on an infinite dividend instead.
+            remainder = math.fmod(n / k, 1.0)
+        except (ZeroDivisionError, ValueError):
+            remainder = math.nan
+        less_eps = math.isnan(remainder) or remainder < EPSILON
+        less_one = remainder < (1.0 - EPSILON)
+        return less_eps and less_one
+
+    def __call__(self, val, path, scope, prev):
+        if self.passes(val):
             return _skip()
         return err_state(schema_violation("multiple_of", path))
 
 
-class LengthV:
+class LengthV(Keyword):
     def __init__(self, length: int, is_max: bool):
         self.length = length
         self.is_max = is_max
 
-    def __call__(self, val, path, scope, prev):
+    def passes(self, val):
         if not isinstance(val, str):
-            return _skip()
+            return True
         n = len(val)  # Python len == Unicode scalar count (maxmin_length.rs)
-        ok = n <= self.length if self.is_max else n >= self.length
-        if ok:
+        return n <= self.length if self.is_max else n >= self.length
+
+    def __call__(self, val, path, scope, prev):
+        if self.passes(val):
             return _skip()
         return err_state(schema_violation(
             "max_length" if self.is_max else "min_length", path))
 
 
-class PatternV:
+class PatternV(Keyword):
     def __init__(self, regex):
         self.regex = regex
 
+    def passes(self, val):
+        # unanchored, pattern.rs:21
+        return not isinstance(val, str) or self.regex.search(val) is not None
+
     def __call__(self, val, path, scope, prev):
-        if not isinstance(val, str):
-            return _skip()
-        if self.regex.search(val):  # unanchored, pattern.rs:21
+        if self.passes(val):
             return _skip()
         return err_state(schema_violation("pattern", path))
 
 
-class ItemsCountV:
+class ItemsCountV(Keyword):
     def __init__(self, length: int, is_max: bool):
         self.length = length
         self.is_max = is_max
 
-    def __call__(self, val, path, scope, prev):
+    def passes(self, val):
         if not isinstance(val, list):
-            return _skip()
-        ok = len(val) <= self.length if self.is_max else len(val) >= self.length
-        if ok:
+            return True
+        return len(val) <= self.length if self.is_max \
+            else len(val) >= self.length
+
+    def __call__(self, val, path, scope, prev):
+        if self.passes(val):
             return _skip()
         return err_state(schema_violation(
             "max_items" if self.is_max else "min_items", path))
 
 
-class PropsCountV:
+class PropsCountV(Keyword):
     def __init__(self, length: int, is_max: bool):
         self.length = length
         self.is_max = is_max
 
-    def __call__(self, val, path, scope, prev):
+    def passes(self, val):
         if not isinstance(val, dict):
-            return _skip()
-        ok = len(val) <= self.length if self.is_max else len(val) >= self.length
-        if ok:
+            return True
+        return len(val) <= self.length if self.is_max \
+            else len(val) >= self.length
+
+    def __call__(self, val, path, scope, prev):
+        if self.passes(val):
             return _skip()
         return err_state(schema_violation(
             "max_properties" if self.is_max else "min_properties", path))
 
 
-class UniqueItemsV:
-    def __call__(self, val, path, scope, prev):
+class UniqueItemsV(Keyword):
+    def passes(self, val):
         if not isinstance(val, list):
-            return _skip()
+            return True
         seen = set()
         for item in val:
             k = _hash_key(item)
             if k in seen:
-                return err_state(schema_violation("unique_items", path))
+                return False
             seen.add(k)
-        return _skip()
+        return True
+
+    def __call__(self, val, path, scope, prev):
+        if self.passes(val):
+            return _skip()
+        return err_state(schema_violation("unique_items", path))
 
 
-class RequiredV:
+class RequiredV(Keyword):
     def __init__(self, items: list[str]):
         self.items = items
+
+    def passes(self, val):
+        if not isinstance(val, dict):
+            return True
+        for key in self.items:
+            if key not in val:
+                return False
+        return True
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, dict):
@@ -386,7 +453,7 @@ class RequiredV:
         return state
 
 
-class PropertiesV:
+class PropertiesV(Keyword):
     """properties / patternProperties / additionalProperties
     (validators/properties.rs:22-137)."""
 
@@ -396,6 +463,52 @@ class PropertiesV:
         self.properties = properties  # key -> url
         self.patterns = patterns      # (compiled_regex, url)
         self.additional = additional  # ('unspecified'|'bool'|'schema', x)
+
+    def bind(self, scope):
+        kind, extra = self.additional
+        self._props = {k: scope.resolve(u)
+                       for k, u in self.properties.items()}
+        self._patterns = [(regex, scope.resolve(u))
+                          for regex, u in self.patterns]
+        self._additional = scope.resolve(extra) if kind == "schema" else None
+        # no patterns and no closed/schema additionalProperties: only the
+        # declared keys are checked, so walk those instead of the object
+        self._open = not self.patterns and (
+            kind == "unspecified" or (kind == "bool" and extra))
+        subs = [*self._props.values(), *(s for _, s in self._patterns),
+                self._additional]
+        return [s for s in subs if s is not None]
+
+    def passes(self, val):
+        if not isinstance(val, dict):
+            return True
+        if self._open:
+            for key, schema in self._props.items():
+                if (schema is not None and key in val
+                        and not schema.passes(val[key])):
+                    return False
+            return True
+        kind, extra = self.additional
+        for key, item in val.items():
+            matched = key in self._props
+            if matched:
+                schema = self._props[key]
+                if schema is not None and not schema.passes(item):
+                    return False
+            for regex, schema in self._patterns:
+                if schema is not None and regex.search(key):
+                    if not schema.passes(item):
+                        return False
+                    matched = True
+            if matched:
+                continue
+            if kind == "bool":
+                if not extra:
+                    return False
+            elif (self._additional is not None
+                  and not self._additional.passes(item)):
+                return False
+        return True
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, dict):
@@ -483,9 +596,22 @@ class PropertiesV:
         return state
 
 
-class PropertyNamesV:
+class _SubV(Keyword):
+    """A keyword over one sub-schema url."""
+
     def __init__(self, url: str):
         self.url = url
+
+    def bind(self, scope):
+        self._sub = scope.resolve(self.url)
+        return [self._sub] if self._sub is not None else []
+
+
+class PropertyNamesV(_SubV):
+    def passes(self, val):
+        if not isinstance(val, dict) or self._sub is None:
+            return True
+        return all(self._sub.passes(key) for key in val)
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, dict):
@@ -501,9 +627,28 @@ class PropertyNamesV:
         return state
 
 
-class DependenciesV:
+class DependenciesV(Keyword):
     def __init__(self, items: list[tuple[str, tuple[str, Any]]]):
         self.items = items  # (key, ('schema', url) | ('props', [keys]))
+
+    def bind(self, scope):
+        # (key, sub-schema or None, required keys or None)
+        self._bound = [(key, scope.resolve(extra), None) if kind == "schema"
+                       else (key, None, extra)
+                       for key, (kind, extra) in self.items]
+        return [s for _, s, _ in self._bound if s is not None]
+
+    def passes(self, val):
+        if not isinstance(val, dict):
+            return True
+        for key, schema, keys in self._bound:
+            if key not in val:
+                continue
+            if schema is not None and not schema.passes(val):
+                return False
+            if keys is not None and any(k not in val for k in keys):
+                return False
+        return True
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -534,13 +679,44 @@ class DependenciesV:
         return state
 
 
-class ItemsV:
+class ItemsV(Keyword):
     """items / additionalItems (validators/items.rs:30-150)."""
 
     def __init__(self, kind: str | None, urls, additional):
         self.kind = kind          # None | 'schema' | 'array'
         self.urls = urls          # url | [urls]
         self.additional = additional  # None | ('bool', b) | ('schema', url)
+
+    def bind(self, scope):
+        urls = [self.urls] if self.kind == "schema" else self.urls or []
+        self._items = [scope.resolve(u) for u in urls]
+        akind, extra = self.additional or (None, None)
+        self._additional = scope.resolve(extra) if akind == "schema" \
+            else None
+        return [s for s in (*self._items, self._additional) if s is not None]
+
+    def passes(self, val):
+        if not isinstance(val, list):
+            return True
+        if self.kind == "schema":
+            schema = self._items[0]
+            if schema is not None:
+                for x in val:
+                    if not schema.passes(x):
+                        return False
+            return True
+        if self.kind != "array":
+            return True
+        for schema, x in zip(self._items, val):
+            if schema is not None and not schema.passes(x):
+                return False
+        n = len(self._items)
+        if len(val) <= n or self.additional is None:
+            return True
+        if self.additional[0] == "bool":
+            return bool(self.additional[1])
+        schema = self._additional
+        return schema is None or all(schema.passes(x) for x in val[n:])
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, list):
@@ -606,11 +782,25 @@ class ItemsV:
         return state
 
 
-class ContainsV:
+class ContainsV(_SubV):
     def __init__(self, url: str, min_contains, max_contains):
-        self.url = url
+        super().__init__(url)
         self.min_contains = min_contains
         self.max_contains = max_contains
+
+    def passes(self, val):
+        schema = self._sub
+        if not isinstance(val, list) or schema is None:
+            return True
+        lo, hi = self.min_contains, self.max_contains
+        if lo is None and hi is None:
+            return any(schema.passes(x) for x in val)
+        if hi is not None and not schema.exact:
+            return False  # an inexact count could hide one over the max
+        matched = sum(1 for x in val if schema.passes(x))
+        return ((matched > 0 or lo == 0)
+                and (hi is None or matched <= hi)
+                and (lo is None or matched >= lo))
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, list):
@@ -652,9 +842,21 @@ class ContainsV:
         return state
 
 
-class AllOfV:
+class _OfV(Keyword):
+    """allOf / anyOf / oneOf: a list of sub-schema urls."""
+
     def __init__(self, urls: list[str]):
         self.urls = urls
+
+    def bind(self, scope):
+        self._subs = [s for s in map(scope.resolve, self.urls)
+                      if s is not None]
+        return self._subs
+
+
+class AllOfV(_OfV):
+    def passes(self, val):
+        return all(s.passes(val) for s in self._subs)
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -702,9 +904,9 @@ def _serialize_states(states: list[ValidationState]) -> str:
                       separators=(",", ":"), ensure_ascii=False)
 
 
-class AnyOfV:
-    def __init__(self, urls: list[str]):
-        self.urls = urls
+class AnyOfV(_OfV):
+    def passes(self, val):
+        return any(s.passes(val) for s in self._subs)
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -737,9 +939,17 @@ class AnyOfV:
         return state
 
 
-class OneOfV:
-    def __init__(self, urls: list[str]):
-        self.urls = urls
+class OneOfV(_OfV):
+    def passes(self, val):
+        matched = 0
+        for s in self._subs:
+            if not s.exact:
+                return False
+            if s.passes(val):
+                matched += 1
+                if matched > 1:
+                    return False
+        return matched == 1
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -772,9 +982,10 @@ class OneOfV:
         return state
 
 
-class NotV:
-    def __init__(self, url: str):
-        self.url = url
+class NotV(_SubV):
+    def passes(self, val):
+        s = self._sub
+        return s is None or (s.exact and not s.passes(val))
 
     def __call__(self, val, path, scope, prev):
         schema = scope.resolve(self.url)
@@ -787,11 +998,26 @@ class NotV:
         return state
 
 
-class ConditionalV:
+class ConditionalV(Keyword):
     def __init__(self, if_url, then_url, else_url):
         self.if_url = if_url
         self.then_url = then_url
         self.else_url = else_url
+
+    def bind(self, scope):
+        self._if, self._then, self._else = (
+            None if u is None else scope.resolve(u)
+            for u in (self.if_url, self.then_url, self.else_url))
+        return [s for s in (self._if, self._then, self._else)
+                if s is not None]
+
+    def passes(self, val):
+        if self._if is None:
+            return True
+        if not self._if.exact:
+            return False
+        branch = self._then if self._if.passes(val) else self._else
+        return branch is None or branch.passes(val)
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -817,9 +1043,9 @@ class ConditionalV:
         return state
 
 
-class RefV:
-    def __init__(self, url: str):
-        self.url = url
+class RefV(_SubV):
+    def passes(self, val):
+        return self._sub is None or self._sub.passes(val)
 
     def __call__(self, val, path, scope, prev):
         schema = scope.resolve(self.url)
@@ -830,9 +1056,12 @@ class RefV:
         return state
 
 
-class FormatV:
+class FormatV(Keyword):
     def __init__(self, checker):
         self.checker = checker
+
+    def passes(self, val):
+        return not isinstance(val, str) or self.checker(val) is None
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, str):
@@ -843,7 +1072,9 @@ class FormatV:
         return err_state(schema_violation("format", path, detail))
 
 
-class ContentMediaV:
+class ContentMediaV(Keyword):
+    exact = False  # content decoding threads a replacement in valico
+
     def __init__(self, media_type: str | None, encoding: str | None):
         self.media_type = media_type
         self.encoding = encoding
@@ -861,8 +1092,10 @@ class ContentMediaV:
         return _skip()
 
 
-class UnevaluatedV:
+class UnevaluatedV(Keyword):
     """unevaluatedItems / unevaluatedProperties (validators/unevaluated.rs)."""
+
+    exact = False  # reads the evaluated set its siblings thread
 
     def __init__(self, is_items: bool, kind: str, extra):
         self.is_items = is_items
@@ -950,7 +1183,7 @@ ALLOW_NON_CONSUMED_KEYS = {"definitions", "$defs", "$schema", "$id",
 
 class Schema:
     __slots__ = ("id", "original", "tree", "validators", "scopes", "_default",
-                 "_default_set")
+                 "_default_set", "checks", "exact")
 
     def __init__(self):
         self.id: str | None = None
@@ -960,6 +1193,17 @@ class Schema:
         self.scopes: dict[str, list[str]] = {}
         self._default = None
         self._default_set = False
+        # the validators' boolean forms; set by Scope.gate's binding
+        self.checks: tuple[Callable[[Any], bool], ...] | None = None
+        self.exact = False
+
+    def passes(self, data: Any) -> bool:
+        """True only when ``validate_in`` would report no error (and, on
+        an ``exact`` schema, whenever it reports none)."""
+        for check in self.checks:
+            if not check(data):
+                return False
+        return True
 
     # -- defaults (schema.rs:227-320) ------------------------------------
     def has_default(self) -> bool:
@@ -1769,6 +2013,10 @@ def _compile_sub(def_: Any, ctx: WalkContext, settings: _Settings,
     return schema
 
 
+def _fails(data: Any) -> bool:
+    return False
+
+
 class Scope:
     """Schema registry + validation entry point (src/json_schema/scope.rs)."""
 
@@ -1778,6 +2026,7 @@ class Scope:
         self.version = version
         self.supply_defaults = supply_defaults
         self.formats = dict(fmt.FORMAT_CHECKERS) if with_formats else {}
+        self._gates_bound = False
 
     def add_format(self, name: str, checker) -> None:
         self.formats[name] = checker
@@ -1794,6 +2043,7 @@ class Scope:
         if key in self.schemes:
             raise SchemaError("IdConflicts")
         self.schemes[key] = schema
+        self._gates_bound = False  # a new schema may resolve a missing $ref
         if self.supply_defaults:
             schema.add_defaults(sid, self)
         return key
@@ -1823,6 +2073,79 @@ class Scope:
         if schema is None:
             raise KeyError(schema_id)
         return schema.validate_in(data, "", self)
+
+    # -- gate ------------------------------------------------------------
+    def gate(self, schema_id: str) -> tuple[Callable[[Any], bool], bool]:
+        """The boolean fast path of ``validate(schema_id, ·)``:
+        ``(passes, covers)``.
+
+        ``passes(data)`` is True only when ``validate`` would report no
+        error, and allocates no state. ``covers`` says the converse holds
+        too: every keyword the schema can reach has an exact boolean form,
+        so a document that fails the gate always has a violation. Keywords
+        without one (``unevaluated*``, content decoding; ``not`` / ``oneOf``
+        / ``if`` / ``maxContains`` over inexact sub-schemas) fail the gate
+        wherever a document reaches them. With ``supply_defaults`` the
+        walker threads replacements between keywords, so nothing passes.
+        """
+        schema = self.resolve(schema_id)
+        if schema is None:
+            raise KeyError(schema_id)
+        self._bind_gates()
+        return schema.passes, schema.exact
+
+    def _bind_gates(self) -> None:
+        if self._gates_bound:
+            return
+        nodes: list[Schema] = []
+        stack = list(self.schemes.values())
+        while stack:
+            node = stack.pop()
+            nodes.append(node)
+            stack.extend(node.tree.values())
+        readers: dict[int, list[Schema]] = {}  # id(sub) -> schemas reading it
+        inexact: list[Schema] = []
+        for node in nodes:
+            node.exact = not self.supply_defaults
+            node.checks = ((_fails,) if self.supply_defaults else
+                           tuple(v.passes for v in node.validators))
+            for v in node.validators:
+                node.exact = node.exact and v.exact
+                for sub in v.bind(self):
+                    readers.setdefault(id(sub), []).append(node)
+            if not node.exact:
+                inexact.append(node)
+        # exact unless an inexact schema is reachable: the greatest
+        # fixpoint, so recursive $refs over exact keywords stay exact
+        while inexact:
+            for node in readers.get(id(inexact.pop()), ()):
+                if node.exact:
+                    node.exact = False
+                    inexact.append(node)
+        self._gates_bound = True
+
+
+def _reject_constant(name: str) -> Any:
+    raise ValueError(f"non-standard JSON constant {name}")
+
+
+def load_document(doc: str | None) -> Any:
+    """A JSON document string as the value the walker validates.
+
+    The contract of the VARIANT lane's ``parse_documents``: a SQL-NULL
+    document, a malformed one, and one using ``NaN`` / ``Infinity`` /
+    ``-Infinity`` (which Python's ``json`` accepts and Spark's
+    ``try_parse_json`` rejects) all validate as JSON ``null``. Duplicate
+    object keys keep the last value, as serde_json does; there
+    ``try_parse_json`` gives NULL, so the VARIANT lane validates such a
+    document as ``null`` instead.
+    """
+    if doc is None:
+        return None
+    try:
+        return json.loads(doc, parse_constant=_reject_constant)
+    except ValueError:  # json.JSONDecodeError included
+        return None
 
 
 def validate_json(schema: Any, data: Any, version: int = DRAFT7,

@@ -3,7 +3,11 @@
 The typed compiler (``compiler.columns``) covers documents whose shape is
 known at compile time (Parquet/Iceberg struct rows). This module covers
 the *dynamic* case — a column of raw JSON strings whose per-row shape is
-unknown — WITHOUT falling back to the per-row Python walker: Spark 4's
+unknown — without Python in the row loop. It is no longer the serving
+path: ``validate_json_column(mode="auto")`` serves a ruleset the
+walker's gate covers (``pyvalidator.Scope.gate``) from the gated walker
+stage, and takes this plan for rulesets outside the gate and for an
+explicit ``mode="variant"``. Spark 4's
 VARIANT type (``parse_json`` / ``try_variant_get`` / ``schema_of_variant``
 / casts to ``map<string,variant>`` and ``array<variant>``) exposes the
 exact JSON type system (BIGINT vs DECIMAL vs DOUBLE vs STRING vs BOOLEAN

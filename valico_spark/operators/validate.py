@@ -1,16 +1,21 @@
 """Document validation operators — verdicts + violation rows at table scale.
 
-Two execution paths, same semantics:
+Execution paths, same semantics:
 
-* **columns** (default, hot path): the ruleset compiles to a single
+* **columns** (default for typed rows): the ruleset compiles to a single
   vectorized Column expression (`compiler.columns`) — JVM-side,
   whole-stage codegen, zero Python per row. Scales linearly with
   executors; no shuffle is introduced (pure map stage).
-* **arrow** (fallback): the reference-parity Python walker
-  (`compiler.pyvalidator`) runs over Arrow record batches via
-  ``mapInPandas`` — needed for dynamic JSON documents and constructs the
-  static compiler rejects (``unevaluated*``, recursive ``$ref``, exotic
-  formats). Batched via Arrow, not per-row Python UDFs.
+* **gated walker** (default for dynamic JSON): one ``mapInArrow`` stage
+  parses each document once and runs the reference-parity walker's
+  boolean gate (``Scope.gate`` in `compiler.pyvalidator`); documents that
+  pass get no violations, and only the ones that fail are walked for
+  their violation rows. Taken when the gate covers the ruleset.
+* **variant**: the VARIANT column plan (`compiler.variantcolumns`) for
+  dynamic-JSON rulesets the gate does not cover, and on request.
+* **arrow**: the same Arrow stage without the gate — every document is
+  walked. The fallback for constructs no compiled lane takes, and the
+  residual of recursion the VARIANT plan cut.
 
 Output contract (both paths): columns ``violations array<struct<code,
 title,path,detail,states>>`` and ``valid boolean`` appended to the input;
@@ -19,16 +24,18 @@ title,path,detail,states>>`` and ``valid boolean`` appended to the input;
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Any, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from valico_spark.compiler.columns import (
     UnsupportedRule, VIOLATION_DDL, compile_ruleset,
 )
-from valico_spark.compiler.pyvalidator import DRAFT7
+from valico_spark.compiler.pyvalidator import DRAFT7, SchemaError, Scope
 
 # staged column of the VARIANT lane: the parsed document
 _DOC = "__variant_doc"
@@ -68,22 +75,34 @@ def validate_json_column(df: DataFrame, json_col: str, ruleset: Any,
                          unroll_depth: "int | str" = 16) -> DataFrame:
     """Validate a column of JSON documents with full reference semantics.
 
-    ``mode='auto'`` (default) first tries the VARIANT column plan
-    (``compiler.variantcolumns``): parse_json + vectorized JVM predicates,
-    zero Python per row — the serving path for dynamic JSON. Constructs
-    the variant compiler rejects (``unevaluated*``, composite enum/const,
-    exotic formats, recursion) fall back to the Arrow-batched
-    reference-parity walker. ``mode='variant'`` forces the column plan
-    (raises UnsupportedRule), ``mode='arrow'`` forces the walker.
+    ``mode='auto'`` (default) picks the lane from the ruleset alone. When
+    the walker's gate covers it (``Scope.gate``: every keyword has an
+    exact boolean form), the serving path is the gated walker stage: one
+    ``mapInArrow`` stage parses each document once, documents passing the
+    gate get ``violations = []``, and only the failing ones are walked, so
+    every violation row comes from the reference-parity walker and
+    recursion runs exactly. Otherwise ``auto`` takes the VARIANT column
+    plan (``compiler.variantcolumns``: one parse + vectorized JVM
+    predicates), and constructs that plan rejects fall back to the
+    ungated walker stage. ``mode='variant'`` forces the column plan
+    (raises UnsupportedRule), ``mode='arrow'`` forces the ungated walker.
+    Every lane validates a SQL-NULL or malformed document (and, on the
+    walker lanes, one using ``NaN`` / ``Infinity``) as JSON null; a
+    document with duplicate keys keeps the last value on the walker lanes
+    and is null on the VARIANT plan (``pyvalidator.load_document``).
 
-    ``unroll_depth`` bounds recursive-``$ref`` inlining (deeper documents
-    reroute to the walker). Pass ``"auto"`` to size the budget from the
-    corpus itself: when (and only when) the default compile actually cut
-    recursion, the column's nesting-depth histogram is profiled
-    (``operators.infer.suggest_unroll_depth``, one extra scan) and the
-    plan recompiles at the 99.9%-coverage depth — so the walker residual
-    is at most 0.1% of documents regardless of how deep the corpus runs.
+    ``unroll_depth`` bounds the VARIANT plan's recursive-``$ref``
+    inlining (deeper documents reroute to the walker). Pass ``"auto"`` to
+    size the budget from the corpus itself: when (and only when) the
+    default compile actually cut recursion, the column's nesting-depth
+    histogram is profiled (``operators.infer.suggest_unroll_depth``, one
+    extra scan) and the plan recompiles at the 99.9%-coverage depth — so
+    the walker residual is at most 0.1% of documents regardless of how
+    deep the corpus runs.
     """
+    if mode == "auto" and _gate_covers(ruleset, version):
+        return _validate_json_arrow(df, json_col, ruleset, version,
+                                    gate=True)
     if mode in ("auto", "variant"):
         from valico_spark.compiler.variantcolumns import (
             compile_variant_ruleset, gated, has_walker_marker,
@@ -128,49 +147,80 @@ def validate_json_column(df: DataFrame, json_col: str, ruleset: Any,
     return _validate_json_arrow(df, json_col, ruleset, version)
 
 
+@functools.lru_cache(maxsize=8)
+def _compiled(ruleset_json: str, version: int) -> tuple[Scope, str]:
+    """The walker's scope and schema id for a ruleset, compiled once per
+    process (driver and each Python worker)."""
+    scope = Scope(version=version)
+    return scope, scope.compile(json.loads(ruleset_json))
+
+
+def _gate_covers(ruleset: Any, version: int) -> bool:
+    try:
+        scope, sid = _compiled(json.dumps(ruleset), version)
+    except SchemaError:
+        return False  # the lanes report a malformed ruleset their own way
+    return scope.gate(sid)[1]
+
+
+_VIOLATION_FIELDS = ("code", "title", "path", "detail", "states")
+
+
 def _validate_json_arrow(df: DataFrame, json_col: str, ruleset: Any,
-                         version: int = DRAFT7) -> DataFrame:
-    """Arrow-batched walker fallback for dynamic JSON.
+                         version: int = DRAFT7,
+                         gate: bool = False) -> DataFrame:
+    """The walker lane: one ``mapInArrow`` stage over the documents.
 
-    The schema compiles once per executor (module-level cache keyed by the
-    ruleset text); per-batch work is a tight loop over the Arrow-delivered
-    strings, no per-row Python UDF dispatch.
+    Each document is parsed once (``load_document``). With ``gate`` the
+    documents passing ``Scope.gate`` get ``violations = []`` without a
+    walk; every other document is walked by ``Scope.validate``. Input
+    columns pass through as Arrow arrays, and the schema compiles once per
+    Python worker.
     """
-    import pandas as pd  # noqa: F401 (executor-side)
-
     from valico_spark.operators.util import ensure_min_partitions
 
     df = ensure_min_partitions(df)
     ruleset_json = json.dumps(ruleset)
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", violations {VIOLATION_DDL}, valid boolean"
+    doc_idx = df.columns.index(json_col)
+    out_schema = T.StructType(
+        df.schema.fields
+        + [T.StructField("violations", T.DataType.fromDDL(VIOLATION_DDL)),
+           T.StructField("valid", T.BooleanType())])
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        from valico_spark.compiler.pyvalidator import Scope
+    def run(batches: Iterator["pa.RecordBatch"]
+            ) -> Iterator["pa.RecordBatch"]:
+        import pyarrow as pa
 
-        scope = Scope(version=version)
-        sid = scope.compile(json.loads(ruleset_json))
-        for pdf in batches:
-            viols = []
-            valids = []
-            for doc in pdf[json_col]:
-                # a NULL document string validates as JSON null (the
-                # reference validates Value::Null → wrong_type for typed
-                # rulesets) — never silently valid
-                state = scope.validate(
-                    sid, None if doc is None else json.loads(doc))
-                viols.append([
-                    {"code": e.code, "title": e.title, "path": e.path,
-                     "detail": e.detail, "states": e.states}
-                    for e in state.errors])
-                valids.append(state.is_valid())
-            pdf = pdf.copy()
-            pdf["violations"] = viols
-            pdf["valid"] = valids
-            yield pdf
+        from valico_spark.compiler.pyvalidator import load_document
 
-    return df.mapInPandas(run, schema=out_schema)
+        scope, sid = _compiled(ruleset_json, version)
+        passes = scope.gate(sid)[0] if gate else None
+        for batch in batches:
+            offsets = [0]
+            valid = []
+            fields = tuple([] for _ in _VIOLATION_FIELDS)
+            for doc in batch.column(doc_idx).to_pylist():
+                value = load_document(doc)
+                if passes is not None and passes(value):
+                    valid.append(True)
+                else:
+                    errors = scope.validate(sid, value).errors
+                    valid.append(not errors)
+                    for e in errors:
+                        for out, name in zip(fields, _VIOLATION_FIELDS):
+                            out.append(getattr(e, name))
+                offsets.append(len(fields[0]))
+            rows = pa.StructArray.from_arrays(
+                [pa.array(f, pa.string()) for f in fields],
+                names=list(_VIOLATION_FIELDS))
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns,
+                 pa.ListArray.from_arrays(pa.array(offsets, pa.int32()),
+                                          rows),
+                 pa.array(valid, pa.bool_())],
+                names=[*batch.schema.names, "violations", "valid"])
+
+    return df.mapInArrow(run, out_schema)
 
 
 def validation_counts(df: DataFrame, ruleset: Any,
