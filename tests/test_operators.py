@@ -1,9 +1,16 @@
 """Tests for table-scale operators: stats, uniqueness, referential
 integrity, drift, span invariants."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pytest
 from pyspark.sql import functions as F
 
 from valico_spark.operators import drift, relational, spans, stats
+from valico_spark.operators.util import drop_zip_importers
 
 
 class TestStats:
@@ -742,3 +749,60 @@ class TestReviewRegressions:
         got = {r.q_id for r in out.collect()}
         # the non-null query gets neighbors; the null one yields nothing
         assert 101 in got
+
+
+_ZIP_PKG = "zip_importer_probe"
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """A package of two modules inside a zip on ``sys.path``; restores
+    ``sys.path``, the importer cache and ``sys.modules`` afterwards."""
+    archive = str(tmp_path / "probe.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr(f"{_ZIP_PKG}/__init__.py", "")
+        zf.writestr(f"{_ZIP_PKG}/first.py", "VALUE = 1\n")
+        zf.writestr(f"{_ZIP_PKG}/second.py", "VALUE = 2\n")
+    saved_path = list(sys.path)
+    saved_cache = dict(sys.path_importer_cache)
+    sys.path.insert(0, archive)
+    yield archive
+    sys.path[:] = saved_path
+    sys.path_importer_cache.clear()
+    sys.path_importer_cache.update(saved_cache)
+    for name in [m for m in sys.modules
+                 if m == _ZIP_PKG or m.startswith(_ZIP_PKG + ".")]:
+        del sys.modules[name]
+    zipimport._zip_directory_cache.pop(archive, None)
+
+
+class TestDropZipImporters:
+    def test_invalidation_skips_archive_reread(self, zip_package,
+                                               monkeypatch):
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads.append(archive)
+            return read_directory(archive)
+
+        first = importlib.import_module(f"{_ZIP_PKG}.first")
+        assert first.VALUE == 1
+        monkeypatch.setattr(zipimport, "_read_directory", counting)
+        # the importers of the archive and of the package re-read it
+        importlib.invalidate_caches()
+        assert reads and set(reads) == {zip_package}
+
+        reads.clear()
+        drop_zip_importers()
+        assert not [f for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)]
+        importlib.invalidate_caches()
+        assert reads == []
+        # a new submodule still imports from the zip, from the cached
+        # directory
+        second = importlib.import_module(f"{_ZIP_PKG}.second")
+        assert second.VALUE == 2
+        assert isinstance(second.__loader__, zipimport.zipimporter)
+        assert second.__file__.startswith(zip_package)
+        assert reads == []

@@ -20,7 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from valico_spark.operators.util import cap_group_size, ensure_min_partitions
+from valico_spark.operators.util import (cap_group_size, drop_zip_importers,
+                                         ensure_min_partitions)
 
 #: modulus of the MinHash permutation family. MUST be small relative to
 #: a*h (a, h < 2^31 → a*h ~ 2^62): with a 31-bit prime the product wraps
@@ -178,6 +179,7 @@ def _blocked_jaccard_arrow(sh: DataFrame, threshold: float, id_col: str,
     def block_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
+        drop_zip_importers()
         c = len(pdf)
         ids = pdf[id_col].to_numpy()
         empty = pd.DataFrame({"a_id": ids[:0], "b_id": ids[:0],

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from valico_spark.compiler.columns import VIOLATION_DDL
 from valico_spark.compiler.errors import DSL_TITLES
+from valico_spark.operators.util import drop_zip_importers
 
 
 def process_json_column(df: DataFrame, json_col: str, build_fn,
@@ -42,6 +43,7 @@ def process_json_column(df: DataFrame, json_col: str, build_fn,
 
         from valico_spark.compiler.dsl import Builder
 
+        drop_zip_importers()
         builder = Builder.build(build_fn)
         for pdf in batches:
             outs, valids, viols = [], [], []

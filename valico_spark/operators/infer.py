@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from valico_spark.operators.util import drop_zip_importers
+
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.DecimalType)
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -176,6 +178,7 @@ def _bracket_depths(brackets: "pd.Series") -> "pd.Series":
     import pandas as pd
     import pyarrow as pa
 
+    drop_zip_importers()
     arr = pa.Array.from_pandas(brackets)
     if arr.null_count:
         # callers pre-filter nulls; keep a correct fallback anyway

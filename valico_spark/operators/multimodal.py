@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from valico_spark.operators.util import drop_zip_importers
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
     T.StructField("media_type", T.StringType(), True),
@@ -74,6 +76,8 @@ def byte_histogram_features(df: DataFrame, payload_col: str = "payload",
     def extract(batches: Iterator["pa.RecordBatch"]
                 ) -> Iterator["pa.RecordBatch"]:
         import pyarrow.compute as pc
+
+        drop_zip_importers()
         for batch in batches:
             ids = batch.column(0)
             col = batch.column(1)
@@ -131,6 +135,8 @@ def decode_image(df: DataFrame, payload_col: str = "payload",
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+
+        drop_zip_importers()
         have_pil = False
         if codec == "auto":
             try:  # pragma: no cover - Pillow absent in this sandbox

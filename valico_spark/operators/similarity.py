@@ -21,7 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from valico_spark.operators.util import cap_group_size, ensure_min_partitions
+from valico_spark.operators.util import (cap_group_size, drop_zip_importers,
+                                         ensure_min_partitions)
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -103,6 +104,7 @@ def _blocked_pairs_arrow(df: DataFrame, threshold: float, id_col: str,
     def block_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
         import numpy as np
 
+        drop_zip_importers()
         n = len(pdf)
         if cap is not None and n > cap:
             blk = pdf[block_col].iloc[0]

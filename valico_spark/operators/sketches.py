@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from valico_spark.operators.util import drop_zip_importers
+
 
 class TDigest:
     """Merging t-digest with the k1 (arcsine) scale function.
@@ -184,6 +186,7 @@ _DIGEST_SCHEMA = T.StructType([
 
 def _digest_rows(pdfs: Iterable[pd.DataFrame], col: str, delta: int,
                  fanout: int) -> Iterator[pd.DataFrame]:
+    drop_zip_importers()
     d = TDigest(delta)
     buf: list[np.ndarray] = []
     buffered = 0
@@ -206,6 +209,7 @@ def _digest_rows(pdfs: Iterable[pd.DataFrame], col: str, delta: int,
 
 
 def _merge_rows(pdf: pd.DataFrame, delta: int) -> pd.DataFrame:
+    drop_zip_importers()
     d = TDigest(delta)
     for _, row in pdf.iterrows():
         o = TDigest(delta)

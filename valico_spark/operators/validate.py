@@ -36,6 +36,8 @@ from valico_spark.compiler.columns import (
     UnsupportedRule, VIOLATION_DDL, compile_ruleset,
 )
 from valico_spark.compiler.pyvalidator import DRAFT7, SchemaError, Scope
+from valico_spark.operators.util import (drop_zip_importers,
+                                         ensure_min_partitions)
 
 # staged column of the VARIANT lane: the parsed document
 _DOC = "__variant_doc"
@@ -177,8 +179,6 @@ def _validate_json_arrow(df: DataFrame, json_col: str, ruleset: Any,
     columns pass through as Arrow arrays, and the schema compiles once per
     Python worker.
     """
-    from valico_spark.operators.util import ensure_min_partitions
-
     df = ensure_min_partitions(df)
     ruleset_json = json.dumps(ruleset)
     doc_idx = df.columns.index(json_col)
@@ -193,6 +193,7 @@ def _validate_json_arrow(df: DataFrame, json_col: str, ruleset: Any,
 
         from valico_spark.compiler.pyvalidator import load_document
 
+        drop_zip_importers()
         scope, sid = _compiled(ruleset_json, version)
         passes = scope.gate(sid)[0] if gate else None
         for batch in batches:
@@ -350,6 +351,7 @@ def custom_check(df: DataFrame, fn, out_col: str = "custom_violations",
     ) + f", {out_col} {VIOLATION_DDL}"
 
     def run(batches):
+        drop_zip_importers()
         for pdf in batches:
             viols = fn(pdf[cols])
             pdf = pdf.copy()

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from valico_spark.operators.util import drop_zip_importers
+
 _OUT_SCHEMA = ("key bigint, streak_len bigint, "
                "last_invalid_id bigint")
 _STATE_SCHEMA = "streak bigint, last_id bigint"
@@ -56,6 +58,7 @@ def invalid_streaks(validated: DataFrame, key_col: str,
     def fn(key: Any, pdfs: Iterator, state: GroupState) -> Iterator:
         import pandas as pd
 
+        drop_zip_importers()
         streak, last_id = state.get if state.exists else (0, None)
         out_len, out_last = [], []
         # materialize the WHOLE group before sorting: groups larger than
