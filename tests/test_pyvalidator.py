@@ -9,7 +9,8 @@ No Spark needed — this is the pure-Python semantics oracle.
 import pytest
 
 from valico_spark.compiler.pyvalidator import (
-    DRAFT2019, DRAFT7, SchemaError, Scope, load_document, validate_json,
+    DRAFT2019, DRAFT7, Keyword, SchemaError, Scope, load_document,
+    validate_json,
 )
 
 
@@ -473,12 +474,162 @@ class TestGate:
         assert not scope.gate(sid)[0](5)
         assert not scope.validate(sid, 5).is_valid()
 
+    # (schema, docs that pass, docs that fail); each schema twice where it
+    # matters: alone, and after a `type` check that lets the generated
+    # function drop its own type tests
+    @pytest.mark.parametrize("schema,good,bad", [
+        # bounds compare through f64: 2**53+1 rounds to 2**53, and an int
+        # too large for f64 is +-inf
+        ({"maximum": 2**53}, [2**53, 2**53 + 1], [2**53 + 2, 10**400]),
+        ({"type": "integer", "maximum": 2**53}, [2**53 + 1, -10**400],
+         [2**53 + 2, 10**400]),
+        ({"minimum": -1e308, "maximum": 1e308}, [10**308, 1e308],
+         [10**400, -10**400, float("inf")]),
+        ({"exclusiveMinimum": 0}, [5e-324, 1], [-0.0, 0, 0.0]),
+        ({"type": "number", "exclusiveMinimum": 0}, [5e-324], [-0.0, 0.0]),
+        # bools are never integers or numbers
+        ({"type": "integer"}, [1, 1.0, -0.0], [True, False, 1.5,
+                                               float("inf")]),
+        ({"type": "number"}, [1, 1.5], [True, "1"]),
+        ({"minimum": 5}, [True, False, 5], [4]),
+        ({"type": ["integer", "boolean"], "minimum": 5}, [True, 5], [4]),
+        # len counts code points
+        ({"maxLength": 2}, ["\U0001F600\U0001F600", 123], ["\U0001F600" * 3]),
+        ({"type": "string", "minLength": 3}, ["abc"], ["\U0001F600" * 2]),
+        # patterns search, unanchored; `$` is end of text
+        ({"pattern": "b"}, ["abc", 5], ["xyz"]),
+        ({"type": "string", "pattern": "^a$"}, ["a"], ["a\n", "ba"]),
+        ({"enum": [1, "1", True]}, [1, 1.0, "1", True],
+         [False, 2, None, [1]]),
+        ({"enum": ["a", "b"]}, ["a"], ["c", 1, None]),
+        ({"type": "string", "enum": ["a", "b"]}, ["a"], ["c", 1, None]),
+        ({"required": ["a", "b"]}, [{"a": 1, "b": 2}, [], "a", 5, None],
+         [{}, {"a": 1}]),
+        ({"items": [{"type": "integer"}, {"type": "string"}],
+          "additionalItems": False},
+         [[], [1], [1, "a"], {"0": 1}, "ab"], [[1, "a", 2], ["a"]]),
+        ({"type": "array", "items": [{"minimum": 2}],
+          "additionalItems": {"type": "string"}},
+         [[], [2, "a"]], [[1], [2, "a", 3]]),
+        ({"properties": {"id": {"type": "integer"}},
+          "patternProperties": {"^x-": {"type": "string"}},
+          "additionalProperties": False},
+         [{}, {"id": 1}, {"x-a": "s"}, {"id": 1, "x-y": "z"}, []],
+         [{"id": "1"}, {"x-a": 1}, {"y": 1}]),
+        ({"type": "object", "properties": {"a": {"maxProperties": 1}},
+          "minProperties": 1},
+         [{"a": {}}, {"b": []}], [{}, {"a": {"b": 1, "c": 2}}]),
+        ({"anyOf": [{"type": "string"}, {"minimum": 3}],
+          "allOf": [{"$ref": "#/definitions/n"}],
+          "definitions": {"n": {"not": {"const": 4}}}},
+         ["x", 3, True], [2, 4]),
+    ])
+    def test_edge_case_parity(self, schema, good, bad):
+        scope, sid, passes, covers = self.gate(schema)
+        assert covers
+        for expected, docs in ((True, good), (False, bad)):
+            for d in docs:
+                assert passes(d) is expected, d
+                assert scope.validate(sid, d).is_valid() is expected, d
+
+    @staticmethod
+    def _count_keyword_passes(monkeypatch) -> list[str]:
+        """Patch every keyword class's ``passes`` to record its calls."""
+        calls: list[str] = []
+
+        def counting(orig):
+            def passes(kw, val):
+                calls.append(type(kw).__name__)
+                return orig.__get__(kw, type(kw))(val)
+            return passes
+
+        classes, stack = [], [Keyword]
+        while stack:
+            cls = stack.pop()
+            classes.append(cls)
+            stack.extend(cls.__subclasses__())
+        for cls in classes:
+            if "passes" in vars(cls):
+                monkeypatch.setattr(cls, "passes", counting(vars(cls)["passes"]))
+        return calls
+
+    def test_docs_gate_is_specialized(self, monkeypatch):
+        """The DOCS_RULESET gate inlines every keyword's check: it calls
+        no ``Keyword.passes``. A keyword without a template
+        (``multipleOf``) is called through its ``passes``."""
+        from perfbench.inputs import to_json_docs
+        from test_variant_parity import MIXED_DOCS
+        from valico_spark.rulesets import DOCS_RULESET
+        from valico_spark.sources import synth
+
+        calls = self._count_keyword_passes(monkeypatch)
+        docs = MIXED_DOCS + to_json_docs(synth.generate_docs(300, seed=7))
+        scope, sid, passes, covers = self.gate(DOCS_RULESET)
+        assert covers
+        verdicts = [passes(load_document(d)) for d in docs]
+        assert calls == []
+        assert True in verdicts and False in verdicts
+        for d, ok in zip(docs, verdicts):
+            assert ok is scope.validate(sid, load_document(d)).is_valid(), d
+
+        scope, sid, passes, covers = self.gate(
+            {"properties": {"n": {"multipleOf": 3}}})
+        assert passes({"n": 6}) and not passes({"n": 4})
+        assert "MultipleOfV" in calls
+
+    def test_ruleset_text_is_never_source(self, monkeypatch):
+        """Property names, enum strings and patterns full of quotes,
+        backslashes, newlines and code reach the gate as constants: it
+        agrees with the walker, runs none of it, and no generated function
+        holds a string literal."""
+        import os
+        import re
+
+        def no_system(*args, **kwargs):
+            raise AssertionError("ruleset text ran as code")
+
+        monkeypatch.setattr(os, "system", no_system)
+        nasty = ["'", '"', "'''", '"""', "\\", "a\nb", "\\n",
+                 "__import__('os').system('x')",
+                 "') or __import__('os').system('x') or ('",
+                 '"+__import__("os").system("x")+"']
+        props = {k: {"type": "string", "enum": [k, k + "'"],
+                     "pattern": re.escape(k)} for k in nasty}
+        schemas = [
+            {"type": "object", "properties": props, "required": nasty},
+            {"properties": props, "additionalProperties": False,
+             "patternProperties": {re.escape(k) + "$": {"maxLength": 9}
+                                   for k in nasty}},
+            {"items": [{"enum": nasty}], "additionalItems": False},
+        ]
+        good = {k: k for k in nasty}
+        docs = [good, {**good, nasty[0]: "x"}, {**good, nasty[3]: nasty[3] + "'"},
+                {k: v for k, v in good.items() if k != nasty[4]},
+                {**good, "extra": 1}, {nasty[7]: nasty[7]}, [nasty[8]],
+                [nasty[8], 1], ["x"], nasty[7]]
+        for schema in schemas:
+            scope, sid, passes, covers = self.gate(schema)
+            assert covers
+            for d in docs:
+                assert passes(d) is scope.validate(sid, d).is_valid(), d
+            generated = [fn for name, fn in passes.__globals__.items()
+                         if re.fullmatch(r"s\d+", name)]
+            assert passes in generated
+            for fn in generated:
+                assert not any(isinstance(c, (str, bytes))
+                               for c in fn.__code__.co_consts), fn
+
 
 def test_load_document_null_contract():
     for doc in (None, "", "{", '{"a": 1', "NaN", "[Infinity]",
                 '{"a": -Infinity}', "1 2"):
         assert load_document(doc) is None, doc
     assert load_document('{"a": 1, "a": 2}') == {"a": 2}  # last wins
+    # nested duplicates too, and the later value wins whole
+    assert load_document('{"a": {"b": 1, "b": [2]}, "a": {"c": 3}}') \
+        == {"a": {"c": 3}}
+    big = load_document("123456789012345678901234567890")
+    assert type(big) is int and big == 123456789012345678901234567890
     assert load_document("1e400") == float("inf")
 
 

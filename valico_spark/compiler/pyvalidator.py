@@ -10,7 +10,11 @@ value (defaults/content decoding) and the ``evaluated``-path set that powers
 Role in the engine:
 (a) the semantics oracle for golden fixtures and tests;
 (b) the serving path for dynamic JSON: ``Scope.gate`` is the walk's
-    boolean fast path (``Keyword.passes``, no state allocated), and
+    boolean fast path, no state allocated. It is generated Python: one
+    fail-fast function per reachable schema node, built from each
+    keyword's ``gate_src`` template and ``exec``'d once per schema, with
+    every ruleset value (key, enum set, bound, regex) passed in the
+    namespace as a constant and never spliced into the source text.
     ``operators.validate`` runs it in one Arrow-batched ``mapInArrow``
     stage that walks only the documents failing the gate, when the gate
     covers the ruleset;
@@ -34,9 +38,9 @@ Behavioral contract mirrored from the reference (citations are
 
 from __future__ import annotations
 
+import functools
 import json
 import math
-import operator
 import re
 from typing import Any, Callable
 
@@ -121,26 +125,20 @@ def fract_is_zero(v: float) -> bool:
     return float(v).is_integer()
 
 
-def _is_integer(v: Any) -> bool:
-    if isinstance(v, bool):
-        return False
-    if isinstance(v, int):
-        return True
-    return isinstance(v, float) and math.isfinite(v) and v.is_integer()
-
-
-# validators/type_.rs:19-33
-_TYPE_TESTS: dict[str, Callable[[Any], bool]] = {
-    "array": lambda v: isinstance(v, list),
-    "boolean": lambda v: isinstance(v, bool),
-    "integer": _is_integer,
-    "number": is_number,
-    "null": lambda v: v is None,
-    "object": lambda v: isinstance(v, dict),
-    "string": lambda v: isinstance(v, str),
+# validators/type_.rs:19-33, as gate source over a value named {v}: integer
+# accepts whole floats (a float's is_integer() is False on inf and nan)
+_TYPE_SRC = {
+    "array": "isinstance({v}, list)",
+    "boolean": "isinstance({v}, bool)",
+    "integer": "(isinstance({v}, int) and not isinstance({v}, bool)"
+               " or isinstance({v}, float) and {v}.is_integer())",
+    "number": "(isinstance({v}, (int, float)) and not isinstance({v}, bool))",
+    "null": "{v} is None",
+    "object": "isinstance({v}, dict)",
+    "string": "isinstance({v}, str)",
 }
 
-PRIMITIVE_TYPES = set(_TYPE_TESTS)
+PRIMITIVE_TYPES = set(_TYPE_SRC)
 
 
 def deep_eq_strict(a: Any, b: Any) -> bool:
@@ -210,6 +208,78 @@ def _skip() -> ValidationState:
     return ValidationState()
 
 
+class GateEnv:
+    """The names one generated gate source may use.
+
+    Every ruleset value a template needs (a property key, an enum set, a
+    bound, a compiled regex's ``search``) becomes a constant of the
+    ``exec`` namespace under a name made here (``c<n>``), so no ruleset
+    text is ever spliced into the source. ``schema(node)`` names a schema
+    node's function (``s<n>``), looked up when called, so recursive
+    ``$ref``s need no ordering; ``local()`` makes a fresh local (``x<n>``).
+
+    ``types`` maps a variable to the JSON types a ``type`` keyword checked
+    earlier in the same function allows; ``guard`` / ``block`` then drop
+    the type tests that check already made.
+    """
+
+    def __init__(self, schemas: dict["Schema", str]):
+        self.ns: dict[str, Any] = {}
+        self._consts: dict[int, str] = {}
+        self._schemas = schemas
+        self._locals = 0
+        self.types: dict[str, list[str]] = {}
+
+    def const(self, value: Any) -> str:
+        # keyed by identity: the namespace keeps each value alive
+        name = self._consts.get(id(value))
+        if name is None:
+            name = self._consts[id(value)] = f"c{len(self._consts)}"
+            self.ns[name] = value
+        return name
+
+    def schema(self, node: "Schema") -> str:
+        return self._schemas[node]
+
+    def local(self) -> str:
+        self._locals += 1
+        return f"x{self._locals}"
+
+    def known(self, var: str, json_type: str) -> bool:
+        """Whether ``var`` is already known to be a ``json_type``."""
+        types = self.types.get(var)
+        return types is not None and all(
+            t == json_type or (t, json_type) == ("integer", "number")
+            for t in types)
+
+    def guard(self, var: str, json_type: str) -> str:
+        """A condition prefix that holds when ``var`` is a ``json_type``
+        (string, array or object)."""
+        if self.known(var, json_type):
+            return ""
+        return f"isinstance({var}, {_PY_CLASS[json_type]}) and "
+
+    def block(self, var: str, json_type: str, lines: list[str]) -> list[str]:
+        """``lines`` run only when ``var`` is a ``json_type``."""
+        if not lines or self.known(var, json_type):
+            return lines
+        return [f"if isinstance({var}, {_PY_CLASS[json_type]}):",
+                *("    " + line for line in lines)]
+
+
+_PY_CLASS = {"string": "str", "array": "list", "object": "dict"}
+
+
+@functools.lru_cache(maxsize=256)
+def _compile_source(src: str):
+    return compile(src, "<gate>", "exec")
+
+
+def _function_src(name: str, body: list[str]) -> list[str]:
+    return [f"def {name}(v):", *("    " + line for line in body),
+            "    return True"]
+
+
 class Keyword:
     """A compiled keyword, called as (value, path, scope, prev) -> state.
 
@@ -217,8 +287,15 @@ class Keyword:
     append no error. An ``exact`` keyword's ``passes`` is also True
     whenever the call appends none, provided the sub-schemas it reads
     are exact; a keyword without an exact boolean form passes nothing.
-    ``bind(scope)`` resolves the sub-schemas ``passes`` reads and
+    ``bind(scope)`` resolves the sub-schemas the boolean form reads and
     returns them (``Scope.gate`` binds every schema before use).
+
+    ``gate_src(var, env)`` is the boolean form as source: statements that
+    ``return False`` from the generated gate function when the keyword
+    fails on the value named ``var``. The default calls ``passes``
+    through a namespace constant. Hot keywords override it with an
+    inline template; for leaf keywords (``_Template``) that template is
+    the only copy of the condition and ``passes`` is compiled from it.
     """
 
     exact = True
@@ -229,20 +306,30 @@ class Keyword:
     def passes(self, val) -> bool:
         return False
 
+    def gate_src(self, var: str, env: GateEnv) -> list[str]:
+        return [f"if not {env.const(self.passes)}({var}): return False"]
 
-class TypeV(Keyword):
+
+class _Template(Keyword):
+    """A leaf keyword whose ``passes`` is compiled from its ``gate_src``
+    (on first use; sources with the same text share one code object)."""
+
+    @functools.cached_property
+    def passes(self) -> Callable[[Any], bool]:
+        env = GateEnv({})
+        src = "\n".join(_function_src("passes", self.gate_src("v", env)))
+        exec(_compile_source(src), env.ns)
+        return env.ns["passes"]
+
+
+class TypeV(_Template):
     def __init__(self, types: list[str], single: bool):
         self.types = types
         self.single = single
-        self._tests = tuple(_TYPE_TESTS[t] for t in types)
-        if len(types) == 1:
-            self.passes = self._tests[0]  # the gate's hottest call: no loop
 
-    def passes(self, val):
-        for test in self._tests:
-            if test(val):
-                return True
-        return False
+    def gate_src(self, var, env):
+        test = " or ".join(_TYPE_SRC[t].format(v=var) for t in self.types)
+        return [f"if not ({test}): return False"]
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -258,17 +345,22 @@ class TypeV(Keyword):
         return state
 
 
-class EnumV(Keyword):
+class EnumV(_Template):
     def __init__(self, items: list):
         self.items = items
         # all-string enums: a set lookup is is_matching exactly
         self._strings = (frozenset(items)
                          if all(isinstance(i, str) for i in items) else None)
 
-    def passes(self, val):
-        if self._strings is not None:
-            return isinstance(val, str) and val in self._strings
+    def _matches(self, val):
         return any(is_matching(val, item) for item in self.items)
+
+    def gate_src(self, var, env):
+        if self._strings is None:
+            return [f"if not {env.const(self._matches)}({var}): return False"]
+        strings = env.const(self._strings)
+        return [f"if not ({env.guard(var, 'string')}{var} in {strings}):"
+                " return False"]
 
     def __call__(self, val, path, scope, prev):
         if self.passes(val):
@@ -292,22 +384,30 @@ class ConstV(Keyword):
         return state
 
 
-class BoundV(Keyword):
+class BoundV(_Template):
     """maximum/minimum/exclusive* — validators/maxmin.rs. exclusive variants
     report the plain maximum/minimum code (maxmin.rs:49-52,99-102)."""
+
+    _OPS = {"max": "<=", "emax": "<", "min": ">=", "emin": ">"}
 
     def __init__(self, number: float, op: str):
         self.number = number
         self.op = op  # 'max' | 'emax' | 'min' | 'emin'
-        self._holds = {"max": operator.le, "emax": operator.lt,
-                       "min": operator.ge, "emin": operator.gt}[op]
 
-    def passes(self, val):
-        if isinstance(val, float):
-            return self._holds(val, self.number)
-        # ints compare through f64 too (a Python int-float compare is exact)
-        return (not isinstance(val, int) or isinstance(val, bool)
-                or self._holds(as_f64(val), self.number))
+    def gate_src(self, var, env):
+        # ints compare through f64 too (a Python int-float compare is
+        # exact), as as_f64 converts them
+        bound, op, f64 = env.const(self.number), self._OPS[self.op], \
+            env.local()
+        inf = env.const(math.inf)
+        return [f"if isinstance({var}, float):",
+                f"    if not ({var} {op} {bound}): return False",
+                "else:" if env.known(var, "number") else
+                f"elif isinstance({var}, int) and not isinstance({var}, bool):",
+                f"    try: {f64} = float({var})",
+                f"    except OverflowError: {f64} = {inf} if {var} > 0"
+                f" else -{inf}",
+                f"    if not ({f64} {op} {bound}): return False"]
 
     def __call__(self, val, path, scope, prev):
         if self.passes(val):
@@ -344,72 +444,53 @@ class MultipleOfV(Keyword):
         return err_state(schema_violation("multiple_of", path))
 
 
-class LengthV(Keyword):
+class _CountV(_Template):
+    """A max/min bound on ``len`` of one JSON type; other types pass."""
+
+    json_type: str
+    codes: tuple[str, str]  # (max code, min code)
+
     def __init__(self, length: int, is_max: bool):
         self.length = length
         self.is_max = is_max
 
-    def passes(self, val):
-        if not isinstance(val, str):
-            return True
-        n = len(val)  # Python len == Unicode scalar count (maxmin_length.rs)
-        return n <= self.length if self.is_max else n >= self.length
+    def gate_src(self, var, env):
+        op = "<=" if self.is_max else ">="
+        return [f"if {env.guard(var, self.json_type)}"
+                f"not (len({var}) {op} {env.const(self.length)}): return False"]
 
     def __call__(self, val, path, scope, prev):
         if self.passes(val):
             return _skip()
-        return err_state(schema_violation(
-            "max_length" if self.is_max else "min_length", path))
+        return err_state(schema_violation(self.codes[not self.is_max], path))
 
 
-class PatternV(Keyword):
+class LengthV(_CountV):
+    # Python len == Unicode scalar count (maxmin_length.rs)
+    json_type, codes = "string", ("max_length", "min_length")
+
+
+class ItemsCountV(_CountV):
+    json_type, codes = "array", ("max_items", "min_items")
+
+
+class PropsCountV(_CountV):
+    json_type, codes = "object", ("max_properties", "min_properties")
+
+
+class PatternV(_Template):
     def __init__(self, regex):
         self.regex = regex
 
-    def passes(self, val):
+    def gate_src(self, var, env):
         # unanchored, pattern.rs:21
-        return not isinstance(val, str) or self.regex.search(val) is not None
+        return [f"if {env.guard(var, 'string')}"
+                f"{env.const(self.regex.search)}({var}) is None: return False"]
 
     def __call__(self, val, path, scope, prev):
         if self.passes(val):
             return _skip()
         return err_state(schema_violation("pattern", path))
-
-
-class ItemsCountV(Keyword):
-    def __init__(self, length: int, is_max: bool):
-        self.length = length
-        self.is_max = is_max
-
-    def passes(self, val):
-        if not isinstance(val, list):
-            return True
-        return len(val) <= self.length if self.is_max \
-            else len(val) >= self.length
-
-    def __call__(self, val, path, scope, prev):
-        if self.passes(val):
-            return _skip()
-        return err_state(schema_violation(
-            "max_items" if self.is_max else "min_items", path))
-
-
-class PropsCountV(Keyword):
-    def __init__(self, length: int, is_max: bool):
-        self.length = length
-        self.is_max = is_max
-
-    def passes(self, val):
-        if not isinstance(val, dict):
-            return True
-        return len(val) <= self.length if self.is_max \
-            else len(val) >= self.length
-
-    def __call__(self, val, path, scope, prev):
-        if self.passes(val):
-            return _skip()
-        return err_state(schema_violation(
-            "max_properties" if self.is_max else "min_properties", path))
 
 
 class UniqueItemsV(Keyword):
@@ -430,17 +511,16 @@ class UniqueItemsV(Keyword):
         return err_state(schema_violation("unique_items", path))
 
 
-class RequiredV(Keyword):
+class RequiredV(_Template):
     def __init__(self, items: list[str]):
         self.items = items
 
-    def passes(self, val):
-        if not isinstance(val, dict):
-            return True
-        for key in self.items:
-            if key not in val:
-                return False
-        return True
+    def gate_src(self, var, env):
+        if not self.items:
+            return []
+        missing = " or ".join(f"{env.const(k)} not in {var}"
+                              for k in dict.fromkeys(self.items))
+        return [f"if {env.guard(var, 'object')}({missing}): return False"]
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, dict):
@@ -471,22 +551,27 @@ class PropertiesV(Keyword):
         self._patterns = [(regex, scope.resolve(u))
                           for regex, u in self.patterns]
         self._additional = scope.resolve(extra) if kind == "schema" else None
-        # no patterns and no closed/schema additionalProperties: only the
-        # declared keys are checked, so walk those instead of the object
-        self._open = not self.patterns and (
-            kind == "unspecified" or (kind == "bool" and extra))
         subs = [*self._props.values(), *(s for _, s in self._patterns),
                 self._additional]
         return [s for s in subs if s is not None]
 
+    def gate_src(self, var, env):
+        kind, extra = self.additional
+        if self.patterns or kind == "schema" or (kind == "bool" and not extra):
+            return super().gate_src(var, env)
+        # open: only the declared keys are checked, so look those up
+        # instead of walking the object
+        lines = []
+        for key, schema in self._props.items():
+            if schema is not None:
+                k = env.const(key)
+                lines.append(f"if {k} in {var} and not"
+                             f" {env.schema(schema)}({var}[{k}]): return False")
+        return env.block(var, "object", lines)
+
     def passes(self, val):
+        """The closed form (patternProperties or additionalProperties)."""
         if not isinstance(val, dict):
-            return True
-        if self._open:
-            for key, schema in self._props.items():
-                if (schema is not None and key in val
-                        and not schema.passes(val[key])):
-                    return False
             return True
         kind, extra = self.additional
         for key, item in val.items():
@@ -695,28 +780,31 @@ class ItemsV(Keyword):
             else None
         return [s for s in (*self._items, self._additional) if s is not None]
 
-    def passes(self, val):
-        if not isinstance(val, list):
-            return True
+    def gate_src(self, var, env):
+        item = env.local()
         if self.kind == "schema":
             schema = self._items[0]
-            if schema is not None:
-                for x in val:
-                    if not schema.passes(x):
-                        return False
-            return True
+            return [] if schema is None else env.block(var, "array", [
+                f"for {item} in {var}:",
+                f"    if not {env.schema(schema)}({item}): return False"])
         if self.kind != "array":
-            return True
-        for schema, x in zip(self._items, val):
-            if schema is not None and not schema.passes(x):
-                return False
-        n = len(self._items)
-        if len(val) <= n or self.additional is None:
-            return True
-        if self.additional[0] == "bool":
-            return bool(self.additional[1])
-        schema = self._additional
-        return schema is None or all(schema.passes(x) for x in val[n:])
+            return []
+        n = env.local()
+        lines = [f"{n} = len({var})"]
+        for idx, schema in enumerate(self._items):
+            if schema is not None:
+                i = env.const(idx)
+                lines.append(f"if {n} > {i} and not"
+                             f" {env.schema(schema)}({var}[{i}]): return False")
+        count = env.const(len(self._items))
+        akind, extra = self.additional or (None, None)
+        if akind == "bool" and not extra:
+            lines.append(f"if {n} > {count}: return False")
+        elif akind == "schema" and self._additional is not None:
+            lines += [f"for {item} in {var}[{count}:]:",
+                      f"    if not {env.schema(self._additional)}({item}):"
+                      " return False"]
+        return env.block(var, "array", lines)
 
     def __call__(self, val, path, scope, prev):
         if not isinstance(val, list):
@@ -855,8 +943,9 @@ class _OfV(Keyword):
 
 
 class AllOfV(_OfV):
-    def passes(self, val):
-        return all(s.passes(val) for s in self._subs)
+    def gate_src(self, var, env):
+        return [f"if not {env.schema(s)}({var}): return False"
+                for s in self._subs]
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -905,8 +994,9 @@ def _serialize_states(states: list[ValidationState]) -> str:
 
 
 class AnyOfV(_OfV):
-    def passes(self, val):
-        return any(s.passes(val) for s in self._subs)
+    def gate_src(self, var, env):
+        tests = " or ".join(f"{env.schema(s)}({var})" for s in self._subs)
+        return [f"if not ({tests or 'False'}): return False"]
 
     def __call__(self, val, path, scope, prev):
         state = ValidationState()
@@ -1044,8 +1134,9 @@ class ConditionalV(Keyword):
 
 
 class RefV(_SubV):
-    def passes(self, val):
-        return self._sub is None or self._sub.passes(val)
+    def gate_src(self, var, env):
+        return [] if self._sub is None else [
+            f"if not {env.schema(self._sub)}({var}): return False"]
 
     def __call__(self, val, path, scope, prev):
         schema = scope.resolve(self.url)
@@ -1183,7 +1274,7 @@ ALLOW_NON_CONSUMED_KEYS = {"definitions", "$defs", "$schema", "$id",
 
 class Schema:
     __slots__ = ("id", "original", "tree", "validators", "scopes", "_default",
-                 "_default_set", "checks", "exact")
+                 "_default_set", "passes", "exact")
 
     def __init__(self):
         self.id: str | None = None
@@ -1193,17 +1284,11 @@ class Schema:
         self.scopes: dict[str, list[str]] = {}
         self._default = None
         self._default_set = False
-        # the validators' boolean forms; set by Scope.gate's binding
-        self.checks: tuple[Callable[[Any], bool], ...] | None = None
+        # set by Scope.gate: the generated function that is True only when
+        # validate_in would report no error (and, on an exact schema,
+        # whenever it reports none)
+        self.passes: Callable[[Any], bool] | None = None
         self.exact = False
-
-    def passes(self, data: Any) -> bool:
-        """True only when ``validate_in`` would report no error (and, on
-        an ``exact`` schema, whenever it reports none)."""
-        for check in self.checks:
-            if not check(data):
-                return False
-        return True
 
     # -- defaults (schema.rs:227-320) ------------------------------------
     def has_default(self) -> bool:
@@ -2026,7 +2111,7 @@ class Scope:
         self.version = version
         self.supply_defaults = supply_defaults
         self.formats = dict(fmt.FORMAT_CHECKERS) if with_formats else {}
-        self._gates_bound = False
+        self._gates: dict[Schema, tuple[Callable[[Any], bool], bool]] = {}
 
     def add_format(self, name: str, checker) -> None:
         self.formats[name] = checker
@@ -2043,7 +2128,7 @@ class Scope:
         if key in self.schemes:
             raise SchemaError("IdConflicts")
         self.schemes[key] = schema
-        self._gates_bound = False  # a new schema may resolve a missing $ref
+        self._gates.clear()  # a new schema may resolve a missing $ref
         if self.supply_defaults:
             schema.add_defaults(sid, self)
         return key
@@ -2087,46 +2172,73 @@ class Scope:
         / ``if`` / ``maxContains`` over inexact sub-schemas) fail the gate
         wherever a document reaches them. With ``supply_defaults`` the
         walker threads replacements between keywords, so nothing passes.
+
+        ``passes`` is generated Python: one fail-fast function per schema
+        node the schema reaches, each made of its keywords' ``gate_src``
+        statements and calling its sub-schemas' functions by name. Ruleset
+        values live in the ``exec`` namespace as constants, never in the
+        source text. The gate is built once per schema, and again after a
+        ``compile`` (a new schema may resolve a missing ``$ref``).
         """
         schema = self.resolve(schema_id)
         if schema is None:
             raise KeyError(schema_id)
-        self._bind_gates()
-        return schema.passes, schema.exact
+        if self.supply_defaults:
+            return _fails, False
+        if schema not in self._gates:
+            self._bind_gates(schema)
+            self._gates[schema] = (schema.passes, schema.exact)
+        return self._gates[schema]
 
-    def _bind_gates(self) -> None:
-        if self._gates_bound:
-            return
-        nodes: list[Schema] = []
-        stack = list(self.schemes.values())
+    def _bind_gates(self, root: Schema) -> None:
+        names = {root: "s0"}  # every node root reaches -> its function
+        readers: dict[Schema, list[Schema]] = {}
+        inexact: list[Schema] = []
+        stack = [root]
         while stack:
             node = stack.pop()
-            nodes.append(node)
-            stack.extend(node.tree.values())
-        readers: dict[int, list[Schema]] = {}  # id(sub) -> schemas reading it
-        inexact: list[Schema] = []
-        for node in nodes:
-            node.exact = not self.supply_defaults
-            node.checks = ((_fails,) if self.supply_defaults else
-                           tuple(v.passes for v in node.validators))
+            node.exact = True
             for v in node.validators:
                 node.exact = node.exact and v.exact
                 for sub in v.bind(self):
-                    readers.setdefault(id(sub), []).append(node)
+                    readers.setdefault(sub, []).append(node)
+                    if sub not in names:
+                        names[sub] = f"s{len(names)}"
+                        stack.append(sub)
             if not node.exact:
                 inexact.append(node)
         # exact unless an inexact schema is reachable: the greatest
         # fixpoint, so recursive $refs over exact keywords stay exact
         while inexact:
-            for node in readers.get(id(inexact.pop()), ()):
+            for node in readers.get(inexact.pop(), ()):
                 if node.exact:
                     node.exact = False
                     inexact.append(node)
-        self._gates_bound = True
+        env = GateEnv(names)
+        src = []
+        for node, name in names.items():
+            # every check is pure, so the type check may go first and the
+            # others skip the type tests it implies
+            env.types = {}
+            body = []
+            for v in sorted(node.validators,
+                            key=lambda v: not isinstance(v, TypeV)):
+                body += v.gate_src("v", env)
+                if isinstance(v, TypeV):
+                    env.types = {"v": v.types}
+            src += _function_src(name, body)
+        exec(compile("\n".join(src), "<gate>", "exec"), env.ns)
+        for node, name in names.items():
+            node.passes = env.ns[name]
 
 
 def _reject_constant(name: str) -> Any:
     raise ValueError(f"non-standard JSON constant {name}")
+
+
+# one decoder for every document: json.loads with a keyword argument
+# builds a new JSONDecoder per call
+_DECODER = json.JSONDecoder(parse_constant=_reject_constant)
 
 
 def load_document(doc: str | None) -> Any:
@@ -2143,7 +2255,7 @@ def load_document(doc: str | None) -> Any:
     if doc is None:
         return None
     try:
-        return json.loads(doc, parse_constant=_reject_constant)
+        return _DECODER.decode(doc)
     except ValueError:  # json.JSONDecodeError included
         return None
 
