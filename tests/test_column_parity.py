@@ -102,47 +102,68 @@ def test_column_plan_is_wholestage(docs_df):
     assert "ArrowEvalPython" not in plan
 
 
-def test_count_compiler_matches_array_compiler(docs_df, media_df):
-    from valico_spark.operators.validate import validation_counts
-    from valico_spark.rulesets import DOCS_RULESET, MEDIA_RULESET
-
+def _count_mismatches(df, ruleset) -> int:
+    """Rows whose ``validation_counts`` count differs from the size of
+    the ``compile_ruleset`` violations array."""
     from valico_spark.compiler.columns import compile_ruleset
-    from valico_spark.compiler.counts import compile_violation_count
+    from valico_spark.operators.validate import validation_counts
 
+    arr = compile_ruleset(ruleset, df.schema)
+    return (validation_counts(df, ruleset)
+            .where(F.size(arr).cast("long") != F.col("n_violations"))
+            .count())
+
+
+def test_count_compiler_matches_array_compiler(docs_df, media_df):
     for df, rs in ((docs_df, DOCS_RULESET), (media_df, MEDIA_RULESET)):
-        arr = compile_ruleset(rs, df.schema)
-        cnt = compile_violation_count(rs, df.schema)
-        bad = df.select(F.size(arr).cast("long").alias("n"),
-                        cnt.alias("n2")) \
-                .where(F.col("n") != F.col("n2")).count()
-        assert bad == 0
+        assert _count_mismatches(df, rs) == 0
 
 
 def test_count_compiler_fuzz(spark):
     import random
 
     from test_fuzz_parity import ROW_TYPE, gen_row, gen_ruleset
-    from valico_spark.compiler.columns import (
-        UnsupportedRule, compile_ruleset,
-    )
-    from valico_spark.compiler.counts import compile_violation_count
-    from pyspark.sql import types as T
+    from valico_spark.compiler.columns import UnsupportedRule
 
     rnd = random.Random(99)
     rows = [gen_row(rnd, i) for i in range(80)]
-    df = spark.createDataFrame(rows, ROW_TYPE)
-    schema = T.StructType([f for f in ROW_TYPE.fields if f.name != "id"])
+    df = spark.createDataFrame(rows, ROW_TYPE).drop("id")
     checked = 0
     for _ in range(25):
         ruleset = gen_ruleset(rnd)
         try:
-            arr = compile_ruleset(ruleset, schema)
-            cnt = compile_violation_count(ruleset, schema)
+            assert _count_mismatches(df, ruleset) == 0, ruleset
         except UnsupportedRule:
             continue
-        bad = df.select(F.size(arr).cast("long").alias("n"),
-                        cnt.alias("n2")) \
-                .where(F.col("n") != F.col("n2")).count()
-        assert bad == 0, ruleset
         checked += 1
     assert checked >= 15
+
+
+def _orders_lineitem(spark):
+    orders = spark.createDataFrame(
+        [], "o_orderkey long, o_custkey long, o_orderstatus string, "
+            "o_totalprice double, o_orderdate timestamp, "
+            "o_orderpriority string")
+    lineitem = spark.createDataFrame(
+        [], "l_orderkey long, l_partkey long, l_suppkey long, "
+            "l_linenumber int, l_quantity double, l_extendedprice double, "
+            "l_discount double, l_tax double, l_returnflag string, "
+            "l_linestatus string, l_shipdate timestamp")
+    return orders, lineitem
+
+
+def test_gate_coverage_pinned(spark, docs_df, media_df):
+    """The canonical rulesets keep an exact root gate, and the columns
+    plan evaluates it in front of the violations tree."""
+    from valico_spark.compiler.columns import compile_checked, row_target
+    from valico_spark.rulesets import LINEITEM_RULESET, ORDERS_RULESET
+
+    orders, lineitem = _orders_lineitem(spark)
+    for df, rs in ((docs_df, DOCS_RULESET), (media_df, MEDIA_RULESET),
+                   (orders, ORDERS_RULESET), (lineitem, LINEITEM_RULESET)):
+        assert compile_checked(rs, row_target(df.schema)).ok() is not None
+
+    validated = validate_dataframe(docs_df, DOCS_RULESET, mode="columns")
+    plan = validated._jdf.queryExecution().optimizedPlan().toString()
+    # the gated tree: CASE WHEN <ok> THEN [] ELSE <violations> END
+    assert "CASE WHEN" in plan and "THEN [] ELSE" in plan, plan[:2000]

@@ -15,7 +15,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from valico_spark.compiler.columns import UnsupportedRule, compile_ruleset
+from valico_spark.compiler.columns import (
+    UnsupportedRule, compile_checked, compile_ruleset, gated, row_target,
+)
 from valico_spark.compiler.pyvalidator import Scope
 
 ROW_TYPE = T.StructType([
@@ -181,3 +183,43 @@ def test_fuzz_column_vs_oracle(spark, seed):
         checked += 1
     # the generator must mostly produce compilable rulesets
     assert checked >= N_RULESETS * 0.7, (checked, skipped)
+
+
+@pytest.mark.parametrize("seed", [7, 1234])
+def test_fuzz_gate_sound_and_exact(spark, seed):
+    """Wherever the typed compile has a root gate, the gated array equals
+    the ungated one element for element (order included), the gate holds
+    exactly on the rows without violations, and the count view equals
+    the array's size."""
+    rnd = random.Random(seed)
+    rows = [gen_row(rnd, i) for i in range(N_ROWS)]
+    df = spark.createDataFrame(rows, ROW_TYPE)
+    target = row_target(T.StructType([f for f in ROW_TYPE.fields
+                                      if f.name != "id"]))
+    cols, gated_rulesets = [], []
+    for k in range(N_RULESETS):
+        ruleset = gen_ruleset(rnd)
+        try:
+            checked = compile_checked(ruleset, target)
+            viol, ok, count = checked.viol(), checked.ok(), checked.count()
+        except UnsupportedRule:
+            continue
+        if ok is None:
+            continue
+        cols += [viol.alias(f"v{k}"), ok.alias(f"ok{k}"),
+                 count.alias(f"n{k}"), gated(viol, ok).alias(f"g{k}")]
+        gated_rulesets.append((k, ruleset))
+    assert len(gated_rulesets) >= N_RULESETS * 0.5, len(gated_rulesets)
+
+    passed = failed = 0
+    for r in df.select("id", *cols).collect():
+        for k, ruleset in gated_rulesets:
+            full = r[f"v{k}"]
+            where = f"seed={seed} ruleset={json.dumps(ruleset)} id={r['id']}"
+            assert r[f"g{k}"] == full, where
+            assert r[f"ok{k}"] is (len(full) == 0), where
+            assert r[f"n{k}"] == len(full), where
+            passed += r[f"ok{k}"]
+            failed += not r[f"ok{k}"]
+    # the gate is neither vacuous nor always taken
+    assert passed > 0 and failed > 0, (passed, failed)

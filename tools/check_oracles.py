@@ -13,6 +13,10 @@ against Spark's int64 despite value-for-value equality (the r2/r3
 ``stats_profile_lineitem`` / ``agg_rollup_orders`` red cells).
 
 Usage: python tools/check_oracles.py [query ...]
+
+No names checks every query. A name that is not in ``queries()`` is
+reported and the run exits with status 2 before any Spark session
+starts; ``-h`` / ``--help`` prints this text.
 """
 
 from __future__ import annotations
@@ -49,8 +53,17 @@ def canon_frame(df):
 
 
 def main(selected: list[str]) -> int:
+    if "-h" in selected or "--help" in selected:
+        print(__doc__.strip())
+        return 0
     import __spark_entry__ as entrymod
     from valico_spark.session import get_spark
+
+    unknown = [name for name in selected if name not in entrymod.queries()]
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}; see "
+              f"queries() in __spark_entry__.py", file=sys.stderr)
+        return 2
 
     spark = get_spark("oracle_check", master="local[8]",
                       extra_conf={"spark.sql.shuffle.partitions": "8"})

@@ -9,6 +9,21 @@ built-in ``pyspark.sql.functions`` (whole-stage codegen, no Python in the
 row loop); higher-order functions (``transform``/``filter``/``forall``/
 ``exists``/``aggregate``) handle array keywords.
 
+One condition, three views. Every keyword emitter returns a
+:class:`Checked`: a leaf writes its condition once, in ``_check(bad,
+violation)``, and that one column yields the violations array
+(``_maybe``), an exact gate ``ok`` (``~bad``: holds exactly when the
+part emits nothing) and a violation count (``when(bad, 1)``). Composites
+combine the views — concat / AND / sum over a node's parts, ``~present |
+ok`` and ``when(present, count)`` under struct properties, ``forall`` /
+``aggregate`` over array items, and the combinators' own condition over
+their branches' validity. A keyword with
+no exact boolean form (open maps, ``unevaluated*``, ...) has no gate and
+counts ``size(violations)``; its node then has no gate either.
+``compile_ruleset`` wraps the tree in the root's gate
+(``when(ok, []).otherwise(violations)``), so valid rows never build the
+allocating tree, and ``validation_counts`` reads the count view.
+
 Semantics contract: identical verdicts and ``(code, title, path, detail)``
 rows to ``pyvalidator`` (the reference-parity oracle) for the supported
 subset, property-tested in ``tests/test_column_parity.py``. The mapping of
@@ -32,9 +47,10 @@ to the Arrow-batched fallback stage instead.
 
 from __future__ import annotations
 
+import functools
 import math
-from dataclasses import dataclass, replace
-from typing import Any
+from dataclasses import dataclass
+from typing import Any, Callable, Optional
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -152,6 +168,146 @@ def _states_json(sub_viols: list[Column]) -> Column:
     return F.to_json(failing)
 
 
+def gated(violations: Column, ok: Optional[Column]) -> Column:
+    """The violations array with the gate as its fast path: rows whose
+    ``ok`` holds never build the tree."""
+    if ok is None:
+        return violations
+    return F.when(ok, empty_violations()).otherwise(violations)
+
+
+class Checked:
+    """A compiled schema part in three views of the same conditions, each
+    built on first use: ``viol()`` the violations array, ``ok()`` a
+    boolean that holds exactly when the part has no violations (None when
+    the part has no exact boolean form) and ``count()`` the number of
+    violations (``size(viol())`` unless given)."""
+
+    def __init__(self, viol: Callable[[], Column],
+                 ok: Optional[Callable[[], Optional[Column]]] = None,
+                 count: Optional[Callable[[], Column]] = None):
+        self.viol = functools.cache(viol)
+        self.ok = functools.cache(ok or (lambda: None))
+        self.count = functools.cache(count or (lambda: F.size(self.viol())))
+
+    def gated(self) -> Column:
+        """The violations array behind its gate, when it has one."""
+        return gated(self.viol(), self.ok())
+
+
+def _one_if(cond: Column) -> Column:
+    return F.when(cond, 1).otherwise(0)
+
+
+def _check(bad: Column, violation: Column) -> Checked:
+    """A leaf: one violation when ``bad`` is TRUE. The only place a leaf
+    writes its condition; the gate and the count read the same column.
+    ``bad`` is never NULL on typed columns: each leaf ANDs its condition
+    with the value's ``isNotNull``, and the conditions on a present value
+    are NULL-free. So ``~bad`` is exact, and Catalyst folds it into the
+    parent's ``isnull(value) OR`` guard, which a ``coalesce`` would
+    block."""
+    return Checked(lambda: _maybe(bad, violation), lambda: ~bad,
+                   lambda: _one_if(bad))
+
+
+def _exact(parts: list[Checked]) -> Optional[list[Column]]:
+    """Every part's gate, or None when one has no exact form."""
+    oks = []
+    for p in parts:
+        ok = p.ok()
+        if ok is None:
+            return None
+        oks.append(ok)
+    return oks
+
+
+def _all(parts: list[Optional[Checked]]) -> Checked:
+    """The parts of one node (None: the part can never emit):
+    concatenated violations, conjoined gates, summed counts."""
+    parts = [p for p in parts if p is not None]
+
+    def ok() -> Optional[Column]:
+        oks = _exact(parts)
+        if oks is None:
+            return None
+        return functools.reduce(Column.__and__, oks) if oks else F.lit(True)
+
+    def count() -> Column:
+        counts = [p.count() for p in parts]
+        return functools.reduce(Column.__add__, counts) if counts \
+            else F.lit(0)
+
+    return Checked(lambda: _concat([p.viol() for p in parts]), ok, count)
+
+
+def _when(cond: Column, part: Checked) -> Checked:
+    """``part`` where ``cond`` holds, nothing elsewhere. Every caller's
+    ``cond`` is a presence test that is never NULL, so the gate stays
+    exact."""
+    def ok() -> Optional[Column]:
+        sub = part.ok()
+        return None if sub is None else ~cond | sub
+
+    return Checked(
+        lambda: F.when(cond, part.viol()).otherwise(empty_violations()),
+        ok, lambda: F.when(cond, part.count()).otherwise(0))
+
+
+def _each(arr: Column, elem: Callable[[Column, Column], Checked]
+          ) -> Checked:
+    """``elem(x, i)`` at every element of the non-NULL array ``arr``:
+    ``flatten(transform)``, ``forall`` and ``aggregate``. Each view
+    compiles the element inside its own lambda; only the violations read
+    the index (for paths)."""
+    def ok() -> Optional[Column]:
+        exact = []
+
+        def body(x: Column) -> Column:
+            sub = elem(x, F.lit(0)).ok()
+            exact.append(sub is not None)
+            return F.lit(True) if sub is None else sub
+
+        out = F.forall(arr, body)
+        return out if all(exact) else None
+
+    return Checked(
+        lambda: F.flatten(F.transform(arr, lambda x, i: elem(x, i).viol())),
+        ok,
+        lambda: F.aggregate(arr, F.lit(0), lambda acc, x:
+                            acc + elem(x, F.lit(0)).count()))
+
+
+def _verdict(branches: list[Checked], bad_of: Callable[[list], Column],
+             violation_of: Callable[[list], Column]) -> Checked:
+    """A combinator's one violation when ``bad_of(valid)`` holds, with
+    ``valid`` its branches' "no violations" in the view at hand:
+    ``size(viol) == 0``, the branch gates (when all are exact), or
+    ``count == 0``. The condition is written once, in ``bad_of``."""
+    def ok() -> Optional[Column]:
+        oks = _exact(branches)
+        return None if oks is None else ~bad_of(oks)
+
+    return Checked(
+        lambda: _maybe(bad_of([F.size(b.viol()) == 0 for b in branches]),
+                       violation_of([b.viol() for b in branches])),
+        ok, lambda: _one_if(bad_of([b.count() == 0 for b in branches])))
+
+
+def _pick(test: Checked, then: Checked, other: Checked) -> Checked:
+    """``then`` where ``test`` has no violations, else ``other``."""
+    def ok() -> Optional[Column]:
+        oks = _exact([test, then, other])
+        return None if oks is None \
+            else F.when(oks[0], oks[1]).otherwise(oks[2])
+
+    return Checked(
+        lambda: F.when(F.size(test.viol()) == 0, then.viol())
+                 .otherwise(other.viol()),
+        ok, lambda: F.when(test.count() == 0, then.count())
+                     .otherwise(other.count()))
+
+
 @dataclass
 class Target:
     """The value a subschema is applied to."""
@@ -212,8 +368,8 @@ class ColumnCompiler:
         self.root_schema = root_schema  # for local $ref resolution
 
     # -- entry ----------------------------------------------------------
-    def compile(self, schema: Any, target: Target) -> Column:
-        """Return the violations-array Column for ``schema`` at ``target``."""
+    def compile(self, schema: Any, target: Target) -> Checked:
+        """The :class:`Checked` views of ``schema`` at ``target``."""
         if inline_id_with_refs(self.root_schema
                                if self.root_schema is not None else schema):
             # An inline (non-root) $id rebases ref resolution and, in
@@ -246,7 +402,7 @@ class ColumnCompiler:
         return node
 
     # -- node ------------------------------------------------------------
-    def _node(self, schema: Any, target: Target, depth: int) -> Column:
+    def _node(self, schema: Any, target: Target, depth: int) -> Checked:
         if depth > self._MAX_REF_DEPTH:
             raise UnsupportedRule("recursive $ref beyond inlining depth")
         if schema is True:
@@ -306,24 +462,22 @@ class ColumnCompiler:
             "if": lambda: (self._conditional(s, t, d)
                            if "if" in s else None),
             "unevaluatedProperties": lambda: (
-                self._unevaluated_properties(s, t, d)
+                Checked(lambda: self._unevaluated_properties(s, t, d))
                 if self.version >= DRAFT2019 else None),
             "unevaluatedItems": lambda: (
-                self._unevaluated_items(s, t, d)
+                Checked(lambda: self._unevaluated_items(s, t, d))
                 if self.version >= DRAFT2019 else None),
             "contentMediaType": lambda: self._content_media(s, t),
         }
         from valico_spark.compiler.pyvalidator import keyword_dispatch_order
 
-        parts: list[Column] = []
-        for canon in keyword_dispatch_order(s, self.version):
-            h = handlers.get(canon)
-            if h is None:
-                continue
-            part = h()
-            if part is not None:
-                parts.append(part)
-        return _concat(parts)
+        return _all([handlers[canon]()
+                     for canon in keyword_dispatch_order(s, self.version)
+                     if canon in handlers])
+
+    def _valid(self, schema: Any, target: Target, depth: int) -> Column:
+        """``schema`` emits no violations at ``target``."""
+        return F.size(self._node(schema, target, depth).viol()) == 0
 
     # -- unevaluatedProperties (2019-09) ----------------------------------
     # SURVEY.md §7 hard-part 1: valico's `evaluated` set is dynamic —
@@ -359,8 +513,8 @@ class ColumnCompiler:
                                                       else sub)
             if not isinstance(sub_n, dict):
                 raise UnsupportedRule("schema must be object/boolean")
-            valid = F.size(self._node(sub_n, t, depth + 1)) == 0
-            return self._evaluated_keys(sub_n, t, depth + 1), valid
+            return (self._evaluated_keys(sub_n, t, depth + 1),
+                    self._valid(sub_n, t, depth + 1))
 
         if "$ref" in s:
             ref_ev = self._evaluated_keys(
@@ -377,21 +531,21 @@ class ColumnCompiler:
             matched = False
             if key in props:
                 matched = True
-                sub_viol = self._node(props[key], child(key), depth + 1)
-                mark(key, present(key) & (F.size(sub_viol) == 0))
+                mark(key, present(key)
+                     & self._valid(props[key], child(key), depth + 1))
             for pat, psub in patterns.items():
                 if _re.search(pat, key):
                     matched = True
-                    sub_viol = self._node(psub, child(key), depth + 1)
-                    mark(key, present(key) & (F.size(sub_viol) == 0))
+                    mark(key, present(key)
+                         & self._valid(psub, child(key), depth + 1))
             if not matched and additional is not None:
                 if additional is True:
                     mark(key, present(key))  # properties.rs:106-108
                 elif additional is False:
                     pass  # forbidden, never evaluated
                 else:
-                    sub_viol = self._node(additional, child(key), depth + 1)
-                    mark(key, present(key) & (F.size(sub_viol) == 0))
+                    mark(key, present(key)
+                         & self._valid(additional, child(key), depth + 1))
 
         for sub in s.get("allOf", []):
             # allOf appends every branch state (of.rs:36-42): evaluated
@@ -453,8 +607,8 @@ class ColumnCompiler:
                     mark(key, present(key))
             elif uev is not False:
                 for key in fields:
-                    sub_viol = self._node(uev, child(key), depth + 1)
-                    mark(key, present(key) & (F.size(sub_viol) == 0))
+                    mark(key, present(key)
+                         & self._valid(uev, child(key), depth + 1))
         return ev
 
     def _evaluated_items(self, s: dict, t: Target,
@@ -486,9 +640,8 @@ class ColumnCompiler:
                 return ev_rest
             return merge(ev_rest, F.transform(
                 t.col,
-                lambda x: F.size(self._node(uev, Target(x, etype,
-                                                        F.lit("")),
-                                            depth + 1)) == 0))
+                lambda x: self._valid(uev, Target(x, etype, F.lit("")),
+                                      depth + 1)))
 
         ev = false_arr
 
@@ -497,24 +650,22 @@ class ColumnCompiler:
         if isinstance(items, (dict, bool)):
             ev = merge(ev, F.transform(
                 t.col,
-                lambda x: F.size(self._node(items, Target(x, etype,
-                                                          F.lit("")),
-                                            depth + 1)) == 0))
+                lambda x: self._valid(items, Target(x, etype, F.lit("")),
+                                      depth + 1)))
         elif isinstance(items, list):
             def positional(x: Column, i: Column) -> Column:
                 out = F.lit(False)
                 for idx, sub in enumerate(items):
-                    valid = F.size(self._node(sub, Target(x, etype,
-                                                          F.lit("")),
-                                              depth + 1)) == 0
+                    valid = self._valid(sub, Target(x, etype, F.lit("")),
+                                        depth + 1)
                     out = F.when(i == idx, valid).otherwise(out)
                 if additional is True:
                     out = F.when(i >= len(items), F.lit(True)) \
                         .otherwise(out)  # items.rs:118-123
                 elif isinstance(additional, dict):
-                    valid = F.size(self._node(additional,
-                                              Target(x, etype, F.lit("")),
-                                              depth + 1)) == 0
+                    valid = self._valid(additional,
+                                        Target(x, etype, F.lit("")),
+                                        depth + 1)
                     out = F.when(i >= len(items), valid).otherwise(out)
                 return out
             ev = merge(ev, F.transform(t.col, positional))
@@ -524,8 +675,8 @@ class ColumnCompiler:
                                                       else sub)
             if not isinstance(sub_n, dict):
                 raise UnsupportedRule("schema must be object/boolean")
-            valid = F.size(self._node(sub_n, t, depth + 1)) == 0
-            return self._evaluated_items(sub_n, t, depth + 1), valid
+            return (self._evaluated_items(sub_n, t, depth + 1),
+                    self._valid(sub_n, t, depth + 1))
 
         for sub in s.get("allOf", []):
             bev, _ = branch(sub)
@@ -585,7 +736,7 @@ class ColumnCompiler:
                                F.concat(t.path, F.lit("/"),
                                         i.cast("string")))
                 return F.when(~pair["e"],
-                              self._node(spec, child, depth + 1)
+                              self._node(spec, child, depth + 1).viol()
                               ).otherwise(empty_violations())
         return F.when(t.col.isNotNull(),
                       F.flatten(F.transform(idx_ev, emit))
@@ -604,11 +755,10 @@ class ColumnCompiler:
         vtype = t.dtype.valueType
 
         def sub_ok(sub) -> Column:
-            child = Target(val, vtype, F.lit(""))
-            return F.size(self._node(sub, child, depth + 1)) == 0
+            return self._valid(sub, Target(val, vtype, F.lit("")), depth + 1)
 
         def branch_valid(sub) -> Column:
-            return F.size(self._node(sub, t, depth + 1)) == 0
+            return self._valid(sub, t, depth + 1)
 
         if "unevaluatedProperties" in s:
             # annotation rule (see _evaluated_keys): per-entry uev
@@ -702,7 +852,7 @@ class ColumnCompiler:
                     F.lit("Unevaluated properties are not allowed")))
                 ).otherwise(empty_violations())
             child = Target(e["value"], vtype, path)
-            return F.when(~ev, self._node(spec, child, depth + 1)) \
+            return F.when(~ev, self._node(spec, child, depth + 1).viol()) \
                     .otherwise(empty_violations())
 
         return F.when(
@@ -735,13 +885,15 @@ class ColumnCompiler:
             else:
                 child = t.child(t.col.getField(key), f_.dataType,
                                 F.concat(t.path, F.lit("/" + key)))
-                sub_viol = self._node(spec, child, depth + 1)
+                sub_viol = self._node(spec, child, depth + 1).viol()
                 parts.append(F.when(unevaluated, sub_viol)
                               .otherwise(empty_violations()))
         return _concat(parts)
 
     # -- keyword emitters -------------------------------------------------
-    def _type(self, ty: Any, t: Target) -> Column:
+    # each returns a Checked, or None when it can never emit (a static
+    # no-op: the keyword is decided by the column type alone)
+    def _type(self, ty: Any, t: Target) -> Optional[Checked]:
         types = [ty] if isinstance(ty, str) else list(ty)
         for x in types:
             if x not in PRIMITIVE_TYPES:
@@ -756,20 +908,17 @@ class ColumnCompiler:
         # "null" in the requested set: absent/NULL passes anyway (we skip
         # on NULL), so it adds nothing beyond the skip guard.
         sat = possible & set(types)
-        if sat == possible and not (
-                _is_float(t.dtype) and "integer" in types
-                and "number" not in types):
-            return empty_violations()  # statically satisfied
+        whole = (_is_float(t.dtype) and "integer" in types
+                 and "number" not in types)
         if not sat:
             # can never match → violation whenever present
-            return _maybe(t.col.isNotNull(),
-                          make_violation("wrong_type", t.path, detail))
-        if _is_float(t.dtype) and "integer" in types and "number" not in types:
+            bad = t.col.isNotNull()
+        elif whole:
             # runtime whole-float check (type_.rs:23-27)
             bad = t.col.isNotNull() & ~(t.col == F.floor(t.col))
-            return _maybe(bad, make_violation("wrong_type", t.path, detail))
-        return empty_violations()
-
+        else:
+            return None  # statically satisfied
+        return _check(bad, make_violation("wrong_type", t.path, detail))
     def _match_value(self, value: Any, col: Column, dtype,
                      top_level: bool) -> Column | None:
         """Boolean column: does ``col`` (of ``dtype``) equal ``value``
@@ -842,46 +991,41 @@ class ColumnCompiler:
             return out
         raise UnsupportedRule(f"unsupported const value {value!r}")
 
-    def _enum(self, values: list, t: Target) -> Column:
+    def _enum(self, values: list, t: Target) -> Checked:
         if not isinstance(values, list) or not values:
             raise UnsupportedRule("enum must be a non-empty array")
+        return self._match_any(values, t, "enum")
+
+    def _const(self, value: Any, t: Target) -> Checked:
+        return self._match_any([value], t, "const")
+
+    def _match_any(self, values: list, t: Target, code: str) -> Checked:
         if t.dtype is None:
-            raise UnsupportedRule("enum on untyped target")
+            raise UnsupportedRule(f"{code} on untyped target")
         ok = None
         for v in values:
             m = self._match_value(v, t.col, t.dtype, top_level=True)
             if m is not None:
                 ok = m if ok is None else (ok | m)
-        if ok is None:  # nothing can ever match
-            return _maybe(t.col.isNotNull(), make_violation("enum", t.path))
-        return _maybe(t.col.isNotNull() & ~ok,
-                      make_violation("enum", t.path))
+        bad = t.col.isNotNull() if ok is None else t.col.isNotNull() & ~ok
+        return _check(bad, make_violation(code, t.path))
 
-    def _const(self, value: Any, t: Target) -> Column:
-        if t.dtype is None:
-            raise UnsupportedRule("const on untyped target")
-        m = self._match_value(value, t.col, t.dtype, top_level=True)
-        if m is None:
-            return _maybe(t.col.isNotNull(), make_violation("const", t.path))
-        return _maybe(t.col.isNotNull() & ~m,
-                      make_violation("const", t.path))
-
-    def _bound(self, m: Any, op: str, t: Target) -> Column:
+    def _bound(self, m: Any, op: str, t: Target) -> Optional[Checked]:
         if not is_number(m):
             raise UnsupportedRule("bound must be a number")
         if not _is_numeric(t.dtype) and t.dtype is not None:
-            return empty_violations()  # nonstrict skip, statically
+            return None  # nonstrict skip, statically
         c = t.col.cast("double")
         ok = {"min": c >= F.lit(float(m)), "emin": c > F.lit(float(m)),
               "max": c <= F.lit(float(m)), "emax": c < F.lit(float(m))}[op]
         code = "maximum" if op in ("max", "emax") else "minimum"
-        return _maybe(t.col.isNotNull() & ~ok, make_violation(code, t.path))
+        return _check(t.col.isNotNull() & ~ok, make_violation(code, t.path))
 
-    def _multiple_of(self, k: Any, t: Target) -> Column:
+    def _multiple_of(self, k: Any, t: Target) -> Optional[Checked]:
         if not is_number(k) or float(k) <= 0:
             raise UnsupportedRule("multipleOf must be > 0")
         if not _is_numeric(t.dtype) and t.dtype is not None:
-            return empty_violations()
+            return None
         k = float(k)
         c = t.col.cast("double")
         if not _is_float(t.dtype) and k == math.floor(k):
@@ -898,27 +1042,27 @@ class ColumnCompiler:
             rem = (c / F.lit(k)) % F.lit(1.0)
             ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
                   & (rem < F.lit(1.0 - EPSILON)))
-        return _maybe(t.col.isNotNull() & ~ok,
+        return _check(t.col.isNotNull() & ~ok,
                       make_violation("multiple_of", t.path))
 
-    def _length(self, n: Any, is_max: bool, t: Target) -> Column:
+    def _length(self, n: Any, is_max: bool, t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return empty_violations()
+            return None
         # F.length = UTF8String.numChars = Unicode code points — exact
         # parity with chars().count() (maxmin_length.rs:21,46), including
         # supplementary-plane characters.
         ln = F.length(t.col)
         ok = ln <= F.lit(int(n)) if is_max else ln >= F.lit(int(n))
-        return _maybe(t.col.isNotNull() & ~ok, make_violation(
+        return _check(t.col.isNotNull() & ~ok, make_violation(
             "max_length" if is_max else "min_length", t.path))
 
-    def _pattern(self, p: Any, t: Target) -> Column:
+    def _pattern(self, p: Any, t: Target) -> Optional[Checked]:
         if not isinstance(p, str):
             raise UnsupportedRule("pattern must be a string")
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return empty_violations()
+            return None
         ok = t.col.rlike(unicode_pattern(p))  # unanchored, like find()
-        return _maybe(t.col.isNotNull() & ~ok,
+        return _check(t.col.isNotNull() & ~ok,
                       make_violation("pattern", t.path))
 
     # regex approximations for the JVM-side format fast path; semantics
@@ -995,45 +1139,31 @@ class ColumnCompiler:
                 & ((off_m == "") | (off_m.cast("int") <= 59))
         return ok
 
-    def _format(self, name: Any, t: Target) -> Column:
+    def _format(self, name: Any, t: Target) -> Optional[Checked]:
         if not isinstance(name, str):
             raise UnsupportedRule("format must be a string")
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return empty_violations()
+            return None
         ok = self.format_ok_expr(name, t.col)
         if ok is None:
-            return empty_violations()
-        return _maybe(t.col.isNotNull() & ~ok, make_violation(
+            return None
+        return _check(t.col.isNotNull() & ~ok, make_violation(
             "format", t.path, F.lit(self._FORMAT_DETAILS[name])))
 
-    def _required(self, keys: Any, t: Target) -> Column:
+    def _required(self, keys: Any, t: Target) -> Optional[Checked]:
         if not isinstance(keys, list):
             raise UnsupportedRule("required must be an array")
-        if isinstance(t.dtype, T.StructType):
-            fields = {f.name for f in t.dtype.fields}
-            parts = []
-            for k in keys:
-                present = (t.col.getField(k).isNotNull() if k in fields
-                           else F.lit(False))
-                parts.append(_maybe(
-                    t.col.isNotNull() & ~present,
-                    make_violation("required",
-                                   F.concat(t.path, F.lit("/" + k)))))
-            return _concat(parts)
-        if isinstance(t.dtype, T.MapType):
-            parts = []
-            for k in keys:
-                present = F.map_contains_key(t.col, F.lit(k))
-                parts.append(_maybe(
-                    t.col.isNotNull() & ~present,
-                    make_violation("required",
-                                   F.concat(t.path, F.lit("/" + k)))))
-            return _concat(parts)
-        if t.dtype is None:
-            raise UnsupportedRule("required on untyped target")
-        return empty_violations()  # non-object target → skip
+        if not isinstance(t.dtype, (T.StructType, T.MapType)):
+            if t.dtype is None:
+                raise UnsupportedRule("required on untyped target")
+            return None  # non-object target → skip
+        return _all([_check(t.col.isNotNull() & ~_has_key(t, k),
+                            make_violation("required",
+                                           F.concat(t.path, F.lit("/" + k))))
+                     for k in keys])
 
-    def _properties(self, s: dict, t: Target, depth: int) -> Column:
+    def _properties(self, s: dict, t: Target,
+                    depth: int) -> Optional[Checked]:
         props = s.get("properties", {})
         additional = s.get("additionalProperties")
         patterns = s.get("patternProperties")
@@ -1056,27 +1186,22 @@ class ColumnCompiler:
                     # the whole subschema — including combinators like
                     # `not` that would otherwise fire on a vacuously-
                     # skipped value — is gated on child presence
-                    parts.append(F.when(
-                        present, self._node(props[key], child, depth + 1)
-                    ).otherwise(empty_violations()))
+                    parts.append(_when(
+                        present, self._node(props[key], child, depth + 1)))
                 elif additional is False:
-                    parts.append(_maybe(
-                        present,
-                        make_violation(
-                            "properties", t.path,
-                            F.lit(f"Additional property '{key}'"
-                                  " is not allowed"))))
+                    parts.append(_check(present, make_violation(
+                        "properties", t.path,
+                        F.lit(f"Additional property '{key}'"
+                              " is not allowed"))))
                 elif isinstance(additional, dict):
-                    parts.append(F.when(
-                        present,
-                        self._node(additional, child, depth + 1)
-                    ).otherwise(empty_violations()))
-            return _concat(parts)
+                    parts.append(_when(
+                        present, self._node(additional, child, depth + 1)))
+            return _all(parts)
         if isinstance(t.dtype, T.MapType):
-            return self._properties_map(s, t, depth)
+            return Checked(lambda: self._properties_map(s, t, depth))
         if t.dtype is None:
             raise UnsupportedRule("properties on untyped target")
-        return empty_violations()  # non-object → skip
+        return None  # non-object → skip
 
     def _properties_map(self, s: dict, t: Target, depth: int) -> Column:
         """properties/patternProperties/additionalProperties over
@@ -1092,17 +1217,21 @@ class ColumnCompiler:
         def entry_viols(e: Column) -> Column:
             key, val = e["key"], e["value"]
             child = Target(val, vtype, F.concat(t.path, F.lit("/"), key))
+
+            def sub(schema: Any) -> Column:
+                return self._node(schema, child, depth + 1).viol()
+
             parts = []
             prop_case = None
-            for k, sub in props.items():
-                v = self._node(sub, child, depth + 1)
+            for k, schema in props.items():
+                v = sub(schema)
                 prop_case = (F.when(key == F.lit(k), v) if prop_case is None
                              else prop_case.when(key == F.lit(k), v))
             if prop_case is not None:
                 parts.append(prop_case.otherwise(empty_violations()))
-            for pat, sub in patterns.items():
+            for pat, schema in patterns.items():
                 parts.append(F.when(key.rlike(unicode_pattern(pat)),
-                                    self._node(sub, child, depth + 1)
+                                    sub(schema)
                                     ).otherwise(empty_violations()))
             if additional is not None:
                 is_known = F.lit(False)
@@ -1117,10 +1246,8 @@ class ColumnCompiler:
                                  F.lit("' is not allowed"))))
                     ).otherwise(empty_violations()))
                 elif isinstance(additional, dict):
-                    parts.append(F.when(
-                        ~is_known,
-                        self._node(additional, child, depth + 1)
-                    ).otherwise(empty_violations()))
+                    parts.append(F.when(~is_known, sub(additional)
+                                        ).otherwise(empty_violations()))
             return _concat(parts)
 
         return F.when(
@@ -1129,7 +1256,8 @@ class ColumnCompiler:
                                   lambda e: entry_viols(e)))
         ).otherwise(empty_violations())
 
-    def _property_names(self, sub: Any, t: Target, depth: int) -> Column:
+    def _property_names(self, sub: Any, t: Target,
+                        depth: int) -> Optional[Checked]:
         if isinstance(t.dtype, T.StructType):
             # static keys: evaluate at compile time via pyvalidator
             from valico_spark.compiler.pyvalidator import validate_json
@@ -1137,27 +1265,28 @@ class ColumnCompiler:
             for f_ in t.dtype.fields:
                 st = validate_json(sub, f_.name, version=self.version)
                 for e in st.errors:
-                    parts.append(_maybe(
+                    parts.append(_check(
                         t.col.isNotNull() & t.col.getField(f_.name).isNotNull(),
                         make_violation(
                             e.code,
                             F.concat(t.path, F.lit(f"/[{f_.name}]")),
                             F.lit(e.detail) if e.detail else None)))
-            return _concat(parts)
+            return _all(parts)
         if isinstance(t.dtype, T.MapType):
             def emit(k):
                 child = Target(k, T.StringType(),
                                F.concat(t.path, F.lit("/["), k, F.lit("]")))
-                return self._node(sub, child, depth + 1)
-            return F.when(
+                return self._node(sub, child, depth + 1).viol()
+            return Checked(lambda: F.when(
                 t.col.isNotNull(),
                 F.flatten(F.transform(F.map_keys(t.col), emit))
-            ).otherwise(empty_violations())
+            ).otherwise(empty_violations()))
         if t.dtype is None:
             raise UnsupportedRule("propertyNames on untyped target")
-        return empty_violations()
+        return None
 
-    def _props_count(self, n: Any, is_max: bool, t: Target) -> Column:
+    def _props_count(self, n: Any, is_max: bool,
+                     t: Target) -> Optional[Checked]:
         if isinstance(t.dtype, T.StructType):
             # count present (non-null) fields
             present = [F.when(t.col.getField(f.name).isNotNull(), 1)
@@ -1168,12 +1297,13 @@ class ColumnCompiler:
         elif t.dtype is None:
             raise UnsupportedRule("min/maxProperties on untyped target")
         else:
-            return empty_violations()
+            return None
         ok = total <= F.lit(int(n)) if is_max else total >= F.lit(int(n))
-        return _maybe(t.col.isNotNull() & ~ok, make_violation(
+        return _check(t.col.isNotNull() & ~ok, make_violation(
             "max_properties" if is_max else "min_properties", t.path))
 
-    def _dependencies(self, s: dict, t: Target, depth: int) -> Column:
+    def _dependencies(self, s: dict, t: Target,
+                      depth: int) -> Optional[Checked]:
         items: list[tuple[str, tuple[str, Any]]] = []
         if "dependencies" in s:
             for k, v in s["dependencies"].items():
@@ -1186,175 +1316,152 @@ class ColumnCompiler:
             for k, v in s["dependentSchemas"].items():
                 items.append((k, ("schema", v)))
 
-        def present(key: str) -> Column:
-            if isinstance(t.dtype, T.StructType):
-                names = {f.name for f in t.dtype.fields}
-                return (t.col.getField(key).isNotNull() if key in names
-                        else F.lit(False))
-            if isinstance(t.dtype, T.MapType):
-                return F.map_contains_key(t.col, F.lit(key))
-            raise UnsupportedRule("dependencies on non-object target")
-
         if not isinstance(t.dtype, (T.StructType, T.MapType)):
             if t.dtype is None:
                 raise UnsupportedRule("dependencies on untyped target")
-            return empty_violations()
+            return None
 
         parts = []
         for key, (kind, extra) in items:
-            trigger = t.col.isNotNull() & present(key)
+            trigger = t.col.isNotNull() & _has_key(t, key)
             if kind == "props":
                 for k2 in extra:
-                    parts.append(_maybe(
-                        trigger & ~present(k2),
+                    parts.append(_check(
+                        trigger & ~_has_key(t, k2),
                         make_violation("required",
                                        F.concat(t.path, F.lit("/" + k2)))))
             else:
-                sub_viol = self._node(extra, t, depth + 1)
-                parts.append(F.when(trigger, sub_viol)
-                              .otherwise(empty_violations()))
-        return _concat(parts)
+                parts.append(_when(trigger,
+                                   self._node(extra, t, depth + 1)))
+        return _all(parts)
 
-    def _items(self, s: dict, t: Target, depth: int) -> Column:
+    def _items(self, s: dict, t: Target, depth: int) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
             if t.dtype is None:
                 raise UnsupportedRule("items on untyped target")
-            return empty_violations()
+            return None
         etype = t.dtype.elementType
         items = s.get("items")
         additional = s.get("additionalItems")
-        parts = []
+        present = t.col.isNotNull()
         if isinstance(items, (dict, bool)):
-            def per_elem(x: Column, i: Column) -> Column:
+            def per_elem(x: Column, i: Column) -> Checked:
                 child = Target(x, etype,
                                F.concat(t.path, F.lit("/"),
                                         i.cast("string")))
                 return self._node(items, child, depth + 1)
-            parts.append(F.when(
-                t.col.isNotNull(),
-                F.flatten(F.transform(t.col, per_elem))
-            ).otherwise(empty_violations()))
-        elif isinstance(items, list):
-            for idx, sub in enumerate(items):
-                elem = F.element_at(t.col, idx + 1)
-                child = Target(elem, etype,
-                               F.concat(t.path, F.lit(f"/{idx}")))
-                sub_viol = self._node(sub, child, depth + 1)
-                parts.append(F.when(
-                    t.col.isNotNull() & (F.size(t.col) > idx), sub_viol
-                ).otherwise(empty_violations()))
-            if additional is False:
-                parts.append(_maybe(
-                    t.col.isNotNull() & (F.size(t.col) > len(items)),
-                    make_violation("items", t.path,
-                                   F.lit("Additional items are not allowed"))))
-            elif isinstance(additional, dict):
-                def per_extra(x: Column, i: Column) -> Column:
-                    child = Target(
-                        x, etype,
-                        F.concat(t.path, F.lit("/"),
-                                 (i + len(items)).cast("string")))
-                    return self._node(additional, child, depth + 1)
-                tail = F.slice(t.col, len(items) + 1,
-                               F.greatest(F.size(t.col) - len(items),
-                                          F.lit(0)))
-                parts.append(F.when(
-                    t.col.isNotNull() & (F.size(t.col) > len(items)),
-                    F.flatten(F.transform(tail, per_extra))
-                ).otherwise(empty_violations()))
-        return _concat(parts)
+            return _when(present, _each(t.col, per_elem))
+        if not isinstance(items, list):
+            return None
+        parts = []
+        for idx, sub in enumerate(items):
+            child = Target(F.element_at(t.col, idx + 1), etype,
+                           F.concat(t.path, F.lit(f"/{idx}")))
+            parts.append(_when(present & (F.size(t.col) > idx),
+                               self._node(sub, child, depth + 1)))
+        extra = present & (F.size(t.col) > len(items))
+        if additional is False:
+            parts.append(_check(extra, make_violation(
+                "items", t.path, F.lit("Additional items are not allowed"))))
+        elif isinstance(additional, dict):
+            def per_extra(x: Column, i: Column) -> Checked:
+                child = Target(
+                    x, etype,
+                    F.concat(t.path, F.lit("/"),
+                             (i + len(items)).cast("string")))
+                return self._node(additional, child, depth + 1)
+            tail = F.slice(t.col, len(items) + 1,
+                           F.greatest(F.size(t.col) - len(items), F.lit(0)))
+            parts.append(_when(extra, _each(tail, per_extra)))
+        return _all(parts)
 
-    def _items_count(self, n: Any, is_max: bool, t: Target) -> Column:
+    def _items_count(self, n: Any, is_max: bool,
+                     t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
             if t.dtype is None:
                 raise UnsupportedRule("min/maxItems on untyped target")
-            return empty_violations()
+            return None
         sz = F.size(t.col)
         ok = sz <= F.lit(int(n)) if is_max else sz >= F.lit(int(n))
-        return _maybe(t.col.isNotNull() & ~ok, make_violation(
+        return _check(t.col.isNotNull() & ~ok, make_violation(
             "max_items" if is_max else "min_items", t.path))
 
-    def _unique_items(self, t: Target) -> Column:
+    def _unique_items(self, t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
             if t.dtype is None:
                 raise UnsupportedRule("uniqueItems on untyped target")
-            return empty_violations()
+            return None
         # O(n) array_distinct vs the reference's O(n²) loop
         # (validators/unique_items.rs:18 'TODO quicker algorithm')
         ok = F.size(F.array_distinct(t.col)) == F.size(t.col)
-        return _maybe(t.col.isNotNull() & ~ok,
+        return _check(t.col.isNotNull() & ~ok,
                       make_violation("unique_items", t.path))
 
-    def _contains(self, s: dict, t: Target, depth: int) -> Column:
+    def _contains(self, s: dict, t: Target, depth: int) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
             if t.dtype is None:
                 raise UnsupportedRule("contains on untyped target")
-            return empty_violations()
+            return None
         sub = s["contains"]
         min_c = s.get("minContains") if self.version >= DRAFT2019 else None
         max_c = s.get("maxContains") if self.version >= DRAFT2019 else None
         etype = t.dtype.elementType
 
         def ok_elem(x: Column) -> Column:
-            child = Target(x, etype, F.lit(""))
-            return F.size(self._node(sub, child, depth + 1)) == 0
+            return self._valid(sub, Target(x, etype, F.lit("")), depth + 1)
 
-        parts = []
+        present = t.col.isNotNull()
         if min_c is None and max_c is None:
             # F.exists short-circuits (contains.rs:38-40 parity, but free)
-            parts.append(_maybe(t.col.isNotNull() & ~F.exists(t.col, ok_elem),
+            return _check(present & ~F.exists(t.col, ok_elem),
+                          make_violation("contains", t.path))
+        matched = F.size(F.filter(t.col, ok_elem))
+        parts = []
+        if min_c != 0:
+            parts.append(_check(present & (matched == 0),
                                 make_violation("contains", t.path)))
-        else:
-            matched = F.size(F.filter(t.col, ok_elem))
-            if min_c != 0:
-                parts.append(_maybe(t.col.isNotNull() & (matched == 0),
-                                    make_violation("contains", t.path)))
-            if max_c is not None:
-                parts.append(_maybe(
-                    t.col.isNotNull() & (matched > F.lit(int(max_c))),
-                    make_violation("min_contains/max_contains", t.path)))
-            if min_c is not None:
-                parts.append(_maybe(
-                    t.col.isNotNull() & (matched < F.lit(int(min_c))),
-                    make_violation("min_contains/max_contains", t.path)))
-        return _concat(parts)
+        if max_c is not None:
+            parts.append(_check(
+                present & (matched > F.lit(int(max_c))),
+                make_violation("min_contains/max_contains", t.path)))
+        if min_c is not None:
+            parts.append(_check(
+                present & (matched < F.lit(int(min_c))),
+                make_violation("min_contains/max_contains", t.path)))
+        return _all(parts)
 
-    def _all_of(self, subs: list, t: Target, depth: int) -> Column:
-        return _concat([self._node(sub, t, depth + 1) for sub in subs])
+    def _all_of(self, subs: list, t: Target, depth: int) -> Checked:
+        return _all([self._node(sub, t, depth + 1) for sub in subs])
 
-    def _any_of(self, subs: list, t: Target, depth: int) -> Column:
-        sub_viols = [self._node(sub, t, depth + 1) for sub in subs]
-        any_ok = None
-        for sv in sub_viols:
-            ok = F.size(sv) == 0
-            any_ok = ok if any_ok is None else (any_ok | ok)
-        return _maybe(~any_ok, make_violation("any_of", t.path,
-                                              states=_states_json(sub_viols)))
+    def _any_of(self, subs: list, t: Target, depth: int) -> Checked:
+        return _verdict(
+            [self._node(sub, t, depth + 1) for sub in subs],
+            lambda valid: ~functools.reduce(Column.__or__, valid),
+            lambda viols: make_violation("any_of", t.path,
+                                         states=_states_json(viols)))
 
-    def _one_of(self, subs: list, t: Target, depth: int) -> Column:
-        sub_viols = [self._node(sub, t, depth + 1) for sub in subs]
-        count = None
-        for sv in sub_viols:
-            ok_int = F.when(F.size(sv) == 0, 1).otherwise(0)
-            count = ok_int if count is None else (count + ok_int)
-        return _maybe(count != 1, make_violation("one_of", t.path,
-                                                 states=_states_json(sub_viols)))
+    def _one_of(self, subs: list, t: Target, depth: int) -> Checked:
+        return _verdict(
+            [self._node(sub, t, depth + 1) for sub in subs],
+            lambda valid: functools.reduce(
+                Column.__add__, [_one_if(v) for v in valid]) != 1,
+            lambda viols: make_violation("one_of", t.path,
+                                         states=_states_json(viols)))
 
-    def _not(self, sub: Any, t: Target, depth: int) -> Column:
-        sub_viol = self._node(sub, t, depth + 1)
-        return _maybe(F.size(sub_viol) == 0, make_violation("not", t.path))
+    def _not(self, sub: Any, t: Target, depth: int) -> Checked:
+        return _verdict([self._node(sub, t, depth + 1)],
+                        lambda valid: valid[0],
+                        lambda _: make_violation("not", t.path))
 
-    def _conditional(self, s: dict, t: Target, depth: int) -> Column:
-        if_ok = F.size(self._node(s["if"], t, depth + 1)) == 0
-        then_v = (self._node(s["then"], t, depth + 1)
-                  if "then" in s else empty_violations())
-        else_v = (self._node(s["else"], t, depth + 1)
-                  if "else" in s else empty_violations())
-        return F.when(if_ok, then_v).otherwise(else_v)
+    def _conditional(self, s: dict, t: Target, depth: int) -> Checked:
+        def branch(key: str) -> Checked:
+            return (self._node(s[key], t, depth + 1) if key in s
+                    else _all([]))
+        return _pick(branch("if"), branch("then"), branch("else"))
 
-    def _content_media(self, s: dict, t: Target) -> Column:
+    def _content_media(self, s: dict, t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return empty_violations()
+            return None
         enc = s.get("contentEncoding")
         mt = s.get("contentMediaType")
         parts = []
@@ -1368,10 +1475,10 @@ class ColumnCompiler:
                 r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}=="
                 r"|[A-Za-z0-9+/]{3}=)?$")
             utf8_ok = F.is_valid_utf8(F.unbase64(t.col))
-            parts.append(_maybe(t.col.isNotNull() & ~b64_ok,
+            parts.append(_check(t.col.isNotNull() & ~b64_ok,
                                 make_violation("format", t.path,
                                                F.lit("Invalid byte"))))
-            parts.append(_maybe(t.col.isNotNull() & b64_ok & ~utf8_ok,
+            parts.append(_check(t.col.isNotNull() & b64_ok & ~utf8_ok,
                                 make_violation("format", t.path,
                                                F.lit("Invalid UTF-8"))))
             decodable = b64_ok & utf8_ok
@@ -1379,331 +1486,35 @@ class ColumnCompiler:
         if mt == "application/json":
             parsed = F.try_parse_json(val)
             bad = t.col.isNotNull() & decodable & parsed.isNull()
-            parts.append(_maybe(bad, make_violation("format", t.path,
+            parts.append(_check(bad, make_violation("format", t.path,
                                                     F.lit(""))))
-        return _concat(parts)
+        return _all(parts)
 
 
-class _GateUnsupported(Exception):
-    """A construct the validity-gate mirror does not cover — the caller
-    falls back to the ungated violations expression (never to a wrong
-    one)."""
+def _has_key(t: Target, key: str) -> Column:
+    """The object at ``t`` (a struct or map) holds ``key``."""
+    if isinstance(t.dtype, T.MapType):
+        return F.map_contains_key(t.col, F.lit(key))
+    if key in t.dtype.fieldNames():
+        return t.col.getField(key).isNotNull()
+    return F.lit(False)
 
 
-class _GateCompiler:
-    """Predicate mirror of :class:`ColumnCompiler` for a conservative
-    keyword subset: ``ok_node`` returns a BOOLEAN column that is TRUE
-    only when the corresponding ``_node`` violations array is empty.
+def row_target(spark_schema: T.StructType) -> Target:
+    """The whole row of a table with ``spark_schema`` as one document.
+    GetStructField(CreateStruct(...)) collapses in Catalyst's
+    SimplifyExtractValueOps, so column pruning/pushdown still reach the
+    scan."""
+    root_col = F.struct(*[F.col(f.name).alias(f.name)
+                          for f in spark_schema.fields])
+    return Target(col=root_col, dtype=spark_schema, path=F.lit(""))
 
-    Every violation the main compiler emits through ``_maybe(cond, v)``
-    mirrors here as ``~cond`` over the IDENTICAL condition tree, so the
-    gate can never claim ok while a violation exists (a NULL/false gate
-    merely routes the row to the full expression, which is always
-    correct). The payoff: the full expression allocates arrays/structs
-    and string paths per checked node (interpreted inside array HOFs),
-    while this mirror is pure boolean arithmetic — measured 4.3x
-    cheaper on the 2M-doc bench ruleset, with 96% of rows taking the
-    gated fast path. Unsupported constructs (combinators, refs beyond
-    inlining, maps, formats, tuple items, dependencies, contains,
-    content checks, unevaluated*) raise :class:`_GateUnsupported`.
-    """
 
-    _MIRRORED = {"$ref", "type", "enum", "const", "minimum", "maximum",
-                 "exclusiveMinimum", "exclusiveMaximum", "multipleOf",
-                 "minLength", "maxLength", "pattern", "required",
-                 "properties", "minProperties", "maxProperties",
-                 "items", "minItems", "maxItems", "uniqueItems"}
-
-    #: keywords the MAIN dispatcher materializes (must stay in sync with
-    #: ColumnCompiler._node's handlers dict): dispatch-order entries
-    #: outside this set contribute no violations, so the mirror skips
-    #: them exactly like _node does
-    _MAIN_HANDLED = {"$ref", "type", "enum", "const", "minimum",
-                     "maximum", "exclusiveMinimum", "exclusiveMaximum",
-                     "multipleOf", "minLength", "maxLength", "pattern",
-                     "format", "required", "properties", "propertyNames",
-                     "minProperties", "maxProperties", "dependencies",
-                     "items", "minItems", "maxItems", "uniqueItems",
-                     "contains", "allOf", "anyOf", "oneOf", "not", "if",
-                     "unevaluatedProperties", "unevaluatedItems",
-                     "contentMediaType"}
-
-    def __init__(self, main: "ColumnCompiler"):
-        self.m = main
-
-    def ok_node(self, schema: Any, target: Target, depth: int) -> Column:
-        m = self.m
-        if depth > m._MAX_REF_DEPTH:
-            raise _GateUnsupported("ref depth")
-        if schema is True:
-            schema = {}
-        elif schema is False or not isinstance(schema, dict):
-            raise _GateUnsupported("boolean/non-dict schema")
-        if "$ref" in schema and m.version < DRAFT2019:
-            return self.ok_node(m._resolve_ref(schema["$ref"]), target,
-                                depth + 1)
-        from valico_spark.compiler.pyvalidator import (
-            keyword_dispatch_order,
-        )
-
-        s, t = schema, target
-        parts: list[Column] = []
-        for canon in keyword_dispatch_order(s, m.version):
-            if canon not in self._MAIN_HANDLED:
-                continue  # _node materializes nothing for it either
-            if canon not in self._MIRRORED:
-                # a keyword the main dispatcher would materialize but
-                # the mirror cannot (combinators, formats, ...): the
-                # mirror is incomplete for this schema
-                raise _GateUnsupported(canon)
-            part = self._dispatch(canon, s, t, depth)
-            if part is not None:
-                parts.append(part)
-        if not parts:
-            return F.lit(True)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out & p
-        return out
-
-    def _dispatch(self, canon: str, s: dict, t: Target,
-                  d: int) -> Column | None:
-        m = self.m
-        if canon == "$ref":
-            return self.ok_node(m._resolve_ref(s["$ref"]), t, d + 1)
-        if canon == "type":
-            return self._ok_type(s["type"], t)
-        if canon == "enum":
-            return self._ok_match_list(s["enum"], t)
-        if canon == "const":
-            return self._ok_match_list([s["const"]], t)
-        if canon in ("minimum", "maximum", "exclusiveMinimum",
-                     "exclusiveMaximum"):
-            op = {"minimum": "min", "maximum": "max",
-                  "exclusiveMinimum": "emin",
-                  "exclusiveMaximum": "emax"}[canon]
-            return self._ok_bound(s[canon], op, t)
-        if canon == "multipleOf":
-            return self._ok_multiple_of(s["multipleOf"], t)
-        if canon in ("minLength", "maxLength"):
-            return self._ok_length(s[canon], canon == "maxLength", t)
-        if canon == "pattern":
-            return self._ok_pattern(s["pattern"], t)
-        if canon == "required":
-            return self._ok_required(s["required"], t)
-        if canon == "properties":
-            return self._ok_properties(s, t, d)
-        if canon in ("minProperties", "maxProperties"):
-            return self._ok_props_count(s[canon],
-                                        canon == "maxProperties", t)
-        if canon == "items":
-            return self._ok_items(s, t, d)
-        if canon in ("minItems", "maxItems"):
-            return self._ok_items_count(s[canon], canon == "maxItems", t)
-        if canon == "uniqueItems":
-            if s["uniqueItems"] is not True:
-                return None
-            return self._ok_unique(t)
-        raise _GateUnsupported(canon)
-
-    # each mirror repeats the EXACT cond of the corresponding
-    # ColumnCompiler rule, negated; guard branches that return
-    # empty_violations() become lit(True)
-
-    def _ok_type(self, ty: Any, t: Target) -> Column:
-        types = [ty] if isinstance(ty, str) else list(ty)
-        for x in types:
-            if x not in PRIMITIVE_TYPES:
-                raise _GateUnsupported("type")
-        possible = spark_json_types(t.dtype)
-        if possible is None:
-            raise _GateUnsupported("type on untyped")
-        sat = possible & set(types)
-        whole_float = (_is_float(t.dtype) and "integer" in types
-                       and "number" not in types)
-        if sat == possible and not whole_float:
-            return F.lit(True)
-        if not sat:
-            return ~t.col.isNotNull()
-        if whole_float:
-            return ~(t.col.isNotNull() & ~(t.col == F.floor(t.col)))
-        return F.lit(True)
-
-    def _ok_match_list(self, values: list, t: Target) -> Column:
-        if not isinstance(values, list) or not values:
-            raise _GateUnsupported("enum/const shape")
-        if t.dtype is None:
-            raise _GateUnsupported("enum/const on untyped")
-        ok = None
-        for v in values:
-            mm = self.m._match_value(v, t.col, t.dtype, top_level=True)
-            if mm is not None:
-                ok = mm if ok is None else (ok | mm)
-        if ok is None:
-            return ~t.col.isNotNull()
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_bound(self, b: Any, op: str, t: Target) -> Column:
-        if not is_number(b):
-            raise _GateUnsupported("bound")
-        if not _is_numeric(t.dtype) and t.dtype is not None:
-            return F.lit(True)
-        if t.dtype is None:
-            raise _GateUnsupported("bound on untyped")
-        c = t.col.cast("double")
-        ok = {"min": c >= F.lit(float(b)), "emin": c > F.lit(float(b)),
-              "max": c <= F.lit(float(b)), "emax": c < F.lit(float(b))}[op]
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_multiple_of(self, k: Any, t: Target) -> Column:
-        if not is_number(k) or float(k) <= 0:
-            raise _GateUnsupported("multipleOf")
-        if not _is_numeric(t.dtype) and t.dtype is not None:
-            return F.lit(True)
-        if t.dtype is None:
-            raise _GateUnsupported("multipleOf on untyped")
-        k = float(k)
-        c = t.col.cast("double")
-        if not _is_float(t.dtype) and k == math.floor(k):
-            ok = (t.col % F.lit(int(k))) == 0
-        elif k == math.floor(k):
-            whole = c == F.floor(c)
-            rem = (c / F.lit(k)) % F.lit(1.0)
-            float_ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
-                        & (rem < F.lit(1.0 - EPSILON)))
-            ok = F.when(whole, (c % F.lit(k)) == 0).otherwise(float_ok)
-        else:
-            rem = (c / F.lit(k)) % F.lit(1.0)
-            ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
-                  & (rem < F.lit(1.0 - EPSILON)))
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_length(self, n: Any, is_max: bool, t: Target) -> Column:
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return F.lit(True)
-        if t.dtype is None:
-            raise _GateUnsupported("length on untyped")
-        ln = F.length(t.col)
-        ok = ln <= F.lit(int(n)) if is_max else ln >= F.lit(int(n))
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_pattern(self, p: Any, t: Target) -> Column:
-        if not isinstance(p, str):
-            raise _GateUnsupported("pattern")
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
-            return F.lit(True)
-        if t.dtype is None:
-            raise _GateUnsupported("pattern on untyped")
-        ok = t.col.rlike(unicode_pattern(p))
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_required(self, keys: Any, t: Target) -> Column:
-        if not isinstance(keys, list):
-            raise _GateUnsupported("required")
-        if isinstance(t.dtype, T.StructType):
-            fields = {f.name for f in t.dtype.fields}
-            parts = []
-            for k in keys:
-                present = (t.col.getField(k).isNotNull() if k in fields
-                           else F.lit(False))
-                parts.append(~(t.col.isNotNull() & ~present))
-            return self._all(parts)
-        if isinstance(t.dtype, T.MapType):
-            parts = []
-            for k in keys:
-                present = F.map_contains_key(t.col, F.lit(k))
-                parts.append(~(t.col.isNotNull() & ~present))
-            return self._all(parts)
-        if t.dtype is None:
-            raise _GateUnsupported("required on untyped")
-        return F.lit(True)
-
-    def _ok_properties(self, s: dict, t: Target, depth: int) -> Column:
-        props = s.get("properties", {})
-        additional = s.get("additionalProperties")
-        if s.get("patternProperties"):
-            raise _GateUnsupported("patternProperties")
-        if isinstance(t.dtype, T.StructType):
-            parts = []
-            for f_ in t.dtype.fields:
-                key = f_.name
-                child = t.child(t.col.getField(key), f_.dataType,
-                                F.lit(""))
-                present = t.col.isNotNull() & child.col.isNotNull()
-                if key in props:
-                    parts.append(
-                        ~present
-                        | self.ok_node(props[key], child, depth + 1))
-                elif additional is False:
-                    parts.append(~present)
-                elif isinstance(additional, dict):
-                    parts.append(
-                        ~present
-                        | self.ok_node(additional, child, depth + 1))
-            return self._all(parts)
-        if isinstance(t.dtype, T.MapType):
-            raise _GateUnsupported("properties on map")
-        if t.dtype is None:
-            raise _GateUnsupported("properties on untyped")
-        return F.lit(True)
-
-    def _ok_props_count(self, n: Any, is_max: bool, t: Target) -> Column:
-        if isinstance(t.dtype, T.StructType):
-            present = [F.when(t.col.getField(f.name).isNotNull(), 1)
-                       .otherwise(0) for f in t.dtype.fields]
-            total = sum(present[1:], present[0]) if present else F.lit(0)
-        elif isinstance(t.dtype, T.MapType):
-            total = F.size(F.map_keys(t.col))
-        elif t.dtype is None:
-            raise _GateUnsupported("props count on untyped")
-        else:
-            return F.lit(True)
-        ok = total <= F.lit(int(n)) if is_max else total >= F.lit(int(n))
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_items(self, s: dict, t: Target, depth: int) -> Column:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise _GateUnsupported("items on untyped")
-            return F.lit(True)
-        items = s.get("items")
-        if s.get("additionalItems") is not None or isinstance(items, list):
-            raise _GateUnsupported("tuple items")
-        if isinstance(items, (dict, bool)):
-            etype = t.dtype.elementType
-
-            def elem_ok(x: Column) -> Column:
-                child = Target(x, etype, F.lit(""))
-                return self.ok_node(items, child, depth + 1)
-
-            return ~t.col.isNotNull() | F.forall(t.col, elem_ok)
-        return F.lit(True)
-
-    def _ok_items_count(self, n: Any, is_max: bool, t: Target) -> Column:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise _GateUnsupported("items count on untyped")
-            return F.lit(True)
-        sz = F.size(t.col)
-        ok = sz <= F.lit(int(n)) if is_max else sz >= F.lit(int(n))
-        return ~(t.col.isNotNull() & ~ok)
-
-    def _ok_unique(self, t: Target) -> Column:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise _GateUnsupported("uniqueItems on untyped")
-            return F.lit(True)
-        ok = F.size(F.array_distinct(t.col)) == F.size(t.col)
-        return ~(t.col.isNotNull() & ~ok)
-
-    @staticmethod
-    def _all(parts: list[Column]) -> Column:
-        if not parts:
-            return F.lit(True)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out & p
-        return out
+def compile_checked(schema: Any, target: Target,
+                    version: int = DRAFT7) -> Checked:
+    """The :class:`Checked` views of ``schema`` at ``target``."""
+    return ColumnCompiler(version=version,
+                          root_schema=schema).compile(schema, target)
 
 
 def compile_ruleset(schema: Any, spark_schema: T.StructType,
@@ -1712,28 +1523,11 @@ def compile_ruleset(schema: Any, spark_schema: T.StructType,
 
     The document is the whole row (as valico validates a whole JSON
     object). Returns the violations-array Column; ``F.size(...) == 0`` is
-    the verdict. GetStructField(CreateStruct(...)) collapses in Catalyst's
-    SimplifyExtractValueOps, so column pruning/pushdown still reach the
-    scan.
-
-    When every keyword in the ruleset is covered by the
-    :class:`_GateCompiler` mirror, the expression is wrapped in a
-    validity GATE: a pure-boolean fast path decides emptiness first and
-    only violating rows evaluate the allocating violations tree —
-    ``when(ok, empty).otherwise(full)``. The gate is sound by
-    construction (it negates the identical condition trees), so the
-    emitted violations are byte-identical with or without it; any
-    construct outside the mirror simply disables the gate.
+    the verdict. The tree sits behind the root's exact gate ``ok``, read
+    from the same conditions as the tree: ``when(ok, empty)
+    .otherwise(violations)``, so valid rows never build the allocating
+    tree and the emitted violations are byte-identical with or without
+    the gate. A ruleset with a keyword that has no exact boolean form
+    (see :class:`Checked`) gets the ungated tree.
     """
-    root_col = F.struct(*[F.col(f.name).alias(f.name)
-                          for f in spark_schema.fields])
-    target = Target(col=root_col, dtype=spark_schema, path=F.lit(""))
-    comp = ColumnCompiler(version=version, root_schema=schema)
-    viol = comp.compile(schema, target)
-    try:
-        ok = _GateCompiler(comp).ok_node(schema, target, 0)
-    except Exception:
-        # any construct (or resolution failure) outside the mirror:
-        # emit the ungated expression — never a wrong gate
-        return viol
-    return F.when(ok, empty_violations()).otherwise(viol)
+    return compile_checked(schema, row_target(spark_schema), version).gated()

@@ -80,8 +80,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from valico_spark.compiler.columns import (
-    ColumnCompiler, UnsupportedRule, empty_violations, inline_id_with_refs,
-    make_violation, _maybe, _states_json, unicode_pattern,
+    ColumnCompiler, UnsupportedRule, empty_violations, gated,
+    inline_id_with_refs, make_violation, _maybe, _states_json,
+    unicode_pattern,
 )
 from valico_spark.compiler.pyvalidator import (
     DRAFT2019, DRAFT7, EPSILON, PRIMITIVE_TYPES, is_number,
@@ -258,14 +259,6 @@ def _valid(viol: Optional[Column]) -> Column:
     if viol is None:
         return F.lit(True)
     return F.size(viol) == 0
-
-
-def gated(violations: Column, ok: Optional[Column]) -> Column:
-    """The violations array with the gate as its fast path: rows whose
-    ``ok`` holds never build the tree."""
-    if ok is None:
-        return violations
-    return F.when(ok, empty_violations()).otherwise(violations)
 
 
 # -- let-binding --------------------------------------------------------------

@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from valico_spark.compiler.columns import (
-    UnsupportedRule, VIOLATION_DDL, compile_ruleset,
+    Target, UnsupportedRule, VIOLATION_DDL, compile_checked, compile_ruleset,
+    row_target,
 )
 from valico_spark.compiler.pyvalidator import DRAFT7, SchemaError, Scope
 from valico_spark.operators.util import (drop_zip_importers,
@@ -226,13 +227,13 @@ def _validate_json_arrow(df: DataFrame, json_col: str, ruleset: Any,
 
 def validation_counts(df: DataFrame, ruleset: Any,
                       version: int = DRAFT7) -> DataFrame:
-    """Verdict-only fast path: appends ``valid`` + ``n_violations`` via
-    the count compiler (pure integer arithmetic — no violation-struct
-    construction; ~2x cheaper scans when the rows aren't needed)."""
-    from valico_spark.compiler.counts import compile_violation_count
-
-    cnt = compile_violation_count(ruleset, df.schema, version=version)
-    out = df.withColumn("n_violations", cnt)
+    """Verdict-only path: appends ``valid`` + ``n_violations``, read
+    from the count view of the typed compile (``compiler.columns``):
+    integer arithmetic over the same conditions as the violations tree,
+    with no violation-struct construction, so a row pays for its
+    violation rows only where a keyword has no count of its own."""
+    cnt = compile_checked(ruleset, row_target(df.schema), version).count()
+    out = df.withColumn("n_violations", cnt.cast("long"))
     return out.withColumn("valid", F.col("n_violations") == 0)
 
 
@@ -369,14 +370,12 @@ def custom_check(df: DataFrame, fn, out_col: str = "custom_violations",
 
 def validate_column(df: DataFrame, column: str, ruleset: Any,
                     version: int = DRAFT7) -> DataFrame:
-    """Validate a single (possibly nested) column instead of the row."""
-    from valico_spark.compiler.columns import ColumnCompiler, Target
-
-    dtype = df.schema[column].dataType
-    target = Target(col=F.col(column), dtype=dtype, path=F.lit(""))
-    viol = ColumnCompiler(version=version, root_schema=ruleset
-                          ).compile(ruleset, target)
-    out = df.withColumn("violations", viol)
+    """Validate a single (possibly nested) column instead of the row,
+    with the same gate as ``compile_ruleset``."""
+    target = Target(col=F.col(column), dtype=df.schema[column].dataType,
+                    path=F.lit(""))
+    out = df.withColumn("violations",
+                        compile_checked(ruleset, target, version).gated())
     return out.withColumn("valid", F.size("violations") == 0)
 
 
