@@ -127,7 +127,8 @@ def test_count_compiler_fuzz(spark):
 
     rnd = random.Random(99)
     rows = [gen_row(rnd, i) for i in range(80)]
-    df = spark.createDataFrame(rows, ROW_TYPE).drop("id")
+    # materialized once, so each ruleset's job below runs no Python stage
+    df = spark.createDataFrame(rows, ROW_TYPE).drop("id").localCheckpoint()
     checked = 0
     for _ in range(25):
         ruleset = gen_ruleset(rnd)

@@ -149,7 +149,8 @@ N_ROWS = 120
 def test_fuzz_column_vs_oracle(spark, seed):
     rnd = random.Random(seed)
     rows = [gen_row(rnd, i) for i in range(N_ROWS)]
-    df = spark.createDataFrame(rows, ROW_TYPE)
+    # materialized once, so each ruleset's job below runs no Python stage
+    df = spark.createDataFrame(rows, ROW_TYPE).localCheckpoint()
     json_rows = {r["id"]: r["doc"] for r in df.select(
         "id", F.to_json(F.struct(*[c for c in df.columns if c != "id"]))
         .alias("doc")).collect()}

@@ -126,7 +126,8 @@ def test_suite_variant_column_path(spark, version):
         by_schema.setdefault((fname, gdesc, sj), []).append(
             (json.dumps(data), valid))
 
-    compiled, fallback, bad = 0, 0, []
+    fallback, bad = 0, []
+    plans, rows = [], []
     for (fname, gdesc, sj), tests in by_schema.items():
         schema = json.loads(sj)
         # groups whose schema refs the meta-schema need the scope
@@ -141,11 +142,18 @@ def test_suite_variant_column_path(spark, version):
         if comp._marker_sites > 1:
             fallback += 1
             continue
-        compiled += 1
-        df = spark.createDataFrame(list(tests), "j string, expected boolean")
-        got = df.select("j", "expected",
-                        (F.size(viol) == 0).alias("got"),
-                        has_walker_marker(viol).alias("marked")).collect()
+        rows += [(len(plans), d, e) for d, e in tests]
+        plans.append((fname, gdesc, schema, viol))
+    compiled = len(plans)
+    # every group's documents in one frame, materialized once: each
+    # group's plan then runs over its slice with no Python stage (a frame
+    # built from a Python list re-runs one on every action)
+    docs = spark.createDataFrame(
+        rows, "g int, j string, expected boolean").localCheckpoint()
+    for g, (fname, gdesc, schema, viol) in enumerate(plans):
+        got = docs.where(F.col("g") == g).select(
+            "j", "expected", (F.size(viol) == 0).alias("got"),
+            has_walker_marker(viol).alias("marked")).collect()
         for r in got:
             if r["marked"]:
                 sc = Scope(version=ver_num)

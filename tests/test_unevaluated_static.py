@@ -100,7 +100,8 @@ def gen_row(rnd, rid):
 def test_unevaluated_static_vs_walker(spark, seed):
     rnd = random.Random(seed)
     rows = [gen_row(rnd, i) for i in range(100)]
-    df = spark.createDataFrame(rows, ROW_TYPE)
+    # materialized once, so each ruleset's job below runs no Python stage
+    df = spark.createDataFrame(rows, ROW_TYPE).localCheckpoint()
     data_schema = T.StructType([f for f in ROW_TYPE.fields
                                 if f.name != "id"])
     json_rows = {r["id"]: r["doc"] for r in df.select(
@@ -206,7 +207,8 @@ def test_unevaluated_items_static_vs_walker(spark, seed):
     rows = [(i, rnd.choice(
         [None, [], [1], [1, 2], [0, 5, 2], [4, 4, 4, 4], [2, 3, 1, 0, 5]]))
         for i in range(60)]
-    df = spark.createDataFrame(rows, ARR_TYPE)
+    # materialized once, so each ruleset's job below runs no Python stage
+    df = spark.createDataFrame(rows, ARR_TYPE).localCheckpoint()
     data_schema = T.StructType([ARR_TYPE.fields[1]])
     json_rows = {r["id"]: r["doc"] for r in df.select(
         "id", F.to_json(F.struct("arr")).alias("doc")).collect()}
@@ -254,7 +256,8 @@ def test_unevaluated_open_map_vs_walker(spark, seed):
 
     rnd = random.Random(seed)
     rows = [gen_map_row(rnd, i) for i in range(80)]
-    df = spark.createDataFrame(rows, MAP_TYPE)
+    # materialized once, so each ruleset's job below runs no Python stage
+    df = spark.createDataFrame(rows, MAP_TYPE).localCheckpoint()
     json_rows = {r["id"]: r["doc"] for r in df.select(
         "id", F.to_json(F.col("m")).alias("doc")).collect()}
 
