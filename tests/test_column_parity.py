@@ -168,3 +168,49 @@ def test_gate_coverage_pinned(spark, docs_df, media_df):
     plan = validated._jdf.queryExecution().optimizedPlan().toString()
     # the gated tree: CASE WHEN <ok> THEN [] ELSE <violations> END
     assert "CASE WHEN" in plan and "THEN [] ELSE" in plan, plan[:2000]
+
+
+def test_tuple_items_gate(spark):
+    """Tuple ``items`` over arrays shorter than, as long as and longer
+    than the tuple: the gate reads each position outside the tree's size
+    guard, so it must not fail on a short array, and both typed entry
+    points must agree with the walker."""
+    from pyspark.sql import types as T
+
+    from valico_spark.compiler.columns import (
+        compile_checked, compile_ruleset, row_target,
+    )
+    from valico_spark.operators.validate import validate_column
+
+    arrays = [[], [1], [0], [1, 2], [0, 2], [1, 2, 3], [0, 9, 2, 7], None]
+    df = spark.createDataFrame(
+        [(i, a) for i, a in enumerate(arrays)],
+        T.StructType([T.StructField("id", T.IntegerType()),
+                      T.StructField("a", T.ArrayType(T.LongType()))])
+    ).localCheckpoint()
+    tuple_ = [{"minimum": 1}, {"minimum": 1}]
+    for items in ({"items": tuple_},
+                  {"items": tuple_, "additionalItems": False},
+                  {"items": tuple_, "additionalItems": {"maximum": 5}}):
+        ruleset = {"properties": {"a": items}}
+        assert compile_checked(ruleset, row_target(df.schema)).ok() \
+            is not None
+        got_row = df.select(
+            "id", compile_ruleset(ruleset, df.schema).alias("v")).collect()
+        got_col = validate_column(df, "a", items).select(
+            "id", "violations", "valid").collect()
+        scope = Scope()
+        row_sid, col_sid = scope.compile(ruleset), scope.compile(items)
+        for r, c in zip(sorted(got_row), sorted(got_col)):
+            arr = arrays[r["id"]]
+            doc = {} if arr is None else {"a": arr}
+            exp_row = sorted((e.code, e.path) for e in
+                             scope.validate(row_sid, doc).errors)
+            exp_col = sorted((e.code, e.path) for e in
+                             scope.validate(col_sid, arr).errors)
+            where = f"{json.dumps(items)} a={arr}"
+            assert sorted((v["code"], v["path"]) for v in r["v"]) \
+                == exp_row, where
+            assert sorted((v["code"], v["path"])
+                          for v in c["violations"]) == exp_col, where
+            assert c["valid"] is (not exp_col), where

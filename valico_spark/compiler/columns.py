@@ -11,15 +11,17 @@ row loop); higher-order functions (``transform``/``filter``/``forall``/
 
 One condition, three views. Every keyword emitter returns a
 :class:`Checked`: a leaf writes its condition once, in ``_check(bad,
-violation)``, and that one column yields the violations array
+code, path)``, and that one column yields the violations array
 (``_maybe``), an exact gate ``ok`` (``~bad``: holds exactly when the
 part emits nothing) and a violation count (``when(bad, 1)``). Composites
 combine the views — concat / AND / sum over a node's parts, ``~present |
 ok`` and ``when(present, count)`` under struct properties, ``forall`` /
 ``aggregate`` over array items, and the combinators' own condition over
-their branches' validity. A keyword with
-no exact boolean form (open maps, ``unevaluated*``, ...) has no gate and
-counts ``size(violations)``; its node then has no gate either.
+their branches' validity. A subschema's validity inside another keyword
+(``contains``, evaluated sets) is its gate where exact, else a zero
+count. A keyword with no exact boolean form (open maps,
+``unevaluated*``, ...) has no gate and counts ``size(violations)``; its
+node then has no gate either.
 ``compile_ruleset`` wraps the tree in the root's gate
 (``when(ok, []).otherwise(violations)``), so valid rows never build the
 allocating tree, and ``validation_counts`` reads the count view.
@@ -199,16 +201,24 @@ def _one_if(cond: Column) -> Column:
     return F.when(cond, 1).otherwise(0)
 
 
-def _check(bad: Column, violation: Column) -> Checked:
-    """A leaf: one violation when ``bad`` is TRUE. The only place a leaf
-    writes its condition; the gate and the count read the same column.
+def _check(bad: Column, code: str, path: Column,
+           detail: Optional[str] = None, at: str = "") -> Checked:
+    """A leaf: one ``code`` violation at ``path`` + ``at`` when ``bad`` is
+    TRUE. The only place a leaf writes its condition; the gate and the
+    count read the same column, and only the violations view builds the
+    violation struct (the count view of a ruleset then costs a few JVM
+    calls per leaf, not a struct's worth).
     ``bad`` is never NULL on typed columns: each leaf ANDs its condition
     with the value's ``isNotNull``, and the conditions on a present value
     are NULL-free. So ``~bad`` is exact, and Catalyst folds it into the
     parent's ``isnull(value) OR`` guard, which a ``coalesce`` would
     block."""
-    return Checked(lambda: _maybe(bad, violation), lambda: ~bad,
-                   lambda: _one_if(bad))
+    def viol() -> Column:
+        where = F.concat(path, F.lit(at)) if at else path
+        return _maybe(bad, make_violation(
+            code, where, None if detail is None else F.lit(detail)))
+
+    return Checked(viol, lambda: ~bad, lambda: _one_if(bad))
 
 
 def _exact(parts: list[Checked]) -> Optional[list[Column]]:
@@ -476,8 +486,11 @@ class ColumnCompiler:
                      if canon in handlers])
 
     def _valid(self, schema: Any, target: Target, depth: int) -> Column:
-        """``schema`` emits no violations at ``target``."""
-        return F.size(self._node(schema, target, depth).viol()) == 0
+        """``schema`` emits no violations at ``target``: its gate where
+        that is exact, else a zero count."""
+        node = self._node(schema, target, depth)
+        ok = node.ok()
+        return node.count() == 0 if ok is None else ok
 
     # -- unevaluatedProperties (2019-09) ----------------------------------
     # SURVEY.md §7 hard-part 1: valico's `evaluated` set is dynamic —
@@ -899,9 +912,9 @@ class ColumnCompiler:
             if x not in PRIMITIVE_TYPES:
                 raise UnsupportedRule(f"unknown type {x!r}")
         if isinstance(ty, str):
-            detail = F.lit(f"The value must be {ty}")
+            detail = f"The value must be {ty}"
         else:
-            detail = F.lit("The value must be any of: " + ", ".join(types))
+            detail = "The value must be any of: " + ", ".join(types)
         possible = spark_json_types(t.dtype)
         if possible is None:
             raise UnsupportedRule("dynamic type check on untyped target")
@@ -918,7 +931,7 @@ class ColumnCompiler:
             bad = t.col.isNotNull() & ~(t.col == F.floor(t.col))
         else:
             return None  # statically satisfied
-        return _check(bad, make_violation("wrong_type", t.path, detail))
+        return _check(bad, "wrong_type", t.path, detail)
     def _match_value(self, value: Any, col: Column, dtype,
                      top_level: bool) -> Column | None:
         """Boolean column: does ``col`` (of ``dtype``) equal ``value``
@@ -1008,7 +1021,7 @@ class ColumnCompiler:
             if m is not None:
                 ok = m if ok is None else (ok | m)
         bad = t.col.isNotNull() if ok is None else t.col.isNotNull() & ~ok
-        return _check(bad, make_violation(code, t.path))
+        return _check(bad, code, t.path)
 
     def _bound(self, m: Any, op: str, t: Target) -> Optional[Checked]:
         if not is_number(m):
@@ -1019,7 +1032,7 @@ class ColumnCompiler:
         ok = {"min": c >= F.lit(float(m)), "emin": c > F.lit(float(m)),
               "max": c <= F.lit(float(m)), "emax": c < F.lit(float(m))}[op]
         code = "maximum" if op in ("max", "emax") else "minimum"
-        return _check(t.col.isNotNull() & ~ok, make_violation(code, t.path))
+        return _check(t.col.isNotNull() & ~ok, code, t.path)
 
     def _multiple_of(self, k: Any, t: Target) -> Optional[Checked]:
         if not is_number(k) or float(k) <= 0:
@@ -1042,8 +1055,7 @@ class ColumnCompiler:
             rem = (c / F.lit(k)) % F.lit(1.0)
             ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
                   & (rem < F.lit(1.0 - EPSILON)))
-        return _check(t.col.isNotNull() & ~ok,
-                      make_violation("multiple_of", t.path))
+        return _check(t.col.isNotNull() & ~ok, "multiple_of", t.path)
 
     def _length(self, n: Any, is_max: bool, t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
@@ -1053,8 +1065,8 @@ class ColumnCompiler:
         # supplementary-plane characters.
         ln = F.length(t.col)
         ok = ln <= F.lit(int(n)) if is_max else ln >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok, make_violation(
-            "max_length" if is_max else "min_length", t.path))
+        return _check(t.col.isNotNull() & ~ok,
+                      "max_length" if is_max else "min_length", t.path)
 
     def _pattern(self, p: Any, t: Target) -> Optional[Checked]:
         if not isinstance(p, str):
@@ -1062,8 +1074,7 @@ class ColumnCompiler:
         if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
             return None
         ok = t.col.rlike(unicode_pattern(p))  # unanchored, like find()
-        return _check(t.col.isNotNull() & ~ok,
-                      make_violation("pattern", t.path))
+        return _check(t.col.isNotNull() & ~ok, "pattern", t.path)
 
     # regex approximations for the JVM-side format fast path; semantics
     # pinned against pyvalidator in tests (exotic formats → fallback).
@@ -1147,8 +1158,8 @@ class ColumnCompiler:
         ok = self.format_ok_expr(name, t.col)
         if ok is None:
             return None
-        return _check(t.col.isNotNull() & ~ok, make_violation(
-            "format", t.path, F.lit(self._FORMAT_DETAILS[name])))
+        return _check(t.col.isNotNull() & ~ok, "format", t.path,
+                      self._FORMAT_DETAILS[name])
 
     def _required(self, keys: Any, t: Target) -> Optional[Checked]:
         if not isinstance(keys, list):
@@ -1158,8 +1169,7 @@ class ColumnCompiler:
                 raise UnsupportedRule("required on untyped target")
             return None  # non-object target → skip
         return _all([_check(t.col.isNotNull() & ~_has_key(t, k),
-                            make_violation("required",
-                                           F.concat(t.path, F.lit("/" + k))))
+                            "required", t.path, at="/" + k)
                      for k in keys])
 
     def _properties(self, s: dict, t: Target,
@@ -1177,6 +1187,9 @@ class ColumnCompiler:
             parts = []
             for f_ in t.dtype.fields:
                 key = f_.name
+                if key not in props and additional is not False \
+                        and not isinstance(additional, dict):
+                    continue
                 child = t.child(t.col.getField(key), f_.dataType,
                                 F.concat(t.path, F.lit("/" + key)))
                 present = t.col.isNotNull() & child.col.isNotNull()
@@ -1189,10 +1202,9 @@ class ColumnCompiler:
                     parts.append(_when(
                         present, self._node(props[key], child, depth + 1)))
                 elif additional is False:
-                    parts.append(_check(present, make_violation(
-                        "properties", t.path,
-                        F.lit(f"Additional property '{key}'"
-                              " is not allowed"))))
+                    parts.append(_check(
+                        present, "properties", t.path,
+                        f"Additional property '{key}' is not allowed"))
                 elif isinstance(additional, dict):
                     parts.append(_when(
                         present, self._node(additional, child, depth + 1)))
@@ -1267,10 +1279,8 @@ class ColumnCompiler:
                 for e in st.errors:
                     parts.append(_check(
                         t.col.isNotNull() & t.col.getField(f_.name).isNotNull(),
-                        make_violation(
-                            e.code,
-                            F.concat(t.path, F.lit(f"/[{f_.name}]")),
-                            F.lit(e.detail) if e.detail else None)))
+                        e.code, t.path, e.detail or None,
+                        at=f"/[{f_.name}]"))
             return _all(parts)
         if isinstance(t.dtype, T.MapType):
             def emit(k):
@@ -1299,8 +1309,9 @@ class ColumnCompiler:
         else:
             return None
         ok = total <= F.lit(int(n)) if is_max else total >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok, make_violation(
-            "max_properties" if is_max else "min_properties", t.path))
+        return _check(t.col.isNotNull() & ~ok,
+                      "max_properties" if is_max else "min_properties",
+                      t.path)
 
     def _dependencies(self, s: dict, t: Target,
                       depth: int) -> Optional[Checked]:
@@ -1327,9 +1338,8 @@ class ColumnCompiler:
             if kind == "props":
                 for k2 in extra:
                     parts.append(_check(
-                        trigger & ~_has_key(t, k2),
-                        make_violation("required",
-                                       F.concat(t.path, F.lit("/" + k2)))))
+                        trigger & ~_has_key(t, k2), "required", t.path,
+                        at="/" + k2))
             else:
                 parts.append(_when(trigger,
                                    self._node(extra, t, depth + 1)))
@@ -1355,14 +1365,15 @@ class ColumnCompiler:
             return None
         parts = []
         for idx, sub in enumerate(items):
-            child = Target(F.element_at(t.col, idx + 1), etype,
+            # try_: the gate reads the position outside the size guard
+            child = Target(F.try_element_at(t.col, F.lit(idx + 1)), etype,
                            F.concat(t.path, F.lit(f"/{idx}")))
             parts.append(_when(present & (F.size(t.col) > idx),
                                self._node(sub, child, depth + 1)))
         extra = present & (F.size(t.col) > len(items))
         if additional is False:
-            parts.append(_check(extra, make_violation(
-                "items", t.path, F.lit("Additional items are not allowed"))))
+            parts.append(_check(extra, "items", t.path,
+                                "Additional items are not allowed"))
         elif isinstance(additional, dict):
             def per_extra(x: Column, i: Column) -> Checked:
                 child = Target(
@@ -1383,8 +1394,8 @@ class ColumnCompiler:
             return None
         sz = F.size(t.col)
         ok = sz <= F.lit(int(n)) if is_max else sz >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok, make_violation(
-            "max_items" if is_max else "min_items", t.path))
+        return _check(t.col.isNotNull() & ~ok,
+                      "max_items" if is_max else "min_items", t.path)
 
     def _unique_items(self, t: Target) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
@@ -1394,8 +1405,7 @@ class ColumnCompiler:
         # O(n) array_distinct vs the reference's O(n²) loop
         # (validators/unique_items.rs:18 'TODO quicker algorithm')
         ok = F.size(F.array_distinct(t.col)) == F.size(t.col)
-        return _check(t.col.isNotNull() & ~ok,
-                      make_violation("unique_items", t.path))
+        return _check(t.col.isNotNull() & ~ok, "unique_items", t.path)
 
     def _contains(self, s: dict, t: Target, depth: int) -> Optional[Checked]:
         if not isinstance(t.dtype, T.ArrayType):
@@ -1414,20 +1424,20 @@ class ColumnCompiler:
         if min_c is None and max_c is None:
             # F.exists short-circuits (contains.rs:38-40 parity, but free)
             return _check(present & ~F.exists(t.col, ok_elem),
-                          make_violation("contains", t.path))
+                          "contains", t.path)
         matched = F.size(F.filter(t.col, ok_elem))
         parts = []
         if min_c != 0:
             parts.append(_check(present & (matched == 0),
-                                make_violation("contains", t.path)))
+                                "contains", t.path))
         if max_c is not None:
             parts.append(_check(
                 present & (matched > F.lit(int(max_c))),
-                make_violation("min_contains/max_contains", t.path)))
+                "min_contains/max_contains", t.path))
         if min_c is not None:
             parts.append(_check(
                 present & (matched < F.lit(int(min_c))),
-                make_violation("min_contains/max_contains", t.path)))
+                "min_contains/max_contains", t.path))
         return _all(parts)
 
     def _all_of(self, subs: list, t: Target, depth: int) -> Checked:
@@ -1476,18 +1486,15 @@ class ColumnCompiler:
                 r"|[A-Za-z0-9+/]{3}=)?$")
             utf8_ok = F.is_valid_utf8(F.unbase64(t.col))
             parts.append(_check(t.col.isNotNull() & ~b64_ok,
-                                make_violation("format", t.path,
-                                               F.lit("Invalid byte"))))
+                                "format", t.path, "Invalid byte"))
             parts.append(_check(t.col.isNotNull() & b64_ok & ~utf8_ok,
-                                make_violation("format", t.path,
-                                               F.lit("Invalid UTF-8"))))
+                                "format", t.path, "Invalid UTF-8"))
             decodable = b64_ok & utf8_ok
             val = F.when(decodable, F.decode(F.unbase64(t.col), "UTF-8"))
         if mt == "application/json":
             parsed = F.try_parse_json(val)
             bad = t.col.isNotNull() & decodable & parsed.isNull()
-            parts.append(_check(bad, make_violation("format", t.path,
-                                                    F.lit(""))))
+            parts.append(_check(bad, "format", t.path, ""))
         return _all(parts)
 
 
