@@ -125,44 +125,27 @@ def test_corpus_variant_column_path(spark, version):
             continue
         by_schema.setdefault((grp, schema_json), []).append(
             (data_json, expected))
-    from valico_spark.compiler.variantcolumns import has_walker_marker
-
     plans, rows = [], []
     for (grp, schema_json), tests in by_schema.items():
         try:
-            viol, comp = compile_json_ruleset(
-                json.loads(schema_json), F.col("j"), version=ver_num,
-                residual_marker=True)
+            viol = compile_json_ruleset(json.loads(schema_json), F.col("j"),
+                                        version=ver_num)
         except UnsupportedRule:
             fallback.append(grp)
             continue
-        if comp._marker_sites > 1:
-            # statically marker-dominated (deep recursion): walker group
-            fallback.append(grp)
-            continue
         rows += [(len(plans), d, e) for d, e in tests]
-        plans.append((grp, schema_json, viol))
+        plans.append((grp, viol))
     compiled = len(plans)
     # every group's documents in one frame, materialized once: each
     # group's plan then runs over its slice with no Python stage (a frame
     # built from a Python list re-runs one on every action)
     docs = spark.createDataFrame(
         rows, "g int, j string, expected boolean").localCheckpoint()
-    for g, (grp, schema_json, viol) in enumerate(plans):
+    for g, (grp, viol) in enumerate(plans):
         got = docs.where(F.col("g") == g).select(
-            "j", "expected", (F.size(viol) == 0).alias("got"),
-            has_walker_marker(viol).alias("marked")).collect()
-        for r in got:
-            if r["marked"]:
-                # the serving path reroutes marked rows to the walker —
-                # mirror it: the walker verdict is the group's answer
-                sc = Scope(version=ver_num)
-                sid = sc.compile(json.loads(schema_json))
-                wv = sc.validate(sid, json.loads(r["j"])).is_valid()
-                if wv != r["expected"]:
-                    bad.append((grp, r["j"], r["expected"], wv))
-            elif r["expected"] != r["got"]:
-                bad.append((grp, r["j"], r["expected"], r["got"]))
+            "j", "expected", (F.size(viol) == 0).alias("got")).collect()
+        bad += [(grp, r["j"], r["expected"], r["got"])
+                for r in got if r["expected"] != r["got"]]
     assert not bad, bad
     # the variant plan must cover the definite majority of the corpus —
     # the walker is a fallback, not the serving path. (draft2019's corpus

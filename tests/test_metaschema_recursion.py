@@ -1,23 +1,19 @@
-"""Meta-schema self-validation + recursive-$ref unroll-with-residual.
+"""Meta-schema self-validation + recursive-$ref on dynamic JSON.
 
 Mirrors the reference's pre-suite ritual (tests/schema/mod.rs:39-50):
 compile the draft core meta-schema with ban_unknown, then
 schema-validates-schema. Also exercises both recursion stories of
 ``validate_json_column``: a recursive ruleset the walker's gate covers
-runs exactly on the gated walker stage (no unroll), and one outside the
-gate unrolls on the VARIANT plan, where documents deeper than the unroll
-carry a NEEDS_WALKER marker and are rerouted to the walker stage —
-verdict parity must hold either way on a mixed-depth table."""
+runs exactly on the gated walker stage, and one outside the gate whose
+recursion the VARIANT plan cannot unroll runs on the ungated walker
+stage — verdict parity must hold either way on a mixed-depth table."""
 
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
+from test_variant_parity import assert_walker_stage_only
 from valico_spark.compiler.pyvalidator import DRAFT7, Scope
-from valico_spark.compiler.variantcolumns import (
-    NEEDS_WALKER, VariantCompiler, VTarget,
-)
 from valico_spark.operators.validate import validate_json_column
 from valico_spark.sources.metaschema import DRAFT7_META
 
@@ -108,35 +104,30 @@ class TestLinearRecursionUnroll:
             assert got[i] == exp, (i, d[:80], got[i], exp)
 
     def test_no_marker_leaks_to_output(self, spark):
-        docs = [_chain(30), _chain(2)]
+        """Every violation code on the output is one the walker emits
+        for the same document."""
+        docs = [_chain(30, bad_at=25), _chain(2)]
         df = spark.createDataFrame([(d,) for d in docs], "j string")
         out = validate_json_column(df, "j", LINKED_LIST).collect()
+        scope = Scope(version=DRAFT7)
+        sid = scope.compile(LINKED_LIST)
         for r in out:
-            assert all(v["code"] != NEEDS_WALKER for v in r["violations"])
-
-    def test_shallow_docs_stay_on_column_plan(self, spark):
-        """The fast branch exists: compiling with residual_marker reports
-        used_marker, and a shallow doc evaluates clean of markers."""
-        df = spark.createDataFrame([(_chain(2),)], "j string")
-        comp = VariantCompiler(version=DRAFT7, root_schema=LINKED_LIST,
-                               residual_marker=True)
-        viol = comp.compile(LINKED_LIST,
-                            VTarget(F.parse_json(F.col("j")), F.lit("")))
-        assert comp.used_marker
-        rows = df.select(viol.alias("v")).collect()
-        assert rows[0]["v"] == []
+            exp = scope.validate(sid, json.loads(r["j"])).errors
+            assert [v["code"] for v in r["violations"]] \
+                == [e.code for e in exp]
 
 
 #: LINKED_LIST outside the walker's gate: contentMediaType has no exact
 #: boolean form (and only constrains strings, so no object node changes),
-#: so ``auto`` takes the VARIANT plan with its unroll and walker residual
+#: and the VARIANT plan cannot unroll unbounded recursion, so ``auto``
+#: takes the ungated walker stage
 UNGATED_LINKED_LIST = dict(LINKED_LIST, contentMediaType="application/json")
 
 
 class TestVariantRecursionResidual:
     """``auto`` on a recursive ruleset outside the gate: the VARIANT plan
-    unrolls the recursion, and documents deeper than the cut reroute to
-    the walker stage."""
+    refuses recursion it cannot unroll, so the whole ruleset runs on the
+    ungated walker stage and no row takes a second plan."""
 
     @staticmethod
     def _walker(docs):
@@ -150,17 +141,14 @@ class TestVariantRecursionResidual:
                                             for e in st.errors))
         return out
 
-    @pytest.mark.parametrize("unroll_depth", [16, "auto"])
-    def test_mixed_depth_parity(self, spark, unroll_depth):
+    def test_mixed_depth_parity(self, spark):
         docs = [_chain(3), _chain(3, bad_at=2), _chain(12), _chain(19),
                 _chain(22, bad_at=21), _chain(30), _chain(30, bad_at=25),
                 _chain(1), '{"v": "x"}', '{}']
         df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                    "i long, j string")
-        v = validate_json_column(df, "j", UNGATED_LINKED_LIST,
-                                 unroll_depth=unroll_depth)
-        assert "parseJson" in \
-            v._jdf.queryExecution().executedPlan().toString()
+        v = validate_json_column(df, "j", UNGATED_LINKED_LIST)
+        assert_walker_stage_only(v)
         got = {r["i"]: (r["valid"], sorted((e["code"], e["path"])
                                            for e in r["violations"]))
                for r in v.collect()}
@@ -168,48 +156,17 @@ class TestVariantRecursionResidual:
 
 
 class TestAutoUnrollBudget:
-    """``unroll_depth="auto"``: size the recursion budget from the
-    corpus's measured nesting-depth histogram (operators.infer)."""
+    """Corpora deeper than any fixed unroll: the gated walker stage runs
+    recursion exactly, whatever the depth."""
 
     def test_auto_matches_walker_on_deep_corpus(self, spark):
-        # depths beyond the fixed default (16): auto must profile and
-        # recompile so the verdicts still match the walker exactly
         docs = [_chain(2), _chain(19), _chain(19, bad_at=18), _chain(22)]
         df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                    "i long, j string")
         got = {r["i"]: r["valid"] for r in
-               validate_json_column(df, "j", LINKED_LIST,
-                                    unroll_depth="auto").collect()}
+               validate_json_column(df, "j", LINKED_LIST).collect()}
         scope = Scope(version=DRAFT7)
         sid = scope.compile(LINKED_LIST)
         for i, d in enumerate(docs):
             assert got[i] == scope.validate(
                 sid, json.loads(d)).is_valid(), (i, got[i])
-
-    def test_auto_skips_profile_when_not_recursive(self, spark):
-        """A non-recursive ruleset must not pay the profiling scan: no
-        extra Spark job beyond the (lazy) plan build."""
-        df = spark.createDataFrame([('{"v": 1}',)], "j string")
-        tracker = spark.sparkContext.statusTracker()
-        before = len(tracker.getJobIdsForGroup(None))
-        validate_json_column(
-            df, "j", {"properties": {"v": {"type": "integer"}}},
-            unroll_depth="auto")  # plan only, no action
-        assert len(tracker.getJobIdsForGroup(None)) == before
-
-    def test_recursion_cut_flag_is_depth_specific(self, spark):
-        """recursion_cut reports only the depth cut, not other residual
-        markers (e.g. dynamic constructs), so auto never profiles when a
-        bigger budget couldn't help."""
-        comp = VariantCompiler(version=DRAFT7, root_schema=LINKED_LIST,
-                               residual_marker=True)
-        comp.compile(LINKED_LIST,
-                     VTarget(F.parse_json(F.col("j")), F.lit("")))
-        assert comp.recursion_cut
-        flat = {"type": "object",
-                "properties": {"v": {"type": "integer"}}}
-        comp2 = VariantCompiler(version=DRAFT7, root_schema=flat,
-                                residual_marker=True)
-        comp2.compile(flat,
-                      VTarget(F.parse_json(F.col("j")), F.lit("")))
-        assert not comp2.recursion_cut

@@ -539,19 +539,13 @@ class TestJsonDepthProfile:
         assert bad == [], bad
 
     def test_histogram_and_suggest(self, spark):
-        from valico_spark.operators.infer import (
-            json_depth_histogram, suggest_unroll_depth)
+        from valico_spark.operators.infer import json_depth_histogram
 
         docs = ['{"a":1}'] * 90 + ['{"a":[1]}'] * 9 + ['[[[[1]]]]'] * 1
         df = spark.createDataFrame([(d,) for d in docs], "j string")
         hist = {r.depth: r.n_docs
                 for r in json_depth_histogram(df, "j").collect()}
         assert hist == {1: 90, 2: 9, 4: 1}
-        # 0.99 coverage reached at depth 2; full coverage needs 4
-        assert suggest_unroll_depth(df, "j", coverage=0.99) == 2
-        assert suggest_unroll_depth(df, "j", coverage=1.0) == 4
-        # clamp to the compiler's hard cap
-        assert suggest_unroll_depth(df, "j", coverage=1.0, max_depth=3) == 3
 
     def test_plan_is_pure_codegen(self, spark):
         from valico_spark.operators.infer import json_max_depth

@@ -9,6 +9,7 @@ per-row type surprises, JSON null vs missing, mixed arrays)."""
 
 import json
 import random
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,7 +31,21 @@ def _oracle(docs, ruleset):
     return out
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def assert_walker_stage_only(validated) -> None:
+    """The frame is planned as one walker stage (one ``MapInArrow``) and
+    no VARIANT plan (no ``parseJson``)."""
+    plan = _executed_plan(validated)
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "parseJson" not in plan, plan
+
+
 def _check(spark, docs, ruleset, force=True):
+    """Verdicts and violation rows equal the walker's; returns the
+    validated frame, so callers can read its plan."""
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                "i long, j string")
     v = validate_json_column(df, "j", ruleset,
@@ -46,6 +61,7 @@ def _check(spark, docs, ruleset, force=True):
             f"verdict mismatch: {docs[row['i']]!r}\n got {got_errs}\n exp {exp_errs}"
         assert got_errs == exp_errs, \
             f"violations mismatch: {docs[row['i']]!r}\n got {got_errs}\n exp {exp_errs}"
+    return v
 
 
 MIXED_DOCS = [
@@ -179,6 +195,32 @@ class TestUnsupportedFallsBack:
         assert out[0]["valid"] is False
 
 
+class TestUnknownMode:
+    """A misspelt mode raises ValueError naming the accepted values
+    before any Spark job runs, instead of running the ungated walker."""
+
+    @staticmethod
+    def _assert_rejected_without_a_job(spark, call, accepted):
+        tracker = spark.sparkContext.statusTracker()
+        before = len(tracker.getJobIdsForGroup(None))
+        with pytest.raises(ValueError, match=re.escape(repr(accepted))):
+            call(spark.range(1).select(F.lit("{}").alias("j")))
+        assert len(tracker.getJobIdsForGroup(None)) == before
+
+    def test_validate_dataframe(self, spark):
+        from valico_spark.operators.validate import validate_dataframe
+
+        self._assert_rejected_without_a_job(
+            spark, lambda df: validate_dataframe(df, {}, mode="colums"),
+            ("auto", "columns", "arrow"))
+
+    def test_validate_json_column(self, spark):
+        self._assert_rejected_without_a_job(
+            spark,
+            lambda df: validate_json_column(df, "j", {}, mode="Variant"),
+            ("auto", "variant", "arrow"))
+
+
 def _rand_doc(rnd: random.Random):
     def val(depth=0):
         kinds = ["int", "float", "str", "bool", "null"]
@@ -244,27 +286,32 @@ FUZZ_UNIQUE_RULESET = {
 def test_fuzz_unique_items_variant_vs_walker(spark, seed):
     """Random docs (scalar AND composite array elements) through the
     auto path, which is the gated walker stage for this ruleset:
-    violation rows byte-equal to the walker. The VARIANT plan's marker
-    reroute runs on the same corpus in
-    ``test_fuzz_unique_items_variant_residual``."""
+    violation rows byte-equal to the walker. The ungated walker stage
+    runs on the same corpus in
+    ``test_fuzz_unique_items_ungated_walker_stage``."""
     rnd = random.Random(seed)
     docs = [_rand_doc(rnd) for _ in range(300)]
     _check(spark, docs, FUZZ_UNIQUE_RULESET, force=False)
 
 
-def test_fuzz_unique_items_variant_residual(spark):
+def test_fuzz_unique_items_ungated_walker_stage(spark):
     """The same corpus outside the walker's gate (contentMediaType has no
-    exact boolean form), so ``auto`` takes the VARIANT plan: scalar
-    arrays stay compiled, composite ones reroute via the runtime
-    marker."""
+    exact boolean form). The VARIANT plan refuses uniqueItems, so
+    ``auto`` plans the whole ruleset as the ungated walker stage, with
+    rows equal to the walker's. Without uniqueItems the same ungated
+    ruleset compiles, and ``auto`` plans the VARIANT plan."""
     rs = dict(FUZZ_UNIQUE_RULESET, contentMediaType="application/json")
     scope = Scope()
     assert not scope.gate(scope.compile(rs))[1]
+    assert_walker_stage_only(
+        _check(spark, _fuzz_corpus([11, 12, 13]), rs, force=False))
+
+    no_unique = dict(rs, properties={"k": {"maxItems": 4}},
+                     patternProperties={"^x_": {"minItems": 1}})
+    assert not scope.gate(scope.compile(no_unique))[1]
     df = spark.createDataFrame([("[]",)], "j string")
-    plan = validate_json_column(df, "j", rs)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "parseJson" in plan, plan
-    _check(spark, _fuzz_corpus([11, 12, 13]), rs, force=False)
+    plan = _executed_plan(validate_json_column(df, "j", no_unique))
+    assert "parseJson" in plan and "MapInArrow" not in plan, plan
 
 
 class TestCompositeAndNames:
@@ -375,8 +422,14 @@ def test_fuzz_unevaluated_variant_vs_walker(spark, seed):
 
 class TestUniqueItemsVariant:
     RS = {"properties": {"xs": {"uniqueItems": True}}}
-    # outside the walker's gate, so auto takes the VARIANT plan
+    # outside the walker's gate, and refused by the VARIANT plan, so
+    # auto takes the ungated walker stage
     UNGATED = dict(RS, contentMediaType="application/json")
+
+    def _check_lanes(self, spark, docs):
+        _check(spark, docs, self.RS, force=False)
+        assert_walker_stage_only(
+            _check(spark, docs, self.UNGATED, force=False))
 
     def test_scalar_arrays_compile_serde_strict(self, spark):
         docs = [
@@ -397,11 +450,9 @@ class TestUniqueItemsVariant:
             '{"xs": [1e2, 100]}',         # float vs int distinct
             '{"xs": []}', '{"xs": 7}', '{}',
         ]
-        # auto mode on both lanes (gated walker stage; VARIANT, where
-        # all-scalar arrays stay on the column plan): verdicts and
-        # violation rows must equal the walker byte-for-byte
-        for rs in (self.RS, self.UNGATED):
-            _check(spark, docs, rs, force=False)
+        # auto mode on both walker stages (gated and ungated): verdicts
+        # and violation rows must equal the walker byte-for-byte
+        self._check_lanes(spark, docs)
 
     def test_composites_reroute_and_match_walker(self, spark):
         docs = [
@@ -412,83 +463,12 @@ class TestUniqueItemsVariant:
             '{"xs": [{}, [1], true, null, 1]}',
             '{"xs": [18446744073709551615, 18446744073709551615]}',
         ]
-        for rs in (self.RS, self.UNGATED):
-            _check(spark, docs, rs, force=False)
-
-    def test_marker_fires_only_beyond_depth_budget(self, spark):
-        """Scalar AND shallow-composite arrays must NOT reroute: the
-        plan's marker fires only for elements nested deeper than
-        ``_UNIQUE_DEPTH`` levels or ambiguous big decimals."""
-        from valico_spark.compiler.variantcolumns import (
-            compile_json_ruleset, has_walker_marker,
-        )
-
-        df = spark.createDataFrame(
-            [('{"xs": [1, 2, 1.0, "a", true, null]}',),
-             ('{"xs": [{"o": 1}]}',),              # flat object: compiled
-             ('{"xs": [{"o": [{"p": 1}]}]}',),     # depth 3: compiled
-             ('{"xs": [{"o": [{"p": [1]}]}]}',),   # depth 4: residual
-             ('{"xs": [9300000000000000000]}',)],  # >i64 decimal: residual
-            "j string")
-        viol, comp = compile_json_ruleset(self.RS, F.col("j"),
-                                          residual_marker=True)
-        assert comp.used_marker
-        rows = df.select(has_walker_marker(viol).alias("m")).collect()
-        assert [r.m for r in rows] == [False, False, False, True, True]
-
-
-def test_unique_items_array_of_scalar_elements(spark):
-    """Round-3 walker-residual shrink: array-of-SCALARS elements compile
-    on the variant plan (length-prefix framed member keys, order
-    sensitive, serde Number variants distinct); objects and nested
-    composites still reroute."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from valico_spark.compiler.pyvalidator import DRAFT7, Scope
-    from valico_spark.compiler.variantcolumns import (
-        compile_json_ruleset, has_walker_marker,
-    )
-
-    compiled = [
-        ([[1, 2], [1, 2]], False), ([[1, 2], [2, 1]], True),
-        ([[1], [1.0]], True), ([["a,b"], ["a", "b"]], True),
-        ([["a", "b"], ["a", "b"]], False), ([[], []], False),
-        ([[None], [None]], False), ([[True], [1]], True),
-        ([1, 2, [1, 2], "x"], True),
-        # round-4 shrink: composites up to _UNIQUE_DEPTH levels compile
-        ([{"a": 1}, {"a": 1}], False), ([[[1]], [1]], True),
-        ([{"a": 1, "b": 2}, {"b": 2, "a": 1}], False),  # key order
-        ([{"a": 1}, {"a": 1.0}], True),                 # int != float
-        ([{"a": [{"b": 1}]}, {"a": [{"b": 1}]}], False),
-        ([{"a": [{"b": 1}]}, {"a": [{"b": 2}]}], True),
-        ([{}, {}], False), ([{}, []], True),
-    ]
-    residual = [[{"a": [{"b": [1]}]}, 1],      # depth 4 composite
-                [[[[[1]]]], [1]]]              # 5-deep array chain
-
-    viol, _ = compile_json_ruleset({"uniqueItems": True}, F.col("j"),
-                                   version=DRAFT7, residual_marker=True)
-    docs = [d for d, _ in compiled] + residual
-    df = spark.createDataFrame([(json.dumps(d),) for d in docs], "j string")
-    rows = df.select("j", (F.size(viol) == 0).alias("ok"),
-                     has_walker_marker(viol).alias("marked")).collect()
-    sc = Scope(version=DRAFT7)
-    sid = sc.compile({"uniqueItems": True})
-    for r, d in zip(rows, docs):
-        exp = dict((json.dumps(x), v) for x, v in compiled).get(r["j"])
-        wv = sc.validate(sid, json.loads(r["j"])).is_valid()
-        if exp is not None:
-            assert not r["marked"] and r["ok"] == exp == wv, (d, r)
-        else:
-            assert r["marked"], (d, "expected walker residual")
+        self._check_lanes(spark, docs)
 
 
 # -- gate soundness and plan shape -------------------------------------------
 
-def _assert_gate_sound(spark, docs, ruleset, version=None,
-                       residual_marker=False) -> bool:
+def _assert_gate_sound(spark, docs, ruleset, version=None) -> bool:
     """The gated violations equal the ungated tree element for element
     (order included), and every row whose gate holds has an empty tree.
     Returns whether the ruleset has a gate to compare (ok not None)."""
@@ -497,9 +477,8 @@ def _assert_gate_sound(spark, docs, ruleset, version=None,
         compile_variant_ruleset, gated, parse_documents,
     )
 
-    viol, ok, _ = compile_variant_ruleset(
-        ruleset, F.col("doc"), version=version or DRAFT7,
-        residual_marker=residual_marker)
+    viol, ok = compile_variant_ruleset(ruleset, F.col("doc"),
+                                       version=version or DRAFT7)
     if ok is None:
         return False
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
@@ -527,12 +506,6 @@ def _fuzz_corpus(seeds) -> list:
 def test_gate_sound_fuzz(spark):
     assert _assert_gate_sound(spark, _fuzz_corpus([1, 2, 3]),
                               FUZZ_RULESET)
-
-
-def test_gate_sound_unique_items(spark):
-    # as on the auto path: uniqueItems compiles with the walker marker
-    assert _assert_gate_sound(spark, _fuzz_corpus([11, 12, 13]),
-                              FUZZ_UNIQUE_RULESET, residual_marker=True)
 
 
 @pytest.mark.parametrize("seed", [5, 19])
@@ -577,8 +550,6 @@ def test_docs_ruleset_plan_counts(spark, tmp_path):
     at the scalar nodes (one site per scalar node and tree). ``auto``
     serves the ruleset (the walker's gate covers it) from one Python
     Arrow stage with no VARIANT expression at all."""
-    import re
-
     from valico_spark.operators.validate import violation_rows
     from valico_spark.rulesets import DOCS_RULESET
 

@@ -14,9 +14,9 @@ Grape-style coercion DSL), re-expressed Spark-first:
   (``Scope.gate``) makes it the serving path for dynamic JSON: one
   Arrow-batched ``mapInArrow`` stage passes the documents that clear the
   gate and walks only the failures. The VARIANT column plan
-  (``compiler.variantcolumns``) serves rulesets outside the gate and an
-  explicit ``mode="variant"``; the ungated stage is the fallback for
-  constructs no compiled plan can express.
+  (``compiler.variantcolumns``) serves rulesets outside the gate that it
+  compiles, and an explicit ``mode="variant"``; the ungated stage serves
+  whole rulesets no compiled plan can express.
 * **Table-scale checks** (`valico_spark.operators`): single-pass column
   stats (null rate / HLL distinct / quantile sketches), uniqueness,
   cross-table referential integrity, KS & chi-square distribution drift —

@@ -37,13 +37,13 @@ Evaluation shape — parse once, bind once per node, gate:
   ``forall``. ``when(ok, empty).otherwise(violations)`` keeps valid rows
   off the allocating tree; the verdict stays ``size(violations) == 0``,
   O(1) on the rows that pass the gate. Keywords without an exact boolean
-  form (``not``, ``oneOf``, ``if``, ``unevaluated*``, recursion cut
-  points; ``uniqueItems`` on arrays) make their node's ``ok`` false, so
-  those rows take the full tree: the violations are byte-identical with
-  or without the gate. Gates are built lazily: only the root's gate is
-  read, so a gate under ``if`` / ``not`` / ``oneOf``, or beside a keyword
-  without a boolean form, costs no compile time (combinators read their
-  branches' validity from ``size(violations) == 0``).
+  form (``not``, ``oneOf``, ``if``, ``unevaluated*``) make their node's
+  ``ok`` false, so those rows take the full tree: the violations are
+  byte-identical with or without the gate. Gates are built lazily: only
+  the root's gate is read, so a gate under ``if`` / ``not`` / ``oneOf``,
+  or beside a keyword without a boolean form, costs no compile time
+  (combinators read their branches' validity from
+  ``size(violations) == 0``).
 
 Semantics contract: identical verdicts and ``(code, title, path, detail)``
 rows to ``pyvalidator`` (the reference-parity walker) for the supported
@@ -60,12 +60,12 @@ subset — fuzz-tested in ``tests/test_variant_parity.py``. Key mappings:
   validators/mod.rs:24-33): every emitter is guarded by its type class.
 
 Unsupported constructs (remote ``$ref``, exotic formats, inline ``$id``
-with ``$ref``, ``unevaluated*`` combined with recursion) raise
-``UnsupportedRule`` and route to the Arrow-batched walker;
-``unevaluated*`` — including nested inside combinators (round 3) — and
-``uniqueItems`` over scalar/array-of-scalar elements compile statically
-(runtime per-entry/per-element evaluated predicates; composite
-uniqueItems elements carry a runtime NEEDS_WALKER residual).
+with ``$ref``, ``uniqueItems``, recursion deeper than the compile-time
+unroll) raise ``UnsupportedRule`` at compile time, and
+``validate_json_column`` serves the whole ruleset from the Arrow-batched
+walker; no row is split between the two. ``unevaluated*`` — including
+nested inside combinators — compiles statically (runtime per-entry /
+per-element evaluated predicates).
 """
 
 from __future__ import annotations
@@ -303,15 +303,6 @@ def _bound_target(var: Column, fields: tuple) -> VTarget:
                    tag=var["t"] if "t" in fields else None)
 
 
-def _let_at(value: Column, fn) -> Column:
-    """``fn`` of ``value`` with the value's map and array casts bound
-    once: a one-element ``transform`` whose single result is returned."""
-    var = _lambda_var("el")
-    body = fn(_bound_target(var, ("m", "a")))
-    return _hof("transform", _binding(value, F.lit(""), ("m", "a")), var,
-                body).getItem(0)
-
-
 _OBJECT_KW = frozenset({
     "required", "properties", "patternProperties", "additionalProperties",
     "propertyNames", "minProperties", "maxProperties", "dependencies",
@@ -393,23 +384,6 @@ class _Bound:
         return _valid(self.violations(value, F.lit("")))
 
 
-#: violation code marking "this document reaches past the compiled
-#: recursion unroll — re-validate it on the walker". Never user-visible:
-#: validate_json_column splits marked rows out before returning.
-NEEDS_WALKER = "__needs_walker__"
-
-
-def _marker_violation(path: Column) -> Column:
-    return F.struct(
-        F.lit(NEEDS_WALKER).alias("code"), F.lit("").alias("title"),
-        path.alias("path"), F.lit(None).cast("string").alias("detail"),
-        F.lit(None).cast("string").alias("states"))
-
-
-def has_walker_marker(violations: Column) -> Column:
-    return F.exists(violations, lambda v: v["code"] == NEEDS_WALKER)
-
-
 class VariantCompiler:
     """Compiles one ruleset against a variant-typed target.
 
@@ -417,67 +391,28 @@ class VariantCompiler:
     the emitted expression tree is pure built-in functions (variant
     extractors, higher-order array/map functions), no shuffle.
 
-    Recursive ``$ref`` story (SURVEY §7 hard-part 2): with
-    ``residual_marker=True`` (the ``validate_json_column`` default),
-    recursion is unrolled to ``unroll_depth``; at the cut point the plan
-    emits a ``NEEDS_WALKER`` marker violation whenever a value actually
-    exists that deep, and the operator routes ONLY those documents to the
-    Arrow walker. Linear self-recursion (one ``$ref`` site per level —
-    linked-list / tree-node schemas) unrolls cheaply; schemas whose
-    inlining fans out (the meta-schema has ~15 recursion sites per level,
-    exponential) exhaust ``ref_budget`` early and cut to the marker at
-    whatever prefix fit — still correct, just a larger walker residual.
+    Recursive ``$ref`` story (SURVEY §7 hard-part 2): ``$ref`` inlines
+    at compile time up to ``_UNROLL_DEPTH`` levels and ``_REF_BUDGET``
+    inlined refs in all. A ruleset that needs more (linear recursion
+    such as a linked-list or tree-node schema, or the meta-schema, whose
+    ~15 recursion sites per level fan out exponentially) raises
+    ``UnsupportedRule``: its documents go to the walker, which runs
+    recursion exactly.
     """
 
-    _MAX_REF_DEPTH = 24
-    # uniqueItems canonicalization depth for composite elements: element
-    # trees up to this many nesting levels compile to expression keys;
-    # anything deeper reroutes to the walker (expressions can't recurse)
-    _UNIQUE_DEPTH = 3
+    _UNROLL_DEPTH = 16
+    _REF_BUDGET = 512
 
-    def __init__(self, version: int = DRAFT7, root_schema: Any = None,
-                 residual_marker: bool = False, unroll_depth: int = 16,
-                 ref_budget: int = 512):
+    def __init__(self, version: int = DRAFT7, root_schema: Any = None):
         self.version = version
         self.root_schema = root_schema
-        self.residual_marker = residual_marker
-        self.unroll_depth = min(unroll_depth, self._MAX_REF_DEPTH)
-        self.ref_budget = ref_budget
         self._refs_inlined = 0
-        self._marker_sites = 0
-        self.used_marker = False
-        #: True when some cut was specifically the unroll-depth limit —
-        #: the one residual a caller can shrink by recompiling with a
-        #: larger (measured) ``unroll_depth``; other cut reasons
-        #: (ref_budget fan-out, inline-$id) don't respond to depth.
-        self.recursion_cut = False
 
-    def _cut(self, t: VTarget, why: str) -> Checked:
-        """Recursion/budget cutoff: marker when allowed, else refuse."""
-        if not self.residual_marker:
-            raise UnsupportedRule(why)
-        self.used_marker = True
-        self._marker_sites += 1
-        return _maybe(t.col.isNotNull(), _marker_violation(t.path)), None
-
-    def _lift_marker(self, sub_viols: list, result: Column,
-                     t: VTarget) -> Column:
-        """Marker propagation invariant: combinators whose verdict logic
-        INVERTS or COUNTS sub-validity (not / oneOf / anyOf / if) would
-        otherwise swallow a cut-point marker buried in a failing branch
-        — and then serve a verdict computed from an incomplete plan.
-        Whenever any sub-plan emitted a marker for this row, surface the
-        marker as this node's sole output; by induction a marker is
-        always visible in the TOP-LEVEL violations array, which is what
-        the operator's walker-rerouting predicate checks."""
-        any_m = None
-        for sv in sub_viols:
-            if sv is None:
-                continue
-            e = has_walker_marker(sv)
-            any_m = e if any_m is None else (any_m | e)
-        return F.when(any_m, F.array(_marker_violation(t.path))) \
-                .otherwise(result)
+    def _inline_ref(self, ref: str, t: VTarget, depth: int) -> Checked:
+        self._refs_inlined += 1
+        if self._refs_inlined > self._REF_BUDGET:
+            raise UnsupportedRule("$ref inlining budget exhausted")
+        return self._node(self._resolve_ref(ref), t, depth + 1)
 
     # $ref resolution shares the pointer-walking logic of the typed
     # compiler (compile-time inlining, SURVEY.md §2.4)
@@ -490,15 +425,11 @@ class VariantCompiler:
         if inline_id_with_refs(self.root_schema
                                if self.root_schema is not None else schema):
             # pointer inlining can't mirror the reference's $id-rebased
-            # URL resolution (incl. its missing-keyword quirk) — route
-            # every doc to the walker, which has the exact semantics
-            viol, ok = self._cut(target, "inline $id together with $ref")
-        else:
-            viol, ok = self._bind(schema, 0).at(target.col, target.path)
+            # URL resolution (incl. its missing-keyword quirk) — the
+            # walker has the exact semantics
+            raise UnsupportedRule("inline $id together with $ref")
+        viol, ok = self._bind(schema, 0).at(target.col, target.path)
         return _v(viol), (ok() if ok is not None else None)
-
-    def compile(self, schema: Any, target: VTarget) -> Column:
-        return gated(*self.compile_checked(schema, target))
 
     def _bind(self, schema: Any, depth: int) -> _Bound:
         fields = _bind_fields(schema)
@@ -507,9 +438,8 @@ class VariantCompiler:
         return _Bound(var, fields, viol, ok)
 
     def _node(self, schema: Any, t: VTarget, depth: int) -> Checked:
-        if depth > self.unroll_depth:
-            self.recursion_cut = True
-            return self._cut(t, "recursive $ref beyond inlining depth")
+        if depth > self._UNROLL_DEPTH:
+            raise UnsupportedRule("recursive $ref beyond inlining depth")
         if schema is True:
             schema = {}
         elif schema is False:
@@ -518,59 +448,34 @@ class VariantCompiler:
             raise UnsupportedRule("schema must be an object or boolean")
 
         if "$ref" in schema and self.version < DRAFT2019:
-            self._refs_inlined += 1
-            if self._refs_inlined > self.ref_budget:
-                return self._cut(t, "$ref inlining budget exhausted")
-            return self._node(self._resolve_ref(schema["$ref"]), t,
-                              depth + 1)
+            return self._inline_ref(schema["$ref"], t, depth)
 
         s, d = schema, depth
 
-        def h_ref():
-            self._refs_inlined += 1
-            if self._refs_inlined > self.ref_budget:
-                return self._cut(t, "$ref inlining budget exhausted")
-            return self._node(self._resolve_ref(s["$ref"]), t, d + 1)
-
         def h_not():
-            m0 = self._marker_sites
-            sub = self._node(s["not"], t, d + 1)
-            res = _maybe(_valid(sub[0]), make_violation("not", t.path))
-            if self._marker_sites > m0:
-                res = self._lift_marker([sub[0]], res, t)
-            return res, None
+            sub = self._node(s["not"], t, d + 1)[0]
+            return _maybe(_valid(sub), make_violation("not", t.path)), None
 
         def h_if():
             if "if" not in s:
                 return None
-            m0 = self._marker_sites
             if_v = self._node(s["if"], t, d + 1)[0]
             then_v = self._node(s["then"], t, d + 1)[0] \
                 if "then" in s else None
             else_v = self._node(s["else"], t, d + 1)[0] \
                 if "else" in s else None
-            res = F.when(_valid(if_v), _v(then_v)) \
-                   .otherwise(_v(else_v))
-            if self._marker_sites > m0:
-                res = self._lift_marker([if_v, then_v, else_v], res, t)
-            return res, None
+            return F.when(_valid(if_v), _v(then_v)) \
+                    .otherwise(_v(else_v)), None
 
         def h_uneval(fn):
             if self.version < DRAFT2019:
                 return None
-            m0 = self._marker_sites
-            res = fn(s, t, d)
-            if self._marker_sites > m0:
-                # an evaluated-set computed from a truncated (recursion-
-                # cut) plan is untrustworthy — whole doc to the walker
-                raise UnsupportedRule(
-                    "unevaluated* with recursive $ref on dynamic JSON")
-            return res, None
+            return fn(s, t, d), None
 
         # emit parts in the walker's validator linearization so nested
         # states payloads (any_of/one_of) are byte-equal
         handlers = {
-            "$ref": h_ref,
+            "$ref": lambda: self._inline_ref(s["$ref"], t, d),
             "type": lambda: self._type(s["type"], t),
             "enum": lambda: self._enum(s["enum"], t),
             "const": lambda: self._const(s["const"], t),
@@ -597,7 +502,7 @@ class VariantCompiler:
             "items": lambda: self._items(s, t, d),
             "minItems": lambda: self._items_count(s["minItems"], False, t),
             "maxItems": lambda: self._items_count(s["maxItems"], True, t),
-            "uniqueItems": lambda: (self._unique_items(t)
+            "uniqueItems": lambda: (self._unique_items()
                                     if s["uniqueItems"] is True else None),
             "contains": lambda: (self._contains(s, t, d)
                                  if "contains" in s else None),
@@ -945,114 +850,10 @@ class VariantCompiler:
             raise UnsupportedRule("items must be schema or array")
         return _merge(parts)
 
-    def _unique_items(self, t: VTarget) -> Checked:
-        """serde-strict uniqueItems over dynamic arrays (scalars AND
-        composites up to ``_UNIQUE_DEPTH`` nesting levels compiled;
-        deeper trees → walker residual).
-
-        Per-element type-tagged keys mirror the walker's ``_hash_key``:
-        integers and floats are DISTINCT serde Number variants (1 !=
-        1.0). parse_json preserves that distinction in the variant type
-        tag — JSON integers land as BIGINT, anything written with a
-        decimal point as DECIMAL (even when scale normalizes to 0:
-        "1.0" → DECIMAL(1,0), still distinguishable from BIGINT 1),
-        exponent/overflow as DOUBLE. Float keys canonicalize through
-        the double cast (so "1.0" ≡ "1.00" ≡ 1.0e0, and -0.0 ≡ 0.0
-        exactly as Rust f64 ==).
-
-        Walker residual (NEEDS_WALKER marker, rerouted rows):
-        * element trees nested deeper than ``_UNIQUE_DEPTH`` levels —
-          expression canonicalization is depth-bounded;
-        * scale-0 DECIMAL beyond int64 — the one ambiguous region
-          where "9.3e18-as-float" and a >i64 integer literal collide
-          in the same variant type.
-        """
-        if not self.residual_marker:
-            # element types are only known at runtime: without the
-            # marker reroute we cannot promise full-fidelity compile
-            raise UnsupportedRule(
-                "uniqueItems on dynamic JSON needs the walker residual")
-        self.used_marker = True
-        self._marker_sites += 1
-        arr = _arr(t)
-        is_arr = t.col.isNotNull() & _is_arr(t)
-
-        def scalar_key(n: VTarget) -> Column:
-            st = _tag(n)
-            return (F.when(_is_null(n), F.lit("z"))
-                     .when(st == "BOOLEAN",
-                           F.concat(F.lit("b:"), _bool(n).cast("string")))
-                     .when(st == "STRING", F.concat(F.lit("s:"), _str(n)))
-                     .when(st == "BIGINT",
-                           F.concat(F.lit("i:"),
-                                    F.try_variant_get(n.col, "$", "long")
-                                     .cast("string")))
-                     # +0.0 canonicalizes IEEE negative zero (-0.0 + 0.0
-                     # = +0.0), matching Rust f64 == where -0.0 == 0.0
-                     .otherwise(F.concat(F.lit("f:"),
-                                         (_num(n) + F.lit(0.0))
-                                         .cast("string"))))
-
-        def framed(k: Column) -> Column:
-            # length-prefix framing keeps member-key concatenation
-            # collision-free (["a,b"] vs ["a","b"]); ``k`` is let-bound so
-            # the nested key tree is not built twice per level
-            return F.transform(F.array(k), lambda x: F.concat(
-                F.length(x).cast("string"), F.lit("#"), x)).getItem(0)
-
-        # composite canonicalization to a FIXED depth (expressions can't
-        # recurse): arrays order-sensitively (serde Vec ==), objects by
-        # entry strings sorted on the length-framed key (serde Map == is
-        # key-set + values, order-insensitive; parse_json dedupes keys
-        # like serde's last-wins). Equality only needs to agree with the
-        # walker's _hash_key SEMANTICS, not its byte format: int/float
-        # tags stay distinct, doubles compare via Spark's injective
-        # double->string round-trip. Elements nested deeper than
-        # _UNIQUE_DEPTH levels remain walker residual. Each element is
-        # let-bound with its casts (``_let_at``) once per level.
-        def key_level(e: Column, depth: int) -> Column:
-            def key(n: VTarget) -> Column:
-                if depth == 0:
-                    return scalar_key(n)
-                return (F.when(
-                    _is_arr(n),
-                    F.concat(F.lit("a:"), F.concat_ws("", F.transform(
-                        n.arr, lambda x: framed(key_level(x, depth - 1))))))
-                    .when(
-                        _is_obj(n),
-                        F.concat(F.lit("o:"), F.concat_ws("", F.array_sort(
-                            F.transform(F.map_entries(n.obj),
-                                        lambda en: F.concat(
-                                framed(en["key"]),
-                                framed(key_level(en["value"],
-                                                 depth - 1))))))))
-                    .otherwise(scalar_key(n)))
-            return _let_at(e, key)
-
-        def residual_level(e: Column, depth: int) -> Column:
-            def residual(n: VTarget) -> Column:
-                dec = (_tag(n).rlike(r"^DECIMAL\(\d+,0\)$")
-                       & (F.abs(_num(n)) > F.lit(9.2e18)))
-                if depth == 0:
-                    return _is_obj(n) | _is_arr(n) | dec
-                deeper = (lambda x: residual_level(x, depth - 1))
-                return (dec
-                        | (_is_arr(n) & F.exists(n.arr, deeper))
-                        | (_is_obj(n) & F.exists(F.map_values(n.obj),
-                                                 deeper)))
-            return _let_at(e, residual)
-
-        residual = F.exists(
-            arr, lambda e: residual_level(e, self._UNIQUE_DEPTH))
-        keys = F.transform(arr,
-                           lambda e: key_level(e, self._UNIQUE_DEPTH))
-        dup = F.size(F.array_distinct(keys)) < F.size(keys)
-        marker = _maybe(is_arr & residual, _marker_violation(t.path))
-        viol = _maybe(is_arr & ~residual & dup,
-                      make_violation("unique_items", t.path))
-        # the keys cost as much in a gate as in the tree: arrays take
-        # the full tree, everything else passes
-        return _cat([marker, viol]), _unless(is_arr, None)
+    def _unique_items(self) -> Checked:
+        # element equality over runtime-typed trees of any depth has no
+        # bounded expression form: the walker owns uniqueItems here
+        raise UnsupportedRule("uniqueItems on dynamic JSON")
 
     def _items_count(self, n: Any, is_max: bool, t: VTarget) -> Checked:
         cnt = F.size(_arr(t))
@@ -1070,7 +871,6 @@ class VariantCompiler:
         arr = _arr(t)
         is_arr = t.col.isNotNull() & _is_arr(t)
 
-        m0 = self._marker_sites
         b = self._bind(sub, depth + 1)
         parts = []
         if min_c is None and max_c is None:
@@ -1089,16 +889,7 @@ class VariantCompiler:
                 parts.append(_check(
                     is_arr & (matched < F.lit(int(min_c))),
                     make_violation("min_contains/max_contains", t.path)))
-        res = _cat([v for v, _ in parts])
-        if self._marker_sites > m0:
-            # per-element markers invert valid_at — lift when any element
-            # plan hit a cut point
-            elem_marker = F.exists(arr, lambda x: has_walker_marker(
-                b.violations(x, F.lit(""))))
-            return F.when(is_arr & elem_marker,
-                          F.array(_marker_violation(t.path))
-                          ).otherwise(_v(res)), None
-        return res, _all([ok for _, ok in parts])
+        return _merge(parts)
 
     # -- unevaluated* (2019-09) on dynamic JSON ---------------------------
     # mirrors the typed compiler's static evaluated-set analysis
@@ -1378,7 +1169,6 @@ class VariantCompiler:
         return _merge([self._node(sub, t, depth + 1) for sub in subs])
 
     def _any_of(self, subs: list, t: VTarget, depth: int) -> Checked:
-        m0 = self._marker_sites
         parts = [self._node(sub, t, depth + 1) for sub in subs]
         any_ok = None
         for p in parts:
@@ -1386,8 +1176,6 @@ class VariantCompiler:
             any_ok = ok if any_ok is None else (any_ok | ok)
         res = _maybe(~any_ok, make_violation(
             "any_of", t.path, states=_states_json([_v(v) for v, _ in parts])))
-        if self._marker_sites > m0:
-            return self._lift_marker([v for v, _ in parts], res, t), None
         # one branch passing its gate passes the anyOf
         if any(v is None for v, _ in parts):
             return res, _gate(lambda: F.lit(True))
@@ -1398,17 +1186,14 @@ class VariantCompiler:
             lambda a, b: a | b, [ok() for ok in gates]))
 
     def _one_of(self, subs: list, t: VTarget, depth: int) -> Checked:
-        m0 = self._marker_sites
         parts = [self._node(sub, t, depth + 1) for sub in subs]
         count = None
         for p in parts:
             ok_int = F.when(_valid(p[0]), 1).otherwise(0)
             count = ok_int if count is None else (count + ok_int)
-        res = _maybe(count != 1, make_violation(
-            "one_of", t.path, states=_states_json([_v(v) for v, _ in parts])))
-        if self._marker_sites > m0:
-            res = self._lift_marker([v for v, _ in parts], res, t)
-        return res, None
+        return _maybe(count != 1, make_violation(
+            "one_of", t.path,
+            states=_states_json([_v(v) for v, _ in parts]))), None
 
 
 def parse_documents(json_col: Column) -> Column:
@@ -1421,43 +1206,31 @@ def parse_documents(json_col: Column) -> Column:
 
 
 def compile_variant_ruleset(schema: Any, doc: Column,
-                            version: int = DRAFT7,
-                            residual_marker: bool = False,
-                            unroll_depth: int = 16):
+                            version: int = DRAFT7
+                            ) -> Tuple[Column, Optional[Column]]:
     """Compile ``schema`` against a variant column of parsed documents.
 
-    Returns (ungated violations, ok, compiler). ``ok`` is None when no
-    row can take the gate; either way ``gated(violations, ok)`` is the
-    violations array. The compiler's ``used_marker`` tells the caller
-    whether any row may carry a ``NEEDS_WALKER`` marker needing
-    rerouting.
+    Returns (ungated violations, ok). ``ok`` is None when no row can take
+    the gate; either way ``gated(violations, ok)`` is the violations
+    array. Raises ``UnsupportedRule`` for a ruleset the plan cannot
+    judge exactly.
     """
-    compiler = VariantCompiler(version=version, root_schema=schema,
-                               residual_marker=residual_marker,
-                               unroll_depth=unroll_depth)
-    viol, ok = compiler.compile_checked(schema,
-                                        VTarget(col=doc, path=F.lit("")))
-    return viol, ok, compiler
+    compiler = VariantCompiler(version=version, root_schema=schema)
+    return compiler.compile_checked(schema, VTarget(col=doc, path=F.lit("")))
 
 
 def compile_json_ruleset(schema: Any, json_col: Column,
                          version: int = DRAFT7,
-                         residual_marker: bool = False,
-                         unroll_depth: int = 16,
-                         ) -> tuple[Column, "VariantCompiler"]:
+                         residual_marker: bool = False) -> Column:
     """Compile ``schema`` against a column of raw JSON document strings.
 
-    Returns (violations-array Column, the compiler — whose
-    ``used_marker`` tells the caller whether any row may carry a
-    ``NEEDS_WALKER`` marker needing rerouting). Documents parse as in
+    Returns the violations-array Column. Documents parse as in
     ``parse_documents``, once per row: the parse is let-bound and the
-    gated plan evaluated over it.
+    gated plan evaluated over it. ``residual_marker`` is accepted for
+    existing callers and ignored: the plan has no walker residual, and a
+    ruleset it cannot judge raises ``UnsupportedRule`` either way.
     """
     doc = _lambda_var("doc")
-    viol, ok, compiler = compile_variant_ruleset(
-        schema, doc, version=version, residual_marker=residual_marker,
-        unroll_depth=unroll_depth)
-    checked = F.flatten(_hof("transform",
-                             F.array(parse_documents(json_col)), doc,
-                             gated(viol, ok)))
-    return checked, compiler
+    viol, ok = compile_variant_ruleset(schema, doc, version=version)
+    return F.flatten(_hof("transform", F.array(parse_documents(json_col)),
+                          doc, gated(viol, ok)))

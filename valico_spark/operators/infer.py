@@ -119,14 +119,11 @@ def infer_ruleset(df: DataFrame, enum_max: int = 16,
 
 # -- JSON nesting-depth profile ---------------------------------------------
 #
-# The VARIANT compiler unrolls recursive ``$ref`` to a fixed depth and
-# reroutes only deeper documents to the Arrow walker
-# (``VariantCompiler.unroll_depth``). Picking that budget is a
-# measurement, not a guess: profile the corpus's actual nesting depths
-# and set the budget at the coverage quantile. The profile is a single
-# map stage + one tiny aggregation — pure built-in expressions (regex
-# string-literal strip, bracket scan via ``aggregate``), whole-stage
-# codegen, no Python, no shuffle beyond |distinct depths| rows.
+# How deep a corpus's documents nest: the number of object/array levels
+# a validator descends. The profile is a single map stage + one tiny
+# aggregation — pure built-in expressions (regex string-literal strip,
+# bracket scan via ``aggregate``), whole-stage codegen, no Python, no
+# shuffle beyond |distinct depths| rows.
 
 #: JSON string literal (handles escaped quotes/backslashes). Identical
 #: semantics in Java regex and RE2, so oracles can mirror the strip.
@@ -137,9 +134,8 @@ def json_max_depth(col) -> "F.Column":
     """Max container-nesting depth of a JSON document string.
 
     ``5``/``"x"`` → 0, ``{}``/``[]`` → 1, ``{"a": [1]}`` → 2 — the
-    number of object/array levels a validator must descend, i.e. the
-    unroll depth a recursive ``$ref`` plan needs to cover the document
-    entirely. Strips string literals first so braces inside values
+    number of object/array levels a validator must descend to cover the
+    document entirely. Strips string literals first so braces inside values
     (``{"a": "}["}``) don't skew the scan; malformed JSON yields a
     best-effort bracket balance (the validator rejects it anyway).
     """
@@ -206,7 +202,7 @@ def _bracket_depths(brackets: "pd.Series") -> "pd.Series":
 
 def json_depth_histogram(df: DataFrame, col: str) -> DataFrame:
     """``(depth, n_docs)`` distribution of :func:`json_max_depth` over
-    ``df[col]`` — the evidence for an unroll-budget choice.
+    ``df[col]`` — how deep a corpus's documents nest.
 
     Execution shape (not semantics) differs from mapping
     :func:`json_max_depth` over the column: ``depth`` is null exactly
@@ -226,22 +222,3 @@ def json_depth_histogram(df: DataFrame, col: str) -> DataFrame:
               .groupBy("depth").agg(F.count(F.lit(1)).alias("n_docs"))
               .orderBy("depth"))
 
-
-def suggest_unroll_depth(df: DataFrame, col: str,
-                         coverage: float = 0.999,
-                         max_depth: int = 24) -> int:
-    """Smallest unroll depth covering ``coverage`` of documents (so at
-    most 1-coverage reroute to the walker), clamped to ``max_depth``
-    (``VariantCompiler._MAX_REF_DEPTH``). One aggregation; the
-    histogram collect is bounded by |distinct depths| ≤ ~max nesting.
-    """
-    hist = json_depth_histogram(df, col).collect()
-    total = sum(r.n_docs for r in hist)
-    if total == 0:
-        return max_depth
-    seen = 0
-    for r in hist:
-        seen += r.n_docs
-        if seen >= coverage * total:
-            return min(int(r.depth), max_depth)
-    return max_depth

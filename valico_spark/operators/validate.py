@@ -14,8 +14,11 @@ Execution paths, same semantics:
 * **variant**: the VARIANT column plan (`compiler.variantcolumns`) for
   dynamic-JSON rulesets the gate does not cover, and on request.
 * **arrow**: the same Arrow stage without the gate — every document is
-  walked. The fallback for constructs no compiled lane takes, and the
-  residual of recursion the VARIANT plan cut.
+  walked. The lane for rulesets no compiled lane takes (for dynamic
+  JSON: outside the gate, and refused by the VARIANT compiler).
+
+Each call picks one lane for the whole ruleset at plan time; no lane
+splits the rows of a table between two plans.
 
 Output contract (both paths): columns ``violations array<struct<code,
 title,path,detail,states>>`` and ``valid boolean`` appended to the input;
@@ -43,6 +46,14 @@ from valico_spark.operators.util import (drop_zip_importers,
 # staged column of the VARIANT lane: the parsed document
 _DOC = "__variant_doc"
 
+_MODES = ("auto", "columns", "arrow")
+_JSON_MODES = ("auto", "variant", "arrow")
+
+
+def _check_mode(mode: str, accepted: tuple) -> None:
+    if mode not in accepted:
+        raise ValueError(f"mode must be one of {accepted}, got {mode!r}")
+
 
 def validate_dataframe(df: DataFrame, ruleset: Any, version: int = DRAFT7,
                        mode: str = "auto") -> DataFrame:
@@ -50,8 +61,10 @@ def validate_dataframe(df: DataFrame, ruleset: Any, version: int = DRAFT7,
 
     ``mode``: 'columns' (static plan, raises UnsupportedRule when the
     ruleset needs the walker), 'arrow' (force fallback), or 'auto'
-    (columns when possible, else arrow).
+    (columns when possible, else arrow); any other value raises
+    ValueError.
     """
+    _check_mode(mode, _MODES)
     if mode in ("auto", "columns"):
         try:
             viol = compile_ruleset(ruleset, df.schema, version=version)
@@ -74,79 +87,49 @@ def _validate_arrow(df: DataFrame, ruleset: Any, version: int) -> DataFrame:
 
 def validate_json_column(df: DataFrame, json_col: str, ruleset: Any,
                          version: int = DRAFT7,
-                         mode: str = "auto",
-                         unroll_depth: "int | str" = 16) -> DataFrame:
+                         mode: str = "auto") -> DataFrame:
     """Validate a column of JSON documents with full reference semantics.
 
-    ``mode='auto'`` (default) picks the lane from the ruleset alone. When
-    the walker's gate covers it (``Scope.gate``: every keyword has an
-    exact boolean form), the serving path is the gated walker stage: one
-    ``mapInArrow`` stage parses each document once, documents passing the
-    gate get ``violations = []``, and only the failing ones are walked, so
-    every violation row comes from the reference-parity walker and
-    recursion runs exactly. Otherwise ``auto`` takes the VARIANT column
-    plan (``compiler.variantcolumns``: one parse + vectorized JVM
-    predicates), and constructs that plan rejects fall back to the
-    ungated walker stage. ``mode='variant'`` forces the column plan
-    (raises UnsupportedRule), ``mode='arrow'`` forces the ungated walker.
+    ``mode='auto'`` (default) picks one lane from the ruleset alone, at
+    plan time. When the walker's gate covers it (``Scope.gate``: every
+    keyword has an exact boolean form), the serving path is the gated
+    walker stage: one ``mapInArrow`` stage parses each document once,
+    documents passing the gate get ``violations = []``, and only the
+    failing ones are walked, so every violation row comes from the
+    reference-parity walker and recursion runs exactly. Otherwise
+    ``auto`` takes the VARIANT column plan (``compiler.variantcolumns``:
+    one parse + vectorized JVM predicates), and a ruleset that plan
+    refuses (``uniqueItems``, recursion past its unroll, inline ``$id``
+    with ``$ref``, ...) runs on the ungated walker stage. ``mode='variant'``
+    forces the column plan (raises UnsupportedRule), ``mode='arrow'``
+    forces the ungated walker; any other value raises ValueError.
     Every lane validates a SQL-NULL or malformed document (and, on the
     walker lanes, one using ``NaN`` / ``Infinity``) as JSON null; a
     document with duplicate keys keeps the last value on the walker lanes
     and is null on the VARIANT plan (``pyvalidator.load_document``).
-
-    ``unroll_depth`` bounds the VARIANT plan's recursive-``$ref``
-    inlining (deeper documents reroute to the walker). Pass ``"auto"`` to
-    size the budget from the corpus itself: when (and only when) the
-    default compile actually cut recursion, the column's nesting-depth
-    histogram is profiled (``operators.infer.suggest_unroll_depth``, one
-    extra scan) and the plan recompiles at the 99.9%-coverage depth — so
-    the walker residual is at most 0.1% of documents regardless of how
-    deep the corpus runs.
     """
+    _check_mode(mode, _JSON_MODES)
     if mode == "auto" and _gate_covers(ruleset, version):
         return _validate_json_arrow(df, json_col, ruleset, version,
                                     gate=True)
     if mode in ("auto", "variant"):
         from valico_spark.compiler.variantcolumns import (
-            compile_variant_ruleset, gated, has_walker_marker,
-            parse_documents,
+            compile_variant_ruleset, gated, parse_documents,
         )
 
         try:
-            # parse once: every keyword reads the staged variant column
-            staged = df.withColumn(_DOC, parse_documents(F.col(json_col)))
-
-            def compile_at(depth: int):
-                return compile_variant_ruleset(
-                    ruleset, F.col(_DOC), version=version,
-                    residual_marker=(mode == "auto"), unroll_depth=depth)
-
-            depth = unroll_depth if isinstance(unroll_depth, int) else 16
-            viol, ok, compiler = compile_at(depth)
-            if unroll_depth == "auto" and compiler.recursion_cut:
-                from valico_spark.operators.infer import (
-                    suggest_unroll_depth,
-                )
-
-                viol, ok, compiler = compile_at(
-                    suggest_unroll_depth(df, json_col))
-            # gate: rows whose ok holds never build the violations tree
-            out = (staged.withColumn("violations", gated(viol, ok))
-                   .withColumn("valid", F.size("violations") == 0)
-                   .drop(_DOC))
-            if not compiler.used_marker:
-                return out
-            # recursion unrolled to a finite depth: documents that reach
-            # past the cut carry a NEEDS_WALKER marker — reroute ONLY
-            # those to the Arrow walker; shallow documents (the common
-            # case) stay on the column plan
-            marked = has_walker_marker(F.col("violations"))
-            deep = out.where(marked).drop("violations", "valid")
-            slow = _validate_json_arrow(deep, json_col, ruleset, version)
-            return out.where(~marked).unionByName(slow)
+            viol, ok = compile_variant_ruleset(ruleset, F.col(_DOC),
+                                               version=version)
         except UnsupportedRule:
             if mode == "variant":
                 raise
+        else:
+            # parse once: every keyword reads the staged variant column;
+            # rows whose ok holds never build the violations tree
+            return (df.withColumn(_DOC, parse_documents(F.col(json_col)))
+                    .withColumn("violations", gated(viol, ok))
+                    .withColumn("valid", F.size("violations") == 0)
+                    .drop(_DOC))
     return _validate_json_arrow(df, json_col, ruleset, version)
 
 
