@@ -14,6 +14,7 @@ import pytest
 
 from test_variant_parity import assert_walker_stage_only
 from valico_spark.compiler.pyvalidator import DRAFT7, Scope
+from valico_spark.compiler.variantcolumns import VariantCompiler
 from valico_spark.operators.validate import validate_json_column
 from valico_spark.sources.metaschema import DRAFT7_META
 
@@ -73,6 +74,13 @@ LINKED_LIST = {
     "properties": {"v": {"type": "integer", "minimum": 0},
                    "next": {"$ref": "#"}},
 }
+
+
+def _depth(doc) -> int:
+    """Object nesting depth of a parsed document."""
+    if isinstance(doc, dict):
+        return 1 + max((_depth(v) for v in doc.values()), default=0)
+    return 0
 
 
 def _chain(depth: int, bad_at: int | None = None) -> str:
@@ -141,10 +149,18 @@ class TestVariantRecursionResidual:
                                             for e in st.errors))
         return out
 
-    def test_mixed_depth_parity(self, spark):
+    @pytest.mark.parametrize("unroll_depth", [16, "auto"])
+    def test_mixed_depth_parity(self, spark, monkeypatch, unroll_depth):
+        """The lane does not depend on the VARIANT unroll budget: at the
+        class default (16) and at a budget sized from the corpus's
+        deepest document ("auto"), unbounded recursion still cannot be
+        unrolled, so every row runs on the one ungated walker stage."""
         docs = [_chain(3), _chain(3, bad_at=2), _chain(12), _chain(19),
                 _chain(22, bad_at=21), _chain(30), _chain(30, bad_at=25),
                 _chain(1), '{"v": "x"}', '{}']
+        if unroll_depth == "auto":
+            unroll_depth = max(_depth(json.loads(d)) for d in docs)
+        monkeypatch.setattr(VariantCompiler, "_UNROLL_DEPTH", unroll_depth)
         df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                    "i long, j string")
         v = validate_json_column(df, "j", UNGATED_LINKED_LIST)
