@@ -296,6 +296,44 @@ class TestSpans:
         # generator seeds ordering defects in a subset of defective docs
         assert 0 < frac_bad < 0.1
 
+    def test_edge_rows_pinned(self, spark):
+        """NULL / empty / NULL-element arrays, NULL, duplicate,
+        decreasing and extreme offsets: the ordering flag and the
+        signature keep the values of the earlier higher-order-function
+        form (``aggregate`` over the offsets, ``xxhash64`` of a
+        ``transform``-built canonical array)."""
+        big = 2 ** 63 - 1
+
+        def s(kind, text, ref, off):
+            return (kind, text, ref, off)
+
+        rows = [
+            (1, None), (2, []), (3, [None]),
+            (4, [s("text", "a", None, 0)]),
+            (5, [s("text", "a", None, 0), s("image", None, "m00000001", 5)]),
+            (6, [s("text", "a", None, 3), s("text", "b", None, 3)]),
+            (7, [s("text", "a", None, 9), s("text", "b", None, 2)]),
+            (8, [s("text", "a", None, None), s("text", "b", None, 2)]),
+            (9, [s("text", "a", None, 1), s("text", "b", None, None)]),
+            (10, [s("text", "a", None, 1), None, s("text", "b", None, 4)]),
+            (11, [s("text", "a", None, -big - 1), s("ref", None, None, big)]),
+            (12, [s(None, None, None, None)]),
+            (13, [s("text", "x", None, 0), s("text", "x", None, 1),
+                  s("text", "x", None, 1)]),
+        ]
+        df = spark.createDataFrame(
+            rows, "id int, spans array<struct<kind:string,text:string,"
+                  "media_ref:string,offset:long>>")
+        got = [(r.id, r.spans_ordered, r.span_sig) for r in
+               spans.add_span_checks(df).orderBy("id").collect()]
+        ab = -4038444106149950944
+        assert got == [
+            (1, None, 42), (2, True, 42), (3, False, 42),
+            (4, True, 7850432807942382905), (5, True, -856600880801138580),
+            (6, False, ab), (7, False, ab), (8, False, ab), (9, False, ab),
+            (10, False, ab), (11, True, -5300350193179919452),
+            (12, False, 42), (13, False, 7957766278342452467)]
+
     def test_sequence_equality_self(self, docs_df):
         # exclude seeded duplicate doc_ids: the self-join cross-pairs them
         # and correctly reports their differing span sequences
@@ -800,3 +838,68 @@ class TestDropZipImporters:
         assert isinstance(second.__loader__, zipimport.zipimporter)
         assert second.__file__.startswith(zip_package)
         assert reads == []
+
+
+class TestLocalFrames:
+    """Small driver-side result frames are built from pyarrow Tables:
+    each plans as a ``LocalTableScan`` with no Python stage (a frame
+    built from a Python list re-runs a row-unpickling Python stage, a
+    ``Scan ExistingRDD``, on every action) and keeps its schema."""
+
+    @staticmethod
+    def _assert_local(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "Python" not in plan, plan
+
+    def test_result_frames_plan_local(self, spark, tmp_path):
+        import json
+
+        from pyspark.sql import types as T
+
+        from valico_spark.operators.export import mixture_sample
+        from valico_spark.operators.util import local_frame
+        from valico_spark.plans.audit import AuditRun
+
+        prof = stats.profile(spark.createDataFrame(
+            [(1, "a"), (2, None), (3, "c")], "n long, s string"),
+            quantiles=[0.5])
+        self._assert_local(prof)
+        assert [f.name for f in prof.schema] == [
+            "column", "n_rows", "null_count", "null_rate",
+            "distinct_count", "min_s", "max_s", "mean", "quantiles"]
+        assert {r["column"]: r["null_count"] for r in prof.collect()} \
+            == {"n": 0, "s": 1}
+
+        docs = spark.range(0, 60).select(
+            F.col("id").alias("doc_id"),
+            F.when(F.col("id") % 2 == 0, "web").otherwise("wiki")
+             .alias("source"),
+            F.lit(10).cast("long").alias("n_tokens"))
+        _, report = mixture_sample(docs, {"web": 0.5, "wiki": 0.5})
+        self._assert_local(report)
+        assert report.schema.simpleString() == (
+            "struct<source:string,weight:double,available_tokens:bigint,"
+            "target_tokens:bigint,rate:double,achieved_tokens:bigint>")
+        assert {r.source for r in report.collect()} == {"web", "wiki"}
+
+        run = AuditRun(spark, str(tmp_path), "r1", n_buckets=2)
+        with open(f"{run._manifest_dir()}/0.json", "w") as f:
+            json.dump({"bucket": 0, "docs": 5, "valid_docs": 4,
+                       "violations": 1, "wall_sec": 0, "run_id": "r1",
+                       "committed_at": 0}, f)
+        metrics = run.metrics_df()
+        self._assert_local(metrics)
+        assert metrics.schema == T.StructType.fromDDL(
+            "run_id string, bucket int, docs long, valid_docs long, "
+            "violations long, wall_sec double, committed_at double")
+        assert [tuple(r) for r in metrics.collect()] == [
+            ("r1", 0, 5, 4, 1, 0.0, 0.0)]
+
+        # the empty history index of the streaming dedup
+        index = local_frame(spark, [],
+                            "doc_id bigint, band int, bucket bigint")
+        self._assert_local(index)
+        assert index.count() == 0
+        assert index.schema.simpleString() == \
+            "struct<doc_id:bigint,band:int,bucket:bigint>"

@@ -470,8 +470,9 @@ class TestUniqueItemsVariant:
 
 def _assert_gate_sound(spark, docs, ruleset, version=None) -> bool:
     """The gated violations equal the ungated tree element for element
-    (order included), and every row whose gate holds has an empty tree.
-    Returns whether the ruleset has a gate to compare (ok not None)."""
+    (order included), and the gate is exact: it holds on exactly the rows
+    whose tree is empty. Returns whether the ruleset has a gate to
+    compare (ok not None)."""
     from valico_spark.compiler.pyvalidator import DRAFT7
     from valico_spark.compiler.variantcolumns import (
         compile_variant_ruleset, gated, parse_documents,
@@ -490,8 +491,10 @@ def _assert_gate_sound(spark, docs, ruleset, version=None) -> bool:
         assert r["gated"] == r["full"], (docs[r["i"]], r["full"])
         if r["ok"]:
             assert r["full"] == [], (docs[r["i"]], r["full"])
-    # the gate is not vacuous: some rows take it
-    assert any(r["ok"] for r in rows), ruleset
+        assert r["ok"] == (r["full"] == []), (docs[r["i"]], r["full"])
+    # the gate is not vacuous: some rows take it, unless no row is valid
+    assert any(r["ok"] for r in rows) or all(r["full"] for r in rows), \
+        ruleset
     return True
 
 
@@ -542,6 +545,57 @@ def test_gate_sound_unevaluated_fuzz(spark, seed):
         except UnsupportedRule:
             continue
     assert compared >= 12, compared
+
+
+@pytest.mark.parametrize("ruleset", [
+    {"not": {"type": "string"}},
+    {"oneOf": [{"type": "integer", "minimum": 10},
+               {"type": "string", "maxLength": 3},
+               {"type": "object", "required": ["k"]}]},
+    {"if": {"type": "object", "required": ["k"]},
+     "then": {"properties": {"k": {"type": "integer"}}},
+     "else": {"type": ["array", "string"]}},
+])
+def test_combinator_gates_exact(spark, ruleset):
+    """``not`` / ``oneOf`` / ``if`` read their branches' exact gates, so
+    the root has a gate, and per row it equals the walker's verdict."""
+    from valico_spark.compiler.variantcolumns import (
+        compile_variant_ruleset, parse_documents,
+    )
+
+    docs = MIXED_DOCS[1:] + _fuzz_corpus([4])[:150]
+    _, ok = compile_variant_ruleset(ruleset, F.col("doc"))
+    assert ok is not None
+    assert _assert_gate_sound(spark, docs, ruleset)
+    rows = (spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
+                                  "i long, j string")
+            .withColumn("doc", parse_documents(F.col("j")))
+            .select("i", ok.alias("ok")).collect())
+    expected = _oracle(docs, ruleset)
+    assert {r["i"]: r["ok"] for r in rows} == \
+        {i: valid for i, (valid, _) in enumerate(expected)}
+
+
+def test_count_view_is_violation_count(spark):
+    """The VARIANT count view counts the violations without building
+    them: it equals ``size(violations)`` on every row of the fuzz
+    corpus."""
+    from valico_spark.compiler.variantcolumns import (
+        compile_variant_checked, parse_documents,
+    )
+
+    docs = _fuzz_corpus([1, 2])
+    df = (spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
+                                "i long, j string")
+          .withColumn("doc", parse_documents(F.col("j"))))
+    most = []
+    for ruleset in (FUZZ_RULESET, {"oneOf": [FUZZ_RULESET, {"not": {}}]}):
+        checked = compile_variant_checked(ruleset, F.col("doc"))
+        rows = df.select(F.size(checked.viol()).alias("size"),
+                         checked.count().alias("count")).collect()
+        assert all(r["size"] == r["count"] for r in rows)
+        most.append(max(r["count"] for r in rows))
+    assert most[0] > 1 and most[1] == 1, most
 
 
 def test_docs_ruleset_plan_counts(spark, tmp_path):

@@ -4,10 +4,14 @@ A brand-new engine (NOT a port) with the query/validation capabilities of
 s-panferov/valico (JSON Schema draft-07 / draft-2019-09 validation + a
 Grape-style coercion DSL), re-expressed Spark-first:
 
-* A **rule compiler** (`valico_spark.compiler`) turns a valico-style
-  JSON-Schema ruleset into vectorized Spark SQL ``Column`` predicates and
-  violation-row constructors evaluated by Catalyst/Tungsten (whole-stage
-  codegen; no per-row Python in the hot path).
+* A **rule compiler** (`valico_spark.compiler.columns`) turns a
+  valico-style JSON-Schema ruleset into vectorized Spark SQL ``Column``
+  predicates and violation-row constructors evaluated by
+  Catalyst/Tungsten (whole-stage codegen; no per-row Python in the hot
+  path). It has one emitter per keyword, written against a *target*
+  that answers the JSON type tests and reads the value: typed Spark
+  rows decide the tests at compile time, VARIANT documents
+  (``compiler.variantcolumns``) per row.
 * A **reference-semantics core** (`valico_spark.compiler.pyvalidator`)
   reproduces valico's exact verdicts and ``{code, title, path, detail}``
   violation rows for arbitrary dynamic JSON documents. Its boolean gate

@@ -52,7 +52,7 @@ from __future__ import annotations
 import functools
 import math
 from dataclasses import dataclass
-from typing import Any, Callable, Optional
+from typing import Any, Callable, Optional, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -183,14 +183,17 @@ class Checked:
     built on first use: ``viol()`` the violations array, ``ok()`` a
     boolean that holds exactly when the part has no violations (None when
     the part has no exact boolean form) and ``count()`` the number of
-    violations (``size(viol())`` unless given)."""
+    violations (``size(viol())`` unless given). ``empty``: the part can
+    never emit, so its views read no value."""
 
     def __init__(self, viol: Callable[[], Column],
                  ok: Optional[Callable[[], Optional[Column]]] = None,
-                 count: Optional[Callable[[], Column]] = None):
+                 count: Optional[Callable[[], Column]] = None,
+                 empty: bool = False):
         self.viol = functools.cache(viol)
         self.ok = functools.cache(ok or (lambda: None))
         self.count = functools.cache(count or (lambda: F.size(self.viol())))
+        self.empty = empty
 
     def gated(self) -> Column:
         """The violations array behind its gate, when it has one."""
@@ -202,21 +205,22 @@ def _one_if(cond: Column) -> Column:
 
 
 def _check(bad: Column, code: str, path: Column,
-           detail: Optional[str] = None, at: str = "") -> Checked:
+           detail: Optional[str | Column] = None, at: str = "") -> Checked:
     """A leaf: one ``code`` violation at ``path`` + ``at`` when ``bad`` is
     TRUE. The only place a leaf writes its condition; the gate and the
     count read the same column, and only the violations view builds the
     violation struct (the count view of a ruleset then costs a few JVM
     calls per leaf, not a struct's worth).
-    ``bad`` is never NULL on typed columns: each leaf ANDs its condition
-    with the value's ``isNotNull``, and the conditions on a present value
-    are NULL-free. So ``~bad`` is exact, and Catalyst folds it into the
-    parent's ``isnull(value) OR`` guard, which a ``coalesce`` would
-    block."""
+    ``bad`` is never NULL: each leaf ANDs its condition with the value's
+    presence and type test (``_present``), and the conditions on a
+    present value of the tested type are NULL-free. So ``~bad`` is exact,
+    and Catalyst folds it into the parent's ``isnull(value) OR`` guard,
+    which a ``coalesce`` would block."""
     def viol() -> Column:
         where = F.concat(path, F.lit(at)) if at else path
-        return _maybe(bad, make_violation(
-            code, where, None if detail is None else F.lit(detail)))
+        if isinstance(detail, str):
+            return _maybe(bad, make_violation(code, where, F.lit(detail)))
+        return _maybe(bad, make_violation(code, where, detail))
 
     return Checked(viol, lambda: ~bad, lambda: _one_if(bad))
 
@@ -248,7 +252,8 @@ def _all(parts: list[Optional[Checked]]) -> Checked:
         return functools.reduce(Column.__add__, counts) if counts \
             else F.lit(0)
 
-    return Checked(lambda: _concat([p.viol() for p in parts]), ok, count)
+    return Checked(lambda: _concat([p.viol() for p in parts]), ok, count,
+                   empty=all(p.empty for p in parts))
 
 
 def _when(cond: Column, part: Checked) -> Checked:
@@ -318,23 +323,43 @@ def _pick(test: Checked, then: Checked, other: Checked) -> Checked:
                      .otherwise(other.count()))
 
 
-@dataclass
-class Target:
-    """The value a subschema is applied to."""
-    col: Column
-    dtype: T.DataType | None   # None → dynamic (inside map values)
-    path: Column               # JSON-pointer string column
-    # NULL ≡ absent. Value keywords skip absent values; `required`
-    # (evaluated by the parent) is the only keyword that reports them.
-
-    def child(self, col: Column, dtype, path: Column) -> "Target":
-        return Target(col=col, dtype=dtype, path=path)
+def _valid(node: Checked) -> Column:
+    """``node`` emits no violations: its gate where that is exact, else a
+    zero count."""
+    ok = node.ok()
+    return node.count() == 0 if ok is None else ok
 
 
-def spark_json_types(dtype: T.DataType | None) -> set[str] | None:
-    """JSON primitive types a Spark type can materialize. None = unknown."""
-    if dtype is None:
+#: a type test: decided at compile time (True / False) or per row (a
+#: boolean Column)
+Test = Union[bool, Column]
+
+#: the target type test for each JSON type name
+_TYPE_TESTS = {"null": "is_null", "boolean": "is_bool", "string": "is_str",
+               "integer": "is_int", "number": "is_num", "object": "is_obj",
+               "array": "is_arr"}
+
+
+def _typed(test: Test, cond: Optional[Column] = None) -> Optional[Column]:
+    """``cond`` where the type ``test`` holds; None when it never does."""
+    if test is False:
         return None
+    if cond is None:
+        return F.lit(True) if test is True else test
+    return cond if test is True else test & cond
+
+
+def _present(t: Any, test: Test) -> Optional[Column]:
+    """``t`` holds a value that passes the type ``test`` (value keywords
+    skip absent and wrong-typed values, validators/mod.rs:24-33); None
+    when no value can."""
+    if test is False:
+        return None
+    return t.col.isNotNull() if test is True else t.col.isNotNull() & test
+
+
+def spark_json_types(dtype: T.DataType) -> set[str]:
+    """JSON primitive types a Spark type can materialize."""
     if isinstance(dtype, T.StringType):
         return {"string"}
     if isinstance(dtype, T.BooleanType):
@@ -359,26 +384,145 @@ def _is_float(dtype) -> bool:
     return isinstance(dtype, (T.FloatType, T.DoubleType, T.DecimalType))
 
 
-def _is_numeric(dtype) -> bool:
-    return isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType,
-                              T.LongType, T.FloatType, T.DoubleType,
-                              T.DecimalType))
+@dataclass
+class Target:
+    """The value a subschema is applied to, as a typed Spark column.
+
+    A target answers the JSON type tests (``is_obj`` / ``is_arr`` /
+    ``is_num`` / ``is_int`` / ``is_str`` / ``is_bool`` / ``is_null``)
+    and reads the value (``num`` / ``str`` / ``bool`` / ``obj`` /
+    ``arr``); the keyword emitters of :class:`ColumnCompiler` are written
+    against that surface alone. This typed target decides every test at
+    compile time from the Spark type; only the integer-ness of a float
+    column is tested per row (type_.rs:23-27). The VARIANT target
+    (``compiler.variantcolumns``) answers the same tests per row.
+    """
+    col: Column
+    dtype: T.DataType
+    path: Column               # JSON-pointer string column
+    # NULL ≡ absent. Value keywords skip absent values; `required`
+    # (evaluated by the parent) is the only keyword that reports them.
+
+    def child(self, col: Column, dtype, path: Column) -> "Target":
+        return Target(col=col, dtype=dtype, path=path)
+
+    def _is(self, json_type: str) -> bool:
+        return json_type in spark_json_types(self.dtype)
+
+    @property
+    def is_obj(self) -> Test:
+        return self._is("object")
+
+    @property
+    def is_arr(self) -> Test:
+        return self._is("array")
+
+    @property
+    def is_num(self) -> Test:
+        return self._is("number")
+
+    @property
+    def is_int(self) -> Test:
+        if self._is("integer") and _is_float(self.dtype):
+            return self.col == F.floor(self.col)
+        return self._is("integer")
+
+    @property
+    def is_str(self) -> Test:
+        return self._is("string")
+
+    @property
+    def is_bool(self) -> Test:
+        return self._is("boolean")
+
+    @property
+    def is_null(self) -> Test:
+        # JSON null ≡ absent in typed mode: a present value is never null
+        return False
+
+    def num_class(self, is_float: bool) -> Test:
+        """A number of serde's float class (``is_float``) or integer
+        class: nested ``const`` / ``enum`` numbers match strictly."""
+        return self._is("number") and _is_float(self.dtype) == is_float
+
+    @property
+    def num(self) -> Column:
+        return self.col
+
+    @property
+    def str(self) -> Optional[Column]:
+        """None for date/time columns: their JSON strings are not the
+        column's Spark string, so string keywords skip them."""
+        return self.col if isinstance(self.dtype, T.StringType) else None
+
+    @property
+    def bool(self) -> Column:
+        return self.col
+
+    @property
+    def obj(self) -> Column:
+        return self.col
+
+    @property
+    def arr(self) -> Column:
+        return self.col
+
+    @property
+    def fields(self) -> Optional[list]:
+        """The struct fields of an object with static keys; None for an
+        object with open keys (a map)."""
+        return (self.dtype.fields if isinstance(self.dtype, T.StructType)
+                else None)
+
+    def has_key(self, key: str) -> Column:
+        """The object (a struct or map) holds ``key``."""
+        if isinstance(self.dtype, T.MapType):
+            return F.map_contains_key(self.col, F.lit(key))
+        if key in self.dtype.fieldNames():
+            return self.col.getField(key).isNotNull()
+        return F.lit(False)
+
+    def elem(self, x: Column, path: Column) -> "Target":
+        return Target(x, self.dtype.elementType, path)
+
+    def value(self, x: Column, path: Column) -> "Target":
+        return Target(x, self.dtype.valueType, path)
+
+    def key(self, k: Column, path: Column) -> "Target":
+        return Target(k, T.StringType(), path)
+
+    @property
+    def all_distinct(self) -> Column:
+        # O(n) array_distinct vs the reference's O(n²) loop
+        # (validators/unique_items.rs:18 'TODO quicker algorithm')
+        return F.size(F.array_distinct(self.col)) == F.size(self.col)
+
+    def node(self, schema: Any, build: Callable[["Target"], Checked]
+             ) -> Checked:
+        """A schema node at this value: compiled directly against it."""
+        return build(self)
 
 
 class ColumnCompiler:
-    """Compiles one ruleset against one typed target.
+    """Compiles one ruleset against one target (typed or VARIANT).
 
     Mirrors the reference's compile-once / validate-many split
     (schema.rs:128 vs :567): compilation happens once on the driver, the
     emitted Column DAG is optimized by Catalyst and codegen'd.
+    ``$ref`` inlines at compile time up to ``_UNROLL_DEPTH`` nested nodes
+    and ``_REF_BUDGET`` inlined refs in all.
     """
+
+    _UNROLL_DEPTH = 24
+    _REF_BUDGET = math.inf
 
     def __init__(self, version: int = DRAFT7, root_schema: Any = None):
         self.version = version
         self.root_schema = root_schema  # for local $ref resolution
+        self._refs_inlined = 0
 
     # -- entry ----------------------------------------------------------
-    def compile(self, schema: Any, target: Target) -> Checked:
+    def compile(self, schema: Any, target: Any) -> Checked:
         """The :class:`Checked` views of ``schema`` at ``target``."""
         if inline_id_with_refs(self.root_schema
                                if self.root_schema is not None else schema):
@@ -388,11 +532,9 @@ class ColumnCompiler:
             # keywords/properties.rs:27-35 + scope.rs:236-257).  Pointer
             # inlining cannot reproduce that; the walker can.
             raise UnsupportedRule("inline $id together with $ref")
-        return self._node(schema, target, depth=0)
+        return self._at(schema, target, 0)
 
     # -- $ref (compile-time inlining; SURVEY.md §2.4) --------------------
-    _MAX_REF_DEPTH = 24
-
     def _resolve_ref(self, ref: str) -> Any:
         if not ref.startswith("#"):
             raise UnsupportedRule(f"external $ref {ref!r}")
@@ -411,9 +553,20 @@ class ColumnCompiler:
                 raise UnsupportedRule(f"unresolvable $ref {ref!r}")
         return node
 
+    def _inline_ref(self, ref: str, t: Any, depth: int) -> Checked:
+        self._refs_inlined += 1
+        if self._refs_inlined > self._REF_BUDGET:
+            raise UnsupportedRule("$ref inlining budget exhausted")
+        return self._node(self._resolve_ref(ref), t, depth + 1)
+
     # -- node ------------------------------------------------------------
-    def _node(self, schema: Any, target: Target, depth: int) -> Checked:
-        if depth > self._MAX_REF_DEPTH:
+    def _at(self, schema: Any, t: Any, depth: int) -> Checked:
+        """``schema`` at a new value ``t`` (an element, entry or key):
+        the target decides how the node is bound to it."""
+        return t.node(schema, lambda bound: self._node(schema, bound, depth))
+
+    def _node(self, schema: Any, target: Any, depth: int) -> Checked:
+        if depth > self._UNROLL_DEPTH:
             raise UnsupportedRule("recursive $ref beyond inlining depth")
         if schema is True:
             schema = {}
@@ -425,16 +578,14 @@ class ColumnCompiler:
         if "$ref" in schema and self.version < DRAFT2019:
             # exclusive pre-2019-09: $ref replaces all siblings
             # (schema.rs:344-362)
-            return self._node(self._resolve_ref(schema["$ref"]), target,
-                              depth + 1)
+            return self._inline_ref(schema["$ref"], target, depth)
 
         s, t = schema, target
         d = depth
         # emit parts in the walker's validator linearization so nested
         # states payloads (any_of/one_of) are byte-equal
         handlers = {
-            "$ref": lambda: self._node(self._resolve_ref(s["$ref"]), t,
-                                       d + 1),
+            "$ref": lambda: self._inline_ref(s["$ref"], t, d),
             "type": lambda: self._type(s["type"], t),
             "enum": lambda: self._enum(s["enum"], t),
             "const": lambda: self._const(s["const"], t),
@@ -485,20 +636,14 @@ class ColumnCompiler:
                      for canon in keyword_dispatch_order(s, self.version)
                      if canon in handlers])
 
-    def _valid(self, schema: Any, target: Target, depth: int) -> Column:
-        """``schema`` emits no violations at ``target``: its gate where
-        that is exact, else a zero count."""
-        node = self._node(schema, target, depth)
-        ok = node.ok()
-        return node.count() == 0 if ok is None else ok
-
     # -- unevaluatedProperties (2019-09) ----------------------------------
     # SURVEY.md §7 hard-part 1: valico's `evaluated` set is dynamic —
     # properties mark a key evaluated only when that key's subschema
     # PASSED (validators/properties.rs:52-56), anyOf merges the sets of
     # valid branches, oneOf takes the single valid branch, if/then/else
-    # merge conditionally. For typed struct targets the key space is
-    # static, so the whole set compiles to one boolean column per key.
+    # merge conditionally. For struct targets the key space is static, so
+    # the whole set compiles to one boolean column per key; objects with
+    # open keys (maps, VARIANT objects) test each entry at run time.
 
     def _evaluated_keys(self, s: dict, t: Target,
                         depth: int) -> dict[str, Column]:
@@ -506,9 +651,9 @@ class ColumnCompiler:
         validators/mod.rs evaluated-set semantics for a StructType target."""
         import re as _re
 
-        if not isinstance(t.dtype, T.StructType):
+        if t.fields is None:
             raise UnsupportedRule("evaluated-set analysis needs a struct")
-        fields = {f.name: f for f in t.dtype.fields}
+        fields = {f.name: f for f in t.fields}
         ev: dict[str, Column] = {}
 
         def mark(key: str, cond: Column) -> None:
@@ -527,7 +672,7 @@ class ColumnCompiler:
             if not isinstance(sub_n, dict):
                 raise UnsupportedRule("schema must be object/boolean")
             return (self._evaluated_keys(sub_n, t, depth + 1),
-                    self._valid(sub_n, t, depth + 1))
+                    _valid(self._node(sub_n, t, depth + 1)))
 
         if "$ref" in s:
             ref_ev = self._evaluated_keys(
@@ -544,21 +689,21 @@ class ColumnCompiler:
             matched = False
             if key in props:
                 matched = True
-                mark(key, present(key)
-                     & self._valid(props[key], child(key), depth + 1))
+                mark(key, present(key) & _valid(
+                    self._node(props[key], child(key), depth + 1)))
             for pat, psub in patterns.items():
                 if _re.search(pat, key):
                     matched = True
-                    mark(key, present(key)
-                         & self._valid(psub, child(key), depth + 1))
+                    mark(key, present(key) & _valid(
+                        self._node(psub, child(key), depth + 1)))
             if not matched and additional is not None:
                 if additional is True:
                     mark(key, present(key))  # properties.rs:106-108
                 elif additional is False:
                     pass  # forbidden, never evaluated
                 else:
-                    mark(key, present(key)
-                         & self._valid(additional, child(key), depth + 1))
+                    mark(key, present(key) & _valid(
+                        self._node(additional, child(key), depth + 1)))
 
         for sub in s.get("allOf", []):
             # allOf appends every branch state (of.rs:36-42): evaluated
@@ -620,76 +765,65 @@ class ColumnCompiler:
                     mark(key, present(key))
             elif uev is not False:
                 for key in fields:
-                    mark(key, present(key)
-                         & self._valid(uev, child(key), depth + 1))
+                    mark(key, present(key) & _valid(
+                        self._node(uev, child(key), depth + 1)))
         return ev
 
-    def _evaluated_items(self, s: dict, t: Target,
-                         depth: int) -> Column:
+    def _evaluated_items(self, s: Any, t: Any, depth: int) -> Column:
         """array<boolean> aligned with the target array: element i
         evaluated? Mirrors validators/items.rs evaluated insertions
         (success-conditioned) and the combinator merge rules. valico's
         ``contains`` does NOT mark evaluated (validators/contains.rs)."""
-        if not isinstance(t.dtype, T.ArrayType):
-            raise UnsupportedRule("evaluated-items needs an array target")
-        etype = t.dtype.elementType
-        false_arr = F.transform(t.col, lambda x: F.lit(False))
+        if not isinstance(s, dict):
+            s = {} if s is True else {"not": {}}
+        arr = t.arr
+        false_arr = F.transform(arr, lambda x: F.lit(False))
 
         def merge(a: Column, b: Column) -> Column:
             return F.zip_with(a, b, lambda x, y: x | y)
 
-        def gate(arr: Column, cond: Column) -> Column:
-            return F.transform(arr, lambda x: cond & x)
+        def gate(a: Column, cond: Column) -> Column:
+            return F.transform(a, lambda x: cond & x)
+
+        def elem_ok(sub: Any, x: Column) -> Column:
+            return _valid(self._at(sub, t.elem(x, F.lit("")), depth + 1))
 
         if "unevaluatedItems" in s:
             # annotation rule (see _evaluated_keys): per-item uev
             # success marks the item evaluated for the parent
             uev = s["unevaluatedItems"]
             if uev is True:
-                return F.transform(t.col, lambda x: F.lit(True))
+                return F.transform(arr, lambda x: F.lit(True))
             rest_s = {k: v for k, v in s.items() if k != "unevaluatedItems"}
             ev_rest = self._evaluated_items(rest_s, t, depth)
             if uev is False:
                 return ev_rest
-            return merge(ev_rest, F.transform(
-                t.col,
-                lambda x: self._valid(uev, Target(x, etype, F.lit("")),
-                                      depth + 1)))
+            return merge(ev_rest, F.transform(arr,
+                                              lambda x: elem_ok(uev, x)))
 
         ev = false_arr
 
         items = s.get("items")
         additional = s.get("additionalItems")
         if isinstance(items, (dict, bool)):
-            ev = merge(ev, F.transform(
-                t.col,
-                lambda x: self._valid(items, Target(x, etype, F.lit("")),
-                                      depth + 1)))
+            ev = merge(ev, F.transform(arr, lambda x: elem_ok(items, x)))
         elif isinstance(items, list):
             def positional(x: Column, i: Column) -> Column:
                 out = F.lit(False)
                 for idx, sub in enumerate(items):
-                    valid = self._valid(sub, Target(x, etype, F.lit("")),
-                                        depth + 1)
-                    out = F.when(i == idx, valid).otherwise(out)
+                    out = F.when(i == idx, elem_ok(sub, x)).otherwise(out)
                 if additional is True:
                     out = F.when(i >= len(items), F.lit(True)) \
                         .otherwise(out)  # items.rs:118-123
                 elif isinstance(additional, dict):
-                    valid = self._valid(additional,
-                                        Target(x, etype, F.lit("")),
-                                        depth + 1)
-                    out = F.when(i >= len(items), valid).otherwise(out)
+                    out = F.when(i >= len(items), elem_ok(additional, x)) \
+                        .otherwise(out)
                 return out
-            ev = merge(ev, F.transform(t.col, positional))
+            ev = merge(ev, F.transform(arr, positional))
 
         def branch(sub) -> tuple[Column, Column]:
-            sub_n = {"not": {}} if sub is False else ({} if sub is True
-                                                      else sub)
-            if not isinstance(sub_n, dict):
-                raise UnsupportedRule("schema must be object/boolean")
-            return (self._evaluated_items(sub_n, t, depth + 1),
-                    self._valid(sub_n, t, depth + 1))
+            return (self._evaluated_items(sub, t, depth + 1),
+                    _valid(self._node(sub, t, depth + 1)))
 
         for sub in s.get("allOf", []):
             bev, _ = branch(sub)
@@ -722,17 +856,15 @@ class ColumnCompiler:
             ev = merge(ev, rev)
         return ev
 
-    def _unevaluated_items(self, s: dict, t: Target, depth: int) -> Column:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise UnsupportedRule("unevaluatedItems on untyped target")
+    def _unevaluated_items(self, s: dict, t: Any, depth: int) -> Column:
+        present = _present(t, t.is_arr)
+        if present is None:
             return empty_violations()
         spec = s["unevaluatedItems"]
         rest = {k: v for k, v in s.items() if k != "unevaluatedItems"}
         ev = self._evaluated_items(rest, t, depth)
-        etype = t.dtype.elementType
         idx_ev = F.zip_with(
-            t.col, ev, lambda x, e: F.struct(x.alias("x"), e.alias("e")))
+            t.arr, ev, lambda x, e: F.struct(x.alias("x"), e.alias("e")))
 
         if spec is True:
             return empty_violations()
@@ -745,19 +877,17 @@ class ColumnCompiler:
                 ).otherwise(empty_violations())
         else:
             def emit(pair: Column, i: Column) -> Column:
-                child = Target(pair["x"], etype,
-                               F.concat(t.path, F.lit("/"),
-                                        i.cast("string")))
+                child = t.elem(pair["x"], F.concat(t.path, F.lit("/"),
+                                                   i.cast("string")))
                 return F.when(~pair["e"],
-                              self._node(spec, child, depth + 1).viol()
+                              self._at(spec, child, depth + 1).viol()
                               ).otherwise(empty_violations())
-        return F.when(t.col.isNotNull(),
-                      F.flatten(F.transform(idx_ev, emit))
+        return F.when(present, F.flatten(F.transform(idx_ev, emit))
                       ).otherwise(empty_violations())
 
-    def _entry_evaluated(self, s: dict, t: Target, depth: int,
+    def _entry_evaluated(self, s: Any, t: Any, depth: int,
                          key: Column, val: Column) -> Column:
-        """Runtime 'is this map entry evaluated?' boolean — the open-map
+        """Runtime 'is this entry evaluated?' boolean — the open-key
         analogue of ``_evaluated_keys`` (keys are dynamic, so property
         matching happens per entry: equality for ``properties``, rlike
         for ``patternProperties``), with the same success-conditioned
@@ -765,13 +895,12 @@ class ColumnCompiler:
         semantics (validators/properties.rs:52-56, of.rs:94-110)."""
         if not isinstance(s, dict):
             s = {} if s is True else {"not": {}}
-        vtype = t.dtype.valueType
 
         def sub_ok(sub) -> Column:
-            return self._valid(sub, Target(val, vtype, F.lit("")), depth + 1)
+            return _valid(self._at(sub, t.value(val, F.lit("")), depth + 1))
 
         def branch_valid(sub) -> Column:
-            return self._valid(sub, t, depth + 1)
+            return _valid(self._node(sub, t, depth + 1))
 
         if "unevaluatedProperties" in s:
             # annotation rule (see _evaluated_keys): per-entry uev
@@ -800,11 +929,7 @@ class ColumnCompiler:
         for pat, psub in patterns.items():
             conds.append(key.rlike(unicode_pattern(pat)) & sub_ok(psub))
         if additional is not None:
-            is_known = F.lit(False)
-            if props:
-                is_known = is_known | key.isin(list(props))
-            for pat in patterns:
-                is_known = is_known | key.rlike(unicode_pattern(pat))
+            is_known = _known(key, props, patterns)
             if additional is True:
                 conds.append(~is_known)
             elif additional is not False:
@@ -839,53 +964,25 @@ class ColumnCompiler:
         deps.update(s.get("dependentSchemas", {}))
         for trig, dsub in deps.items():
             if isinstance(dsub, (dict, bool)):
-                trig_present = F.map_contains_key(t.col, F.lit(trig))
-                conds.append(trig_present & self._entry_evaluated(
+                conds.append(t.has_key(trig) & self._entry_evaluated(
                     dsub, t, depth + 1, key, val))
         out = F.lit(False)
         for c in conds:
             out = out | c
         return out
 
-    def _unevaluated_properties_map(self, s: dict, t: Target,
-                                    depth: int) -> Column:
-        spec = s["unevaluatedProperties"]
-        if spec is True:
-            return empty_violations()
-        rest = {k: v for k, v in s.items()
-                if k != "unevaluatedProperties"}
-        vtype = t.dtype.valueType
-
-        def emit(e: Column) -> Column:
-            ev = self._entry_evaluated(rest, t, depth, e["key"], e["value"])
-            path = F.concat(t.path, F.lit("/"), e["key"])
-            if spec is False:
-                return F.when(~ev, F.array(make_violation(
-                    "unevaluated", path,
-                    F.lit("Unevaluated properties are not allowed")))
-                ).otherwise(empty_violations())
-            child = Target(e["value"], vtype, path)
-            return F.when(~ev, self._node(spec, child, depth + 1).viol()) \
-                    .otherwise(empty_violations())
-
-        return F.when(
-            t.col.isNotNull(),
-            F.flatten(F.transform(F.map_entries(t.col), lambda e: emit(e)))
-        ).otherwise(empty_violations())
-
-    def _unevaluated_properties(self, s: dict, t: Target,
+    def _unevaluated_properties(self, s: dict, t: Any,
                                 depth: int) -> Column:
-        if not isinstance(t.dtype, T.StructType):
-            if t.dtype is None:
-                raise UnsupportedRule("unevaluatedProperties on untyped")
-            if isinstance(t.dtype, T.MapType):
-                return self._unevaluated_properties_map(s, t, depth)
+        present = _present(t, t.is_obj)
+        if present is None:
             return empty_violations()
         spec = s["unevaluatedProperties"]
+        if t.fields is None:
+            return self._unevaluated_entries(s, t, depth, present)
         rest = {k: v for k, v in s.items() if k != "unevaluatedProperties"}
         ev = self._evaluated_keys(rest, t, depth)
         parts = []
-        for f_ in t.dtype.fields:
+        for f_ in t.fields:
             key = f_.name
             present = t.col.isNotNull() & t.col.getField(key).isNotNull()
             unevaluated = present & ~ev.get(key, F.lit(False))
@@ -903,10 +1000,34 @@ class ColumnCompiler:
                               .otherwise(empty_violations()))
         return _concat(parts)
 
+    def _unevaluated_entries(self, s: dict, t: Any, depth: int,
+                             present: Column) -> Column:
+        spec = s["unevaluatedProperties"]
+        if spec is True:
+            return empty_violations()
+        rest = {k: v for k, v in s.items()
+                if k != "unevaluatedProperties"}
+
+        def emit(e: Column) -> Column:
+            ev = self._entry_evaluated(rest, t, depth, e["key"], e["value"])
+            path = F.concat(t.path, F.lit("/"), e["key"])
+            if spec is False:
+                return F.when(~ev, F.array(make_violation(
+                    "unevaluated", path,
+                    F.lit("Unevaluated properties are not allowed")))
+                ).otherwise(empty_violations())
+            child = t.value(e["value"], path)
+            return F.when(~ev, self._at(spec, child, depth + 1).viol()) \
+                    .otherwise(empty_violations())
+
+        return F.when(
+            present, F.flatten(F.transform(F.map_entries(t.obj), emit))
+        ).otherwise(empty_violations())
+
     # -- keyword emitters -------------------------------------------------
     # each returns a Checked, or None when it can never emit (a static
-    # no-op: the keyword is decided by the column type alone)
-    def _type(self, ty: Any, t: Target) -> Optional[Checked]:
+    # no-op: the keyword is decided by the target's type alone)
+    def _type(self, ty: Any, t: Any) -> Optional[Checked]:
         types = [ty] if isinstance(ty, str) else list(ty)
         for x in types:
             if x not in PRIMITIVE_TYPES:
@@ -915,134 +1036,125 @@ class ColumnCompiler:
             detail = f"The value must be {ty}"
         else:
             detail = "The value must be any of: " + ", ".join(types)
-        possible = spark_json_types(t.dtype)
-        if possible is None:
-            raise UnsupportedRule("dynamic type check on untyped target")
-        # "null" in the requested set: absent/NULL passes anyway (we skip
-        # on NULL), so it adds nothing beyond the skip guard.
-        sat = possible & set(types)
-        whole = (_is_float(t.dtype) and "integer" in types
-                 and "number" not in types)
-        if not sat:
-            # can never match → violation whenever present
-            bad = t.col.isNotNull()
-        elif whole:
-            # runtime whole-float check (type_.rs:23-27)
-            bad = t.col.isNotNull() & ~(t.col == F.floor(t.col))
-        else:
+        tests = [getattr(t, _TYPE_TESTS[x]) for x in types]
+        if any(x is True for x in tests):
             return None  # statically satisfied
+        tests = [x for x in tests if x is not False]
+        # no test can hold → violation whenever present
+        bad = t.col.isNotNull() if not tests else \
+            t.col.isNotNull() & ~functools.reduce(Column.__or__, tests)
         return _check(bad, "wrong_type", t.path, detail)
-    def _match_value(self, value: Any, col: Column, dtype,
-                     top_level: bool) -> Column | None:
-        """Boolean column: does ``col`` (of ``dtype``) equal ``value``
-        under the reference's matcher (helpers.rs:137-145)?
-        Top-level numbers compare through f64; NESTED numbers are strict
-        serde equality (int vs float are distinct Number variants — an
-        int constant can never equal a value held by a float column and
-        vice versa). Returns None when the match is statically impossible.
-        """
+
+    def _match(self, value: Any, t: Any, top_level: bool) -> Column | None:
+        """Boolean column: does ``t`` equal ``value`` under the
+        reference's matcher (helpers.rs:137-145)? Top-level numbers
+        compare through f64; NESTED numbers are strict serde equality
+        (int vs float are distinct Number variants). Objects must have
+        the exact key set, arrays the exact length. Returns None when
+        the match is statically impossible."""
         if value is None:
-            # JSON null ≡ absent in typed mode; a present value never
-            # matches the null constant
-            return None
+            return _typed(t.is_null)
         if isinstance(value, bool):
-            if isinstance(dtype, T.BooleanType):
-                return col == F.lit(value)
-            return None
+            return _typed(t.is_bool, t.bool == F.lit(value))
         if is_number(value):
-            if not _is_numeric(dtype):
-                return None
             if top_level:
-                return col.cast("double") == F.lit(float(value))
-            # strict: type classes must match
-            if isinstance(value, float) != _is_float(dtype):
-                return None
-            return col == F.lit(value)
+                return _typed(t.is_num, t.num.cast("double")
+                              == F.lit(float(value)))
+            return _typed(t.num_class(isinstance(value, float)),
+                          t.num == F.lit(value))
         if isinstance(value, str):
-            if isinstance(dtype, T.StringType):
-                return col == F.lit(value)
-            return None
+            sv = t.str
+            return None if sv is None else _typed(t.is_str,
+                                                  sv == F.lit(value))
         if isinstance(value, list):
-            if not isinstance(dtype, T.ArrayType):
+            if t.is_arr is False:
                 return None
-            et = dtype.elementType
+            arr = t.arr
             if len(value) == 0:
-                return F.size(col) == 0
-            elem_preds = []
+                return _typed(t.is_arr, F.size(arr) == 0)
+            out = F.size(arr) == len(value)
             for i, v in enumerate(value):
-                m = self._match_value(v, F.try_element_at(col, F.lit(i + 1)), et,
-                                      top_level=False)
+                el = t.elem(F.try_element_at(arr, F.lit(i + 1)), F.lit(""))
+                m = self._match(v, el, top_level=False)
                 if m is None and v is not None:
                     return None  # some element can never match
-                if v is None:
-                    m = F.try_element_at(col, F.lit(i + 1)).isNull()
-                elem_preds.append(m)
-            out = F.size(col) == len(value)
-            for m in elem_preds:
+                if m is None:
+                    m = el.col.isNull()  # a NULL element is JSON null
                 out = out & F.coalesce(m, F.lit(False))
-            return out
+            return _typed(t.is_arr, out)
         if isinstance(value, dict):
-            if not isinstance(dtype, T.StructType):
+            if t.is_obj is False:
                 return None
-            fields = {f.name: f for f in dtype.fields}
+            if t.fields is None:  # open keys: the exact key set
+                m = t.obj
+                out = F.size(F.map_keys(m)) == len(value)
+                for k, sub in value.items():
+                    v = F.element_at(m, F.lit(k))
+                    mv = self._match(sub, t.value(v, F.lit("")), False)
+                    if mv is None:
+                        return None
+                    out = out & v.isNotNull() & F.coalesce(mv, F.lit(False))
+                return _typed(t.is_obj, out)
+            fields = {f.name: f for f in t.fields}
             if any(k not in fields for k in value):
                 return None  # const has a key the row type can't hold
             preds = []
-            for f_ in dtype.fields:
-                c = col.getField(f_.name)
+            for f_ in t.fields:
+                c = t.col.getField(f_.name)
                 if f_.name in value:
-                    m = self._match_value(value[f_.name], c, f_.dataType,
-                                          top_level=False)
+                    m = self._match(value[f_.name],
+                                    t.child(c, f_.dataType, F.lit("")),
+                                    top_level=False)
                     if m is None:
                         return None
                     preds.append(F.coalesce(m, F.lit(False)))
                 else:
                     preds.append(c.isNull())  # NULL ≡ absent
-            out = col.isNotNull()
+            out = t.col.isNotNull()
             for m in preds:
                 out = out & m
             return out
         raise UnsupportedRule(f"unsupported const value {value!r}")
 
-    def _enum(self, values: list, t: Target) -> Checked:
+    def _enum(self, values: list, t: Any) -> Checked:
         if not isinstance(values, list) or not values:
             raise UnsupportedRule("enum must be a non-empty array")
         return self._match_any(values, t, "enum")
 
-    def _const(self, value: Any, t: Target) -> Checked:
+    def _const(self, value: Any, t: Any) -> Checked:
         return self._match_any([value], t, "const")
 
-    def _match_any(self, values: list, t: Target, code: str) -> Checked:
-        if t.dtype is None:
-            raise UnsupportedRule(f"{code} on untyped target")
+    def _match_any(self, values: list, t: Any, code: str) -> Checked:
         ok = None
         for v in values:
-            m = self._match_value(v, t.col, t.dtype, top_level=True)
+            m = self._match(v, t, top_level=True)
             if m is not None:
                 ok = m if ok is None else (ok | m)
         bad = t.col.isNotNull() if ok is None else t.col.isNotNull() & ~ok
         return _check(bad, code, t.path)
 
-    def _bound(self, m: Any, op: str, t: Target) -> Optional[Checked]:
+    def _bound(self, m: Any, op: str, t: Any) -> Optional[Checked]:
         if not is_number(m):
             raise UnsupportedRule("bound must be a number")
-        if not _is_numeric(t.dtype) and t.dtype is not None:
+        present = _present(t, t.is_num)
+        if present is None:
             return None  # nonstrict skip, statically
-        c = t.col.cast("double")
+        c = t.num.cast("double")
         ok = {"min": c >= F.lit(float(m)), "emin": c > F.lit(float(m)),
               "max": c <= F.lit(float(m)), "emax": c < F.lit(float(m))}[op]
         code = "maximum" if op in ("max", "emax") else "minimum"
-        return _check(t.col.isNotNull() & ~ok, code, t.path)
+        return _check(present & ~ok, code, t.path)
 
-    def _multiple_of(self, k: Any, t: Target) -> Optional[Checked]:
+    def _multiple_of(self, k: Any, t: Any) -> Optional[Checked]:
         if not is_number(k) or float(k) <= 0:
             raise UnsupportedRule("multipleOf must be > 0")
-        if not _is_numeric(t.dtype) and t.dtype is not None:
+        present = _present(t, t.is_num)
+        if present is None:
             return None
         k = float(k)
-        c = t.col.cast("double")
-        if not _is_float(t.dtype) and k == math.floor(k):
-            ok = (t.col % F.lit(int(k))) == 0
+        c = t.num.cast("double")
+        if t.is_int is True and k == math.floor(k):
+            ok = (t.num % F.lit(int(k))) == 0
         elif k == math.floor(k):
             # value may be fractional: integral branch applies only when
             # value.fract()==0 (multiple_of.rs:22-24)
@@ -1055,26 +1167,28 @@ class ColumnCompiler:
             rem = (c / F.lit(k)) % F.lit(1.0)
             ok = ((F.isnan(rem) | (rem < F.lit(EPSILON)))
                   & (rem < F.lit(1.0 - EPSILON)))
-        return _check(t.col.isNotNull() & ~ok, "multiple_of", t.path)
+        return _check(present & ~ok, "multiple_of", t.path)
 
-    def _length(self, n: Any, is_max: bool, t: Target) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
+    def _length(self, n: Any, is_max: bool, t: Any) -> Optional[Checked]:
+        present = _present(t, t.is_str)
+        if present is None or t.str is None:
             return None
         # F.length = UTF8String.numChars = Unicode code points — exact
         # parity with chars().count() (maxmin_length.rs:21,46), including
         # supplementary-plane characters.
-        ln = F.length(t.col)
+        ln = F.length(t.str)
         ok = ln <= F.lit(int(n)) if is_max else ln >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok,
+        return _check(present & ~ok,
                       "max_length" if is_max else "min_length", t.path)
 
-    def _pattern(self, p: Any, t: Target) -> Optional[Checked]:
+    def _pattern(self, p: Any, t: Any) -> Optional[Checked]:
         if not isinstance(p, str):
             raise UnsupportedRule("pattern must be a string")
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
+        present = _present(t, t.is_str)
+        if present is None or t.str is None:
             return None
-        ok = t.col.rlike(unicode_pattern(p))  # unanchored, like find()
-        return _check(t.col.isNotNull() & ~ok, "pattern", t.path)
+        ok = t.str.rlike(unicode_pattern(p))  # unanchored, like find()
+        return _check(present & ~ok, "pattern", t.path)
 
     # regex approximations for the JVM-side format fast path; semantics
     # pinned against pyvalidator in tests (exotic formats → fallback).
@@ -1150,131 +1264,143 @@ class ColumnCompiler:
                 & ((off_m == "") | (off_m.cast("int") <= 59))
         return ok
 
-    def _format(self, name: Any, t: Target) -> Optional[Checked]:
+    def _format(self, name: Any, t: Any) -> Optional[Checked]:
         if not isinstance(name, str):
             raise UnsupportedRule("format must be a string")
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
+        present = _present(t, t.is_str)
+        if present is None or t.str is None:
             return None
-        ok = self.format_ok_expr(name, t.col)
+        ok = self.format_ok_expr(name, t.str)
         if ok is None:
             return None
-        return _check(t.col.isNotNull() & ~ok, "format", t.path,
+        return _check(present & ~ok, "format", t.path,
                       self._FORMAT_DETAILS[name])
 
-    def _required(self, keys: Any, t: Target) -> Optional[Checked]:
+    def _required(self, keys: Any, t: Any) -> Optional[Checked]:
         if not isinstance(keys, list):
             raise UnsupportedRule("required must be an array")
-        if not isinstance(t.dtype, (T.StructType, T.MapType)):
-            if t.dtype is None:
-                raise UnsupportedRule("required on untyped target")
+        present = _present(t, t.is_obj)
+        if present is None:
             return None  # non-object target → skip
-        return _all([_check(t.col.isNotNull() & ~_has_key(t, k),
+        # key presence, not value non-nullness: a JSON null passes
+        # required (required.rs checks object containment)
+        return _all([_check(present & ~t.has_key(k),
                             "required", t.path, at="/" + k)
                      for k in keys])
 
-    def _properties(self, s: dict, t: Target,
-                    depth: int) -> Optional[Checked]:
+    def _properties(self, s: dict, t: Any, depth: int) -> Optional[Checked]:
         props = s.get("properties", {})
         additional = s.get("additionalProperties")
         patterns = s.get("patternProperties")
-        if isinstance(t.dtype, T.StructType):
-            if patterns:
-                raise UnsupportedRule(
-                    "patternProperties on struct targets (closed schema)")
-            # iterate FIELD order — the document key order of the
-            # serialized row (properties.rs:47 walks the object's keys),
-            # so states payloads are byte-equal to the walker's
-            parts = []
-            for f_ in t.dtype.fields:
-                key = f_.name
-                if key not in props and additional is not False \
-                        and not isinstance(additional, dict):
-                    continue
-                child = t.child(t.col.getField(key), f_.dataType,
-                                F.concat(t.path, F.lit("/" + key)))
-                present = t.col.isNotNull() & child.col.isNotNull()
-                if key in props:
-                    # valico validates a property only when the key
-                    # exists (properties.rs:47-67): NULL ≡ absent, so
-                    # the whole subschema — including combinators like
-                    # `not` that would otherwise fire on a vacuously-
-                    # skipped value — is gated on child presence
-                    parts.append(_when(
-                        present, self._node(props[key], child, depth + 1)))
-                elif additional is False:
-                    parts.append(_check(
-                        present, "properties", t.path,
-                        f"Additional property '{key}' is not allowed"))
-                elif isinstance(additional, dict):
-                    parts.append(_when(
-                        present, self._node(additional, child, depth + 1)))
-            return _all(parts)
-        if isinstance(t.dtype, T.MapType):
-            return Checked(lambda: self._properties_map(s, t, depth))
-        if t.dtype is None:
-            raise UnsupportedRule("properties on untyped target")
-        return None  # non-object → skip
+        present = _present(t, t.is_obj)
+        if present is None:
+            return None  # non-object → skip
+        if t.fields is None:
+            return self._open_properties(s, t, depth, present)
+        if patterns:
+            raise UnsupportedRule(
+                "patternProperties on struct targets (closed schema)")
+        # iterate FIELD order — the document key order of the
+        # serialized row (properties.rs:47 walks the object's keys),
+        # so states payloads are byte-equal to the walker's
+        parts = []
+        for f_ in t.fields:
+            key = f_.name
+            if key not in props and additional is not False \
+                    and not isinstance(additional, dict):
+                continue
+            child = t.child(t.col.getField(key), f_.dataType,
+                            F.concat(t.path, F.lit("/" + key)))
+            present = t.col.isNotNull() & child.col.isNotNull()
+            if key in props:
+                # valico validates a property only when the key
+                # exists (properties.rs:47-67): NULL ≡ absent, so
+                # the whole subschema — including combinators like
+                # `not` that would otherwise fire on a vacuously-
+                # skipped value — is gated on child presence
+                parts.append(_when(
+                    present, self._node(props[key], child, depth + 1)))
+            elif additional is False:
+                parts.append(_check(
+                    present, "properties", t.path,
+                    f"Additional property '{key}' is not allowed"))
+            elif isinstance(additional, dict):
+                parts.append(_when(
+                    present, self._node(additional, child, depth + 1)))
+        return _all(parts)
 
-    def _properties_map(self, s: dict, t: Target, depth: int) -> Column:
-        """properties/patternProperties/additionalProperties over
-        MapType(string, V) — open-keyed objects. ONE pass over
-        ``map_entries`` so violations come out in document key order
-        (properties.rs:47), with the walker's per-key sub-order:
-        property match, then each matching pattern, then additional."""
+    def _open_properties(self, s: dict, t: Any, depth: int,
+                         present: Column) -> Optional[Checked]:
+        """properties/patternProperties/additionalProperties over an
+        object with open keys (a map column or a VARIANT object).
+        Violations: ONE pass over ``map_entries`` so they come out in
+        document key order (properties.rs:47), with the walker's per-key
+        sub-order: property match, then each matching pattern, then
+        additional. Gate and count: each declared property through a
+        direct ``element_at`` lookup; patterns and additional through
+        the entries."""
         props = s.get("properties", {})
         additional = s.get("additionalProperties")
         patterns = s.get("patternProperties", {})
-        vtype = t.dtype.valueType
+        checks_rest = bool(patterns) or additional is False \
+            or isinstance(additional, dict)
+        if not props and not checks_rest:
+            return None
+        m = t.obj
+
+        def rest(key: Column, child: Any) -> list[Checked]:
+            """The pattern and additional parts at one entry."""
+            parts = [_when(key.rlike(unicode_pattern(p)),
+                           self._at(sub, child, depth + 1))
+                     for p, sub in patterns.items()]
+            is_known = _known(key, props, patterns)
+            if additional is False:
+                parts.append(_check(
+                    ~is_known, "properties", t.path,
+                    F.concat(F.lit("Additional property '"), key,
+                             F.lit("' is not allowed"))))
+            elif isinstance(additional, dict):
+                parts.append(_when(~is_known,
+                                   self._at(additional, child, depth + 1)))
+            return parts
 
         def entry_viols(e: Column) -> Column:
-            key, val = e["key"], e["value"]
-            child = Target(val, vtype, F.concat(t.path, F.lit("/"), key))
-
-            def sub(schema: Any) -> Column:
-                return self._node(schema, child, depth + 1).viol()
-
+            key = e["key"]
+            child = t.value(e["value"], F.concat(t.path, F.lit("/"), key))
             parts = []
             prop_case = None
-            for k, schema in props.items():
-                v = sub(schema)
+            for k, sub in props.items():
+                v = self._at(sub, child, depth + 1).viol()
                 prop_case = (F.when(key == F.lit(k), v) if prop_case is None
                              else prop_case.when(key == F.lit(k), v))
             if prop_case is not None:
                 parts.append(prop_case.otherwise(empty_violations()))
-            for pat, schema in patterns.items():
-                parts.append(F.when(key.rlike(unicode_pattern(pat)),
-                                    sub(schema)
-                                    ).otherwise(empty_violations()))
-            if additional is not None:
-                is_known = F.lit(False)
-                if props:
-                    is_known = is_known | key.isin(list(props))
-                for p in patterns:
-                    is_known = is_known | key.rlike(unicode_pattern(p))
-                if additional is False:
-                    parts.append(F.when(~is_known, F.array(make_violation(
-                        "properties", t.path,
-                        F.concat(F.lit("Additional property '"), key,
-                                 F.lit("' is not allowed"))))
-                    ).otherwise(empty_violations()))
-                elif isinstance(additional, dict):
-                    parts.append(F.when(~is_known, sub(additional)
-                                        ).otherwise(empty_violations()))
-            return _concat(parts)
+            return _concat(parts + [p.viol() for p in rest(key, child)])
 
-        return F.when(
-            t.col.isNotNull(),
-            F.flatten(F.transform(F.map_entries(t.col),
-                                  lambda e: entry_viols(e)))
-        ).otherwise(empty_violations())
+        def by_key(k: str, sub: Any) -> Checked:
+            v = F.element_at(m, F.lit(k))
+            return _when(v.isNotNull(),
+                         self._at(sub, t.value(v, F.lit("")), depth + 1))
 
-    def _property_names(self, sub: Any, t: Target,
+        parts = [by_key(k, sub) for k, sub in props.items()]
+        if checks_rest:
+            parts.append(_each(F.map_entries(m), lambda e, i: _all(rest(
+                e["key"], t.value(e["value"], F.lit(""))))))
+        views = _all(parts)
+        return _when(present, Checked(
+            lambda: F.flatten(F.transform(F.map_entries(m), entry_viols)),
+            views.ok, views.count))
+
+    def _property_names(self, sub: Any, t: Any,
                         depth: int) -> Optional[Checked]:
-        if isinstance(t.dtype, T.StructType):
+        present = _present(t, t.is_obj)
+        if present is None:
+            return None
+        if t.fields is not None:
             # static keys: evaluate at compile time via pyvalidator
             from valico_spark.compiler.pyvalidator import validate_json
             parts = []
-            for f_ in t.dtype.fields:
+            for f_ in t.fields:
                 st = validate_json(sub, f_.name, version=self.version)
                 for e in st.errors:
                     parts.append(_check(
@@ -1282,38 +1408,30 @@ class ColumnCompiler:
                         e.code, t.path, e.detail or None,
                         at=f"/[{f_.name}]"))
             return _all(parts)
-        if isinstance(t.dtype, T.MapType):
-            def emit(k):
-                child = Target(k, T.StringType(),
-                               F.concat(t.path, F.lit("/["), k, F.lit("]")))
-                return self._node(sub, child, depth + 1).viol()
-            return Checked(lambda: F.when(
-                t.col.isNotNull(),
-                F.flatten(F.transform(F.map_keys(t.col), emit))
-            ).otherwise(empty_violations()))
-        if t.dtype is None:
-            raise UnsupportedRule("propertyNames on untyped target")
-        return None
+        # every key validates ``sub`` as a string value; error paths are
+        # ``{path}/[{key}]`` (property_names.rs:25)
+        return _when(present, _each(F.map_keys(t.obj), lambda k, i: self._at(
+            sub, t.key(k, F.concat(t.path, F.lit("/["), k, F.lit("]"))),
+            depth + 1)))
 
     def _props_count(self, n: Any, is_max: bool,
-                     t: Target) -> Optional[Checked]:
-        if isinstance(t.dtype, T.StructType):
-            # count present (non-null) fields
-            present = [F.when(t.col.getField(f.name).isNotNull(), 1)
-                       .otherwise(0) for f in t.dtype.fields]
-            total = sum(present[1:], present[0]) if present else F.lit(0)
-        elif isinstance(t.dtype, T.MapType):
-            total = F.size(F.map_keys(t.col))
-        elif t.dtype is None:
-            raise UnsupportedRule("min/maxProperties on untyped target")
-        else:
+                     t: Any) -> Optional[Checked]:
+        present = _present(t, t.is_obj)
+        if present is None:
             return None
+        if t.fields is not None:
+            # count present (non-null) fields
+            counts = [F.when(t.col.getField(f.name).isNotNull(), 1)
+                      .otherwise(0) for f in t.fields]
+            total = sum(counts[1:], counts[0]) if counts else F.lit(0)
+        else:
+            total = F.size(F.map_keys(t.obj))
         ok = total <= F.lit(int(n)) if is_max else total >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok,
+        return _check(present & ~ok,
                       "max_properties" if is_max else "min_properties",
                       t.path)
 
-    def _dependencies(self, s: dict, t: Target,
+    def _dependencies(self, s: dict, t: Any,
                       depth: int) -> Optional[Checked]:
         items: list[tuple[str, tuple[str, Any]]] = []
         if "dependencies" in s:
@@ -1327,105 +1445,91 @@ class ColumnCompiler:
             for k, v in s["dependentSchemas"].items():
                 items.append((k, ("schema", v)))
 
-        if not isinstance(t.dtype, (T.StructType, T.MapType)):
-            if t.dtype is None:
-                raise UnsupportedRule("dependencies on untyped target")
+        present = _present(t, t.is_obj)
+        if present is None:
             return None
 
         parts = []
         for key, (kind, extra) in items:
-            trigger = t.col.isNotNull() & _has_key(t, key)
+            trigger = present & t.has_key(key)
             if kind == "props":
                 for k2 in extra:
                     parts.append(_check(
-                        trigger & ~_has_key(t, k2), "required", t.path,
+                        trigger & ~t.has_key(k2), "required", t.path,
                         at="/" + k2))
             else:
                 parts.append(_when(trigger,
                                    self._node(extra, t, depth + 1)))
         return _all(parts)
 
-    def _items(self, s: dict, t: Target, depth: int) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise UnsupportedRule("items on untyped target")
+    def _items(self, s: dict, t: Any, depth: int) -> Optional[Checked]:
+        present = _present(t, t.is_arr)
+        if present is None:
             return None
-        etype = t.dtype.elementType
         items = s.get("items")
         additional = s.get("additionalItems")
-        present = t.col.isNotNull()
+        arr = t.arr
         if isinstance(items, (dict, bool)):
             def per_elem(x: Column, i: Column) -> Checked:
-                child = Target(x, etype,
-                               F.concat(t.path, F.lit("/"),
-                                        i.cast("string")))
-                return self._node(items, child, depth + 1)
-            return _when(present, _each(t.col, per_elem))
+                child = t.elem(x, F.concat(t.path, F.lit("/"),
+                                           i.cast("string")))
+                return self._at(items, child, depth + 1)
+            return _when(present, _each(arr, per_elem))
         if not isinstance(items, list):
             return None
         parts = []
         for idx, sub in enumerate(items):
             # try_: the gate reads the position outside the size guard
-            child = Target(F.try_element_at(t.col, F.lit(idx + 1)), etype,
+            child = t.elem(F.try_element_at(arr, F.lit(idx + 1)),
                            F.concat(t.path, F.lit(f"/{idx}")))
-            parts.append(_when(present & (F.size(t.col) > idx),
-                               self._node(sub, child, depth + 1)))
-        extra = present & (F.size(t.col) > len(items))
+            parts.append(_when(present & (F.size(arr) > idx),
+                               self._at(sub, child, depth + 1)))
+        extra = present & (F.size(arr) > len(items))
         if additional is False:
             parts.append(_check(extra, "items", t.path,
                                 "Additional items are not allowed"))
         elif isinstance(additional, dict):
             def per_extra(x: Column, i: Column) -> Checked:
-                child = Target(
-                    x, etype,
-                    F.concat(t.path, F.lit("/"),
-                             (i + len(items)).cast("string")))
-                return self._node(additional, child, depth + 1)
-            tail = F.slice(t.col, len(items) + 1,
-                           F.greatest(F.size(t.col) - len(items), F.lit(0)))
+                child = t.elem(x, F.concat(t.path, F.lit("/"),
+                                           (i + len(items)).cast("string")))
+                return self._at(additional, child, depth + 1)
+            tail = F.slice(arr, len(items) + 1,
+                           F.greatest(F.size(arr) - len(items), F.lit(0)))
             parts.append(_when(extra, _each(tail, per_extra)))
         return _all(parts)
 
     def _items_count(self, n: Any, is_max: bool,
-                     t: Target) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise UnsupportedRule("min/maxItems on untyped target")
+                     t: Any) -> Optional[Checked]:
+        present = _present(t, t.is_arr)
+        if present is None:
             return None
-        sz = F.size(t.col)
+        sz = F.size(t.arr)
         ok = sz <= F.lit(int(n)) if is_max else sz >= F.lit(int(n))
-        return _check(t.col.isNotNull() & ~ok,
+        return _check(present & ~ok,
                       "max_items" if is_max else "min_items", t.path)
 
-    def _unique_items(self, t: Target) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise UnsupportedRule("uniqueItems on untyped target")
+    def _unique_items(self, t: Any) -> Optional[Checked]:
+        present = _present(t, t.is_arr)
+        if present is None:
             return None
-        # O(n) array_distinct vs the reference's O(n²) loop
-        # (validators/unique_items.rs:18 'TODO quicker algorithm')
-        ok = F.size(F.array_distinct(t.col)) == F.size(t.col)
-        return _check(t.col.isNotNull() & ~ok, "unique_items", t.path)
+        return _check(present & ~t.all_distinct, "unique_items", t.path)
 
-    def _contains(self, s: dict, t: Target, depth: int) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.ArrayType):
-            if t.dtype is None:
-                raise UnsupportedRule("contains on untyped target")
+    def _contains(self, s: dict, t: Any, depth: int) -> Optional[Checked]:
+        present = _present(t, t.is_arr)
+        if present is None:
             return None
         sub = s["contains"]
         min_c = s.get("minContains") if self.version >= DRAFT2019 else None
         max_c = s.get("maxContains") if self.version >= DRAFT2019 else None
-        etype = t.dtype.elementType
 
         def ok_elem(x: Column) -> Column:
-            return self._valid(sub, Target(x, etype, F.lit("")), depth + 1)
+            return _valid(self._at(sub, t.elem(x, F.lit("")), depth + 1))
 
-        present = t.col.isNotNull()
         if min_c is None and max_c is None:
             # F.exists short-circuits (contains.rs:38-40 parity, but free)
-            return _check(present & ~F.exists(t.col, ok_elem),
+            return _check(present & ~F.exists(t.arr, ok_elem),
                           "contains", t.path)
-        matched = F.size(F.filter(t.col, ok_elem))
+        matched = F.size(F.filter(t.arr, ok_elem))
         parts = []
         if min_c != 0:
             parts.append(_check(present & (matched == 0),
@@ -1440,17 +1544,17 @@ class ColumnCompiler:
                 "min_contains/max_contains", t.path))
         return _all(parts)
 
-    def _all_of(self, subs: list, t: Target, depth: int) -> Checked:
+    def _all_of(self, subs: list, t: Any, depth: int) -> Checked:
         return _all([self._node(sub, t, depth + 1) for sub in subs])
 
-    def _any_of(self, subs: list, t: Target, depth: int) -> Checked:
+    def _any_of(self, subs: list, t: Any, depth: int) -> Checked:
         return _verdict(
             [self._node(sub, t, depth + 1) for sub in subs],
             lambda valid: ~functools.reduce(Column.__or__, valid),
             lambda viols: make_violation("any_of", t.path,
                                          states=_states_json(viols)))
 
-    def _one_of(self, subs: list, t: Target, depth: int) -> Checked:
+    def _one_of(self, subs: list, t: Any, depth: int) -> Checked:
         return _verdict(
             [self._node(sub, t, depth + 1) for sub in subs],
             lambda valid: functools.reduce(
@@ -1458,53 +1562,56 @@ class ColumnCompiler:
             lambda viols: make_violation("one_of", t.path,
                                          states=_states_json(viols)))
 
-    def _not(self, sub: Any, t: Target, depth: int) -> Checked:
+    def _not(self, sub: Any, t: Any, depth: int) -> Checked:
         return _verdict([self._node(sub, t, depth + 1)],
                         lambda valid: valid[0],
                         lambda _: make_violation("not", t.path))
 
-    def _conditional(self, s: dict, t: Target, depth: int) -> Checked:
+    def _conditional(self, s: dict, t: Any, depth: int) -> Checked:
         def branch(key: str) -> Checked:
             return (self._node(s[key], t, depth + 1) if key in s
                     else _all([]))
         return _pick(branch("if"), branch("then"), branch("else"))
 
-    def _content_media(self, s: dict, t: Target) -> Optional[Checked]:
-        if not isinstance(t.dtype, T.StringType) and t.dtype is not None:
+    def _content_media(self, s: dict, t: Any) -> Optional[Checked]:
+        present = _present(t, t.is_str)
+        if present is None or t.str is None:
             return None
         enc = s.get("contentEncoding")
         mt = s.get("contentMediaType")
         parts = []
-        val = t.col
+        sv = val = t.str
         decodable = F.lit(True)
         if enc == "base64":
             # strict alphabet check then decode (content_media.rs:52-63);
             # details normalized with the walker (formats.py
             # decode_base64_utf8): "Invalid byte" / "Invalid UTF-8"
-            b64_ok = t.col.rlike(
+            b64_ok = sv.rlike(
                 r"^(?:[A-Za-z0-9+/]{4})*(?:[A-Za-z0-9+/]{2}=="
                 r"|[A-Za-z0-9+/]{3}=)?$")
-            utf8_ok = F.is_valid_utf8(F.unbase64(t.col))
-            parts.append(_check(t.col.isNotNull() & ~b64_ok,
+            utf8_ok = F.is_valid_utf8(F.unbase64(sv))
+            parts.append(_check(present & ~b64_ok,
                                 "format", t.path, "Invalid byte"))
-            parts.append(_check(t.col.isNotNull() & b64_ok & ~utf8_ok,
+            parts.append(_check(present & b64_ok & ~utf8_ok,
                                 "format", t.path, "Invalid UTF-8"))
             decodable = b64_ok & utf8_ok
-            val = F.when(decodable, F.decode(F.unbase64(t.col), "UTF-8"))
+            val = F.when(decodable, F.decode(F.unbase64(sv), "UTF-8"))
         if mt == "application/json":
             parsed = F.try_parse_json(val)
-            bad = t.col.isNotNull() & decodable & parsed.isNull()
+            bad = present & decodable & parsed.isNull()
             parts.append(_check(bad, "format", t.path, ""))
         return _all(parts)
 
 
-def _has_key(t: Target, key: str) -> Column:
-    """The object at ``t`` (a struct or map) holds ``key``."""
-    if isinstance(t.dtype, T.MapType):
-        return F.map_contains_key(t.col, F.lit(key))
-    if key in t.dtype.fieldNames():
-        return t.col.getField(key).isNotNull()
-    return F.lit(False)
+def _known(key: Column, props: dict, patterns: dict) -> Column:
+    """An entry ``key`` that ``properties`` or ``patternProperties``
+    names (``additionalProperties`` applies to the others)."""
+    is_known = F.lit(False)
+    if props:
+        is_known = is_known | key.isin(list(props))
+    for p in patterns:
+        is_known = is_known | key.rlike(unicode_pattern(p))
+    return is_known
 
 
 def row_target(spark_schema: T.StructType) -> Target:

@@ -534,15 +534,6 @@ def minhash_signature_from_base(base: Column, num_hashes: int = 32,
                 m, F.pmod(h * c["a"] + c["b"], F.lit(MERSENNE31)))))
 
 
-def minhash_signature(text: Column, num_hashes: int = 32, n: int = 5,
-                      seed: int = 17) -> Column:
-    """K-permutation MinHash over char n-gram shingles (single-expression
-    form; prefer materializing ``minhash_base`` in a prior projection so
-    the base hashes are evaluated once)."""
-    return minhash_signature_from_base(minhash_base(text, n),
-                                       num_hashes, seed)
-
-
 def band_bucket_portable(sig_slice: Column) -> Column:
     """Portable band bucket: fold ``acc*131 + s mod M31`` over the band's
     signature rows (DuckDB: ``list_reduce(list_prepend(0, slice), ...)``).
@@ -1105,17 +1096,6 @@ def simhash_candidates(df: DataFrame, band_bits: int = 16,
               .distinct())
     hamming = F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
     return pairs.withColumn("hamming", hamming).drop("a_sig", "b_sig")
-
-
-def embedding_near_dups(df: DataFrame, threshold: float = 0.95,
-                        id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        block_col: str | None = None,
-                        allow_quadratic: bool = False) -> DataFrame:
-    from valico_spark.operators.similarity import all_pairs_above
-
-    return all_pairs_above(df, threshold, id_col, vec_col, block_col,
-                           allow_quadratic=allow_quadratic)
 
 
 # -- Paragraph-level dedup (CCNet-style) ------------------------------------

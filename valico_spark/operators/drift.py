@@ -128,25 +128,6 @@ def ks_binned_table(sample_a: DataFrame, sample_b: DataFrame,
     return merged.select("bin", "na", "nb", diff.alias("cdf_diff"))
 
 
-def drift_report(current: DataFrame, reference: DataFrame,
-                 categorical: list[str], continuous: list[str],
-                 ks_threshold: float = 0.1,
-                 chi2_threshold: float = 1000.0) -> list[dict]:
-    """Run chi-square on categorical columns and binned-KS on continuous
-    ones; returns [{column, kind, statistic, drifted}] (driver-side small)."""
-    out = []
-    for c in categorical:
-        row = chi_square(current, reference, c).collect()[0]
-        out.append({"column": c, "kind": "chi_square",
-                    "statistic": float(row["statistic"] or 0.0),
-                    "drifted": (row["statistic"] or 0.0) > chi2_threshold})
-    for c in continuous:
-        d = ks_binned(current, reference, c)
-        out.append({"column": c, "kind": "ks",
-                    "statistic": d, "drifted": d > ks_threshold})
-    return out
-
-
 def psi_table(a: DataFrame, b: DataFrame, value_col: str,
               smoothing: float = 0.5) -> DataFrame:
     """Population Stability Index per category:

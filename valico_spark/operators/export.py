@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from valico_spark.operators.sampling import stratified_sample
+from valico_spark.operators.util import local_frame
 
 
 def mixture_rates(token_counts: dict[str, int],
@@ -95,8 +96,8 @@ def mixture_sample(df: DataFrame, weights: dict[str, float],
     achieved = {r["s"]: r["t"] for r in
                 (sampled.groupBy(F.col(source_col).alias("s"))
                         .agg(F.sum(token_col).alias("t"))).collect()}
-    spark = df.sparkSession
-    report = spark.createDataFrame(
+    report = local_frame(
+        df.sparkSession,
         [(s, float(i["weight"]), i["available_tokens"],
           i["target_tokens"], float(i["rate"]),
           int(achieved.get(s, 0)))

@@ -54,26 +54,18 @@ def orphans(child: DataFrame, child_key, parent: DataFrame, parent_key,
     child_key = [child_key] if isinstance(child_key, str) else list(child_key)
     parent_key = ([parent_key] if isinstance(parent_key, str)
                   else list(parent_key))
+    # no distinct: a left-anti join ignores duplicate parent keys, and
+    # a distinct would only add an aggregation stage before the join
     p = parent.select(*[F.col(pk).alias(ck)
-                        for pk, ck in zip(parent_key, child_key)]).distinct()
+                        for pk, ck in zip(parent_key, child_key)])
     if broadcast_parent:
         p = F.broadcast(p)
-    cond = None
     present = None
     for ck in child_key:
         pr = child[ck].isNotNull()
         present = pr if present is None else (present & pr)
     return (child.where(present)
                  .join(p, on=child_key, how="left_anti"))
-
-
-def referential_report(child: DataFrame, child_key, parent: DataFrame,
-                       parent_key, id_cols: list[str]) -> DataFrame:
-    """Orphan rows reduced to audit form: id columns + the dangling key."""
-    ck = [child_key] if isinstance(child_key, str) else list(child_key)
-    o = orphans(child, child_key, parent, parent_key)
-    return o.select(*id_cols, *[F.col(c).alias(f"dangling_{c}")
-                                for c in ck])
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str,

@@ -4,8 +4,11 @@ The per-row invariant from BASELINE.json input_hint: span-sequence
 equality on (kind, text, media_ref, order) per document, evaluated
 Arrow-native / JVM-native — **no per-row Python**. Spark compares
 array<struct> values structurally, so sequence equality is a single
-column expression; ordering checks use higher-order functions over the
-offsets.
+column expression; the ordering check compares the offset array with
+its sorted, de-duplicated self. Neither check uses a higher-order
+function: Spark runs ``transform`` / ``aggregate`` interpreted
+(``CodegenFallback``), while field projection, ``sort_array``,
+``array_distinct`` and ``arrays_zip`` are code-generated.
 """
 
 from __future__ import annotations
@@ -17,28 +20,24 @@ from pyspark.sql import functions as F
 def spans_strictly_increasing(spans: Column) -> Column:
     """True iff ``offset`` is strictly increasing across the span array.
 
-    NULL offsets fail the check (they violate ordering by absence);
-    empty and single-non-null-offset arrays are vacuously ordered.
-    ONE fold over the extracted offset array — the earlier
-    zip_with(slice, slice) shape copied the full span-struct array
-    twice per row and allocated an intermediate boolean array; this
-    keeps a 2-field accumulator and touches each offset once
-    (identical truth table: false ⇔ some offset NULL or some adjacent
-    pair non-increasing).
+    NULL offsets (and NULL spans) fail the check (they violate ordering
+    by absence); empty and single-non-null-offset arrays are vacuously
+    ordered; a NULL array gives NULL. Strictly increasing ⇔ the offsets
+    equal their ascending sort (non-decreasing) and hold no duplicate;
+    ``sort_array`` puts NULLs first, so a NULL offset shows as a NULL
+    first element.
     """
-    offs = F.transform(spans, lambda s: s["offset"])
-    stepped = F.aggregate(
-        offs,
-        F.struct(F.lit(None).cast("long").alias("prev"),
-                 F.lit(True).alias("ok")),
-        lambda acc, x: F.struct(
-            x.cast("long").alias("prev"),
-            (acc["ok"] & x.isNotNull()
-             & (acc["prev"].isNull() | (x > acc["prev"]))).alias("ok")),
-        lambda acc: acc["ok"])
-    # aggregate yields NULL for a NULL spans array (the legacy
-    # expression's value there) and the TRUE init for an empty one
-    return stepped
+    offs = spans["offset"]
+    srt = F.sort_array(offs)
+    ordered = (F.size(offs) == 0) | (
+        F.try_element_at(srt, F.lit(1)).isNotNull() & (srt == offs)
+        & (F.size(F.array_distinct(offs)) == F.size(offs)))
+    return F.when(offs.isNotNull(), ordered)
+
+
+def _canon(spans: Column) -> Column:
+    """The (kind, text, media_ref) sequence of a span array, in order."""
+    return F.arrays_zip(spans["kind"], spans["text"], spans["media_ref"])
 
 
 def span_signature(spans: Column) -> Column:
@@ -46,12 +45,9 @@ def span_signature(spans: Column) -> Column:
     sequence-equality key. Uses xxhash64 over a canonical projection so
     two tables can be compared with an equi-join instead of shipping the
     full arrays."""
-    canon = F.transform(spans, lambda s: F.struct(
-        s["kind"].alias("kind"), s["text"].alias("text"),
-        s["media_ref"].alias("media_ref")))
     # xxhash64 hashes array<struct> natively (order-sensitive) — no JSON
     # string materialization, far less allocation on wide scans
-    return F.xxhash64(canon)
+    return F.xxhash64(_canon(spans))
 
 
 def add_span_checks(df: DataFrame, spans_col: str = "spans") -> DataFrame:
@@ -71,13 +67,8 @@ def sequence_equality(left: DataFrame, right: DataFrame,
     JVM-side structural comparison. Returns (key, equal) rows for docs in
     both tables.
     """
-    def canon(c):
-        return F.transform(F.col(spans_col), lambda s: F.struct(
-            s["kind"].alias("kind"), s["text"].alias("text"),
-            s["media_ref"].alias("media_ref")))
-
-    l = left.select(F.col(key), canon(spans_col).alias("__l"))
-    r = right.select(F.col(key), canon(spans_col).alias("__r"))
+    l = left.select(F.col(key), _canon(F.col(spans_col)).alias("__l"))
+    r = right.select(F.col(key), _canon(F.col(spans_col)).alias("__r"))
     return (l.join(r, key)
              .select(key, (F.col("__l").eqNullSafe(F.col("__r")))
                      .alias("equal")))

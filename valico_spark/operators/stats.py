@@ -20,9 +20,11 @@ table scale. ``exact=True`` switches HLL/GK to exact ``count_distinct``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from valico_spark.operators.util import local_frame
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.FloatType,
             T.DoubleType, T.DecimalType)
@@ -70,7 +72,7 @@ def profile(df: DataFrame, columns: list[str] | None = None,
     n = row["__n"]
     out = []
     for c in cols:
-        out.append(Row(
+        out.append(dict(
             column=c, n_rows=n, null_count=row[f"{c}__nulls"],
             null_rate=(row[f"{c}__nulls"] / n) if n else 0.0,
             distinct_count=row[f"{c}__dist"],
@@ -88,7 +90,7 @@ def profile(df: DataFrame, columns: list[str] | None = None,
         T.StructField("mean", T.DoubleType()),
         T.StructField("quantiles", T.ArrayType(T.DoubleType())),
     ])
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def profile_exact_numeric(df: DataFrame, columns: list[str],

@@ -35,6 +35,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from valico_spark.operators.util import local_frame
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff the Iceberg Spark runtime is on the classpath. The audit
@@ -219,8 +221,8 @@ class AuditRun:
         """The per-bucket lineage/metrics rows as a DataFrame — the shape
         a cluster deployment appends to its audit catalog table
         (``df.writeTo(table).append()`` under Iceberg)."""
-        return self.spark.createDataFrame(
-            self.metrics(),
+        return local_frame(
+            self.spark, self.metrics(),
             "run_id string, bucket int, docs long, valid_docs long, "
             "violations long, wall_sec double, committed_at double")
 

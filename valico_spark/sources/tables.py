@@ -13,9 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-               "lineitem", "events", "documents", "embeddings")
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 _FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(
@@ -24,15 +21,6 @@ _FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TPCH_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TPCH_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def fixture_dir(n_docs: int = 20_000, seed: int = 42) -> str:

@@ -48,6 +48,7 @@ def stream_minhash_dedup(stream_df: DataFrame, index_dir: str,
     from pyspark.errors import AnalysisException
 
     from valico_spark.operators.dedup import minhash_incremental
+    from valico_spark.operators.util import local_frame
 
     id_type = stream_df.schema[id_col].dataType.simpleString()
 
@@ -58,8 +59,8 @@ def stream_minhash_dedup(stream_df: DataFrame, index_dir: str,
                           .where(F.col("ingest_batch") != batch_id)
                           .select(id_col, "band", "bucket"))
         except AnalysisException:
-            index = spark.createDataFrame(
-                [], f"{id_col} {id_type}, band int, bucket bigint")
+            index = local_frame(
+                spark, [], f"{id_col} {id_type}, band int, bucket bigint")
         cand, inc = minhash_incremental(
             batch_df, index, num_hashes, bands, n, seed, id_col,
             text_col, portable, max_bucket_size)
