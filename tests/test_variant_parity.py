@@ -184,6 +184,58 @@ class TestKeywords:
                 '{"c": 1, "d": 1}', '{"b": 1}']
         _check(spark, docs, rs)
 
+    @pytest.mark.parametrize("rs", [
+        # ``dependencies`` present: the walker applies it alone
+        {"dependencies": {"a": ["b"]},
+         "dependentRequired": {"a": ["c"]},
+         "dependentSchemas": {"a": {"required": ["d"]}}},
+        {"dependencies": {"a": ["b"]},
+         "dependentRequired": {"c": ["d"]},
+         "dependentSchemas": {"e": {"required": ["b"]}}},
+        # absent: both of the 2019-09 keywords apply
+        {"dependentRequired": {"a": ["b"]},
+         "dependentSchemas": {"a": {"required": ["c"]},
+                              "e": {"required": ["d"]}}},
+        # the evaluated set reads the same entries
+        {"properties": {"a": {}},
+         "dependencies": {"a": {"properties": {"b": {}}}},
+         "dependentSchemas": {"a": {"properties": {"c": {}}}},
+         "unevaluatedProperties": False},
+    ])
+    def test_dependencies_beside_dependent_keywords(self, spark, rs):
+        """Both lanes read the dependency keywords as the walker does."""
+        from valico_spark.compiler.pyvalidator import DRAFT2019
+        from valico_spark.operators.validate import validate_dataframe
+
+        keys = "abcde"
+        docs = [{k: 1 for k in keys[:n]} for n in range(len(keys) + 1)]
+        docs += [{"a": 1, k: 1} for k in "cde"] + [{"e": 1}, {"c": 1}]
+        scope = Scope(version=DRAFT2019)
+        sid = scope.compile(rs)
+        exp = []
+        for d in docs:
+            state = scope.validate(sid, d)
+            exp.append((state.is_valid(), sorted(
+                (e.code, e.path, e.detail or "") for e in state.errors)))
+        assert {v for v, _ in exp} == {True, False}
+        rows = [(i, json.dumps(d), *(d.get(k) for k in keys))
+                for i, d in enumerate(docs)]
+        df = spark.createDataFrame(
+            rows, "i long, j string, " + ", ".join(f"{k} long" for k in keys))
+        lanes = {
+            "variant": validate_json_column(df.select("i", "j"), "j", rs,
+                                            version=DRAFT2019,
+                                            mode="variant"),
+            # the typed frame holds the document's keys alone, in order
+            "typed": validate_dataframe(df.select(*keys), rs,
+                                        version=DRAFT2019, mode="columns"),
+        }
+        for lane, v in lanes.items():
+            got = v.select("valid", "violations").collect()
+            assert [(r["valid"], sorted(
+                (e["code"], e["path"], e["detail"] or "")
+                for e in r["violations"])) for r in got] == exp, lane
+
 
 class TestUnsupportedFallsBack:
     def test_unique_items_raises_then_auto_falls_back(self, spark):
@@ -472,7 +524,7 @@ def _assert_gate_sound(spark, docs, ruleset, version=None) -> bool:
     """The gated violations equal the ungated tree element for element
     (order included), and the gate is exact: it holds on exactly the rows
     whose tree is empty. Returns whether the ruleset has a gate to
-    compare (ok not None)."""
+    compare (ok not None) and a valid row to send through it."""
     from valico_spark.compiler.pyvalidator import DRAFT7
     from valico_spark.compiler.variantcolumns import (
         compile_variant_ruleset, gated, parse_documents,
@@ -492,9 +544,10 @@ def _assert_gate_sound(spark, docs, ruleset, version=None) -> bool:
         if r["ok"]:
             assert r["full"] == [], (docs[r["i"]], r["full"])
         assert r["ok"] == (r["full"] == []), (docs[r["i"]], r["full"])
-    # the gate is not vacuous: some rows take it, unless no row is valid
-    assert any(r["ok"] for r in rows) or all(r["full"] for r in rows), \
-        ruleset
+    if all(r["full"] for r in rows):
+        return False  # no valid row: nothing compared
+    # the gate is not vacuous: some rows take it
+    assert any(r["ok"] for r in rows), ruleset
     return True
 
 
@@ -581,7 +634,7 @@ def test_count_view_is_violation_count(spark):
     them: it equals ``size(violations)`` on every row of the fuzz
     corpus."""
     from valico_spark.compiler.variantcolumns import (
-        compile_variant_checked, parse_documents,
+        VariantCompiler, VariantTarget, parse_documents,
     )
 
     docs = _fuzz_corpus([1, 2])
@@ -590,7 +643,8 @@ def test_count_view_is_violation_count(spark):
           .withColumn("doc", parse_documents(F.col("j"))))
     most = []
     for ruleset in (FUZZ_RULESET, {"oneOf": [FUZZ_RULESET, {"not": {}}]}):
-        checked = compile_variant_checked(ruleset, F.col("doc"))
+        checked = VariantCompiler(root_schema=ruleset).compile(
+            ruleset, VariantTarget(F.col("doc"), F.lit("")))
         rows = df.select(F.size(checked.viol()).alias("size"),
                          checked.count().alias("count")).collect()
         assert all(r["size"] == r["count"] for r in rows)

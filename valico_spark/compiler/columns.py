@@ -358,6 +358,19 @@ def _present(t: Any, test: Test) -> Optional[Column]:
     return t.col.isNotNull() if test is True else t.col.isNotNull() & test
 
 
+def _dependency_items(s: dict) -> list[tuple[str, Any]]:
+    """A node's dependency entries as the walker reads them
+    (``kw_dependencies``): ``dependencies`` alone when present, else
+    ``dependentRequired`` then ``dependentSchemas``. A list value names
+    required keys; any other value is a subschema."""
+    if "dependencies" in s:
+        groups = [s["dependencies"]]
+    else:
+        groups = [s.get("dependentRequired", {}),
+                  s.get("dependentSchemas", {})]
+    return [(k, v) for g in groups for k, v in g.items()]
+
+
 def spark_json_types(dtype: T.DataType) -> set[str]:
     """JSON primitive types a Spark type can materialize."""
     if isinstance(dtype, T.StringType):
@@ -454,6 +467,15 @@ class Target:
         """None for date/time columns: their JSON strings are not the
         column's Spark string, so string keywords skip them."""
         return self.col if isinstance(self.dtype, T.StringType) else None
+
+    def str_in(self, values: list) -> Optional[Column]:
+        """A string equal to one of ``values``; None when no value can
+        be one."""
+        sv = self.str
+        if sv is None:
+            return None
+        return _typed(self.is_str, functools.reduce(
+            Column.__or__, [sv == F.lit(v) for v in values]))
 
     @property
     def bool(self) -> Column:
@@ -742,16 +764,13 @@ class ColumnCompiler:
                 for k, c in eev.items():
                     mark(k, ~ivalid & c)
 
-        if "dependentSchemas" in s or "dependencies" in s:
-            deps = dict(s.get("dependencies", {}))
-            deps.update(s.get("dependentSchemas", {}))
-            for trig, dsub in deps.items():
-                if isinstance(dsub, (dict, bool)):
-                    trig_present = (present(trig) if trig in fields
-                                    else F.lit(False))
-                    bev, _ = branch_ev_and_valid(dsub)
-                    for k, c in bev.items():
-                        mark(k, trig_present & c)
+        for trig, dsub in _dependency_items(s):
+            if isinstance(dsub, (dict, bool)):
+                trig_present = (present(trig) if trig in fields
+                                else F.lit(False))
+                bev, _ = branch_ev_and_valid(dsub)
+                for k, c in bev.items():
+                    mark(k, trig_present & c)
 
         if "unevaluatedProperties" in s:
             # a branch's own unevaluatedProperties ANNOTATES: its
@@ -960,9 +979,7 @@ class ColumnCompiler:
             if "else" in s:
                 conds.append(~ivalid & self._entry_evaluated(
                     s["else"], t, depth + 1, key, val))
-        deps = dict(s.get("dependencies", {}))
-        deps.update(s.get("dependentSchemas", {}))
-        for trig, dsub in deps.items():
+        for trig, dsub in _dependency_items(s):
             if isinstance(dsub, (dict, bool)):
                 conds.append(t.has_key(trig) & self._entry_evaluated(
                     dsub, t, depth + 1, key, val))
@@ -1125,8 +1142,11 @@ class ColumnCompiler:
         return self._match_any([value], t, "const")
 
     def _match_any(self, values: list, t: Any, code: str) -> Checked:
-        ok = None
+        strs = [v for v in values if isinstance(v, str)]
+        ok = t.str_in(strs) if strs else None
         for v in values:
+            if isinstance(v, str):
+                continue
             m = self._match(v, t, top_level=True)
             if m is not None:
                 ok = m if ok is None else (ok | m)
@@ -1433,26 +1453,14 @@ class ColumnCompiler:
 
     def _dependencies(self, s: dict, t: Any,
                       depth: int) -> Optional[Checked]:
-        items: list[tuple[str, tuple[str, Any]]] = []
-        if "dependencies" in s:
-            for k, v in s["dependencies"].items():
-                items.append((k, ("props", v) if isinstance(v, list)
-                              else ("schema", v)))
-        if "dependentRequired" in s:
-            for k, v in s["dependentRequired"].items():
-                items.append((k, ("props", v)))
-        if "dependentSchemas" in s:
-            for k, v in s["dependentSchemas"].items():
-                items.append((k, ("schema", v)))
-
         present = _present(t, t.is_obj)
         if present is None:
             return None
 
         parts = []
-        for key, (kind, extra) in items:
+        for key, extra in _dependency_items(s):
             trigger = present & t.has_key(key)
-            if kind == "props":
+            if isinstance(extra, list):
                 for k2 in extra:
                     parts.append(_check(
                         trigger & ~t.has_key(k2), "required", t.path,

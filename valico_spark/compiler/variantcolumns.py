@@ -137,6 +137,12 @@ class VariantTarget:
     def str(self) -> Column:
         return F.try_variant_get(self.col, "$", "string")
 
+    def str_in(self, values: list) -> Column:
+        """A string equal to one of ``values``: one type test and one
+        read for every member (an OR of equalities would repeat the read
+        per member, interpreted inside the binding lambda)."""
+        return self.is_str & self.str.isin(values)
+
     @property
     def bool(self) -> Column:
         return F.try_variant_get(self.col, "$", "boolean")
@@ -322,14 +328,6 @@ def parse_documents(json_col: Column) -> Column:
                       F.parse_json(F.lit("null")))
 
 
-def compile_variant_checked(schema: Any, doc: Column,
-                            version: int = DRAFT7) -> Checked:
-    """The :class:`Checked` views (violations, exact gate, count) of
-    ``schema`` over a variant column of parsed documents."""
-    return VariantCompiler(version=version, root_schema=schema).compile(
-        schema, VariantTarget(doc, F.lit("")))
-
-
 def compile_variant_ruleset(schema: Any, doc: Column,
                             version: int = DRAFT7
                             ) -> Tuple[Column, Optional[Column]]:
@@ -340,7 +338,8 @@ def compile_variant_ruleset(schema: Any, doc: Column,
     array. Raises ``UnsupportedRule`` for a ruleset the plan cannot
     judge exactly.
     """
-    checked = compile_variant_checked(schema, doc, version)
+    checked = VariantCompiler(version=version, root_schema=schema).compile(
+        schema, VariantTarget(doc, F.lit("")))
     return checked.viol(), checked.ok()
 
 
